@@ -10,6 +10,12 @@ import org.apache.spark.sql.SparkSession
  * per-query claims irreproducible; this prints the number Bench would
  * report for the query, one command.
  *
+ * Each TIMED line also carries the steady sample's job count and codegen
+ * compile count ([[graft.api.Metrics.cost]]): compiles above zero in a
+ * warmed run mean the query on its own outgrows Spark's codegen cache
+ * (each query repeats back to back, so eviction across a mix of queries
+ * does not show here).
+ *
  * Usage: runMain graft.BenchOne <query> [<query> ...]
  * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
  */
@@ -28,12 +34,15 @@ object BenchOne {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       System.gc()
     }
-    def materialize(name: String, dir: String): Double = {
+    /** One sample: (seconds, its cost). */
+    def materialize(name: String, dir: String): (Double, graft.api.Metrics.Cost) = {
       isolate()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      graft.api.Metrics.cost(spark) {
+        val t0 = System.nanoTime()
+        SparkEntry.queries(name)(spark, dir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
     }
 
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
@@ -42,17 +51,14 @@ object BenchOne {
       // the measured corpus — the first timed sample then absorbs warm-up)
       if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
         materialize(n, warmDir)
-      val t1 = materialize(n, sfDir)
-      val t2 = materialize(n, sfDir)
-      val best = math.min(t1, t2)
-      var samples = Seq(t1, t2)
-      val steady =
-        if (math.max(t1, t2) > best * 1.5 && best > 0.05) {
-          val t3 = materialize(n, sfDir)
-          samples = Seq(t1, t2, t3)
-          samples.sorted.apply(1)
-        } else best
-      println(f"TIMED $n $steady%.2f s (samples ${samples.map(t => f"$t%.2f").mkString("/")})")
+      var samples = Seq(materialize(n, sfDir), materialize(n, sfDir))
+      val best = samples.map(_._1).min
+      if (samples.map(_._1).max > best * 1.5 && best > 0.05)
+        samples :+= materialize(n, sfDir)
+      // the fastest of two, the median of three
+      val (steady, cost) = samples.sortBy(_._1).apply((samples.size - 1) / 2)
+      println(f"TIMED $n $steady%.2f s (samples ${samples.map(t => f"${t._1}%.2f").mkString("/")})" +
+        s" jobs ${cost.jobs} compiles ${cost.compiles}")
     }
     spark.stop()
   }

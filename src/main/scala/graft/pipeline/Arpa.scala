@@ -471,13 +471,20 @@ object Arpa {
             "or raise the conf deliberately (together with driver memory: " +
             "import buffers ~150-250 bytes per entry)")
       }
-      val writers = langs.map { l =>
-        val p = new org.apache.hadoop.fs.Path(pathOf(l))
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        l -> new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-          fs.create(p, true), java.nio.charset.StandardCharsets.UTF_8))
-      }.toMap
+      // every file opens inside the try: on ANY failure — a path that
+      // cannot be created, a failed pass, a failed flush — each opened
+      // writer closes and its partial file is deleted (all-or-nothing)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val opened = scala.collection.mutable.ArrayBuffer.empty[
+        (org.apache.hadoop.fs.Path, java.io.Writer)]
       try {
+        val writers = langs.map { l =>
+          val p = new org.apache.hadoop.fs.Path(pathOf(l))
+          val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+            p.getFileSystem(conf).create(p, true), java.nio.charset.StandardCharsets.UTF_8))
+          opened += p -> w
+          l -> w
+        }.toMap
         for (l <- langs) {
           val w = writers(l)
           w.write("\\data\\\n")
@@ -506,8 +513,14 @@ object Arpa {
           }
         }
         for (l <- langs) writers(l).write("\n\\end\\\n")
-      } finally writers.values.foreach(w =>
-        try w.close() catch { case _: Exception => () })
+        opened.foreach(_._2.close())
+      } catch { case e: Throwable =>
+        opened.foreach { case (p, w) =>
+          try w.close() catch { case _: Exception => () }
+          try p.getFileSystem(conf).delete(p, false) catch { case _: Exception => () }
+        }
+        throw e
+      }
     } finally levelFrames.values.foreach(_.unpersist(blocking = true))
   }
 

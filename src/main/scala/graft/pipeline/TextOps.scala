@@ -882,44 +882,22 @@ object TextOps {
     * KenLM perplexity filter, with the LM trained on the corpus itself):
     * an add-alpha-smoothed bigram model over adjacent token pairs, each
     * document scored by its average per-pair log-likelihood
-    * ln((c(u,v) + a) / (c(u) + a·V)). Low scores flag OCR noise and
-    * gibberish; anomalously high ones flag boilerplate (the corpus's own
+    * ln((c(u,v) + a) / (c(u) + a·V)), V = the distinct tokens that
+    * follow some token. Low scores flag OCR noise and gibberish;
+    * anomalously high ones flag boilerplate (the corpus's own
     * most-repeated continuations).
     *
-    * Scale shape: the LM tables derive from ONE corpus pass (context
-    * counts and the vocabulary fold over the bigram aggregate, which is
-    * `localCheckpoint`ed — it is the trained-model artifact, orders of
-    * magnitude smaller than the corpus, and three consumers would
-    * otherwise each re-derive the corpus explode); scoring is a second
-    * pass joining pairs against the pinned model — the two-scan floor of
-    * every corpus-stat-then-score operator here. Pair keys are the token
+    * Scale shape: [[jmSelfScore]] — the one-pass pinned model, then a
+    * second pass joining the pairs against it. Pair keys are the token
     * strings so an independent engine reproduces scores exactly; at
     * 100 TB the join key would be a 64-bit pair hash with the strings
     * kept only in the model table. Documents with under 2 tokens score
     * NULL (no pairs). */
   def bigramLmScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                    textCol: String, alpha: Double = 0.5): org.apache.spark.sql.DataFrame = {
-    val id = col(idCol)
-    val pairs = docs
-      .select(id, words(col(textCol)).as("__w")).where(size(col("__w")) >= 2)
-      .select(id, explode(arrays_zip(
-        slice(col("__w"), lit(1), size(col("__w")) - 1).as("u"),
-        slice(col("__w"), lit(2), size(col("__w")) - 1).as("v"))).as("__p"))
-      .select(id, col("__p.u").as("__u"), col("__p.v").as("__v"))
-    val bc = pairs.groupBy(col("__u"), col("__v")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
-    graft.api.Pinned.register(docs.sparkSession, graft.api.Pinned.idsOf(bc))
-    val cc = bc.groupBy(col("__u")).agg(sum(col("__c")).as("__cu"))
-    val vv = bc.agg(count_distinct(col("__v")).as("__nv"))
-    val scored = pairs
-      .join(bc, Seq("__u", "__v")).join(cc, Seq("__u"))
-      .crossJoin(broadcast(vv))
-      .withColumn("__lp", log((col("__c") + alpha) / (col("__cu") + col("__nv") * alpha)))
-      .groupBy(id)
-      .agg(count(lit(1)).as("n_pairs"), round(avg(col("__lp")), 3).as("avg_logprob"))
-    docs.select(id).join(scored, Seq(idCol), "left")
-      .select(id, coalesce(col("n_pairs"), lit(0L)).as("n_pairs"), col("avg_logprob"))
-  }
+                    textCol: String, alpha: Double = 0.5): org.apache.spark.sql.DataFrame =
+    jmSelfScore(docs, idCol, textCol, 2, "n_pairs", spread = false,
+      vocabOfContinuations = true)(
+      log((col("__c2") + alpha) / (col("__cx2") + col("__vv") * alpha)))
 
   /** Interpolated trigram LM quality score — one model order up from
     * [[bigramLmScore]] toward the 5-gram KenLM real CCNet pipelines score
@@ -929,19 +907,8 @@ object TextOps {
     * over the self-corpus counts with V = the distinct-unigram vocabulary,
     * and each document scored by the average ln P over its trigram
     * positions (< 3 tokens → NULL score, n_tris 0 — the bigram face's
-    * convention).
-    *
-    * Scale shape: the model is three PARTIAL-AGGREGATED count tables —
-    * (u,v,t) trigrams, (v,t) bigrams, unigrams — each corpus-token-
-    * bounded, shuffled by its own keys, and checkpointed once (two
-    * consumers each: its context-total derivation and the scoring join).
-    * Scoring joins the exploded positions against the five count frames
-    * (equi joins; the planner broadcasts the small ones) plus the
-    * one-row (N, V) cross join, then folds per document — the same
-    * two-pass stat-then-score floor as the bigram face, one n-gram order
-    * deeper. A hot token ("the") concentrates its positions' join rows
-    * in one task, but the build sides are count rows and the probe
-    * STREAMS (hash join, no per-key sort) — the spans-join posture. */
+    * convention). [[ngramLmScore]] at order 3 with the scoring stage kept
+    * narrow; scale shape in [[jmSelfScore]]. */
   def trigramLmScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
                      textCol: String, alpha: Double = 0.5,
                      lambdas: (Double, Double, Double) = (0.6, 0.3, 0.1))
@@ -953,51 +920,102 @@ object TextOps {
     val (l3, l2, l1) = lambdas
     require(l3 >= 0 && l2 >= 0 && l1 >= 0 && math.abs(l3 + l2 + l1 - 1.0) < 1e-9,
       s"lambdas must be non-negative and sum to 1, got $lambdas")
+    jmSelfScore(docs, idCol, textCol, 3, "n_tris", spread = false)(
+      ngramLp(3, alpha, Seq(l3, l2, l1)))
+  }
+
+  /** The self-scoring Jelinek-Mercer model of one corpus, built in ONE
+    * aggregate and ONE pin. Each token position explodes with its
+    * order−1 predecessors (__p1..__p{order-1}, null before the document
+    * start; __p{order} is the token); the positions count by the full
+    * n-gram, and a single `groupingSets` aggregate over those counts
+    * computes every count table counts(j) (keys: the last j
+    * position columns, count __c{j}) and every context total ctxs(j)
+    * (j >= 2; counts(j)'s keys minus the last, total __cx{j}) —
+    * `grouping_id()` names the table, and a row whose first key is null
+    * is a document-start position without that much context, dropped.
+    * The pinned result is the model artifact, orders of magnitude under
+    * corpus size; each table is a slice of it, returned by its count
+    * column's name. N (counts(1)'s total) and V (its row count) collect
+    * once as scalars. With `vocabOfContinuations` the positions
+    * without a predecessor never enter the model, so counts(1) and V
+    * cover only tokens that follow some token. */
+  private def jmModel(docs: org.apache.spark.sql.DataFrame, textCol: String,
+                      order: Int, vocabOfContinuations: Boolean)
+      : (Map[String, org.apache.spark.sql.DataFrame], Double, Double) = {
+    val keys = gramCols(order, order)
+    // left-pad the tokens with order−1 nulls: key i of every position is
+    // then the i-th of `order` aligned slices of the padded array
+    val ws = col("__w")
+    val padded = concat(array(Seq.fill(order - 1)(lit(null).cast("string")): _*), ws)
+    val pos = docs.select(words(col(textCol)).as("__w"))
+      .select(explode(arrays_zip(keys.indices.map(i =>
+        slice(padded, lit(i + 1), size(ws)).as(keys(i))): _*)).as("__g"))
+      .select(keys.map(k => col(s"__g.$k").as(k)): _*)
+    val kept = if (vocabOfContinuations) pos.where(col(keys(order - 2)).isNotNull) else pos
+    val tables = (1 to order).map(j => s"__c$j" -> gramCols(order, j)) ++
+      (2 to order).map(j => s"__cx$j" -> gramCols(order, j).dropRight(1))
+    // grouping_id(): bit (order-1-i) set iff key i is NOT in the set
+    def gid(ks: Seq[String]): Long =
+      keys.indices.filterNot(i => ks.contains(keys(i))).map(i => 1L << (order - 1 - i)).sum
+    // count the full n-grams first: the grouping sets then expand the
+    // distinct n-grams, spread over the shuffle's partitions, instead of
+    // every position inside the scan's task
+    val grams = kept.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__c"))
+    val (model, ids) = graft.api.Pinned.checkpointTracked(
+      grams.groupingSets(tables.map(_._2.map(col)), keys.map(col): _*)
+        .agg(sum(col("__c")).as("__c"), grouping_id().as("__g"))
+        .where(tables.map { case (_, ks) =>
+          col("__g") === gid(ks) && col(ks.head).isNotNull }.reduce(_ || _)))
+    graft.api.Pinned.register(docs.sparkSession, ids)
+    val table = tables.map { case (c, ks) =>
+      c -> model.where(col("__g") === gid(ks)).select(ks.map(col) :+ col("__c").as(c): _*)
+    }.toMap
+    // N and V in ONE job: a shuffle-free fold over the pinned slice (an
+    // aggregate would add an exchange, hence a job)
+    val (n, v) = table("__c1").select(col("__c1")).rdd.aggregate((0L, 0L))(
+      (a, r) => (a._1 + r.getLong(0), a._2 + 1L), (a, b) => (a._1 + b._1, a._2 + b._2))
+    (table, n.toDouble, v.toDouble)
+  }
+
+  /** Score every document of `docs` against [[jmModel]] of `docs` itself:
+    * the order-n positions (a second pass over the corpus — the two-scan
+    * floor of every corpus-stat-then-score operator here) join counts(j)
+    * and ctxs(j) from the top order down (suffix-aligned equi joins),
+    * then counts(1) unless V is of continuations; N and V fold as
+    * literals into `lp`, and each document averages its positions:
+    * (n, avg_logprob), n 0 and NULL under `order` tokens. `spread` spreads the scoring stage
+    * ([[spreadForCompute]]) — the count build keeps its narrow map.
+    * Every slice broadcasts when the pinned model's measured size fits
+    * the broadcast threshold ([[decideBroadcast]]): the planner sizes a
+    * pin by its pre-checkpoint estimate, which counts each position once
+    * per grouping set, so left alone it broadcasts the (estimated
+    * smaller) positions instead — measured 0.3-0.5 s slower per query at
+    * sf0.1. A larger model leaves the choice to the planner. A hot
+    * token concentrates its positions' join rows in one task, but the
+    * probe STREAMS (hash join, no per-key sort). */
+  private def jmSelfScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
+                          textCol: String, order: Int, nCol: String, spread: Boolean,
+                          vocabOfContinuations: Boolean = false)(lp: Column)
+      : org.apache.spark.sql.DataFrame = {
+    val (table, n, vv) = jmModel(docs, textCol, order, vocabOfContinuations)
+    val bc = decideBroadcast(None, table("__c1"))
+    def side(c: String) = if (bc) broadcast(table(c)) else table(c)
     val id = col(idCol)
-    val spark = docs.sparkSession
-    val ws = words(col(textCol))
-    val tris = docs
-      .select(id, ws.as("__w")).where(size(col("__w")) >= 3)
-      .select(id, explode(arrays_zip(
-        slice(col("__w"), lit(1), size(col("__w")) - 2).as("u"),
-        slice(col("__w"), lit(2), size(col("__w")) - 2).as("v"),
-        slice(col("__w"), lit(3), size(col("__w")) - 2).as("t"))).as("__p"))
-      .select(id, col("__p.u").as("__u"), col("__p.v").as("__v"), col("__p.t").as("__t"))
-    // the three count builds are independent actions — pin concurrently
-    // (the ngramModel pattern), registered failure-safely on the caller
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val done = awaitPinned(spark, Seq(
-      Future(graft.api.Pinned.checkpointTracked(
-        docs.select(explode(ws).as("__t"))
-          .groupBy("__t").agg(count(lit(1)).as("__c1")))),
-      Future(graft.api.Pinned.checkpointTracked(
-        docs.select(ws.as("__w")).where(size(col("__w")) >= 2)
-          .select(explode(arrays_zip(
-            slice(col("__w"), lit(1), size(col("__w")) - 1).as("v"),
-            slice(col("__w"), lit(2), size(col("__w")) - 1).as("t"))).as("__p"))
-          .select(col("__p.v").as("__v"), col("__p.t").as("__t"))
-          .groupBy("__v", "__t").agg(count(lit(1)).as("__c2")))),
-      Future(graft.api.Pinned.checkpointTracked(
-        tris.groupBy("__u", "__v", "__t").agg(count(lit(1)).as("__c3"))))))(_._2)
-    val Seq(c1, c2, c3) = done.map(_._1)
-    val nv = c1.agg(sum(col("__c1")).cast("double").as("__n"),
-      count(lit(1)).cast("double").as("__vv"))
-    val c2x = c2.groupBy("__v").agg(sum(col("__c2")).as("__c2x"))
-    val c3x = c3.groupBy("__u", "__v").agg(sum(col("__c3")).as("__c3x"))
-    val scored = tris
-      .join(c3, Seq("__u", "__v", "__t")).join(c3x, Seq("__u", "__v"))
-      .join(c2, Seq("__v", "__t")).join(c2x, Seq("__v"))
-      .join(c1, Seq("__t"))
-      .crossJoin(broadcast(nv))
-      .withColumn("__lp", log(
-        lit(l3) * (col("__c3") + alpha) / (col("__c3x") + col("__vv") * alpha) +
-          lit(l2) * (col("__c2") + alpha) / (col("__c2x") + col("__vv") * alpha) +
-          lit(l1) * (col("__c1") + alpha) / (col("__n") + col("__vv") * alpha)))
-      .groupBy(id)
-      .agg(count(lit(1)).as("n_tris"), round(avg(col("__lp")), 3).as("avg_logprob"))
+    val pos = gramsOf(if (spread) spreadForCompute(docs) else docs, textCol, order,
+      gramCols(order, order), Seq(id))
+    val joined = (order to 2 by -1).foldLeft(pos) { (d, j) =>
+      d.join(side(s"__c$j"), gramCols(order, j))
+        .join(side(s"__cx$j"), gramCols(order, j).dropRight(1))
+    }
+    val scored =
+      (if (vocabOfContinuations) joined else joined.join(side("__c1"), gramCols(order, 1)))
+        .withColumn("__n", lit(n)).withColumn("__vv", lit(vv))
+        .withColumn("__lp", lp)
+        .groupBy(id)
+        .agg(count(lit(1)).as(nCol), round(avg(col("__lp")), 3).as("avg_logprob"))
     docs.select(id).join(scored, Seq(idCol), "left")
-      .select(id, coalesce(col("n_tris"), lit(0L)).as("n_tris"), col("avg_logprob"))
+      .select(id, coalesce(col(nCol), lit(0L)).as(nCol), col("avg_logprob"))
   }
 
   // ================================================================ order-n LM
@@ -1198,14 +1216,9 @@ object TextOps {
     * average ln P over its order-n positions (< order tokens → NULL
     * score, n_grams 0).
     *
-    * Scale shape: the model is `order` partial-aggregated count tables,
-    * each corpus-token-bounded, shuffled by its own keys and checkpointed
-    * once; scoring joins the exploded positions against the 2·order−1
-    * count frames (suffix-aligned equi joins, planner broadcasts the
-    * small ones) plus the one-row (N, V) stats frame, then folds per
-    * document — the trigram face's posture at order n. Hot tokens
-    * concentrate probe rows but the probe STREAMS (hash join, no per-key
-    * sort). */
+    * Scale shape: [[jmSelfScore]] — one pinned grouping-sets model, then
+    * the positions join the 2·order−1 count slices — the trigram face's
+    * posture at order n. */
   def ngramLmScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
                    textCol: String, order: Int, alpha: Double = 0.5,
                    lambdas: Seq[Double] = Nil): org.apache.spark.sql.DataFrame = {
@@ -1218,30 +1231,15 @@ object TextOps {
       "ngramLmScore trains on its own input — batch only (score a stream " +
         "against a static reference with ngramLmScoreAgainst)")
     val l = lambdasFor(order, lambdas)
-    val id = col(idCol)
-    val (counts, ctxs) = ngramModel(docs, textCol, order)
-    val nv = counts(1).agg(sum(col("__c1")).cast("double").as("__n"),
-      count(lit(1)).cast("double").as("__vv"))
     // spread the SCORING stage at order >= 3 (guide §2.5/§2.6): with the
     // count tables broadcast, explode + 2·order−1 joins + partial agg
     // fuse into ONE whole-stage span over the scan, and a single-row-
     // group input serializes it on one core (measured 1.6 s of
     // q_lm5_score's 4.2 s — interleaved A/B: 3.90 → 3.09 s). Order 2's
     // fold is too lean to pay the exchange (q_lm_score A/B: ~+0.17 s) —
-    // identity there, as at scale. NOT the r17-rejected count-stage
-    // spread: the count builds keep their narrow maps.
-    val posIn = if (order >= 3) spreadForCompute(docs) else docs
-    val pos = gramsOf(posIn, textCol, order, gramCols(order, order), Seq(id))
-    val joined = (order to 2 by -1).foldLeft(pos) { (d, j) =>
-      d.join(counts(j), gramCols(order, j))
-        .join(ctxs(j), gramCols(order, j).dropRight(1))
-    }.join(counts(1), gramCols(order, 1))
-      .crossJoin(broadcast(nv))
-    val scored = joined.withColumn("__lp", ngramLp(order, alpha, l))
-      .groupBy(id)
-      .agg(count(lit(1)).as("n_grams"), round(avg(col("__lp")), 3).as("avg_logprob"))
-    docs.select(id).join(scored, Seq(idCol), "left")
-      .select(id, coalesce(col("n_grams"), lit(0L)).as("n_grams"), col("avg_logprob"))
+    // identity there, as at scale.
+    jmSelfScore(docs, idCol, textCol, order, "n_grams", spread = order >= 3)(
+      ngramLp(order, alpha, l))
   }
 
   /** Dual-mode order-n LM scoring AGAINST a pretrained reference corpus —

@@ -38,3 +38,10 @@ object ColumnBridge {
     }
   }
 }
+
+/** Listener-bus access hidden behind `private[spark]`: Spark delivers
+  * listener events asynchronously, so a listener's count of an action's
+  * jobs is complete only once the bus has drained. */
+object ListenerBridge {
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

@@ -34,18 +34,24 @@ object Tables {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  /** Drop every memoized schema whose key starts with `path` (both the
-    * plain and conf-variant entries) — call before re-reading a path that
-    * was rewritten with a different schema. */
+  /** Separates a path from its conf variant in a memo key. NUL never
+    * occurs in a path, so only `path`'s own variant keys start with
+    * `path + VariantSep`. */
+  private val VariantSep = "\u0000"
+
+  /** Drop the memoized schemas of exactly `path` (the plain and every
+    * conf-variant entry, never a sibling like `path + "2"`) — call
+    * before re-reading a path that was rewritten with a different
+    * schema. */
   def invalidate(path: String): Unit =
-    schemaCache.keySet.removeIf(_.startsWith(path))
+    schemaCache.keySet.removeIf(k => k == path || k.startsWith(path + VariantSep))
 
   /** Drop the whole schema memo (test isolation / fixture regeneration). */
   def clearSchemaCache(): Unit = schemaCache.clear()
 
   private def readCached(spark: SparkSession, path: String,
                          variant: String = ""): DataFrame = {
-    val key = path + variant
+    val key = if (variant.isEmpty) path else path + VariantSep + variant
     val cached = schemaCache.get(key)
     if (cached != null) spark.read.schema(cached).parquet(path)
     else {

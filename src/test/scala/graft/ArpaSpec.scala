@@ -524,6 +524,23 @@ class ArpaSpec extends SparkSpec {
     }
   }
 
+  test("per-language export: an uncreatable second file leaves no partial files") {
+    // languages write in order null, en, fr: a DIRECTORY at en's file
+    // path makes the second create fail after the first file opened
+    val dir = java.nio.file.Files.createTempDirectory("arpa_partial")
+    java.nio.file.Files.createDirectory(dir.resolve(s"${Arpa.fileNameOf("en")}.arpa"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try {
+      intercept[java.io.IOException](Arpa.arpaExportKnByLang(
+        refL2.toDF("doc_id", "text", "lang"), "text", "lang", 3, dir.toString))
+      val left = dir.toFile.list().toSet
+      assert(left == Set(s"${Arpa.fileNameOf("en")}.arpa"),
+        s"the opened language's partial file (and its checksum) must be deleted: $left")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        "the failed export releases its pins")
+    } finally graft.api.Pinned.release(spark)
+  }
+
   test("contracts: no <unk>, malformed lines, caps, bounds") {
     val noUnk = tmp("nounk.arpa")
     java.nio.file.Files.write(java.nio.file.Paths.get(noUnk),

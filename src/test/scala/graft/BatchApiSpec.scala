@@ -223,31 +223,49 @@ class BatchApiSpec extends SparkSpec {
       "jaccard 6/16 is under 0.8 — containment is what catches the embed")
   }
 
-  test("bigramLmScore equals a brute-force reference on a seeded random corpus") {
-    import graft.pipeline.TextOps
-    val rnd = new scala.util.Random(7)
-    val vocab = Vector("a", "b", "c", "d")
-    val docs = (1L to 8L).map { i =>
-      (i, Seq.fill(rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
-    }
+  /** bigramLmScore by brute force: one (id, n_pairs, avg_logprob) per
+    * input row; a duplicated id scores the pairs of all its documents,
+    * V = distinct continuations. */
+  private def bigramReference(docs: Seq[(Long, String)]): Seq[(Long, (Long, Option[Double]))] = {
     val pairs = docs.flatMap { case (id, t) =>
-      val w = t.split("\\s+").filter(_.nonEmpty)
+      val w = if (t == null) Array.empty[String] else t.split("\\s+").filter(_.nonEmpty)
       w.sliding(2).filter(_.length == 2).map(p => (id, p(0), p(1)))
     }
     val bc = pairs.groupBy(p => (p._2, p._3)).map { case (k, xs) => k -> xs.size }
     val cu = pairs.groupBy(_._2).map { case (k, xs) => k -> xs.size }
     val v = pairs.map(_._3).distinct.size
-    val expected = docs.map { case (id, t) =>
+    docs.map { case (id, _) =>
       val ps = pairs.filter(_._1 == id)
       val avg = if (ps.isEmpty) None else Some(BigDecimal(ps.map { case (_, a, b) =>
           math.log((bc((a, b)) + 0.5) / (cu(a) + 0.5 * v))
         }.sum / ps.size).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble)
       (id, (ps.size.toLong, avg))
-    }.toMap
-    val got = TextOps.bigramLmScore(docs.toDF("doc_id", "text"), "doc_id", "text")
+    }.sortBy(_.toString)
+  }
+
+  private def bigramScored(docs: Seq[(Long, String)]): Seq[(Long, (Long, Option[Double]))] =
+    try graft.pipeline.TextOps.bigramLmScore(docs.toDF("doc_id", "text"), "doc_id", "text")
       .collect().map(r => (r.getLong(0),
-        (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap
-    assert(got == expected, s"docs=$docs")
+        (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toSeq
+      .sortBy(_.toString)
+    finally graft.api.Pinned.release(spark)
+
+  test("bigramLmScore equals a brute-force reference on a seeded random corpus") {
+    val rnd = new scala.util.Random(7)
+    val vocab = Vector("a", "b", "c", "d")
+    val docs = (1L to 8L).map { i =>
+      (i, Seq.fill(rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    }
+    assert(bigramScored(docs) == bigramReference(docs), s"docs=$docs")
+  }
+
+  test("bigramLmScore edge inputs equal the brute-force reference: blank/null text, duplicate ids, empty frame") {
+    // whitespace-only, tab/newline-separated and null text; a duplicated
+    // id; "e" only ever starts a document, so it is not in V
+    val edges = Seq((1L, "e a b a"), (2L, " \t\n "), (3L, "a\tb\nb  a\r\nc"),
+      (4L, null), (5L, "b c a"), (5L, "c c b"), (6L, "e"))
+    assert(bigramScored(edges) == bigramReference(edges), s"docs=$edges")
+    assert(bigramScored(Seq.empty).isEmpty, "an empty corpus scores no rows")
   }
 
   test("cross-corpus near-dup pairs new against ref only, never within a side") {

@@ -22,7 +22,8 @@ class NgramLmSpec extends SparkSpec {
                         train: Seq[(Long, String)], score: Seq[(Long, String)],
                         minCount: Long = 1L)
       : Map[Long, (Long, Option[Double])] = {
-    def w(s: String) = s.split("\\s+").filter(_.nonEmpty).toSeq
+    def w(s: String) =
+      if (s == null) Seq.empty[String] else s.split("\\s+").filter(_.nonEmpty).toSeq
     val trainDocs = train.map { case (_, t) => w(t) }
     def gramsOf(ws: Seq[String], j: Int): Seq[Seq[String]] =
       if (ws.size < j) Nil else ws.sliding(j).toSeq
@@ -37,9 +38,11 @@ class NgramLmSpec extends SparkSpec {
     }.toMap
     val n = counts(1).values.sum.toDouble
     val v = counts(1).size.toDouble
-    score.map { case (id, t) =>
-      val ws = w(t)
-      val pos = gramsOf(ws, order)
+    // a duplicated id scores the positions of all its documents
+    val posOf = score.groupBy(_._1).view
+      .mapValues(_.flatMap { case (_, t) => gramsOf(w(t), order) }).toMap
+    score.map { case (id, _) =>
+      val pos = posOf(id)
       if (pos.isEmpty) id -> (0L, None)
       else {
         val lps = pos.map { g =>
@@ -73,6 +76,23 @@ class NgramLmSpec extends SparkSpec {
       assert(got == reference(order, alpha, l, corpus, corpus),
         s"order=$order alpha=$alpha")
       graft.api.Pinned.release(spark)
+    }
+  }
+
+  test("ngramLmScore edge inputs equal the fold: blank/null text, duplicate ids, empty frame") {
+    val edges = Seq(
+      (0L, "a b a b c a b"), (1L, " \t\n "), (2L, "a\tb\na  b\r\nc a b"),
+      (3L, null), (4L, "a b c a b c"), (4L, "c a b a"), (5L, "x y"))
+    def rows(docs: Seq[(Long, String)], order: Int, l: Seq[Double]) =
+      try TextOps.ngramLmScore(docs.toDF("doc_id", "text"), "doc_id", "text", order, 0.5, l)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1),
+          if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSeq.sortBy(_.toString)
+      finally graft.api.Pinned.release(spark)
+    for ((order, l) <- Seq(2 -> Seq(0.7, 0.3), 3 -> Seq(0.6, 0.3, 0.1),
+        5 -> Seq(0.4, 0.25, 0.15, 0.12, 0.08))) {
+      val want = edges.map { case (id, _) => id -> reference(order, 0.5, l, edges, edges)(id) }
+      assert(rows(edges, order, l) == want.sortBy(_.toString), s"order=$order")
+      assert(rows(Seq.empty, order, l).isEmpty, s"order=$order: empty corpus, no rows")
     }
   }
 

@@ -15,9 +15,8 @@ class PlanSweepSpec extends SparkSpec {
   //    by construction (the LSH-bucketed variant is the scale path)
   //  - q_ann_topk: brute-force baseline broadcasts the (tiny) probe set
   //    against every partition on an inequality condition
-  //  - q_bm25 / q_tfidf / q_lm_score: corpus statistics (N, avgdl / N /
-  //    vocabulary size) reduce to a SINGLE broadcast row cross-joined
-  //    onto the scoring scan
+  //  - q_bm25 / q_tfidf: corpus statistics (N, avgdl / N) reduce to a
+  //    SINGLE broadcast row cross-joined onto the scoring scan
   //  - q_embed_ingest: exact cross-corpus cosine anti-join against the
   //    broadcast reference (the IVF/LSH path is the beyond-broadcast
   //    variant; the exact form carries the oracle)
@@ -25,15 +24,14 @@ class PlanSweepSpec extends SparkSpec {
   //    SINGLE broadcast row cross-joined onto the candidate scoring
   //  - q_pq_topk: exhaustive-ADC face broadcasts the (tiny) probe set's
   //    lookup tables against the coded corpus, like q_ann_topk
-  //  - q_ppl_buckets: rides q_lm_score's scorer — the same single
-  //    vocabulary-size row cross-joined onto the scoring scan
   //  - q_bm25_batch: the (N, avgdl) collection stats reduce to a SINGLE
   //    row cross-joined onto the query-term × idf table (itself bounded
   //    by the query batch), like q_bm25
-  //  - q_lm3_score / q_lm5_score / q_kn3_score / q_mkn3_score: the collection
-  //    stats reduce to a SINGLE row cross-joined onto the n-gram scoring
-  //    join, like q_lm_score (the against faces — q_lm3_against,
-  //    q_mkn3_against — fold N/V as literals instead)
+  //  - q_kn3_score / q_mkn3_score: the collection stats reduce to a
+  //    SINGLE row cross-joined onto the n-gram scoring join (the
+  //    Jelinek-Mercer faces — q_lm_score, q_lm3_score, q_lm5_score,
+  //    q_ppl_buckets and the against faces — fold N/V as literals and
+  //    plan no nested-loop join)
   //  - q_hybrid_rrf: both leg baselines by design — the BM25 leg's
   //    single stats row (q_bm25_batch) and the ANN leg's broadcast
   //    probe set on an inequality condition (q_ann_topk)
@@ -42,8 +40,7 @@ class PlanSweepSpec extends SparkSpec {
   //    face; its self-exclusion filter rides the equi-join, not a NLJ)
   private val bnljByDesign =
     Set("q_ngram_jaccard", "q_embed_dedup", "q_ann_topk", "q_bm25", "q_tfidf",
-      "q_lm_score", "q_embed_ingest", "q_heavy_hitters", "q_pq_topk",
-      "q_ppl_buckets", "q_bm25_batch", "q_lm3_score", "q_lm5_score",
+      "q_embed_ingest", "q_heavy_hitters", "q_pq_topk", "q_bm25_batch",
       "q_kn3_score", "q_mkn3_score", "q_hybrid_rrf", "q_hybrid_rrf_ivf")
 
   test("no query plans a cartesian product; nested-loop joins only by design") {

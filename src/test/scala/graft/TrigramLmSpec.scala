@@ -14,10 +14,19 @@ class TrigramLmSpec extends SparkSpec {
     (0L, "a b a b c"), (1L, "a b a"), (2L, "c c c c d"),
     (3L, "x y"), (4L, ""), (5L, "a b c a b c a"))
 
-  /** The definition, folded in plain Scala (no Spark, no SQL). */
-  private def reference(alpha: Double, l: (Double, Double, Double))
-      : Map[Long, (Long, Option[Double])] = {
-    def w(s: String) = s.split("\\s+").filter(_.nonEmpty).toSeq
+  // whitespace-only, tab/newline-separated and null text, a duplicated
+  // doc_id (its rows share one score over both documents' positions)
+  private val edges = Seq(
+    (0L, "a b a b c"), (1L, " \t\n "), (2L, "a\tb\na  b\r\nc"), (3L, null),
+    (4L, "a b c a"), (4L, "b a b c"), (5L, "x y"))
+
+  /** The definition, folded in plain Scala (no Spark, no SQL): one
+    * (id, n_tris, avg_logprob) per input row. */
+  private def reference(alpha: Double, l: (Double, Double, Double),
+                        corpus: Seq[(Long, String)] = corpus)
+      : Seq[(Long, (Long, Option[Double]))] = {
+    def w(s: String) =
+      if (s == null) Seq.empty[String] else s.split("\\s+").filter(_.nonEmpty).toSeq
     val byDoc = corpus.map { case (id, t) => id -> w(t) }
     val toks = byDoc.flatMap(_._2)
     val c1 = toks.groupBy(identity).view.mapValues(_.size.toLong).toMap
@@ -31,9 +40,10 @@ class TrigramLmSpec extends SparkSpec {
     }
     val c3 = tris.groupBy(identity).view.mapValues(_.size.toLong).toMap
     val c3x = tris.groupBy(t => (t._1, t._2)).view.mapValues(_.size.toLong).toMap
-    byDoc.map { case (id, ws) =>
-      val docTris =
+    corpus.map { case (id, _) =>
+      val docTris = byDoc.filter(_._1 == id).flatMap { case (_, ws) =>
         if (ws.size < 3) Nil else ws.sliding(3).map(s => (s(0), s(1), s(2))).toSeq
+      }
       if (docTris.isEmpty) id -> (0L, None)
       else {
         val lps = docTris.map { case tr @ (u, tv, t) =>
@@ -46,20 +56,28 @@ class TrigramLmSpec extends SparkSpec {
           .setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
         id -> (docTris.size.toLong, Some(avg))
       }
-    }.toMap
+    }.sortBy(_.toString)
   }
 
+  private def scored(corpus: Seq[(Long, String)], alpha: Double,
+                     l: (Double, Double, Double)): Seq[(Long, (Long, Option[Double]))] =
+    try graft.pipeline.TextOps.trigramLmScore(
+        corpus.toDF("doc_id", "text"), "doc_id", "text", alpha, l)
+      .collect().map { r =>
+        r.getLong(0) -> (r.getLong(1),
+          if (r.isNullAt(2)) None else Some(r.getDouble(2)))
+      }.toSeq.sortBy(_.toString)
+    finally graft.api.Pinned.release(spark)
+
   test("trigramLmScore equals the independent Scala fold") {
-    for ((alpha, l) <- Seq(0.5 -> (0.6, 0.3, 0.1), 1.0 -> (0.4, 0.4, 0.2))) {
-      val got = graft.pipeline.TextOps.trigramLmScore(
-          corpus.toDF("doc_id", "text"), "doc_id", "text", alpha, l)
-        .collect().map { r =>
-          r.getLong(0) -> (r.getLong(1),
-            if (r.isNullAt(2)) None else Some(r.getDouble(2)))
-        }.toMap
-      assert(got == reference(alpha, l), s"alpha=$alpha lambdas=$l")
-      graft.api.Pinned.release(spark)
-    }
+    for ((alpha, l) <- Seq(0.5 -> (0.6, 0.3, 0.1), 1.0 -> (0.4, 0.4, 0.2)))
+      assert(scored(corpus, alpha, l) == reference(alpha, l), s"alpha=$alpha lambdas=$l")
+  }
+
+  test("trigramLmScore edge inputs equal the fold: blank/null text, duplicate ids, empty frame") {
+    val l = (0.6, 0.3, 0.1)
+    assert(scored(edges, 0.5, l) == reference(0.5, l, edges))
+    assert(scored(Seq.empty, 0.5, l).isEmpty, "an empty corpus scores no rows (N = 0)")
   }
 
   test("Lm3Score node: v7 stamp, round-trip, named validation, capture == direct API") {
