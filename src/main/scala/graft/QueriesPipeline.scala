@@ -3107,7 +3107,7 @@ object QueriesPipeline {
   }
 
   /** A level's per-count discount selection in SQL: D1/D2/D3+ by the
-    * (coalesced) count's bucket — `TextOps.mknLp`'s `disc`. */
+    * (coalesced) count's bucket — `TextOps.KnBucketed.disc`. */
   private def mknDSel(dl: String, c: String): String =
     s"(CASE WHEN $c = 1 THEN $dl.d1 WHEN $c = 2 THEN $dl.d2 ELSE $dl.d3 END)"
 

@@ -100,8 +100,7 @@ object Arpa {
                    sentenceMode: Boolean = false): Unit = {
     require(discount > 0 && discount < 1,
       s"discount must be in (0, 1), got $discount")
-    exportModel(refDocs, refTextCol, order, path, minCount,
-      knDiscBuilders(discount), needDiscounts = false,
+    exportModel(refDocs, refTextCol, order, path, minCount, Some(discount),
       sentenceMode = sentenceMode)
   }
 
@@ -115,36 +114,25 @@ object Arpa {
                     minCount: Long = 1L,
                     sentenceMode: Boolean = false): Unit = {
     TextOps.checkMknParams(order, Map.empty, fallback)
-    exportModel(refDocs, refTextCol, order, path, minCount,
-      mknDiscBuilders, needDiscounts = true, fallback = fallback,
-      sentenceMode = sentenceMode)
+    exportModel(refDocs, refTextCol, order, path, minCount, None,
+      fallback = fallback, sentenceMode = sentenceMode)
   }
 
-  /** The fixed-discount (interpolated-KN) column builders: (per-count
-    * discount, per-level discount-mass numerator, <unk> numerator). */
-  private def knDiscBuilders(discount: Double)
-      : Map[Int, (Double, Double, Double)] =>
-        ((Int, Column) => Column, Int => Column, Row => Double) =
-    _ => ((_: Int, _: Column) => lit(discount),
-      (j: Int) => lit(discount) * col(s"__n1p$j"),
-      (st: Row) => discount * st.getAs[Long]("__n1p1"))
-
-  /** The count-bucketed (modified-KN) column builders over a per-level
-    * discount map. */
-  private def mknDiscBuilders(ds: Map[Int, (Double, Double, Double)])
-      : ((Int, Column) => Column, Int => Column, Row => Double) =
-    ((j: Int, c: Column) => {
-      val (d1, d2, d3) = ds(j)
-      when(c === 1L, lit(d1)).when(c === 2L, lit(d2)).otherwise(lit(d3))
-    }, (j: Int) => {
-      val (d1, d2, d3) = ds(j)
-      lit(d1) * col(s"__nb1$j") + lit(d2) * col(s"__nb2$j") +
-        lit(d3) * col(s"__nb3$j")
-    }, (st: Row) => {
-      val (d1, d2, d3) = ds(1)
-      d1 * st.getAs[Long]("__nb11") + d2 * st.getAs[Long]("__nb21") +
-        d3 * st.getAs[Long]("__nb31")
-    })
+  /** The `<unk>` entry's log10 prob — the fold's uniform floor
+    * γ₁/tot₁ · 1/(V+1) as a driver scalar over one model's level-1 stats
+    * row: `fixed` = Some(D) is interpolated KN at D, None modified KN
+    * over the level map `ds`. */
+  private def unkLp10(fixed: Option[Double], ds: Map[Int, (Double, Double, Double)],
+                      st: Row): Double = {
+    val mass = fixed match {
+      case Some(d) => d * st.getAs[Long]("__n1p1")
+      case None =>
+        val (d1, d2, d3) = ds(1)
+        d1 * st.getAs[Long]("__nb11") + d2 * st.getAs[Long]("__nb21") +
+          d3 * st.getAs[Long]("__nb31")
+    }
+    math.log10(mass / st.getAs[Double]("__t1") * (1.0 / (st.getAs[Long]("__v") + 1.0)))
+  }
 
   /** The model tables one ARPA file serializes (possibly a per-language
     * slice of shared keyed tables). */
@@ -157,11 +145,7 @@ object Arpa {
     * or cap error must not strand the checkpoints), derive discounts,
     * stream the file. */
   private def exportModel(refDocs: DataFrame, refTextCol: String, order: Int,
-                          path: String, minCount: Long,
-                          mkDisc: Map[Int, (Double, Double, Double)] =>
-                            ((Int, Column) => Column, Int => Column,
-                             Row => Double),
-                          needDiscounts: Boolean,
+                          path: String, minCount: Long, fixed: Option[Double],
                           fallback: (Double, Double, Double) = TextOps.MknFallback,
                           sentenceMode: Boolean = false): Unit = {
     require(order >= 2 && order <= 8,
@@ -186,102 +170,75 @@ object Arpa {
           "arpaExport: the reference corpus yields an empty model " +
             "(needs at least one bigram)")
         val ds =
-          if (needDiscounts) TextOps.mknDiscountsFor(order, rawN, cont, fallback)
+          if (fixed.isEmpty) TextOps.mknDiscountsFor(order, rawN, cont, fallback)
           else Map.empty[Int, (Double, Double, Double)]
-        val (disc, gnum, unkNum) = mkDisc(ds)
-        writeArpa(spark, order, path, ModelTables(rawN, ctxN, cont, ctxc),
-          st, disc, gnum, unkNum)
+        writeArpa(spark, order, path,
+          levelEntries(order, ModelTables(rawN, ctxN, cont, ctxc), Nil,
+            TextOps.statLiterals(_, st),
+            fixed.fold(TextOps.mknDisc(ds))(new TextOps.KnFixed(_))),
+          unkLp10(fixed, ds, st))
       } finally scope.release()
     }
   }
 
-  /** Stream one model's sections to `path`: interpolated probabilities
-    * via the SAME fold arithmetic the scoring faces use, back-off weights
-    * on context entries, `<unk>` as a first-class entry, header counts
+  /** The per-level entry frames of one KN-family model: (`prefix` ++
+    * gram key cols, __lp10, __bo10 nullable). Interpolated probabilities
+    * come from the SAME fold the scoring faces use ([[TextOps.knFold]],
+    * over LEFT-joined count columns, so it is defined for context-only
+    * entries too); back-off weights sit on context entries. `prefix`
+    * (`Seq("__l")` for the language-keyed tables) leads every join key —
+    * a filter on a join key commutes through joins/union/distinct, so
+    * the `__l = lang` slice of a keyed frame IS the per-slice frame.
+    * `withStats` joins or folds the level-1 stats columns (and the
+    * per-language discount columns). */
+  private def levelEntries(order: Int, t: ModelTables, prefix: Seq[String],
+                           withStats: DataFrame => DataFrame,
+                           d: TextOps.KnDisc)(j: Int): DataFrame = {
+    def keys(j: Int): Seq[String] = prefix ++ TextOps.gramCols(order, j)
+    def contSides(top: Int) =
+      TextOps.levelSides(order, top, t.cont, t.ctxc, _ => false)
+    if (j == order) {
+      val joined = withStats(TextOps.joinTower(
+        t.rawN.join(t.ctxN, keys(order).dropRight(1)), contSides(order - 1), prefix, "left"))
+      joined.select(keys(order).map(col) :+
+        log10(TextOps.knFold(order, order, d)).as("__lp10") :+
+        lit(null).cast("double").as("__bo10"): _*)
+    } else {
+      // context table of level j+1, its gram keys SHIFTED one position
+      // right so they align with level-j entry names (__p{i} -> __p{i+1})
+      val totCol = if (j + 1 == order) s"__tot$order" else s"__ctot${j + 1}"
+      val ctx = (if (j + 1 == order) t.ctxN else t.ctxc(j + 1)).select(
+        prefix.map(col) ++
+          TextOps.gramCols(order, j + 1).dropRight(1)
+            .map(n => col(n).as(s"__p${n.drop(3).toInt + 1}")) ++
+          Seq(totCol, s"__n1p${j + 1}", s"__nb1${j + 1}", s"__nb2${j + 1}",
+            s"__nb3${j + 1}").map(col): _*)
+      val base = t.cont(j).select(keys(j).map(col): _*)
+        .unionByName(ctx.select(keys(j).map(col): _*))
+        .distinct()
+      val joined = withStats(TextOps.joinTower(base, contSides(j), prefix, "left"))
+        .join(ctx, keys(j), "left")
+      val tot = col(totCol)
+      val bo = when(tot.isNotNull && tot > 0, log10(d.gamma(j + 1) / tot))
+      joined.select(keys(j).map(col) :+
+        log10(TextOps.knFold(order, j, d)).as("__lp10") :+ bo.as("__bo10"): _*)
+    }
+  }
+
+  /** The `graft.arpa.maxEntries` contract: `entries` (a count and what it
+    * counts) must fit the cap, with a named error otherwise. */
+  private def requireUnderCap(total: Long, entries: String, cap: Long): Unit =
+    require(total <= cap,
+      s"arpaExport: $total $entries exceed graft.arpa.maxEntries = $cap — " +
+        "an ARPA file is a driver-sized artifact; prune harder (minCount) " +
+        "or raise the conf deliberately (together with driver memory: " +
+        "import buffers ~150-250 bytes per entry)")
+
+  /** Stream one model's sections to `path`: the level frames of
+    * [[levelEntries]], `<unk>` as a first-class entry, header counts
     * first, `graft.arpa.maxEntries`-capped. */
   private def writeArpa(spark: SparkSession, order: Int, path: String,
-                        t: ModelTables, st: Row,
-                        disc: (Int, Column) => Column, gnum: Int => Column,
-                        unkNum: Row => Double): Unit = {
-    def keys(j: Int): Seq[String] = TextOps.gramCols(order, j)
-    def withStats(d: DataFrame): DataFrame =
-      Seq("__t1", "__n1p1", "__nb11", "__nb21", "__nb31", "__v")
-        .foldLeft(d)((x, c) => x.withColumn(c, lit(st.getAs[Any](c))))
-
-    /** The interpolated probability of an entry whose TOP level is `top`
-      * (raw counts when top == order, continuation counts below) — the
-      * knLp/mknLp arithmetic without the final log, over LEFT-joined
-      * count columns, so it is defined for context-only entries too. */
-    def pFold(top: Int): Column = {
-      val c1 = coalesce(col("__cc1"), lit(0L))
-      var p: Column =
-        greatest(c1.cast("double") - disc(1, c1), lit(0.0)) / col("__t1") +
-          gnum(1) / col("__t1") * (lit(1.0) / (col("__v") + lit(1.0)))
-      val innerTop = if (top == order) order - 1 else top
-      for (j <- 2 to innerTop) {
-        val cj = coalesce(col(s"__cc$j"), lit(0L))
-        val hi =
-          greatest(cj.cast("double") - disc(j, cj), lit(0.0)) / col(s"__ctot$j") +
-            gnum(j) / col(s"__ctot$j") * p
-        p = when(coalesce(col(s"__ctot$j"), lit(0L)) > 0, hi).otherwise(p)
-      }
-      if (top == order) {
-        val cN = coalesce(col(s"__cr$order"), lit(0L))
-        val hiN =
-          greatest(cN.cast("double") - disc(order, cN), lit(0.0)) / col(s"__tot$order") +
-            gnum(order) / col(s"__tot$order") * p
-        p = when(coalesce(col(s"__tot$order"), lit(0L)) > 0, hiN).otherwise(p)
-      }
-      p
-    }
-
-    /** Context table of level j+1, its keys SHIFTED one position right so
-      * they align with level-j entry names (__p{i} -> __p{i+1}). */
-    def shiftedCtx(j: Int): DataFrame = {
-      val (src, totCol) =
-        if (j + 1 == order) (t.ctxN, s"__tot$order") else (t.ctxc(j + 1), s"__ctot${j + 1}")
-      val srcKeys = keys(j + 1).dropRight(1)
-      val carried = Seq(totCol, s"__n1p${j + 1}", s"__nb1${j + 1}",
-        s"__nb2${j + 1}", s"__nb3${j + 1}")
-      src.select(srcKeys.map(n => col(n).as(s"__p${n.drop(3).toInt + 1}")) ++
-        carried.map(col): _*)
-    }
-
-    /** Per-level entry frame: (key cols, __lp10, __bo10 nullable). */
-    def entries(j: Int): DataFrame = {
-      if (j == order) {
-        var d = t.rawN.join(t.ctxN, keys(order).dropRight(1))
-        for (i <- order - 1 to 2 by -1)
-          d = d.join(t.cont(i), keys(i), "left")
-            .join(t.ctxc(i), keys(i).dropRight(1), "left")
-        d = withStats(d.join(t.cont(1), keys(1), "left"))
-        d.select(keys(order).map(col) :+ log10(pFold(order)).as("__lp10") :+
-          lit(null).cast("double").as("__bo10"): _*)
-      } else {
-        val ctx = shiftedCtx(j)
-        val base = t.cont(j).select(keys(j).map(col): _*)
-          .unionByName(ctx.select(keys(j).map(col): _*))
-          .distinct()
-        var d = base
-        for (i <- j to 2 by -1)
-          d = d.join(t.cont(i), keys(i), "left")
-            .join(t.ctxc(i), keys(i).dropRight(1), "left")
-        d = withStats(d.join(t.cont(1), keys(1), "left"))
-          .join(ctx, keys(j), "left")
-        val totCol =
-          if (j + 1 == order) col(s"__tot$order") else col(s"__ctot${j + 1}")
-        val bo = when(totCol.isNotNull && totCol > 0,
-          log10(gnum(j + 1) / totCol))
-        d.select(keys(j).map(col) :+ log10(pFold(j)).as("__lp10") :+
-          bo.as("__bo10"): _*)
-      }
-    }
-
-    // <unk>: the fold's uniform floor γ₁ · 1/(V+1) as a first-class entry
-    val t1 = st.getAs[Double]("__t1")
-    val v = st.getAs[Long]("__v")
-    val unkLp10 = math.log10(unkNum(st) / t1 * (1.0 / (v + 1.0)))
-
+                        entries: Int => DataFrame, unkLp10: Double): Unit = {
     // each level frame has TWO consumers — the header count and the
     // sorted section stream — and its multi-way join over the pinned
     // tables is the expensive part: persist it for the file's lifetime
@@ -290,13 +247,7 @@ object Arpa {
     try {
       // header counts first (one count() per level, driver scalars)
       val counts = (1 to order).map(j => j -> levelFrames(j).count()).toMap
-      val total = counts.values.sum + 1
-      val cap = maxEntries(spark)
-      require(total <= cap,
-        s"arpaExport: $total entries exceed graft.arpa.maxEntries = $cap — " +
-          "an ARPA file is a driver-sized artifact; prune harder (minCount) " +
-          "or raise the conf deliberately (together with driver memory: " +
-          "import buffers ~150-250 bytes per entry)")
+      requireUnderCap(counts.values.sum + 1, "entries", maxEntries(spark))
 
       // Hadoop FS streams (the Artifacts convention): local paths on
       // local[*], object-store URIs on a cluster — the artifact layer must
@@ -322,7 +273,8 @@ object Arpa {
           // driver-sized artifact by contract), so the single sort task
           // is bounded by the same cap as the serial file write itself.
           val it = levelFrames(j).coalesce(1)
-            .sortWithinPartitions(keys(j).map(col): _*).toLocalIterator()
+            .sortWithinPartitions(TextOps.gramCols(order, j).map(col): _*)
+            .toLocalIterator()
           while (it.hasNext) {
             val r = it.next()
             val gram = (0 until j).map(r.getString).mkString(" ")
@@ -338,139 +290,56 @@ object Arpa {
   }
 
   /** The LANGUAGE-KEYED multi-file writer (optimization guide §2.4 —
-    * remove repeated work outright): build each level's entry frame ONCE
-    * over the `__l`-keyed pinned tables, with every per-language scalar
-    * the per-slice [[writeArpa]] folded as a DRIVER LITERAL (level-1
-    * stats, MKN discounts) JOINED as a per-language COLUMN instead —
-    * same doubles, same op tree, so every file stays byte-identical to a
-    * per-slice export (ArpaSpec pins it). The multi-way entry joins that
-    * used to run PER LANGUAGE (~12 broadcast materializations × L for
-    * the by-lang export — its dominant cost) now run once per level, and
+    * remove repeated work outright): each level's entry frame builds
+    * ONCE over the `__l`-keyed pinned tables ([[levelEntries]] with the
+    * `__l` prefix), with every per-language scalar the per-slice
+    * [[writeArpa]] folded as a DRIVER LITERAL (level-1 stats, MKN
+    * discounts) JOINED as a per-language COLUMN instead — same doubles,
+    * same op tree, so every file stays byte-identical to a per-slice
+    * export (ArpaSpec pins it). The multi-way entry joins that used to
+    * run PER LANGUAGE (~12 broadcast materializations × L for the
+    * by-lang export — its dominant cost) now run once per level, and
     * each level streams to ALL language files in ONE sorted pass
     * (`sortWithinPartitions(__l, keys)` + a writer demux: within a
     * language the rows arrive in exactly the per-slice key order). Jobs:
     * 2 per level (count + stream), independent of language count. */
   private def writeArpaKeyed(spark: SparkSession, order: Int,
                              langs: Seq[String], pathOf: String => String,
-                             t: ModelTables, statsK: DataFrame,
-                             discK: Option[DataFrame],
-                             disc: (Int, Column) => Column,
-                             gnum: Int => Column,
+                             entries: Int => DataFrame,
                              unkLp10Of: String => Double): Unit = {
-    def keys(j: Int): Seq[String] = TextOps.gramCols(order, j)
-    def kkeys(j: Int): Seq[String] = "__l" +: keys(j)
-    def withStats(d: DataFrame): DataFrame =
-      discK.foldLeft(d.join(statsK, Seq("__l")))((x, dk) => x.join(dk, Seq("__l")))
-
-    /** [[writeArpa]]'s pFold verbatim — the per-language stats/discount
-      * columns resolve from the joins above instead of literals. */
-    def pFold(top: Int): Column = {
-      val c1 = coalesce(col("__cc1"), lit(0L))
-      var p: Column =
-        greatest(c1.cast("double") - disc(1, c1), lit(0.0)) / col("__t1") +
-          gnum(1) / col("__t1") * (lit(1.0) / (col("__v") + lit(1.0)))
-      val innerTop = if (top == order) order - 1 else top
-      for (j <- 2 to innerTop) {
-        val cj = coalesce(col(s"__cc$j"), lit(0L))
-        val hi =
-          greatest(cj.cast("double") - disc(j, cj), lit(0.0)) / col(s"__ctot$j") +
-            gnum(j) / col(s"__ctot$j") * p
-        p = when(coalesce(col(s"__ctot$j"), lit(0L)) > 0, hi).otherwise(p)
-      }
-      if (top == order) {
-        val cN = coalesce(col(s"__cr$order"), lit(0L))
-        val hiN =
-          greatest(cN.cast("double") - disc(order, cN), lit(0.0)) / col(s"__tot$order") +
-            gnum(order) / col(s"__tot$order") * p
-        p = when(coalesce(col(s"__tot$order"), lit(0L)) > 0, hiN).otherwise(p)
-      }
-      p
-    }
-
-    def shiftedCtx(j: Int): DataFrame = {
-      val (src, totCol) =
-        if (j + 1 == order) (t.ctxN, s"__tot$order") else (t.ctxc(j + 1), s"__ctot${j + 1}")
-      val srcKeys = keys(j + 1).dropRight(1)
-      val carried = Seq(totCol, s"__n1p${j + 1}", s"__nb1${j + 1}",
-        s"__nb2${j + 1}", s"__nb3${j + 1}")
-      src.select(col("__l") +:
-        (srcKeys.map(n => col(n).as(s"__p${n.drop(3).toInt + 1}")) ++
-          carried.map(col)): _*)
-    }
-
-    /** [[writeArpa]]'s entries(j) with `__l` prepended to every join key
-      * (a filter on a join key commutes through joins/union/distinct, so
-      * the `__l = lang` slice of this frame IS the per-slice frame); the
-      * inner stats join restricts rows to the modeled languages. */
-    def entries(j: Int): DataFrame = {
-      if (j == order) {
-        var d = t.rawN.join(t.ctxN, kkeys(order).dropRight(1))
-        for (i <- order - 1 to 2 by -1)
-          d = d.join(t.cont(i), kkeys(i), "left")
-            .join(t.ctxc(i), kkeys(i).dropRight(1), "left")
-        d = withStats(d.join(t.cont(1), kkeys(1), "left"))
-        d.select(kkeys(order).map(col) :+ log10(pFold(order)).as("__lp10") :+
-          lit(null).cast("double").as("__bo10"): _*)
-      } else {
-        val ctx = shiftedCtx(j)
-        val base = t.cont(j).select(kkeys(j).map(col): _*)
-          .unionByName(ctx.select(kkeys(j).map(col): _*))
-          .distinct()
-        var d = base
-        for (i <- j to 2 by -1)
-          d = d.join(t.cont(i), kkeys(i), "left")
-            .join(t.ctxc(i), kkeys(i).dropRight(1), "left")
-        d = withStats(d.join(t.cont(1), kkeys(1), "left"))
-          .join(ctx, kkeys(j), "left")
-        val totCol =
-          if (j + 1 == order) col(s"__tot$order") else col(s"__ctot${j + 1}")
-        val bo = when(totCol.isNotNull && totCol > 0,
-          log10(gnum(j + 1) / totCol))
-        d.select(kkeys(j).map(col) :+ log10(pFold(j)).as("__lp10") :+
-          bo.as("__bo10"): _*)
-      }
-    }
-
     val levelFrames = (1 to order).map(j => j -> entries(j).persist()).toMap
     try {
       // ONE count job per level (it also materializes the persisted
       // frame), all levels submitted CONCURRENTLY — the multi-pin futures
       // pattern: the level builds are independent and each is a chain of
       // small stages, so overlapping them fills the slots a serial loop
-      // leaves idle. langOf mirrors the struct-key convention.
+      // leaves idle. Every future settles before a failure rethrows (an
+      // in-flight sibling must not outlive the finally's unpersist).
+      // langOf mirrors the struct-key convention.
       def langOfStruct(s: Row): String = if (s.isNullAt(0)) null else s.getString(0)
       val countsOf: Map[(String, Int), Long] = {
-        import scala.concurrent.{Await, Future}
+        import scala.concurrent.Future
         import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val futs = (1 to order).map { j =>
+        TextOps.awaitAll((1 to order).map { j =>
           Future {
             levelFrames(j).groupBy(col("__l")).count().collect().map { r =>
               (langOfStruct(r.getStruct(0)), j) -> r.getLong(1)
             }.toSeq
           }
-        }
-        // settle every future before rethrowing (an in-flight sibling
-        // must not outlive the finally's unpersist)
-        val settled = Await.result(
-          Future.sequence(futs.map(_.transform(scala.util.Success(_)))),
-          Duration.Inf)
-        settled.collectFirst { case scala.util.Failure(e) => throw e }
-        settled.flatMap(_.get).toMap
+        })().flatten.toMap
       }
       def countsFor(l: String): Map[Int, Long] =
         (1 to order).map(j => j -> countsOf.getOrElse((l, j), 0L)).toMap
       // the per-file cap contract and message of [[writeArpa]], checked
-      // for EVERY language before any file opens (all-or-nothing)
+      // for EVERY language before any file opens (all-or-nothing) — and
+      // per LEVEL over all languages: one level of every language sorts
+      // in ONE task below, so the cap bounds that task too
       val cap = maxEntries(spark)
-      for (l <- langs) {
-        val total = countsFor(l).values.sum + 1
-        require(total <= cap,
-          s"arpaExport: $total entries exceed graft.arpa.maxEntries = $cap — " +
-            "an ARPA file is a driver-sized artifact; prune harder (minCount) " +
-            "or raise the conf deliberately (together with driver memory: " +
-            "import buffers ~150-250 bytes per entry)")
-      }
+      for (l <- langs) requireUnderCap(countsFor(l).values.sum + 1, "entries", cap)
+      for (j <- 1 to order)
+        requireUnderCap(langs.map(countsFor(_)(j)).sum,
+          s"level-$j entries summed over all languages (the keyed export " +
+            "sorts one level of every language in one task)", cap)
       // every file opens inside the try: on ANY failure — a path that
       // cannot be created, a failed pass, a failed flush — each opened
       // writer closes and its partial file is deleted (all-or-nothing)
@@ -501,7 +370,8 @@ object Arpa {
           // one sorted pass per level over the shared frame: __l groups
           // the files, the gram keys give each file its per-slice order
           val it = levelFrames(j).coalesce(1)
-            .sortWithinPartitions(kkeys(j).map(col): _*).toLocalIterator()
+            .sortWithinPartitions(("__l" +: TextOps.gramCols(order, j)).map(col): _*)
+            .toLocalIterator()
           while (it.hasNext) {
             val r = it.next()
             val w = writers(langOfStruct(r.getStruct(0)))
@@ -550,8 +420,7 @@ object Arpa {
     require(discount > 0 && discount < 1,
       s"discount must be in (0, 1), got $discount")
     exportByLang(refDocs, refTextCol, refLangCol, order, dir,
-      "arpaExportKnByLang", minCount, needDiscounts = false,
-      TextOps.MknFallback, _ => knDiscBuilders(discount)(Map.empty))
+      "arpaExportKnByLang", minCount, Some(discount), TextOps.MknFallback)
   }
 
   /** [[arpaExportKnByLang]] with KenLM's real smoothing — one
@@ -564,8 +433,7 @@ object Arpa {
                           minCount: Long = 1L): Seq[(String, String)] = {
     TextOps.checkMknParams(order, Map.empty, fallback)
     exportByLang(refDocs, refTextCol, refLangCol, order, dir,
-      "arpaExportMknByLang", minCount, needDiscounts = true, fallback,
-      ds => mknDiscBuilders(ds))
+      "arpaExportMknByLang", minCount, None, fallback)
   }
 
   /** The single-pass per-language export engine: ONE language-keyed
@@ -575,11 +443,8 @@ object Arpa {
   private def exportByLang(refDocs: DataFrame, refTextCol: String,
                            refLangCol: String, order: Int, dir: String,
                            label: String, minCount: Long,
-                           needDiscounts: Boolean,
-                           fallback: (Double, Double, Double),
-                           mkDiscOf: Map[Int, (Double, Double, Double)] =>
-                             ((Int, Column) => Column, Int => Column,
-                              Row => Double)): Seq[(String, String)] = {
+                           fixed: Option[Double],
+                           fallback: (Double, Double, Double)): Seq[(String, String)] = {
     require(order >= 2 && order <= 8,
       s"$label order must be in [2, 8], got $order")
     require(!refDocs.isStreaming,
@@ -616,7 +481,7 @@ object Arpa {
         // small frame (order aggregates over the pinned tables), not a
         // per-language derivation loop
         val dsByLang: Map[String, Map[Int, (Double, Double, Double)]] =
-          if (!needDiscounts) Map.empty
+          if (fixed.nonEmpty) Map.empty
           else TextOps.mknLangDiscounts(order, rawN, cont, fallback)
             .collect().map { r =>
               val s = r.getStruct(r.fieldIndex("__l"))
@@ -656,48 +521,37 @@ object Arpa {
           r.getAs[Long]("__nb31"), r.getAs[Long]("__v")))
         val statsK = spark.createDataFrame(
           new java.util.ArrayList[Row](statsKRows.toSeq.asJava), statsKSchema)
-        val (discK, discC, gnumC) =
-          if (!needDiscounts) {
-            val (d, g, _) = mkDiscOf(Map.empty)
-            (None, d, g)
-          } else {
-            // the joined columns ARE dsByLang's values (fallback already
-            // substituted on absent levels — the same never-read totality
-            // rule as the driver map)
-            val dkSchema = StructType(lField +: (1 to order).flatMap(j => Seq(
-              StructField(s"__d1_$j", DoubleType, nullable = false),
-              StructField(s"__d2_$j", DoubleType, nullable = false),
-              StructField(s"__d3_$j", DoubleType, nullable = false))).toSeq)
-            val dkRows = statRows.map { r =>
-              val ds = dsByLang(langOf(r))
-              Row.fromSeq(r.getStruct(lIdx) +: (1 to order).flatMap { j =>
-                val (d1, d2, d3) = ds(j); Seq(d1, d2, d3)
-              })
-            }
-            val dk = spark.createDataFrame(
-              new java.util.ArrayList[Row](dkRows.toSeq.asJava), dkSchema)
-            val d: (Int, Column) => Column = (j, c) =>
-              when(c === 1L, col(s"__d1_$j")).when(c === 2L, col(s"__d2_$j"))
-                .otherwise(col(s"__d3_$j"))
-            val g: Int => Column = j =>
-              col(s"__d1_$j") * col(s"__nb1$j") + col(s"__d2_$j") * col(s"__nb2$j") +
-                col(s"__d3_$j") * col(s"__nb3$j")
-            (Some(dk), d, g)
+        // the joined columns ARE dsByLang's values (fallback already
+        // substituted on absent levels — the same never-read totality rule
+        // as the driver map)
+        val discK = if (fixed.nonEmpty) None else {
+          val dkSchema = StructType(lField +: (1 to order).flatMap(j => Seq(
+            StructField(s"__d1_$j", DoubleType, nullable = false),
+            StructField(s"__d2_$j", DoubleType, nullable = false),
+            StructField(s"__d3_$j", DoubleType, nullable = false))).toSeq)
+          val dkRows = statRows.map { r =>
+            val ds = dsByLang(langOf(r))
+            Row.fromSeq(r.getStruct(lIdx) +: (1 to order).flatMap { j =>
+              val (d1, d2, d3) = ds(j); Seq(d1, d2, d3)
+            })
           }
+          Some(spark.createDataFrame(
+            new java.util.ArrayList[Row](dkRows.toSeq.asJava), dkSchema))
+        }
+        val d = fixed.fold(TextOps.mknDiscCols)(new TextOps.KnFixed(_))
         // the <unk> entry stays a per-language driver scalar — the same
-        // arithmetic [[writeArpa]] runs (log10(unkNum/t1 · 1/(V+1)))
+        // arithmetic [[writeArpa]]'s caller runs
         val unkLp10ByLang: Map[String, Double] = names.map { l =>
-          val st = statRows.find(r => langOf(r) == l).get
-          val unkNum = mkDiscOf(if (needDiscounts) dsByLang(l) else Map.empty)._3
-          val t1 = st.getAs[Double]("__t1")
-          val v = st.getAs[Long]("__v")
-          l -> math.log10(unkNum(st) / t1 * (1.0 / (v + 1.0)))
+          l -> unkLp10(fixed, if (fixed.nonEmpty) Map.empty else dsByLang(l),
+            statRows.find(r => langOf(r) == l).get)
         }.toMap
         def pathOf(l: String): String =
           new org.apache.hadoop.fs.Path(dir, s"${fileNameOf(l)}.arpa").toString
         writeArpaKeyed(spark, order, names.toSeq, pathOf,
-          ModelTables(rawN, ctxN, cont, ctxc), statsK, discK,
-          discC, gnumC, unkLp10ByLang)
+          levelEntries(order, ModelTables(rawN, ctxN, cont, ctxc), Seq("__l"),
+            x => discK.foldLeft(x.join(statsK, Seq("__l")))((y, dk) => y.join(dk, Seq("__l"))),
+            d),
+          unkLp10ByLang)
         names.toSeq.map(l => (l, pathOf(l)))
       } finally scope.release()
     }
@@ -869,11 +723,13 @@ object Arpa {
       "arpaScoreAgainst: the model has no <unk> entry — open-vocabulary " +
         "scoring needs one (KenLM models carry it; graft exports always " +
         "write it)")
-    val unk = model.unkLp10.get
-    val withJoins = arpaJoins(model, keyPrefix = Nil)
-    val lp = arpaFold(order, lit(unk)) * lit(math.log(10.0))
-    TextOps.againstApply(stream, idCol, textCol, order, "n_grams",
-      withJoins, lp, sentenceMode = sentenceMode)
+    val sides = arpaSides(order, model.tables, Nil)
+    val lp = arpaFold(order, lit(model.unkLp10.get)) * lit(math.log(10.0))
+    stream.lift(TextOps.lmApply(stream.df, idCol, textCol, order, "n_grams",
+      TextOps.joinTower(_, sides, Nil, "left"), lp,
+      // an ARPA artifact is a KN-family model, scored on the against shape
+      TextOps.scoringSpread(order, selfScored = false, knFamily = true),
+      sentenceMode = sentenceMode))
   }
 
   /** Score each document against ITS language's model — the consume half
@@ -905,7 +761,7 @@ object Arpa {
           "entry — open-vocabulary scoring needs one") }
     val spark = stream.df.sparkSession
     val maxOrder = models.map(_._2.order).max
-    // the doc-side key byLangApply builds is struct(col(langCol)) with
+    // the doc-side key lmApply builds is struct(col(langCol)) with
     // FIELD NAME langCol: materialize a string-cast key column so the
     // model-side literal structs match it in name and type
     val keyName = "__arpalang"
@@ -930,32 +786,15 @@ object Arpa {
       spark.createDataFrame(new java.util.ArrayList[Row](rows.asJava), schema)
         .select(struct(col("__ul").as(keyName)).as("__l"), col("__unk"))
     }
-    def keys(j: Int): Seq[String] = TextOps.gramCols(maxOrder, j)
-    def boCtx(j: Int): DataFrame = {
-      val lvl = keyedLevel(j)
-      lvl.where(col(s"__bo$j").isNotNull)
-        .select(col("__l") +:
-          (keys(j).map(n => col(n).as(s"__p${n.drop(3).toInt - 1}")) :+
-            col(s"__bo$j")): _*)
-    }
-    def withJoins(pos: DataFrame): DataFrame = {
-      var d = pos
-      for (j <- maxOrder to 1 by -1)
-        d = d.join(broadcast(keyedLevel(j).select(
-          (col("__l") +: keys(j).map(col)) :+ col(s"__lp$j"): _*)),
-          "__l" +: keys(j), "left")
-      for (j <- 1 until maxOrder)
-        d = d.join(broadcast(boCtx(j)),
-          "__l" +: keys(j + 1).dropRight(1), "left")
-      // an unmodeled language misses this join too: a NULL <unk> floor
-      // propagates to the NULL no-model verdict
-      d.join(broadcast(unkDf), Seq("__l"), "left")
-    }
+    // an unmodeled language misses the <unk> join too: a NULL floor
+    // propagates to the NULL no-model verdict
+    val sides = arpaSides(maxOrder, keyedLevel, Seq("__l")) :+ ((unkDf, Nil, true))
     val lp = arpaFold(maxOrder, col("__unk")) * lit(math.log(10.0))
-    val keyed = stream.lift(
-      stream.df.withColumn(keyName, col(langCol).cast("string")))
-    TextOps.byLangApply(keyed, idCol, textCol, keyName, maxOrder,
-      "n_grams", withJoins, lp)
+    val df = stream.df.withColumn(keyName, col(langCol).cast("string"))
+    stream.lift(TextOps.lmApply(df, idCol, textCol, maxOrder, "n_grams",
+      TextOps.joinTower(_, sides, Seq("__l"), "left"), lp,
+      TextOps.scoringSpread(maxOrder, selfScored = false, knFamily = true),
+      langCol = Some(keyName)))
   }
 
   /** The standard back-off fold over joined __lp/__bo columns (log10):
@@ -971,26 +810,20 @@ object Arpa {
     lg
   }
 
-  /** The single-model join plan: probability tables top-down, then the
-    * re-keyed back-off weights of each context level. */
-  private def arpaJoins(model: ArpaModel, keyPrefix: Seq[String])
-      : DataFrame => DataFrame = {
-    val order = model.order
+  /** The join sides of a back-off model: each level's log10
+    * probabilities top-down, then the back-off weights of each context
+    * level, re-keyed one position left (__p{i} -> __p{i-1}) to align
+    * with the position's context. `keep` leads each table's columns
+    * (`__l` on the language-keyed tables). */
+  private def arpaSides(order: Int, level: Int => DataFrame,
+                        keep: Seq[String]): Seq[TextOps.Side] = {
     def keys(j: Int): Seq[String] = TextOps.gramCols(order, j)
-    def boCtx(j: Int): DataFrame =
-      model.tables(j).where(col(s"__bo$j").isNotNull)
-        .select(keys(j).map(n => col(n).as(s"__p${n.drop(3).toInt - 1}")) :+
-          col(s"__bo$j"): _*)
-    pos => {
-      var d = pos
-      for (j <- order to 1 by -1)
-        d = d.join(broadcast(model.tables(j).select(
-          (keys(j).map(col) :+ col(s"__lp$j")): _*)),
-          keyPrefix ++ keys(j), "left")
-      for (j <- 1 until order)
-        d = d.join(broadcast(boCtx(j)),
-          keyPrefix ++ keys(j + 1).dropRight(1), "left")
-      d
+    (order to 1 by -1).map { j =>
+      (level(j).select((keep ++ keys(j)).map(col) :+ col(s"__lp$j"): _*), keys(j), true)
+    } ++ (1 until order).map { j =>
+      (level(j).where(col(s"__bo$j").isNotNull)
+        .select(keep.map(col) ++ keys(j).map(n => col(n).as(s"__p${n.drop(3).toInt - 1}")) :+
+          col(s"__bo$j"): _*), keys(j + 1).dropRight(1), true)
     }
   }
 }

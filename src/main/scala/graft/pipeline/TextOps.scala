@@ -895,7 +895,8 @@ object TextOps {
     * NULL (no pairs). */
   def bigramLmScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
                     textCol: String, alpha: Double = 0.5): org.apache.spark.sql.DataFrame =
-    jmSelfScore(docs, idCol, textCol, 2, "n_pairs", spread = false,
+    jmSelfScore(docs, idCol, textCol, 2, "n_pairs",
+      spread = scoringSpread(2, selfScored = true, knFamily = false),
       vocabOfContinuations = true)(
       log((col("__c2") + alpha) / (col("__cx2") + col("__vv") * alpha)))
 
@@ -920,6 +921,9 @@ object TextOps {
     val (l3, l2, l1) = lambdas
     require(l3 >= 0 && l2 >= 0 && l1 >= 0 && math.abs(l3 + l2 + l1 - 1.0) < 1e-9,
       s"lambdas must be non-negative and sum to 1, got $lambdas")
+    // the one face off the [[scoringSpread]] table: its order-3 stage
+    // stays NARROW — an explicit choice, not derived. Spreading it changes
+    // batch_sf001's q_lm3_score plan and needs its own ABBA run first.
     jmSelfScore(docs, idCol, textCol, 3, "n_tris", spread = false)(
       ngramLp(3, alpha, Seq(l3, l2, l1)))
   }
@@ -983,9 +987,10 @@ object TextOps {
     * floor of every corpus-stat-then-score operator here) join counts(j)
     * and ctxs(j) from the top order down (suffix-aligned equi joins),
     * then counts(1) unless V is of continuations; N and V fold as
-    * literals into `lp`, and each document averages its positions:
-    * (n, avg_logprob), n 0 and NULL under `order` tokens. `spread` spreads the scoring stage
-    * ([[spreadForCompute]]) — the count build keeps its narrow map.
+    * literals into `lp`, and each document averages its positions in
+    * [[lmApply]]: (n, avg_logprob), n 0 and NULL under `order` tokens.
+    * `spread` spreads the scoring stage ([[spreadForCompute]]) — the
+    * count build keeps its narrow map.
     * Every slice broadcasts when the pinned model's measured size fits
     * the broadcast threshold ([[decideBroadcast]]): the planner sizes a
     * pin by its pre-checkpoint estimate, which counts each position once
@@ -1000,22 +1005,11 @@ object TextOps {
       : org.apache.spark.sql.DataFrame = {
     val (table, n, vv) = jmModel(docs, textCol, order, vocabOfContinuations)
     val bc = decideBroadcast(None, table("__c1"))
-    def side(c: String) = if (bc) broadcast(table(c)) else table(c)
-    val id = col(idCol)
-    val pos = gramsOf(if (spread) spreadForCompute(docs) else docs, textCol, order,
-      gramCols(order, order), Seq(id))
-    val joined = (order to 2 by -1).foldLeft(pos) { (d, j) =>
-      d.join(side(s"__c$j"), gramCols(order, j))
-        .join(side(s"__cx$j"), gramCols(order, j).dropRight(1))
-    }
-    val scored =
-      (if (vocabOfContinuations) joined else joined.join(side("__c1"), gramCols(order, 1)))
-        .withColumn("__n", lit(n)).withColumn("__vv", lit(vv))
-        .withColumn("__lp", lp)
-        .groupBy(id)
-        .agg(count(lit(1)).as(nCol), round(avg(col("__lp")), 3).as("avg_logprob"))
-    docs.select(id).join(scored, Seq(idCol), "left")
-      .select(id, coalesce(col(nCol), lit(0L)).as(nCol), col("avg_logprob"))
+    val sides = levelSides(order, order, j => table(s"__c$j"), j => table(s"__cx$j"),
+      _ => bc, unigrams = !vocabOfContinuations)
+    lmApply(docs, idCol, textCol, order, nCol, pos =>
+      joinTower(pos, sides, Nil, "inner")
+        .withColumn("__n", lit(n)).withColumn("__vv", lit(vv)), lp, spread)
   }
 
   // ================================================================ order-n LM
@@ -1039,28 +1033,23 @@ object TextOps {
     }
   }
 
-  /** Await concurrently-submitted pin futures, registering EVERY
-    * completed checkpoint's ids on the CALLING thread (Pinned scopes are
-    * thread-local) even when a sibling FAILS — then rethrow the first
-    * failure. Without this, one failing count-table build would orphan
-    * every sibling's already-persisted blocks (nothing registered, so
-    * scope release could never unpersist them); with it the failure
-    * path leaks zero blocks. When SEVERAL siblings fail, the others'
-    * exceptions attach to the first as suppressed — two concurrent
-    * count-table builds failing for different reasons both surface. */
-  private[graft] def awaitPinned[A](spark: org.apache.spark.sql.SparkSession,
-                                    futs: Seq[scala.concurrent.Future[A]])(
-                                    ids: A => Set[Int]): Seq[A] = {
+  /** Await concurrently-submitted driver actions, SETTLING every one
+    * before returning or throwing: `each` runs on the CALLING thread for
+    * every success, even when a sibling failed; then the first failure
+    * rethrows with the other failures attached as suppressed. A
+    * fail-fast await (`Future.sequence`) would return on the first
+    * failure while siblings still run — and a caller's `finally` that
+    * unpersists the tables they read would pull them from under those
+    * jobs. */
+  private[graft] def awaitAll[A](futs: Seq[scala.concurrent.Future[A]])(
+                                 each: A => Unit = (_: A) => ()): Seq[A] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     import scala.util.{Failure, Success}
     val done = Await.result(
       Future.sequence(futs.map(_.transform(t => Success(t)))), Duration.Inf)
-    done.foreach {
-      case Success(x) => graft.api.Pinned.register(spark, ids(x))
-      case Failure(_) => ()
-    }
+    done.foreach { case Success(x) => each(x); case Failure(_) => () }
     done.collectFirst { case Failure(e) =>
       done.foreach {
         case Failure(e2) if !(e2 eq e) && !(e2 eq e.getCause) => e.addSuppressed(e2)
@@ -1068,8 +1057,19 @@ object TextOps {
       }
       throw e
     }
-    done.collect { case Success(x) => x }
+    done.map(_.get)
   }
+
+  /** [[awaitAll]] over pin futures, registering EVERY completed
+    * checkpoint's ids on the CALLING thread (Pinned scopes are
+    * thread-local) even when a sibling FAILS. Without this, one failing
+    * count-table build would orphan every sibling's already-persisted
+    * blocks (nothing registered, so scope release could never unpersist
+    * them); with it the failure path leaks zero blocks. */
+  private[graft] def awaitPinned[A](spark: org.apache.spark.sql.SparkSession,
+                                    futs: Seq[scala.concurrent.Future[A]])(
+                                    ids: A => Set[Int]): Seq[A] =
+    awaitAll(futs)(x => graft.api.Pinned.register(spark, ids(x)))
 
   /** Per-order count tables of the n-gram LM: counts(j) is keyed by the
     * last j position columns (__p{order-j+1}..__p{order}) with count
@@ -1161,24 +1161,177 @@ object TextOps {
       thr > 0 && pinnedBytes(table) <= thr
     }
 
-  /** Shared lever hygiene of the against faces: warn when an unpruned
+  /** The against engines' argument checks, run before any model build. */
+  private def checkAgainst(label: String, order: Int, minCount: Long,
+                           refDocs: org.apache.spark.sql.DataFrame,
+                           byLang: Boolean): Unit = {
+    require(order >= 2 && order <= 8, s"$label order must be in [2, 8], got $order")
+    require(!refDocs.isStreaming,
+      s"$label: the reference corpus must be a batch frame (the " +
+        (if (byLang) "models pin" else "model pins") +
+        " once; a streaming reference has no stable artifact)")
+    require(minCount >= 1, s"minCount must be >= 1, got $minCount")
+  }
+
+  /** The against engines' broadcast decisions: one [[decideBroadcast]]
+    * per pinned model table (the derived context aggregates inherit
+    * their parent's), then the lever hygiene — warn when an unpruned
     * high-order model is being built (the count tables approach
     * position-count size — the 100 TB posture depends on `minCount`),
     * and name the streaming constraint when the model does not
     * broadcast. */
-  private def checkLevers(label: String, order: Int, minCount: Long,
-                          streaming: Boolean, allBroadcast: => Boolean): Unit = {
+  private def modelBroadcasts(label: String, order: Int, minCount: Long,
+                              streaming: Boolean, lever: Option[Boolean],
+                              pinned: Seq[org.apache.spark.sql.DataFrame]): Seq[Boolean] = {
+    val bc = pinned.map(decideBroadcast(lever, _))
     if (minCount == 1L && order >= 4)
       logger.warn(s"$label: order-$order model with minCount = 1 — the raw " +
         "count tables are near position-count-sized on real corpora; " +
         "KenLM-style pruning (minCount >= 2) is the lever that keeps the " +
         "model a broadcastable artifact at scale")
-    require(!streaming || allBroadcast,
+    require(!streaming || bc.forall(identity),
       s"$label: the streaming face needs every model table to broadcast " +
         "(a per-micro-batch model shuffle would dominate ingest) but the " +
         "model exceeds the broadcast threshold (or the lever forces " +
         "broadcastModel = false) — prune with minCount until the model " +
         "broadcasts, or score in bounded batches via foreachBatch")
+    bc
+  }
+
+  /** One model table of a scoring join tower: the table, its join keys
+    * (after the tower's key prefix; `Nil` for a per-language frame keyed
+    * by the prefix alone) and whether it broadcasts. */
+  private[pipeline] type Side = (org.apache.spark.sql.DataFrame, Seq[String], Boolean)
+
+  /** Join every side into `pos` in order, each on `keyPrefix` (`Nil`, or
+    * `Seq("__l")` for per-language models) plus its own keys. */
+  private[pipeline] def joinTower(pos: org.apache.spark.sql.DataFrame, sides: Seq[Side],
+                                  keyPrefix: Seq[String],
+                                  how: String): org.apache.spark.sql.DataFrame =
+    sides.foldLeft(pos) { case (d, (t, ks, bc)) =>
+      d.join(if (bc) broadcast(t) else t, keyPrefix ++ ks, how)
+    }
+
+  /** The sides of an interpolated model from level `top` down: each
+    * level j >= 2 joins `table(j)` on its suffix-aligned j-gram keys,
+    * then `ctx(j)` on the j−1 context keys; level 1 (with `unigrams`)
+    * joins `table(1)` on the target alone. */
+  private[pipeline] def levelSides(order: Int, top: Int,
+                                   table: Int => org.apache.spark.sql.DataFrame,
+                                   ctx: Int => org.apache.spark.sql.DataFrame,
+                                   bc: Int => Boolean,
+                                   unigrams: Boolean = true): Seq[Side] =
+    (top to 2 by -1).flatMap { j =>
+      Seq((table(j), gramCols(order, j), bc(j)),
+        (ctx(j), gramCols(order, j).dropRight(1), bc(j)))
+    } ++ (if (unigrams) Seq((table(1), gramCols(order, 1), bc(1))) else Nil)
+
+  /** THE spread decision of the LM scoring stage: with the model tables
+    * broadcast, explode + join tower + partial aggregate fuse into ONE
+    * whole-stage span over the scan, and a single-row-group input
+    * serializes it on one core ([[spreadForCompute]] — identity at
+    * scale, post-shuffle and on streams). Spread at order >= 3, except
+    * on the self-scored KN family. Interleaved A/B measurements:
+    *  - wins at order >= 3: q_lm5_score 3.90 → 3.09 s, q_mkn3_against
+    *    2.8 → 2.1, q_ppl_apply 5.5 → 4.6, q_arpa_score 4.35 → 4.10,
+    *    q_mkn3_bylang 4.45 → 3.24, q_ppl_bylang 4.4 → 3.8 (q_kn3_against
+    *    pays ~0.15 s — the lean plain-KN fold — outweighed across the
+    *    face's callers);
+    *  - order 2's fold is too lean to pay the exchange (q_lm_score
+    *    ~+0.17 s);
+    *  - the self KN faces inner-join a lean fold: q_kn3_score 1.6 →
+    *    1.9/2.0 s, q_mkn3_score flat. */
+  private[pipeline] def scoringSpread(order: Int, selfScored: Boolean,
+                                      knFamily: Boolean): Boolean =
+    order >= 3 && !(selfScored && knFamily)
+
+  /** The ONE scoring stage of the LM family, batch and streaming: explode
+    * the order-n positions (with the struct-wrapped language key
+    * `__l` when `langCol` is set), run the face's `withJoins`, fold the
+    * per-position `lp` per document into (id, nCol, avg_logprob). Batch
+    * folds through one groupBy and left-joins back onto every input id,
+    * so documents under `order` tokens emit (0, NULL); `spread` spreads
+    * the stage ([[scoringSpread]]). Streaming rides the stateless
+    * per-batch combine (position-less documents take a sentinel row so
+    * they still emit (0, NULL)). A position whose `lp` is NULL (a
+    * language without a model) is counted, never summed — so such a
+    * document keeps its position count and scores NULL in both modes;
+    * shared-model faces never produce a NULL `lp` on a real position.
+    * `sentenceMode` ([[Sentences]] windowing) replaces the document's
+    * sliding windows by each sentence's n+1 padded full-order windows;
+    * it has no per-language face. */
+  private[pipeline] def lmApply(df: org.apache.spark.sql.DataFrame, idCol: String,
+                                textCol: String, order: Int, nCol: String,
+                                withJoins: org.apache.spark.sql.DataFrame =>
+                                  org.apache.spark.sql.DataFrame,
+                                lp: Column, spread: Boolean,
+                                langCol: Option[String] = None,
+                                sentenceMode: Boolean = false)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.{Encoder, Row}
+    import org.apache.spark.sql.catalyst.encoders.RowEncoder
+    import org.apache.spark.sql.types._
+    val id = col(idCol)
+    if (!df.isStreaming) {
+      // materialize the doc-side key once (gramsOf re-evaluates keeps)
+      val keyed = langCol.fold(df)(c => df.withColumn("__l", struct(col(c))))
+      val dfS = if (spread) spreadForCompute(keyed) else keyed
+      val keep = id +: langCol.map(_ => col("__l")).toSeq
+      val pos =
+        if (sentenceMode)
+          gramsOf(Sentences.explodeDocs(dfS, id, textCol, order), "__stext",
+            order, gramCols(order, order), keep)
+        else gramsOf(dfS, textCol, order, gramCols(order, order), keep)
+      val scored = withJoins(pos)
+        .withColumn("__lp", lp)
+        .groupBy(id)
+        .agg(count(lit(1)).as(nCol), round(avg(col("__lp")), 3).as("avg_logprob"))
+      return df.select(id).join(scored, Seq(idCol), "left")
+        .select(id, coalesce(col(nCol), lit(0L)).as(nCol), col("avg_logprob"))
+    }
+
+    val sentinel = array(struct((1 to order).map(i =>
+      lit(null).cast("string").as(s"g$i")): _*))
+    val (ws, wins) =
+      if (sentenceMode)
+        (Sentences.windows(col(textCol), order), when(size(col("__w")) > 0, col("__w")))
+      else (words(col(textCol)), when(size(col("__w")) >= order,
+        arrays_zip((1 to order).map(i =>
+          slice(col("__w"), lit(i), size(col("__w")) - (order - 1)).as(s"g$i")): _*)))
+    val u0 = df.withColumn("__w", ws)
+      .select((id.as("__id") +: langCol.map(c => struct(col(c)).as("__l")).toSeq) :+
+        explode(wins.otherwise(sentinel)).as("__g"): _*)
+      .select((col("__id") +: langCol.map(_ => col("__l")).toSeq) ++
+        (1 to order).map(i => col(s"__g.g$i").as(s"__p$i")): _*)
+    val u = withJoins(u0)
+      .select(col("__id"), col("__p1"),
+        when(col("__p1").isNotNull, lp).as("__lp"))
+    val idType = df.schema(idCol).dataType
+    val aggT = StructType(Seq(
+      StructField("__id", idType),
+      StructField(nCol, LongType, nullable = false),
+      StructField("__sum", DoubleType)))
+    val aggEnc: Encoder[Row] = RowEncoder.encoderFor(aggT)
+    val pIdx = u.schema.fieldIndex("__p1")
+    val lpIdx = u.schema.fieldIndex("__lp")
+    graft.streaming.PerBatchCombine(u, Seq("__id"), aggEnc) {
+        (key: Row, it: Iterator[Row]) =>
+          // count positions, sum only scored ones; a doc's positions are
+          // uniformly modeled (one language per doc), so sum/n equals the
+          // batch avg
+          var nn = 0L; var s = 0.0; var ns = 0L
+          it.foreach { r =>
+            if (!r.isNullAt(pIdx)) {
+              nn += 1
+              if (!r.isNullAt(lpIdx)) { ns += 1; s += r.getDouble(lpIdx) }
+            }
+          }
+          Iterator.single(Row(key.get(0), nn, if (ns > 0) s else null))
+      }
+      // the division + round happen in SQL so both faces share Spark's
+      // exact avg/round semantics
+      .select(col("__id").as(idCol), col(nCol),
+        round(col("__sum") / col(nCol), 3).as("avg_logprob"))
   }
 
   /** Explode every j-gram position of `d` into suffix-aligned columns
@@ -1231,14 +1384,8 @@ object TextOps {
       "ngramLmScore trains on its own input — batch only (score a stream " +
         "against a static reference with ngramLmScoreAgainst)")
     val l = lambdasFor(order, lambdas)
-    // spread the SCORING stage at order >= 3 (guide §2.5/§2.6): with the
-    // count tables broadcast, explode + 2·order−1 joins + partial agg
-    // fuse into ONE whole-stage span over the scan, and a single-row-
-    // group input serializes it on one core (measured 1.6 s of
-    // q_lm5_score's 4.2 s — interleaved A/B: 3.90 → 3.09 s). Order 2's
-    // fold is too lean to pay the exchange (q_lm_score A/B: ~+0.17 s) —
-    // identity there, as at scale.
-    jmSelfScore(docs, idCol, textCol, order, "n_grams", spread = order >= 3)(
+    jmSelfScore(docs, idCol, textCol, order, "n_grams",
+      spread = scoringSpread(order, selfScored = true, knFamily = false))(
       ngramLp(order, alpha, l))
   }
 
@@ -1281,42 +1428,59 @@ object TextOps {
                             * requires every table to broadcast —
                             * Some(false) or an oversized auto decision
                             * is a named error there. */
-                          broadcastModel: Option[Boolean] = None): graft.api.MStream = {
-    import org.apache.spark.sql.{Encoder, Row}
-    import org.apache.spark.sql.catalyst.encoders.RowEncoder
-    import org.apache.spark.sql.types._
-    require(order >= 2 && order <= 8,
-      s"ngramLmScoreAgainst order must be in [2, 8], got $order")
+                          broadcastModel: Option[Boolean] = None): graft.api.MStream =
+    jmAgainstScore(stream, refDocs, idCol, textCol, refTextCol, None, order, alpha,
+      lambdas, nCol, minCount, broadcastModel, "ngramLmScoreAgainst")
+
+  /** The Jelinek-Mercer against engine, shared model or per language
+    * (`lang` = (document, reference) language columns): [[ngramModel]]
+    * on the reference, one broadcast decision per pinned count table,
+    * then [[lmApply]]. The shared model folds (N, V) as literals; the
+    * per-language (N, V) stats frame (languages × 2) always broadcasts
+    * and joins by `__l` — an unmodeled language misses it, so every term
+    * of the interpolation goes NULL, the no-model verdict. */
+  private def jmAgainstScore(stream: graft.api.MStream,
+                             refDocs: org.apache.spark.sql.DataFrame,
+                             idCol: String, textCol: String, refTextCol: String,
+                             lang: Option[(String, String)], order: Int,
+                             alpha: Double, lambdas: Seq[Double], nCol: String,
+                             minCount: Long, broadcastModel: Option[Boolean],
+                             label: String): graft.api.MStream = {
+    checkAgainst(label, order, minCount, refDocs, lang.isDefined)
     require(alpha > 0, s"alpha must be positive, got $alpha")
-    require(!refDocs.isStreaming,
-      "ngramLmScoreAgainst: the reference corpus must be a batch frame " +
-        "(the model pins once; a streaming reference has no stable artifact)")
-    require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     val l = lambdasFor(order, lambdas)
     val df = stream.df
-    val (counts, ctxs) = ngramModel(refDocs, refTextCol, order, minCount)
-    // one decision per pinned count table; the derived context aggregate
-    // of order j is bounded by counts(j) and inherits its decision
-    val bc = (1 to order).map(j => j -> decideBroadcast(broadcastModel, counts(j))).toMap
-    checkLevers("ngramLmScoreAgainst", order, minCount, df.isStreaming,
-      (1 to order).forall(bc))
-    val nvRow = counts(1).agg(sum(col("__c1")).cast("double"),
-      count(lit(1)).cast("double")).head()
-    require(!nvRow.isNullAt(0) && nvRow.getDouble(1) > 0,
-      "ngramLmScoreAgainst: the reference corpus yields an empty model")
-    val (n, vv) = (nvRow.getDouble(0), nvRow.getDouble(1))
-    val id = col(idCol)
-    def withJoins(pos: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      def side(m: org.apache.spark.sql.DataFrame, j: Int) =
-        if (bc(j)) broadcast(m) else m
-      (order to 2 by -1).foldLeft(pos) { (d, j) =>
-        d.join(side(counts(j), j), gramCols(order, j), "left")
-          .join(side(ctxs(j), j), gramCols(order, j).dropRight(1), "left")
-      }.join(side(counts(1), 1), gramCols(order, 1), "left")
-        .withColumn("__n", lit(n)).withColumn("__vv", lit(vv))
-    }
-    againstApply(stream, idCol, textCol, order, nCol, withJoins,
-      ngramLp(order, alpha, l))
+    // struct-wrapped language key: null-safe under plain equi-join keys
+    val train = lang.fold(refDocs) { case (_, refLang) =>
+      refDocs.withColumn("__lraw", struct(col(refLang))) }
+    val (counts, ctxs) = ngramModel(train, refTextCol, order, minCount,
+      langCol = lang.map(_ => "__lraw"))
+    val bc = modelBroadcasts(label, order, minCount, df.isStreaming, broadcastModel,
+      (1 to order).map(counts))
+    val sides = levelSides(order, order, counts, ctxs, j => bc(j - 1))
+    val withJoins: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+      lang match {
+        case None =>
+          val nvRow = counts(1).agg(sum(col("__c1")).cast("double"),
+            count(lit(1)).cast("double")).head()
+          require(!nvRow.isNullAt(0) && nvRow.getDouble(1) > 0,
+            s"$label: the reference corpus yields an empty model")
+          pos => joinTower(pos, sides, Nil, "left")
+            .withColumn("__n", lit(nvRow.getDouble(0)))
+            .withColumn("__vv", lit(nvRow.getDouble(1)))
+        case Some(_) =>
+          val stats = counts(1).groupBy(col("__l"))
+            .agg(sum(col("__c1")).cast("double").as("__n"),
+              count(lit(1)).cast("double").as("__vv"))
+          require(!stats.isEmpty,
+            s"$label: the reference corpus yields no per-language model " +
+              "(no language slice has a token)")
+          pos => joinTower(pos, sides :+ ((stats, Nil, true)), Seq("__l"), "left")
+      }
+    stream.lift(lmApply(df, idCol, textCol, order, nCol, withJoins,
+      ngramLp(order, alpha, l),
+      scoringSpread(order, selfScored = false, knFamily = false),
+      langCol = lang.map(_._1)))
   }
 
   /** Trigram face of [[ngramLmScoreAgainst]] — completes the CCNet ingest
@@ -1467,34 +1631,81 @@ object TextOps {
     (rawN, ctxN, cont, ctxc, stats)
   }
 
-  /** The interpolated-KN per-position log-likelihood over joined count
-    * columns, folded from the continuation-unigram base up: P_1
-    * interpolates with the uniform 1/(V+1) floor (one reserved unknown
-    * slot) so tokens unseen in the model keep mass; each level j backs
-    * off ENTIRELY to level j−1 when its context is unseen (the left-join
-    * face — a seen context always takes max(c−D,0)/total + D·N1+/total
-    * · P_{j−1}). On the self-scoring inner-join face every guard is
-    * true by construction and the fold is the plain interpolated-KN
-    * formula the oracle mirrors without the CASEs. */
-  private def knLp(order: Int, discount: Double): Column = {
-    val dd = lit(discount)
-    var p: Column =
-      greatest(coalesce(col("__cc1"), lit(0L)).cast("double") - dd, lit(0.0)) /
-        col("__t1") +
-        dd * col("__n1p1") / col("__t1") * (lit(1.0) / (col("__v") + lit(1.0)))
-    for (j <- 2 until order) {
-      val hi =
-        greatest(coalesce(col(s"__cc$j"), lit(0L)).cast("double") - dd, lit(0.0)) /
-          col(s"__ctot$j") +
-          dd * col(s"__n1p$j") / col(s"__ctot$j") * p
-      p = when(coalesce(col(s"__ctot$j"), lit(0L)) > 0, hi).otherwise(p)
-    }
-    val hiN =
-      greatest(coalesce(col(s"__cr$order"), lit(0L)).cast("double") - dd, lit(0.0)) /
-        col(s"__tot$order") +
-        dd * col(s"__n1p$order") / col(s"__tot$order") * p
-    log(when(coalesce(col(s"__tot$order"), lit(0L)) > 0, hiN).otherwise(p))
+  /** The discounts of a Kneser-Ney model: `disc(j, c)` is the discount
+    * of count `c` at level j, `gamma(j)` the back-off mass γ·tot of a
+    * level-j context row (its context aggregate's columns). */
+  private[pipeline] sealed abstract class KnDisc {
+    def disc(j: Int, c: Column): Column
+    def gamma(j: Int): Column
   }
+
+  /** Interpolated KN: one fixed D at every level and count, so γ·tot =
+    * D·N1+. */
+  private[pipeline] final class KnFixed(d: Double) extends KnDisc {
+    def disc(j: Int, c: Column): Column = lit(d)
+    def gamma(j: Int): Column = lit(d) * col(s"__n1p$j")
+  }
+
+  /** Modified KN: the discount of a count is D1/D2/D3+ by its bucket,
+    * and γ·tot = D1·N1 + D2·N2 + D3·N3+ over the context's
+    * continuation-type buckets. `dk(j)` gives level j's (D1, D2, D3+). */
+  private[pipeline] final class KnBucketed(dk: Int => (Column, Column, Column))
+      extends KnDisc {
+    def disc(j: Int, c: Column): Column = {
+      val (d1, d2, d3) = dk(j)
+      when(c === 1L, d1).when(c === 2L, d2).otherwise(d3)
+    }
+    def gamma(j: Int): Column = {
+      val (d1, d2, d3) = dk(j)
+      d1 * col(s"__nb1$j") + d2 * col(s"__nb2$j") + d3 * col(s"__nb3$j")
+    }
+  }
+
+  /** Modified-KN discounts as driver literals, per level. */
+  private[pipeline] def mknDisc(ds: Map[Int, (Double, Double, Double)]): KnDisc =
+    new KnBucketed(j => { val (d1, d2, d3) = ds(j); (lit(d1), lit(d2), lit(d3)) })
+
+  /** Modified-KN discounts as PER-LANGUAGE columns `__d{1,2,3}_$j`
+    * ([[mknLangDiscounts]], joined by __l); NULL discounts (an unmodeled
+    * language) propagate to a NULL score. */
+  private[pipeline] val mknDiscCols: KnDisc =
+    new KnBucketed(j => (col(s"__d1_$j"), col(s"__d2_$j"), col(s"__d3_$j")))
+
+  /** THE interpolated Kneser-Ney probability (Chen & Goodman 1999 §3)
+    * of an entry whose top level is `top` — raw counts when top ==
+    * order, continuation counts below — over joined count columns,
+    * folded from the continuation-unigram base up: P_1 interpolates
+    * with the uniform 1/(V+1) floor (one reserved unknown slot) so
+    * tokens unseen in the model keep mass; each level j backs off
+    * ENTIRELY to level j−1 when its context is unseen (the left-join
+    * faces, and ARPA context-only entries — a seen context always takes
+    * max(c−D,0)/tot + γ/tot · P_{j−1}). On the self-scoring inner-join
+    * face every guard is true by construction and the fold is the plain
+    * interpolated-KN formula the oracle mirrors without the CASEs. The
+    * scoring faces take its natural log, the ARPA writers its log10. */
+  private[pipeline] def knFold(order: Int, top: Int, d: KnDisc): Column = {
+    def level(j: Int, c: Column, tot: Column, lower: Column): Column = {
+      val cc = coalesce(c, lit(0L))
+      greatest(cc.cast("double") - d.disc(j, cc), lit(0.0)) / tot +
+        d.gamma(j) / tot * lower
+    }
+    def guarded(j: Int, c: String, tot: String, lower: Column): Column =
+      when(coalesce(col(tot), lit(0L)) > 0, level(j, col(c), col(tot), lower))
+        .otherwise(lower)
+    val p1 = level(1, col("__cc1"), col("__t1"), lit(1.0) / (col("__v") + lit(1.0)))
+    val mid = (2 to (if (top == order) order - 1 else top)).foldLeft(p1) {
+      (p, j) => guarded(j, s"__cc$j", s"__ctot$j", p)
+    }
+    if (top == order) guarded(order, s"__cr$order", s"__tot$order", mid) else mid
+  }
+
+  /** The literal one-row level-1 stats of a shared KN model, folded onto
+    * `d` as columns — every column, so every discount kind resolves. */
+  private[pipeline] def statLiterals(d: org.apache.spark.sql.DataFrame,
+                                     st: org.apache.spark.sql.Row)
+      : org.apache.spark.sql.DataFrame =
+    Seq("__t1", "__n1p1", "__nb11", "__nb21", "__nb31", "__v")
+      .foldLeft(d)((x, c) => x.withColumn(c, lit(st.getAs[Any](c))))
 
   /** KenLM's default `--discount_fallback` discounts (D1, D2, D3+). */
   private[graft] val MknFallback: (Double, Double, Double) = (0.5, 1.0, 1.5)
@@ -1548,15 +1759,15 @@ object TextOps {
     * exactly the tables each level draws probability mass from), folded
     * to discounts via [[mknDerive]]. The aggs are independent scalar
     * collects over checkpointed tables; submit them concurrently like
-    * the table builds themselves. */
+    * the table builds themselves, and settle every one ([[awaitAll]])
+    * before returning or throwing. */
   private[pipeline] def mknDiscountsFor(order: Int, rawN: org.apache.spark.sql.DataFrame,
                               cont: Map[Int, org.apache.spark.sql.DataFrame],
                               fallback: (Double, Double, Double))
       : Map[Int, (Double, Double, Double)] = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val futs = (1 to order).map { j =>
+    awaitAll((1 to order).map { j =>
       Future {
         val (t, c) =
           if (j == order) (rawN, s"__cr$order") else (cont(j), s"__cc$j")
@@ -1568,8 +1779,7 @@ object TextOps {
         j -> mknDerive(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           fallback)
       }
-    }
-    Await.result(Future.sequence(futs), Duration.Inf).toMap
+    })().toMap
   }
 
   /** [[mknDerive]] as COLUMN arithmetic over per-language count-of-counts
@@ -1621,72 +1831,6 @@ object TextOps {
     }
   }
 
-  /** [[mknLp]] with PER-LANGUAGE discount COLUMNS (`__d{1,2,3}_$j`,
-    * joined by __l) instead of driver literals — the by-language face's
-    * probability fold; NULL stats/discounts (unmodeled language)
-    * propagate to a NULL score. */
-  private def mknLpByLang(order: Int): Column = {
-    def disc(j: Int, c: Column): Column =
-      when(c === 1L, col(s"__d1_$j")).when(c === 2L, col(s"__d2_$j"))
-        .otherwise(col(s"__d3_$j"))
-    def gnum(j: Int): Column =
-      col(s"__d1_$j") * col(s"__nb1$j") + col(s"__d2_$j") * col(s"__nb2$j") +
-        col(s"__d3_$j") * col(s"__nb3$j")
-    val c1 = coalesce(col("__cc1"), lit(0L))
-    var p: Column =
-      greatest(c1.cast("double") - disc(1, c1), lit(0.0)) / col("__t1") +
-        gnum(1) / col("__t1") * (lit(1.0) / (col("__v") + lit(1.0)))
-    for (j <- 2 until order) {
-      val cj = coalesce(col(s"__cc$j"), lit(0L))
-      val hi =
-        greatest(cj.cast("double") - disc(j, cj), lit(0.0)) / col(s"__ctot$j") +
-          gnum(j) / col(s"__ctot$j") * p
-      p = when(coalesce(col(s"__ctot$j"), lit(0L)) > 0, hi).otherwise(p)
-    }
-    val cN = coalesce(col(s"__cr$order"), lit(0L))
-    val hiN =
-      greatest(cN.cast("double") - disc(order, cN), lit(0.0)) / col(s"__tot$order") +
-        gnum(order) / col(s"__tot$order") * p
-    log(when(coalesce(col(s"__tot$order"), lit(0L)) > 0, hiN).otherwise(p))
-  }
-
-  /** The modified-KN per-position log-likelihood: [[knLp]] with the
-    * fixed D replaced by count-bucketed discounts — the discount of a
-    * count is D1/D2/D3+ by its bucket, and the back-off mass of a
-    * context is γ·tot = D1·N1 + D2·N2 + D3·N3+ over that context's
-    * continuation-type buckets. Same guards as [[knLp]]: unseen contexts
-    * skip their level entirely (against face); on the self face every
-    * guard is true by construction. With equal discounts at every bucket
-    * this reduces exactly to [[knLp]] (D·(N1+N2+N3+) = D·N1+), which
-    * KnLmSpec pins. */
-  private def mknLp(order: Int, ds: Map[Int, (Double, Double, Double)]): Column = {
-    def disc(j: Int, c: Column): Column = {
-      val (d1, d2, d3) = ds(j)
-      when(c === 1L, lit(d1)).when(c === 2L, lit(d2)).otherwise(lit(d3))
-    }
-    def gnum(j: Int): Column = {
-      val (d1, d2, d3) = ds(j)
-      lit(d1) * col(s"__nb1$j") + lit(d2) * col(s"__nb2$j") +
-        lit(d3) * col(s"__nb3$j")
-    }
-    val c1 = coalesce(col("__cc1"), lit(0L))
-    var p: Column =
-      greatest(c1.cast("double") - disc(1, c1), lit(0.0)) / col("__t1") +
-        gnum(1) / col("__t1") * (lit(1.0) / (col("__v") + lit(1.0)))
-    for (j <- 2 until order) {
-      val cj = coalesce(col(s"__cc$j"), lit(0L))
-      val hi =
-        greatest(cj.cast("double") - disc(j, cj), lit(0.0)) / col(s"__ctot$j") +
-          gnum(j) / col(s"__ctot$j") * p
-      p = when(coalesce(col(s"__ctot$j"), lit(0L)) > 0, hi).otherwise(p)
-    }
-    val cN = coalesce(col(s"__cr$order"), lit(0L))
-    val hiN =
-      greatest(cN.cast("double") - disc(order, cN), lit(0.0)) / col(s"__tot$order") +
-        gnum(order) / col(s"__tot$order") * p
-    log(when(coalesce(col(s"__tot$order"), lit(0L)) > 0, hiN).otherwise(p))
-  }
-
   /** Order-n interpolated Kneser-Ney LM quality score over the corpus
     * itself — the KenLM smoothing FAMILY at a fixed discount (real KenLM
     * is modified KN: three count-bucketed discounts per order; the fixed-D
@@ -1712,42 +1856,29 @@ object TextOps {
     require(!docs.isStreaming,
       "knLmScore trains on its own input — batch only (score a stream " +
         "against a static reference with knLmScoreAgainst)")
-    knSelfScore(docs, idCol, textCol, order, (_, _) => knLp(order, discount))
+    knSelfScore(docs, idCol, textCol, order, (_, _) => new KnFixed(discount))
   }
 
   /** The shared self-scoring stage of the KN family: build the model on
     * the input itself, inner-join the exploded positions against every
     * count frame (a position's own occurrence puts every suffix, context
     * and continuation in the model, so nothing is absent on the self
-    * face) and fold per document. `lpOf(rawN, cont)` supplies the
-    * per-position log-likelihood — a constant column for the fixed
-    * discount, a derived-discount column for modified KN (the tables are
-    * pinned before it runs, so scalar derivations are cheap). */
+    * face) and fold per document in [[lmApply]]. `discOf(rawN, cont)`
+    * supplies the discounts — fixed, or derived for modified KN (the
+    * tables are pinned before it runs, so scalar derivations are
+    * cheap). The model joins carry no broadcast hint. */
   private def knSelfScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
                           textCol: String, order: Int,
-                          lpOf: (org.apache.spark.sql.DataFrame,
-                                 Map[Int, org.apache.spark.sql.DataFrame]) => Column)
+                          discOf: (org.apache.spark.sql.DataFrame,
+                                   Map[Int, org.apache.spark.sql.DataFrame]) => KnDisc)
       : org.apache.spark.sql.DataFrame = {
-    val id = col(idCol)
     val (rawN, ctxN, cont, ctxc, stats) = knModel(docs, textCol, order)
-    val lp = lpOf(rawN, cont)
-    // NO scoring-stage spread here (unlike the against/by-lang faces):
-    // the self-score face inner-joins and its plain-KN fold is lean —
-    // interleaved A/B measured the added exchange as a LOSS on
-    // q_kn3_score (1.6 → 1.9/2.0 s, two rounds) and flat on q_mkn3_score
-    val pos = gramsOf(docs, textCol, order, gramCols(order, order), Seq(id))
-    var joined = pos.join(rawN, gramCols(order, order))
-      .join(ctxN, gramCols(order, order).dropRight(1))
-    for (j <- order - 1 to 2 by -1)
-      joined = joined.join(cont(j), gramCols(order, j))
-        .join(ctxc(j), gramCols(order, j).dropRight(1))
-    joined = joined.join(cont(1), gramCols(order, 1))
-      .crossJoin(broadcast(stats))
-    val scored = joined.withColumn("__lp", lp)
-      .groupBy(id)
-      .agg(count(lit(1)).as("n_grams"), round(avg(col("__lp")), 3).as("avg_logprob"))
-    docs.select(id).join(scored, Seq(idCol), "left")
-      .select(id, coalesce(col("n_grams"), lit(0L)).as("n_grams"), col("avg_logprob"))
+    val lp = log(knFold(order, order, discOf(rawN, cont)))
+    val sides = levelSides(order, order, j => if (j == order) rawN else cont(j),
+      j => if (j == order) ctxN else ctxc(j), _ => false)
+    lmApply(docs, idCol, textCol, order, "n_grams",
+      pos => joinTower(pos, sides, Nil, "inner").crossJoin(broadcast(stats)), lp,
+      scoringSpread(order, selfScored = true, knFamily = true))
   }
 
   /** Order-n MODIFIED Kneser-Ney LM quality score over the corpus itself
@@ -1774,7 +1905,7 @@ object TextOps {
       "mknLmScore trains on its own input — batch only (score a stream " +
         "against a static reference with mknLmScoreAgainst)")
     checkMknParams(order, discounts, fallback)
-    knSelfScore(docs, idCol, textCol, order, (rawN, cont) => mknLp(order,
+    knSelfScore(docs, idCol, textCol, order, (rawN, cont) => mknDisc(
       if (discounts.nonEmpty) discounts
       else mknDiscountsFor(order, rawN, cont, fallback)))
   }
@@ -1814,9 +1945,9 @@ object TextOps {
                        sentenceMode: Boolean = false): graft.api.MStream = {
     require(discount > 0 && discount < 1,
       s"discount must be in (0, 1), got $discount")
-    knAgainstScore(stream, refDocs, idCol, textCol, refTextCol, order,
+    knAgainstScore(stream, refDocs, idCol, textCol, refTextCol, None, order,
       minCount, broadcastModel, "knLmScoreAgainst",
-      (_, _) => knLp(order, discount), sentenceMode = sentenceMode)
+      (_, _) => (new KnFixed(discount), None), sentenceMode = sentenceMode)
   }
 
   /** PER-LANGUAGE Kneser-Ney scoring against a LABELED reference corpus —
@@ -1852,9 +1983,9 @@ object TextOps {
       : graft.api.MStream = {
     require(discount > 0 && discount < 1,
       s"discount must be in (0, 1), got $discount")
-    knByLangScore(stream, refDocs, idCol, textCol, langCol, refTextCol,
-      refLangCol, order, minCount, broadcastModel, "knLmScoreAgainstByLang",
-      (_, _) => (knLp(order, discount), None))
+    knAgainstScore(stream, refDocs, idCol, textCol, refTextCol,
+      Some((langCol, refLangCol)), order, minCount, broadcastModel,
+      "knLmScoreAgainstByLang", (_, _) => (new KnFixed(discount), None))
   }
 
   /** Per-language MODIFIED-KN scoring against a labeled reference — the
@@ -1875,145 +2006,10 @@ object TextOps {
                               broadcastModel: Option[Boolean] = None)
       : graft.api.MStream = {
     checkMknParams(order, Map.empty, fallback)
-    knByLangScore(stream, refDocs, idCol, textCol, langCol, refTextCol,
-      refLangCol, order, minCount, broadcastModel, "mknLmScoreAgainstByLang",
-      (rawN, cont) => (mknLpByLang(order),
-        Some(mknLangDiscounts(order, rawN, cont, fallback))))
-  }
-
-  /** The shared per-language against engine: [[knAgainstScore]]'s shape
-    * with the language key threaded through every table and join.
-    * `lpOf(rawN, cont)` returns the per-position column plus an optional
-    * languages-sized side frame (per-language discounts) joined by __l. */
-  private def knByLangScore(stream: graft.api.MStream,
-                            refDocs: org.apache.spark.sql.DataFrame,
-                            idCol: String, textCol: String, langCol: String,
-                            refTextCol: String, refLangCol: String,
-                            order: Int, minCount: Long,
-                            broadcastModel: Option[Boolean], label: String,
-                            lpOf: (org.apache.spark.sql.DataFrame,
-                                   Map[Int, org.apache.spark.sql.DataFrame]) =>
-                              (Column, Option[org.apache.spark.sql.DataFrame]))
-      : graft.api.MStream = {
-    import org.apache.spark.sql.{Encoder, Row}
-    import org.apache.spark.sql.catalyst.encoders.RowEncoder
-    import org.apache.spark.sql.types._
-    require(order >= 2 && order <= 8, s"$label order must be in [2, 8], got $order")
-    require(!refDocs.isStreaming,
-      s"$label: the reference corpus must be a batch frame " +
-        "(the models pin once; a streaming reference has no stable artifact)")
-    require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    val df = stream.df
-    // struct-wrapped language key: null-safe under plain equi-join keys
-    val refKeyed = refDocs.withColumn("__lraw", struct(col(refLangCol)))
-    val (rawN, ctxN, cont, ctxc, stats) =
-      knModel(refKeyed, refTextCol, order, minCount, langCol = Some("__lraw"))
-    val bcRaw = decideBroadcast(broadcastModel, rawN)
-    val bcC = (1 until order).map(j => j -> decideBroadcast(broadcastModel, cont(j))).toMap
-    checkLevers(label, order, minCount, df.isStreaming,
-      bcRaw && (1 until order).forall(bcC))
-    require(!stats.isEmpty,
-      s"$label: the reference corpus yields no per-language model " +
-        "(no language slice has a bigram)")
-    val id = col(idCol)
-    val (lp, extra) = lpOf(rawN, cont)
-    def withJoins(pos: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      def side(m: org.apache.spark.sql.DataFrame, bc: Boolean) =
-        if (bc) broadcast(m) else m
-      def keys(j: Int) = "__l" +: gramCols(order, j)
-      var j0 = pos.join(side(rawN, bcRaw), keys(order), "left")
-        .join(side(ctxN, bcRaw), "__l" +: gramCols(order, order).dropRight(1), "left")
-      for (j <- order - 1 to 2 by -1)
-        j0 = j0.join(side(cont(j), bcC(j)), keys(j), "left")
-          .join(side(ctxc(j), bcC(j)), "__l" +: gramCols(order, j).dropRight(1), "left")
-      // the per-language stats frame (languages × 7) always broadcasts,
-      // as does the optional per-language discount frame; an unmodeled
-      // language misses every join and scores NULL
-      val j1 = j0.join(side(cont(1), bcC(1)), keys(1), "left")
-        .join(broadcast(stats), Seq("__l"), "left")
-      extra.map(e => j1.join(broadcast(e), Seq("__l"), "left")).getOrElse(j1)
-    }
-
-    byLangApply(stream, idCol, textCol, langCol, order, "n_grams", withJoins, lp)
-  }
-
-  /** The shared batch/streaming APPLY stage of every by-language against
-    * face (KN, modified KN, Jelinek-Mercer): explode positions with the
-    * struct-wrapped language key, run the face's `withJoins`, fold the
-    * per-position `lp` per document. Positions of an unmodeled language
-    * carry a NULL `lp` — counted, never summed — so a document whose
-    * language has no reference model keeps its position count and takes
-    * a NULL score in both modes. */
-  private[pipeline] def byLangApply(stream: graft.api.MStream, idCol: String,
-                          textCol: String, langCol: String, order: Int,
-                          nCol: String,
-                          withJoins: org.apache.spark.sql.DataFrame =>
-                            org.apache.spark.sql.DataFrame,
-                          lp: Column): graft.api.MStream = {
-    import org.apache.spark.sql.{Encoder, Row}
-    import org.apache.spark.sql.catalyst.encoders.RowEncoder
-    import org.apache.spark.sql.types._
-    val df = stream.df
-    val id = col(idCol)
-    if (!df.isStreaming) {
-      // materialize the doc-side key once (gramsOf re-evaluates keeps);
-      // spread the SCORING stage at order >= 3 (guide §2.5/§2.6 — the
-      // fused explode + keyed left-join tower serializes on a narrow
-      // input; interleaved A/B: q_mkn3_bylang 4.45 → 3.24 s,
-      // q_ppl_bylang 4.4 → 3.8 s; order 2 keeps the narrow path, the
-      // q_lm_score pattern). Identity at scale / post-shuffle / streaming.
-      val dfK0 = df.withColumn("__l", struct(col(langCol)))
-      val dfK = if (order >= 3) spreadForCompute(dfK0) else dfK0
-      val pos = gramsOf(dfK, textCol, order, gramCols(order, order),
-        Seq(id, col("__l")))
-      val scored = withJoins(pos)
-        .withColumn("__lp", lp)
-        .groupBy(id)
-        .agg(count(lit(1)).as(nCol), round(avg(col("__lp")), 3).as("avg_logprob"))
-      val out = df.select(id).join(scored, Seq(idCol), "left")
-        .select(id, coalesce(col(nCol), lit(0L)).as(nCol), col("avg_logprob"))
-      return stream.lift(out)
-    }
-
-    val ws = words(col(textCol))
-    val pStructs = arrays_zip((1 to order).map(i =>
-      slice(col("__w"), lit(i), size(col("__w")) - (order - 1)).as(s"g$i")): _*)
-    val sentinel = array(struct((1 to order).map(i =>
-      lit(null).cast("string").as(s"g$i")): _*))
-    val u0 = df.withColumn("__w", ws)
-      .select(id.as("__id"), struct(col(langCol)).as("__l"),
-        explode(when(size(col("__w")) >= order, pStructs).otherwise(sentinel)).as("__g"))
-      .select(col("__id") +: col("__l") +:
-        (1 to order).map(i => col(s"__g.g$i").as(s"__p$i")): _*)
-    val u = withJoins(u0)
-      .select(col("__id"), col("__p1"),
-        when(col("__p1").isNotNull, lp).as("__lp"))
-    val idType = df.schema(idCol).dataType
-    val aggT = StructType(Seq(
-      StructField("__id", idType),
-      StructField(nCol, LongType, nullable = false),
-      StructField("__sum", DoubleType)))
-    val aggEnc: Encoder[Row] = RowEncoder.encoderFor(aggT)
-    val pIdx = u.schema.fieldIndex("__p1")
-    val lpIdx = u.schema.fieldIndex("__lp")
-    val out = graft.streaming.PerBatchCombine(u, Seq("__id"), aggEnc) {
-        (key: Row, it: Iterator[Row]) =>
-          // unlike the shared-model face, __lp can be NULL on real
-          // positions (unmodeled language) — count positions and sum
-          // only scored ones; a doc's positions are uniformly modeled
-          // (one language per doc), so sum/n equals the batch avg
-          var nn = 0L; var s = 0.0; var ns = 0L
-          it.foreach { r =>
-            if (!r.isNullAt(pIdx)) {
-              nn += 1
-              if (!r.isNullAt(lpIdx)) { ns += 1; s += r.getDouble(lpIdx) }
-            }
-          }
-          Iterator.single(Row(key.get(0), nn, if (ns > 0) s else null))
-      }
-      .select(col("__id").as(idCol), col(nCol),
-        round(col("__sum") / col(nCol), 3).as("avg_logprob"))
-    stream.lift(out)
+    knAgainstScore(stream, refDocs, idCol, textCol, refTextCol,
+      Some((langCol, refLangCol)), order, minCount, broadcastModel,
+      "mknLmScoreAgainstByLang",
+      (rawN, cont) => (mknDiscCols, Some(mknLangDiscounts(order, rawN, cont, fallback))))
   }
 
   /** PER-LANGUAGE order-n Jelinek-Mercer LM scoring against a LABELED
@@ -2045,44 +2041,10 @@ object TextOps {
                                 nCol: String = "n_grams",
                                 minCount: Long = 1L,
                                 broadcastModel: Option[Boolean] = None)
-      : graft.api.MStream = {
-    require(order >= 2 && order <= 8,
-      s"ngramLmScoreAgainstByLang order must be in [2, 8], got $order")
-    require(alpha > 0, s"alpha must be positive, got $alpha")
-    require(!refDocs.isStreaming,
-      "ngramLmScoreAgainstByLang: the reference corpus must be a batch " +
-        "frame (the models pin once; a streaming reference has no stable artifact)")
-    require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    val l = lambdasFor(order, lambdas)
-    val df = stream.df
-    // struct-wrapped language key: null-safe under plain equi-join keys
-    val refKeyed = refDocs.withColumn("__lraw", struct(col(refLangCol)))
-    val (counts, ctxs) = ngramModel(refKeyed, refTextCol, order, minCount,
-      langCol = Some("__lraw"))
-    val bc = (1 to order).map(j => j -> decideBroadcast(broadcastModel, counts(j))).toMap
-    checkLevers("ngramLmScoreAgainstByLang", order, minCount, df.isStreaming,
-      (1 to order).forall(bc))
-    // per-language (N, V) — one row per modeled language, always broadcast
-    val stats = counts(1).groupBy(col("__l"))
-      .agg(sum(col("__c1")).cast("double").as("__n"),
-        count(lit(1)).cast("double").as("__vv"))
-    require(!stats.isEmpty,
-      "ngramLmScoreAgainstByLang: the reference corpus yields no " +
-        "per-language model (no language slice has a token)")
-    def withJoins(pos: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      def side(m: org.apache.spark.sql.DataFrame, j: Int) =
-        if (bc(j)) broadcast(m) else m
-      (order to 2 by -1).foldLeft(pos) { (d, j) =>
-        d.join(side(counts(j), j), "__l" +: gramCols(order, j), "left")
-          .join(side(ctxs(j), j), "__l" +: gramCols(order, j).dropRight(1), "left")
-      }.join(side(counts(1), 1), "__l" +: gramCols(order, 1), "left")
-        // an unmodeled language misses the stats join — every term of the
-        // interpolation goes NULL, the no-model verdict
-        .join(broadcast(stats), Seq("__l"), "left")
-    }
-    byLangApply(stream, idCol, textCol, langCol, order, nCol, withJoins,
-      ngramLp(order, alpha, l))
-  }
+      : graft.api.MStream =
+    jmAgainstScore(stream, refDocs, idCol, textCol, refTextCol,
+      Some((langCol, refLangCol)), order, alpha, lambdas, nCol, minCount,
+      broadcastModel, "ngramLmScoreAgainstByLang")
 
   /** Modified-KN scoring AGAINST a pretrained reference corpus — the
     * KenLM-parity sibling of [[knLmScoreAgainst]] ([[mknLmScore]]'s
@@ -2101,158 +2063,75 @@ object TextOps {
                         broadcastModel: Option[Boolean] = None,
                         sentenceMode: Boolean = false): graft.api.MStream = {
     checkMknParams(order, discounts, fallback)
-    knAgainstScore(stream, refDocs, idCol, textCol, refTextCol, order,
-      minCount, broadcastModel, "mknLmScoreAgainst", (rawN, cont) => mknLp(order,
+    knAgainstScore(stream, refDocs, idCol, textCol, refTextCol, None, order,
+      minCount, broadcastModel, "mknLmScoreAgainst", (rawN, cont) => (mknDisc(
         if (discounts.nonEmpty) discounts
-        else mknDiscountsFor(order, rawN, cont, fallback)),
+        else mknDiscountsFor(order, rawN, cont, fallback)), None),
       sentenceMode = sentenceMode)
   }
 
-  /** The shared against-face engine of the KN family: train the model
-    * tables on `refDocs`, fold the one-row stats to literals, score the
-    * batch frame or arriving stream through left joins with full
-    * back-off. `lpOf(rawN, cont)` supplies the per-position column after
-    * the model pins (so discount derivation sees checkpointed tables). */
+  /** The against engine of the KN family, shared model or per language
+    * (`lang` = (document, reference) language columns — the language
+    * threads as key `__l` through every table and join): train the
+    * model tables on `refDocs`, one broadcast decision per pinned table,
+    * score the batch frame or arriving stream through left joins with
+    * full back-off in [[lmApply]]. The shared model's one-row stats
+    * fold to literals; the per-language stats frame (languages × 7)
+    * always broadcasts, as does the optional per-language side frame
+    * `discOf` returns (per-language discounts), and an unmodeled
+    * language misses every join and scores NULL. `discOf(rawN, cont)`
+    * runs after the model pins (so discount derivation sees
+    * checkpointed tables). */
   private def knAgainstScore(stream: graft.api.MStream,
                              refDocs: org.apache.spark.sql.DataFrame,
                              idCol: String, textCol: String, refTextCol: String,
+                             lang: Option[(String, String)],
                              order: Int, minCount: Long,
                              broadcastModel: Option[Boolean],
                              label: String,
-                             lpOf: (org.apache.spark.sql.DataFrame,
-                                    Map[Int, org.apache.spark.sql.DataFrame]) => Column,
+                             discOf: (org.apache.spark.sql.DataFrame,
+                                      Map[Int, org.apache.spark.sql.DataFrame]) =>
+                               (KnDisc, Option[org.apache.spark.sql.DataFrame]),
                              sentenceMode: Boolean = false)
       : graft.api.MStream = {
-    import org.apache.spark.sql.{Encoder, Row}
-    import org.apache.spark.sql.catalyst.encoders.RowEncoder
-    import org.apache.spark.sql.types._
-    require(order >= 2 && order <= 8,
-      s"$label order must be in [2, 8], got $order")
-    require(!refDocs.isStreaming,
-      s"$label: the reference corpus must be a batch frame " +
-        "(the model pins once; a streaming reference has no stable artifact)")
-    require(minCount >= 1, s"minCount must be >= 1, got $minCount")
+    checkAgainst(label, order, minCount, refDocs, lang.isDefined)
     val df = stream.df
-    val train =
-      if (sentenceMode) Sentences.explodeRef(refDocs, refTextCol, order)
-      else refDocs
+    val train = lang match {
+      // struct-wrapped language key: null-safe under plain equi-join keys
+      case Some((_, refLang)) => refDocs.withColumn("__lraw", struct(col(refLang)))
+      case None =>
+        if (sentenceMode) Sentences.explodeRef(refDocs, refTextCol, order) else refDocs
+    }
     val (rawN, ctxN, cont, ctxc, stats) = knModel(train, refTextCol, order,
-      minCount, dropBosTargets = sentenceMode)
-    // one decision per pinned table (raw top order + each continuation
-    // level); the derived context aggregates inherit their parent's
-    val bcRaw = decideBroadcast(broadcastModel, rawN)
-    val bcC = (1 until order).map(j => j -> decideBroadcast(broadcastModel, cont(j))).toMap
-    checkLevers(label, order, minCount, df.isStreaming,
-      bcRaw && (1 until order).forall(bcC))
-    val lp = lpOf(rawN, cont)
-    val st = stats.head()
-    require(!st.isNullAt(0) && st.getAs[Double]("__t1") > 0,
-      s"$label: the reference corpus yields an empty model " +
-        "(needs at least one bigram)")
-    def withJoins(pos: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      def side(m: org.apache.spark.sql.DataFrame, bc: Boolean) =
-        if (bc) broadcast(m) else m
-      var j0 = pos.join(side(rawN, bcRaw), gramCols(order, order), "left")
-        .join(side(ctxN, bcRaw), gramCols(order, order).dropRight(1), "left")
-      for (j <- order - 1 to 2 by -1)
-        j0 = j0.join(side(cont(j), bcC(j)), gramCols(order, j), "left")
-          .join(side(ctxc(j), bcC(j)), gramCols(order, j).dropRight(1), "left")
-      // the one-row stats fold to literals — every column, so both lp
-      // families (fixed __n1p1, bucketed __nb*1) resolve
-      Seq("__t1", "__n1p1", "__nb11", "__nb21", "__nb31", "__v")
-        .foldLeft(j0.join(side(cont(1), bcC(1)), gramCols(order, 1), "left")) {
-          (d, c) => d.withColumn(c, lit(st.getAs[Any](c)))
-        }
-    }
-    againstApply(stream, idCol, textCol, order, "n_grams", withJoins, lp,
-      sentenceMode = sentenceMode)
-  }
-
-  /** The shared batch/streaming APPLY stage of the shared-model against
-    * faces (the KN family and the imported-ARPA face): explode the
-    * order-n positions, run the face's `withJoins`, fold the
-    * per-position `lp` per document. Batch scores through one groupBy;
-    * streaming rides the stateless per-batch combine (position-less
-    * documents take a sentinel row so they still emit (n 0, NULL)). */
-  private[pipeline] def againstApply(stream: graft.api.MStream, idCol: String,
-                                     textCol: String, order: Int, nCol: String,
-                                     withJoins: org.apache.spark.sql.DataFrame =>
-                                       org.apache.spark.sql.DataFrame,
-                                     lp: Column,
-                                     /** [[Sentences]] windowing: positions
-                                       * are each sentence's n+1 padded
-                                       * full-order windows instead of the
-                                       * document's sliding windows. */
-                                     sentenceMode: Boolean = false): graft.api.MStream = {
-    import org.apache.spark.sql.{Encoder, Row}
-    import org.apache.spark.sql.catalyst.encoders.RowEncoder
-    import org.apache.spark.sql.types._
-    val df = stream.df
-    val id = col(idCol)
-    if (!df.isStreaming) {
-      // spread the SCORING stage at order >= 3 (guide §2.5/§2.6): the
-      // all-broadcast left-join tower fuses with the explode into one
-      // whole-stage span over the scan — one task on a single-row-group
-      // input. Interleaved A/B wins: q_mkn3_against 2.8 → 2.1,
-      // q_ppl_apply 5.5 → 4.6, q_arpa_score 4.35 → 4.10 (q_kn3_against
-      // pays ~0.15 s — the lean plain-KN fold — outweighed across the
-      // face's callers). Order 2's fold is too lean to pay the exchange
-      // (the q_lm_score/q_lm_against pattern) — identity there, as at
-      // scale or on an input already carrying a shuffle boundary.
-      val dfS = if (order >= 3) spreadForCompute(df) else df
-      val pos =
-        if (sentenceMode)
-          gramsOf(Sentences.explodeDocs(dfS, id, textCol, order), "__stext",
-            order, gramCols(order, order), Seq(id))
-        else gramsOf(dfS, textCol, order, gramCols(order, order), Seq(id))
-      val scored = withJoins(pos)
-        .withColumn("__lp", lp)
-        .groupBy(id)
-        .agg(count(lit(1)).as(nCol), round(avg(col("__lp")), 3).as("avg_logprob"))
-      val out = df.select(id).join(scored, Seq(idCol), "left")
-        .select(id, coalesce(col(nCol), lit(0L)).as(nCol), col("avg_logprob"))
-      return stream.lift(out)
-    }
-
-    val sentinel = array(struct((1 to order).map(i =>
-      lit(null).cast("string").as(s"g$i")): _*))
-    val u0 = if (sentenceMode) {
-      val wins = Sentences.windows(col(textCol), order)
-      df.withColumn("__w", wins)
-        .select(id.as("__id"),
-          explode(when(size(col("__w")) > 0, col("__w")).otherwise(sentinel)).as("__g"))
-        .select(col("__id") +: (1 to order).map(i => col(s"__g.g$i").as(s"__p$i")): _*)
-    } else {
-      val ws = words(col(textCol))
-      val pStructs = arrays_zip((1 to order).map(i =>
-        slice(col("__w"), lit(i), size(col("__w")) - (order - 1)).as(s"g$i")): _*)
-      df.withColumn("__w", ws)
-        .select(id.as("__id"),
-          explode(when(size(col("__w")) >= order, pStructs).otherwise(sentinel)).as("__g"))
-        .select(col("__id") +: (1 to order).map(i => col(s"__g.g$i").as(s"__p$i")): _*)
-    }
-    val u = withJoins(u0)
-      .select(col("__id"), col("__p1"),
-        when(col("__p1").isNotNull, lp).as("__lp"))
-    val idType = df.schema(idCol).dataType
-    val aggT = StructType(Seq(
-      StructField("__id", idType),
-      StructField(nCol, LongType, nullable = false),
-      StructField("__sum", DoubleType)))
-    val aggEnc: Encoder[Row] = RowEncoder.encoderFor(aggT)
-    val pIdx = u.schema.fieldIndex("__p1")
-    val lpIdx = u.schema.fieldIndex("__lp")
-    val out = graft.streaming.PerBatchCombine(u, Seq("__id"), aggEnc) {
-        (key: Row, it: Iterator[Row]) =>
-          var nn = 0L; var s = 0.0
-          it.foreach { r =>
-            if (!r.isNullAt(pIdx)) { nn += 1; s += r.getDouble(lpIdx) }
-          }
-          Iterator.single(Row(key.get(0), nn, if (nn > 0) s else null))
+      minCount, langCol = lang.map(_ => "__lraw"), dropBosTargets = sentenceMode)
+    // the raw top order and each continuation level are pinned; their
+    // context aggregates inherit the decision
+    val bc = modelBroadcasts(label, order, minCount, df.isStreaming, broadcastModel,
+      (1 to order).map(j => if (j == order) rawN else cont(j)))
+    val sides = levelSides(order, order, j => if (j == order) rawN else cont(j),
+      j => if (j == order) ctxN else ctxc(j), j => bc(j - 1))
+    val withStats: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+      lang match {
+        case None =>
+          val st = stats.head()
+          require(!st.isNullAt(0) && st.getAs[Double]("__t1") > 0,
+            s"$label: the reference corpus yields an empty model " +
+              "(needs at least one bigram)")
+          statLiterals(_, st)
+        case Some(_) =>
+          require(!stats.isEmpty,
+            s"$label: the reference corpus yields no per-language model " +
+              "(no language slice has a bigram)")
+          identity
       }
-      .select(col("__id").as(idCol), col(nCol),
-        round(col("__sum") / col(nCol), 3).as("avg_logprob"))
-    stream.lift(out)
+    val (d, extra) = discOf(rawN, cont)
+    val langSides = lang.toSeq.map(_ => (stats, Nil, true)) ++
+      extra.map(e => (e, Nil, true))
+    stream.lift(lmApply(df, idCol, textCol, order, "n_grams",
+      pos => withStats(joinTower(pos, sides ++ langSides, lang.map(_ => "__l").toSeq, "left")),
+      log(knFold(order, order, d)),
+      scoringSpread(order, selfScored = false, knFamily = true),
+      langCol = lang.map(_._1), sentenceMode = sentenceMode))
   }
 
   /** Closed-form NTile(k) of 1-based rank `__r` in a population `__n`:
@@ -2738,20 +2617,6 @@ object TextOps {
                  minWords: Int = 50, maxWords: Int = 100000): graft.api.MStream =
     stream.lift(gopherRules(stream.df, idCol, textCol, minWords, maxWords))
 
-  /** Dual-mode bigram-LM scoring AGAINST a reference corpus — the full
-    * CCNet shape (Wenzek et al. 2020 score crawl text with an LM trained
-    * on Wikipedia; [[bigramLmScore]] is the self-scoring variant): the
-    * add-alpha bigram model trains on `refDocs` in one pass (tables
-    * localCheckpoint'ed and registered with `Pinned`; the vocabulary size
-    * is a scalar collected once and folded as a literal), then documents
-    * — batch frame or arriving stream — score by average per-pair
-    * log-likelihood ln((c(u,v)+a)/(c(u)+a·V)). Pairs UNSEEN in the
-    * reference back off to the smoothed floor via left joins (c=0), the
-    * piece self-scoring never needs. Documents under 2 tokens emit
-    * (n_pairs=0, avg_logprob NULL) in both modes. Streaming is two
-    * stream-static broadcast joins + the stateless per-batch combine —
-    * zero state-store rows; the model frames are model-sized, never
-    * corpus-sized. */
   /** Output schema of [[lmScoreAgainst]] (names + types) for a given id
     * column — the single source `Program.validate` resolves against, so
     * the two cannot drift (IngestProgramSpec pins this equal to the real
@@ -2816,84 +2681,42 @@ object TextOps {
       StructField("n_shared", LongType, nullable = false)))
   }
 
+  /** Dual-mode bigram-LM scoring AGAINST a reference corpus — the full
+    * CCNet shape (Wenzek et al. 2020 score crawl text with an LM trained
+    * on Wikipedia; [[bigramLmScore]] is the self-scoring variant): the
+    * add-alpha bigram model trains on `refDocs` in one pass (tables
+    * localCheckpoint'ed and registered with `Pinned`; the vocabulary size
+    * is a scalar collected once and folded as a literal), then documents
+    * — batch frame or arriving stream — score by average per-pair
+    * log-likelihood ln((c(u,v)+a)/(c(u)+a·V)). Pairs UNSEEN in the
+    * reference back off to the smoothed floor via left joins (c=0), the
+    * piece self-scoring never needs. Documents under 2 tokens emit
+    * (n_pairs=0, avg_logprob NULL) in both modes. Streaming is two
+    * stream-static broadcast joins + the stateless per-batch combine —
+    * zero state-store rows; the model frames are model-sized, never
+    * corpus-sized. */
   def lmScoreAgainst(stream: graft.api.MStream, refDocs: org.apache.spark.sql.DataFrame,
                      idCol: String, textCol: String, refTextCol: String,
                      alpha: Double = 0.5): graft.api.MStream = {
-    import org.apache.spark.sql.{Encoder, Encoders, Row}
-    import org.apache.spark.sql.catalyst.encoders.RowEncoder
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import org.apache.spark.sql.types._
     require(alpha > 0.0, s"add-alpha smoothing needs alpha > 0, got $alpha")
     val df = stream.df
     val spark = df.sparkSession
-    def pairsOf(d: org.apache.spark.sql.DataFrame, text: String,
-                keep: Seq[Column]): org.apache.spark.sql.DataFrame = d
-      .select(keep :+ words(col(text)).as("__w"): _*).where(size(col("__w")) >= 2)
-      .select(keep :+ explode(arrays_zip(
-        slice(col("__w"), lit(1), size(col("__w")) - 1).as("u"),
-        slice(col("__w"), lit(2), size(col("__w")) - 1).as("v"))).as("__p"): _*)
-      .select(keep :+ col("__p.u").as("__u") :+ col("__p.v").as("__v"): _*)
+    val keys = gramCols(2, 2)
     // reference model: one corpus pass; bc is THE trained artifact
     val (bc, bcIds) = graft.api.Pinned.checkpointTracked(
-      pairsOf(refDocs, refTextCol, Nil)
-        .groupBy(col("__u"), col("__v")).agg(count(lit(1)).as("__c")))
+      gramsOf(refDocs, refTextCol, 2, keys, Nil)
+        .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__c")))
     val (cc, ccIds) = graft.api.Pinned.checkpointTracked(
-      bc.groupBy(col("__u")).agg(sum(col("__c")).as("__cu")))
+      bc.groupBy(col("__p1")).agg(sum(col("__c")).as("__cu")))
     graft.api.Pinned.register(spark, bcIds ++ ccIds)
-    val nv = bc.agg(count_distinct(col("__v"))).head().getLong(0)
+    val nv = bc.agg(count_distinct(col("__p2"))).head().getLong(0)
     require(nv > 0, "lmScoreAgainst: the reference corpus yields an empty bigram model")
     val lp = log((coalesce(col("__c"), lit(0L)) + alpha) /
       (coalesce(col("__cu"), lit(0L)) + lit(nv) * alpha))
-    val id = col(idCol)
-
-    if (!df.isStreaming) {
-      val scored = pairsOf(df, textCol, Seq(id))
-        .join(broadcast(bc), Seq("__u", "__v"), "left")
-        .join(broadcast(cc), Seq("__u"), "left")
-        .withColumn("__lp", lp)
-        .groupBy(id)
-        .agg(count(lit(1)).as("n_pairs"), round(avg(col("__lp")), 3).as("avg_logprob"))
-      val out = df.select(id).join(scored, Seq(idCol), "left")
-        .select(id, coalesce(col("n_pairs"), lit(0L)).as("n_pairs"), col("avg_logprob"))
-      return stream.lift(out)
-    }
-
-    // streaming: pair-less docs ride a sentinel row (null u/v never joins)
-    // so they still emit; per-doc fold is the stateless per-batch combine
-    val pairStructs = arrays_zip(
-      slice(col("__w"), lit(1), size(col("__w")) - 1).as("u"),
-      slice(col("__w"), lit(2), size(col("__w")) - 1).as("v"))
-    val sentinel = array(struct(lit(null).cast("string").as("u"),
-      lit(null).cast("string").as("v")))
-    val u = df
-      .withColumn("__w", words(col(textCol)))
-      .select(id.as("__id"),
-        explode(when(size(col("__w")) >= 2, pairStructs).otherwise(sentinel)).as("__p"))
-      .select(col("__id"), col("__p.u").as("__u"), col("__p.v").as("__v"))
-      .join(broadcast(bc), Seq("__u", "__v"), "left")
-      .join(broadcast(cc), Seq("__u"), "left")
-      .select(col("__id"), col("__u"), when(col("__u").isNotNull, lp).as("__lp"))
-    val idType = df.schema(idCol).dataType
-    val aggT = StructType(Seq(
-      StructField("__id", idType),
-      StructField("n_pairs", LongType, nullable = false),
-      StructField("__sum", DoubleType)))
-    val aggEnc: Encoder[Row] = RowEncoder.encoderFor(aggT)
-    val uIdx = u.schema.fieldIndex("__u")
-    val lpIdx = u.schema.fieldIndex("__lp")
-    val out = graft.streaming.PerBatchCombine(u, Seq("__id"), aggEnc) {
-        (key: Row, it: Iterator[Row]) =>
-          var n = 0L; var s = 0.0
-          it.foreach { r =>
-            if (!r.isNullAt(uIdx)) { n += 1; s += r.getDouble(lpIdx) }
-          }
-          Iterator.single(Row(key.get(0), n, if (n > 0) s else null))
-      }
-      // the division + round happen in SQL so both faces share Spark's
-      // exact avg/round semantics
-      .select(col("__id").as(idCol), col("n_pairs"),
-        round(col("__sum") / col("n_pairs"), 3).as("avg_logprob"))
-    stream.lift(out)
+    val sides = Seq((bc, keys, true), (cc, Seq("__p1"), true))
+    stream.lift(lmApply(df, idCol, textCol, 2, "n_pairs",
+      joinTower(_, sides, Nil, "left"), lp,
+      scoringSpread(2, selfScored = false, knFamily = false)))
   }
 
   /** Dual-mode [[encodeTokens]] — apply a FIXED vocabulary at ingest.
@@ -3488,7 +3311,7 @@ object TextOps {
   // -------------------------- per-language BPE (one-pass multi-tokenizer training)
 
   /** Train EVERY language's BPE merge table in ONE pass — the tokenizer
-    * analog of the per-language LM matrix (`byLangApply`): the corpus is
+    * analog of the per-language LM matrix (`lmApply`'s language key): the corpus is
     * word-counted ONCE with the language as a key, and each training
     * round runs ONE job that argmaxes the pair statistic PER LANGUAGE
     * (a partial-aggregated (lang, a, b) count + a per-language top-1),

@@ -541,6 +541,34 @@ class ArpaSpec extends SparkSpec {
     } finally graft.api.Pinned.release(spark)
   }
 
+  test("per-language export: one level summed over languages is capped too") {
+    // each language's file holds 8 entries (<unk> + 4 unigrams + 3
+    // bigrams), under the cap of 10 — but the keyed export sorts level 1
+    // of all three languages (12 entries) in one task
+    val three = Seq((0L, "a b c d", "en"), (1L, "a b c d", "fr"),
+      (2L, "a b c d", "de")).toDF("doc_id", "text", "lang")
+    val dir = java.nio.file.Files.createTempDirectory("arpa_levelcap")
+    val old = spark.conf.getOption("graft.arpa.maxEntries")
+    spark.conf.set("graft.arpa.maxEntries", "10")
+    try {
+      Arpa.arpaExportKn(three.where($"lang" === "en").drop("lang"), "text", 2,
+        tmp("one_lang.arpa"))
+      val e = intercept[IllegalArgumentException](Arpa.arpaExportKnByLang(
+        three, "text", "lang", 2, dir.toString))
+      assert(e.getMessage.contains("graft.arpa.maxEntries") &&
+        e.getMessage.contains("minCount") && e.getMessage.contains("level-1"),
+        e.getMessage)
+      assert(dir.toFile.list().isEmpty,
+        s"the cap fails before any file opens: ${dir.toFile.list().toSeq}")
+    } finally {
+      old match {
+        case Some(v) => spark.conf.set("graft.arpa.maxEntries", v)
+        case None => spark.conf.unset("graft.arpa.maxEntries")
+      }
+      graft.api.Pinned.release(spark)
+    }
+  }
+
   test("contracts: no <unk>, malformed lines, caps, bounds") {
     val noUnk = tmp("nounk.arpa")
     java.nio.file.Files.write(java.nio.file.Paths.get(noUnk),

@@ -221,4 +221,38 @@ class NgramLmSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.keySet.intersect(after -- before).isEmpty,
       "release reclaims the sibling's blocks — zero leaked")
   }
+
+  test("awaitAll settles every sibling before rethrowing; later failures are suppressed") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // a private pool: the held siblings block their threads
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val latch = new java.util.concurrent.CountDownLatch(1)
+      val heldDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val fast = Future[Int](throw new RuntimeException("fails at once"))
+      val held = Future[Int] {
+        latch.await()
+        heldDone.set(true)
+        throw new IllegalStateException("fails after the latch")
+      }
+      val ok = Future { latch.await(); 1 }
+      val waiter = Future(TextOps.awaitAll(Seq(fast, held, ok))())
+      val deadline = System.nanoTime() + 10.seconds.toNanos
+      while (!fast.isCompleted && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(fast.isCompleted, "the fast failure completes on its own")
+      Thread.sleep(300)
+      assert(!waiter.isCompleted,
+        "awaitAll must not return (or throw) while a sibling still runs")
+      latch.countDown()
+      val e = intercept[RuntimeException](Await.result(waiter, 30.seconds))
+      assert(e.getMessage == "fails at once", "the first failure rethrows")
+      assert(heldDone.get && ok.isCompleted, "every sibling settled first")
+      assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("fails after the latch"),
+        "the other failure attaches as suppressed")
+      // the success path returns every value in order
+      assert(TextOps.awaitAll(Seq(Future(1), Future(2)))() == Seq(1, 2))
+    } finally pool.shutdownNow()
+  }
 }

@@ -255,8 +255,11 @@ class ProgramNodeCoverageSpec extends AnyFunSuite {
       "ngramLmScore" -> node("lmnScore"),
       "ngramLmScoreAgainst" -> node("lmnAgainst"),
       "knModel" -> excluded(block), "gramCols" -> excluded(block),
-      "gramsOf" -> excluded(block), "againstApply" -> excluded(block),
-      "byLangApply" -> excluded(block),
+      "gramsOf" -> excluded(block), "lmApply" -> excluded(block),
+      "joinTower" -> excluded(block), "levelSides" -> excluded(block),
+      "scoringSpread" -> excluded(block), "knFold" -> excluded(block),
+      "mknDisc" -> excluded(block), "mknDiscCols" -> excluded(block),
+      "statLiterals" -> excluded(block), "awaitAll" -> excluded(block),
       "mknDiscountsFor" -> excluded(block),
       "mknLangDiscounts" -> excluded(block),
       "knModelBuilds" -> excluded(diag),
