@@ -376,7 +376,9 @@ object App {
    */
   def run(spark: SparkSession, config: Config)(
       program: (String => MStream) => Map[String, MStream]): Seq[Running] =
-    withTuning(spark, config) {
+    // the config's graft.* tuning holds for the whole run: build-time-eager
+    // operators (residual joins) read their knobs during the program build
+    withConfs(spark, config.tuning) {
       // pinned frames register into a per-run scope (thread-local, like
       // the lineage recorder below): concurrent runs on one session
       // attribute their checkpoints exactly, and releasing one run's pins
@@ -470,21 +472,42 @@ object App {
   // tasks are one-shot and rare (two per streaming run)
   private lazy val releaseTimer = new java.util.Timer("graft-pin-release", true)
 
-  /** Apply the config's `graft.*` tuning for the duration of `body` and
-    * restore the prior session values after (the state-store provider
-    * save/restore pattern below). Build-time-eager operators (residual
-    * joins) read their knobs during the program build, inside this scope.
-    * The session conf is SHARED: concurrent runs on one session with
-    * DIFFERENT tuning values race on set/restore — give each
-    * differently-tuned run its own session (`spark.newSession()`). */
-  private def withTuning[T](spark: SparkSession, config: Config)(body: => T): T = {
-    if (config.tuning.isEmpty) return body
-    val saved = config.tuning.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    config.tuning.foreach { case (k, v) => spark.conf.set(k, v) }
+  /** Set `confs` on the session for the duration of `body`, then restore
+    * each key's prior value (or unset it). The session conf is SHARED:
+    * concurrent runs on one session that set DIFFERENT values race on
+    * set/restore — give each such run its own session
+    * (`spark.newSession()`). */
+  private def withConfs[T](spark: SparkSession, confs: Map[String, String])(body: => T): T = {
+    if (confs.isEmpty) return body
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Every streaming query `run` starts goes through here: per-sink
+    * queries, fan-out, cycle-feedback and lineage. For the duration of
+    * `start` the frame's session carries the sink's state store provider
+    * and graft's fork-free checkpoint file manager
+    * ([[graft.streaming.LocalCheckpointFileManager]]); both are restored
+    * afterwards. `StreamExecution` clones the session when the query is
+    * constructed, so the query keeps both for its lifetime, and the
+    * provider is pinned in the checkpoint from then on. A manager class
+    * the user already set (session or Hadoop conf) is left alone. */
+  private def startStreaming(df: DataFrame, stateStore: Option[String])(
+      start: => StreamingQuery): StreamingQuery = {
+    val session = df.sparkSession
+    val managerKey = graft.streaming.LocalCheckpointFileManager.ConfKey
+    val userManager = session.conf.getOption(managerKey).nonEmpty ||
+      session.sparkContext.hadoopConfiguration.get(managerKey) != null
+    val manager =
+      if (userManager) Map.empty[String, String]
+      else Map(managerKey -> classOf[graft.streaming.LocalCheckpointFileManager].getName)
+    val provider = stateStore.map(s =>
+      "spark.sql.streaming.stateStore.providerClass" -> stateStoreProviders.getOrElse(s, s))
+    withConfs(session, manager ++ provider)(start)
   }
 
   /** Append `df` as `format` files into `dir` with atomic visibility:
@@ -604,19 +627,7 @@ object App {
     sinks.flatMap(_.checkpoint).headOption.foreach(cp =>
       w.option("checkpointLocation", cp))
     sinks.flatMap(_.queryName).headOption.foreach(n => w.queryName(s"${n}_fanout"))
-    // single query => single provider; pinned at start like the
-    // non-fan-out path (set-start-restore)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = stores.headOption.map { s =>
-      val saved = spark.conf.getOption(providerKey)
-      spark.conf.set(providerKey, stateStoreProviders.getOrElse(s, s))
-      saved
-    }
-    try StreamingOutput(stream, w.start())
-    finally prev.foreach {
-      case Some(old) => spark.conf.set(providerKey, old)
-      case None => spark.conf.unset(providerKey)
-    }
+    StreamingOutput(stream, startStreaming(df, stores.headOption)(w.start()))
   }
 
   private def runWithLineage(spark: SparkSession, config: Config,
@@ -633,7 +644,8 @@ object App {
             .options(sink.options).outputMode("append")
           sink.queryName.foreach(w.queryName)
           sink.checkpoint.foreach(cp => w.option("checkpointLocation", cp))
-          Seq(StreamingOutput("__lineage", sink.path.map(w.start).getOrElse(w.start())))
+          Seq(StreamingOutput("__lineage", startStreaming(edges, sink.stateStore)(
+            sink.path.map(w.start).getOrElse(w.start()))))
         } else {
           sink.format match {
             case "memory" | "console" =>
@@ -678,27 +690,15 @@ object App {
           }
           sink.queryName.foreach(w.queryName)
           sink.checkpoint.foreach(cp => w.option("checkpointLocation", cp))
-          StreamingOutput(stream, w.start())
+          StreamingOutput(stream, startStreaming(out.df, sink.stateStore)(w.start()))
         } else if (out.df.isStreaming) {
           val w = out.df.writeStream.format(sink.format)
             .options(sink.options).outputMode(sink.outputMode)
           if (sink.partitionBy.nonEmpty) w.partitionBy(sink.partitionBy: _*)
           sink.queryName.foreach(w.queryName)
           sink.checkpoint.foreach(cp => w.option("checkpointLocation", cp))
-          // The provider class is read from the session conf once at query
-          // start and pinned in the checkpoint, so set-start-restore gives
-          // per-query state backends without leaking into later queries.
-          val providerKey = "spark.sql.streaming.stateStore.providerClass"
-          val prev = sink.stateStore.map { s =>
-            val saved = spark.conf.getOption(providerKey)
-            spark.conf.set(providerKey, stateStoreProviders.getOrElse(s, s))
-            saved
-          }
-          try StreamingOutput(stream, sink.path.map(w.start).getOrElse(w.start()))
-          finally prev.foreach {
-            case Some(old) => spark.conf.set(providerKey, old)
-            case None => spark.conf.unset(providerKey)
-          }
+          StreamingOutput(stream, startStreaming(out.df, sink.stateStore)(
+            sink.path.map(w.start).getOrElse(w.start())))
         } else sink.format match {
           case "memory" => BatchOutput(stream, out.df) // caller collects
           case "console" => out.df.show(false); BatchOutput(stream, out.df)

@@ -100,7 +100,7 @@ object Pinned {
 
   // Unscoped fallback, one entry per session. Weak keys: an abandoned
   // session's ENTRY vanishes with the session object instead of
-  // accumulating forever in a long-lived service (`App.withTuning`
+  // accumulating forever in a long-lived service (`App.withConfs`
   // recommends a fresh newSession() per differently-tuned run). The
   // BLOCKS belong to the shared SparkContext and still need release() or
   // a scope — the weak map only stops the registry itself leaking.

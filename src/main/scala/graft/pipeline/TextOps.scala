@@ -1866,7 +1866,9 @@ object TextOps {
     * face) and fold per document in [[lmApply]]. `discOf(rawN, cont)`
     * supplies the discounts — fixed, or derived for modified KN (the
     * tables are pinned before it runs, so scalar derivations are
-    * cheap). The model joins carry no broadcast hint. */
+    * cheap). The model joins carry no broadcast hint; the one-row stats
+    * are collected once and folded in as literals, so the scoring plan
+    * does not re-run the corpus vocabulary scan. */
   private def knSelfScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
                           textCol: String, order: Int,
                           discOf: (org.apache.spark.sql.DataFrame,
@@ -1876,8 +1878,9 @@ object TextOps {
     val lp = log(knFold(order, order, discOf(rawN, cont)))
     val sides = levelSides(order, order, j => if (j == order) rawN else cont(j),
       j => if (j == order) ctxN else ctxc(j), _ => false)
+    val st = stats.head()
     lmApply(docs, idCol, textCol, order, "n_grams",
-      pos => joinTower(pos, sides, Nil, "inner").crossJoin(broadcast(stats)), lp,
+      pos => statLiterals(joinTower(pos, sides, Nil, "inner"), st), lp,
       scoringSpread(order, selfScored = true, knFamily = true))
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.api.App
 
@@ -1014,4 +1015,108 @@ class AppModelSpec extends SparkSpec {
     }
     assert(e3.getMessage.contains("needs a path"), e3.getMessage)
   }
+
+  private val managerKey = graft.streaming.LocalCheckpointFileManager.ConfKey
+  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+
+  /** Hadoop `.<name>.crc` sidecars and temp files under a checkpoint:
+    * what Spark's default (forking) manager leaves and graft's does not.
+    * RocksDB uploads its SST files with Hadoop's `FileSystem`, not through
+    * the checkpoint file manager, so their sidecars do not count. */
+  private def hadoopLeftovers(root: String): Seq[String] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try s.iterator.asScala.map(_.getFileName.toString).filterNot(_.endsWith(".sst.crc"))
+      .filter(n => (n.startsWith(".") && n.endsWith(".crc")) || n.endsWith(".tmp")).toSeq
+    finally s.close()
+  }
+
+  /** A two-batch stateful count through App.run on `sink`; returns the
+    * final counts per key. */
+  private def countTwice(sink: App.Sink): Map[Long, Long] = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[Long]
+    val q = App.run(spark, new App.Config()
+        .setSource("ev", App.Source("list", rows = Some(in.toDF().toDF("id"))))
+        .addSink("counts", sink)) { src =>
+      Map("counts" -> src("ev").addFields("k" -> col("id") % 3)
+        .groupBy("k").select(count(lit(1)).as("n")))
+    }.collect { case App.StreamingOutput(_, q) => q }.head
+    try {
+      in.addData(1L, 2L, 3L, 4L)
+      q.processAllAvailable()
+      in.addData(5L, 6L)
+      q.processAllAvailable()
+      spark.table(sink.queryName.get).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).groupBy(_._1).map(_._2.maxBy(_._2))
+    } finally q.stop()
+  }
+
+  test("App.run restores the checkpoint manager and state store confs, also when a start throws") {
+    val prior = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    spark.conf.set(providerKey, prior)
+    try {
+      val cp = java.nio.file.Files.createTempDirectory("graft_restore_cp").toString
+      val counts = countTwice(App.Sink("memory", outputMode = "update",
+        queryName = Some(s"restore_${System.nanoTime()}"), checkpoint = Some(cp),
+        stateStore = Some("rocksdb")))
+      assert(counts == Map(0L -> 2L, 1L -> 2L, 2L -> 2L))
+      assert(spark.conf.getOption(managerKey).isEmpty, "the manager class is unset again")
+      assert(spark.conf.getOption(providerKey).contains(prior), "the prior provider is back")
+      assert(hadoopLeftovers(cp).isEmpty, "graft's manager wrote the checkpoint")
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      implicit val sqlCtx = spark.sqlContext
+      val in = MemoryStream[Long]
+      intercept[Exception] { // a memory sink without a queryName fails at start
+        App.run(spark, new App.Config()
+            .setSource("ev", App.Source("list", rows = Some(in.toDF())))
+            .addSink("out", App.Sink("memory", outputMode = "append",
+              stateStore = Some("rocksdb")))) { src => Map("out" -> src("ev")) }
+      }
+      assert(spark.conf.getOption(managerKey).isEmpty)
+      assert(spark.conf.getOption(providerKey).contains(prior))
+    } finally spark.conf.unset(providerKey)
+  }
+
+  test("a checkpoint file manager class the user set on the session is honoured") {
+    val cp = java.nio.file.Files.createTempDirectory("graft_user_cfm").toString
+    val cls = classOf[CountingCheckpointFileManager].getName
+    spark.conf.set(managerKey, cls)
+    val before = CountingCheckpointFileManager.created.get()
+    try {
+      val counts = countTwice(App.Sink("memory", outputMode = "update",
+        queryName = Some(s"user_cfm_${System.nanoTime()}"), checkpoint = Some(cp)))
+      assert(counts == Map(0L -> 2L, 1L -> 2L, 2L -> 2L))
+      assert(CountingCheckpointFileManager.created.get() > before, "the user's class ran")
+      assert(spark.conf.getOption(managerKey).contains(cls), "and is still set")
+    } finally spark.conf.unset(managerKey)
+  }
+
+  test("rocksdb and hdfs per-sink state stores run under graft's checkpoint manager") {
+    for (store <- Seq("rocksdb", "hdfs")) {
+      val cp = java.nio.file.Files.createTempDirectory(s"graft_${store}_cfm").toString
+      val counts = countTwice(App.Sink("memory", outputMode = "update",
+        queryName = Some(s"${store}_cfm_${System.nanoTime()}"), checkpoint = Some(cp),
+        stateStore = Some(store)))
+      assert(counts == Map(0L -> 2L, 1L -> 2L, 2L -> 2L), store)
+      val state = java.nio.file.Files.walk(java.nio.file.Paths.get(cp, "state"))
+      val stateFiles = try state.iterator.asScala.count(java.nio.file.Files.isRegularFile(_))
+        finally state.close()
+      assert(stateFiles > 0, s"$store wrote state files")
+      assert(hadoopLeftovers(cp).isEmpty, s"$store: ${hadoopLeftovers(cp).take(5)}")
+    }
+  }
+}
+
+/** A user-chosen checkpoint file manager: Spark's FileSystem-based one,
+  * counting instantiations. */
+class CountingCheckpointFileManager(path: org.apache.hadoop.fs.Path,
+                                    conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.spark.sql.execution.streaming.checkpointing
+      .FileSystemBasedCheckpointFileManager(path, conf) {
+  CountingCheckpointFileManager.created.incrementAndGet()
+}
+
+object CountingCheckpointFileManager {
+  val created = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -216,6 +216,14 @@ class KnLmSpec extends SparkSpec {
     graft.api.Pinned.release(spark)
   }
 
+  test("a corpus without a bigram scores every document (0 n-grams, NULL), KN and MKN") {
+    val docs = Seq((0L, "a"), (1L, ""), (2L, "  b ")).toDF("doc_id", "text")
+    try for (scored <- Seq(TextOps.knLmScore(docs, "doc_id", "text", 3),
+                           TextOps.mknLmScore(docs, "doc_id", "text", 3)))
+      assert(rowsOf(scored) == Map(0L -> (0L, None), 1L -> (0L, None), 2L -> (0L, None)))
+    finally graft.api.Pinned.release(spark)
+  }
+
   test("parameter contracts: order and discount bounds") {
     val df = corpus.toDF("doc_id", "text")
     assert(intercept[IllegalArgumentException](

@@ -27,11 +27,6 @@ class PlanSweepSpec extends SparkSpec {
   //  - q_bm25_batch: the (N, avgdl) collection stats reduce to a SINGLE
   //    row cross-joined onto the query-term × idf table (itself bounded
   //    by the query batch), like q_bm25
-  //  - q_kn3_score / q_mkn3_score: the collection stats reduce to a
-  //    SINGLE row cross-joined onto the n-gram scoring join (the
-  //    Jelinek-Mercer faces — q_lm_score, q_lm3_score, q_lm5_score,
-  //    q_ppl_buckets and the against faces — fold N/V as literals and
-  //    plan no nested-loop join)
   //  - q_hybrid_rrf: both leg baselines by design — the BM25 leg's
   //    single stats row (q_bm25_batch) and the ANN leg's broadcast
   //    probe set on an inequality condition (q_ann_topk)
@@ -41,7 +36,7 @@ class PlanSweepSpec extends SparkSpec {
   private val bnljByDesign =
     Set("q_ngram_jaccard", "q_embed_dedup", "q_ann_topk", "q_bm25", "q_tfidf",
       "q_embed_ingest", "q_heavy_hitters", "q_pq_topk", "q_bm25_batch",
-      "q_kn3_score", "q_mkn3_score", "q_hybrid_rrf", "q_hybrid_rrf_ivf")
+      "q_hybrid_rrf", "q_hybrid_rrf_ivf")
 
   test("no query plans a cartesian product; nested-loop joins only by design") {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
