@@ -23,7 +23,6 @@ object CycleBench {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
 
     // node id = layer * width + lane; edge (l, lane) -> (l+1, lane)
     val edges = spark.range(0L, width.toLong * (depth - 1))

@@ -1,7 +1,7 @@
 package graft.api
 
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 

@@ -626,8 +626,8 @@ object Program {
   /** Dual-mode order-n Kneser-Ney scoring against a PRETRAINED reference
     * corpus (`TextOps.knLmScoreAgainst`) — the literal CCNet crawl-vs-
     * Wikipedia shape with full back-off on unseen contexts.
-    * `broadcastModel` None (v9 grammar) = AUTO: decided per pinned count
-    * table from its measured size vs the broadcast threshold. */
+    * `broadcastModel` None (v9 grammar) = AUTO: decided per model pin
+    * from its measured size vs the broadcast threshold. */
   final case class KnAgainst(name: String, input: String, ref: String,
                              idCol: String, textCol: String, refTextCol: String,
                              order: Int, discount: Double,
@@ -725,7 +725,7 @@ object Program {
   /** Dual-mode modified-KN scoring against a PRETRAINED reference corpus
     * (`TextOps.mknLmScoreAgainst`) — [[MknScore]]'s ingest face; bucketed
     * discounts derive from the REFERENCE model's count-of-counts.
-    * `broadcastModel` None = AUTO (per pinned table by measured size). */
+    * `broadcastModel` None = AUTO (per model pin by measured size). */
   final case class MknAgainst(name: String, input: String, ref: String,
                               idCol: String, textCol: String, refTextCol: String,
                               order: Int, fb1: Double = 0.5, fb2: Double = 1.0,
@@ -2366,7 +2366,7 @@ object Program {
     * rank tiling (rankBuckets), per-language KN reference models
     * (knAgainstLang, mknAgainstLang), and
     * the AUTO broadcast lever — an against-face node whose
-    * `broadcastModel` is ABSENT now means "decide per pinned table from
+    * `broadcastModel` is ABSENT now means "decide per model pin from
     * measured size" and stamps v9 (a v8 reader would misread the absent
     * field as its old `true` default, so the stamp forces the refusal);
     * an explicit true/false keeps the v8 stamp and the v8 meaning;

@@ -66,7 +66,7 @@ final case class TypedStream[T](ds: Dataset[T], seqFn: T => Long) {
   def leftJoin[R, K: Encoder, O: Encoder](right: TypedStream[R])(
       lKey: T => K, rKey: R => K,
       residual: (T, R) => Boolean = StreamingJoins.noResidual[T, R])(
-      out: (Option[T], Option[R]) => O)(implicit te: Encoder[T]): Dataset[O] =
+      out: (Option[T], Option[R]) => O): Dataset[O] =
     StreamingJoins.enrichmentJoin[T, R, K, O](ds, right.ds, lKey, rKey,
       seqFn, right.seqFn, StreamingJoins.LeftEnrichment, residual)(out)
 
@@ -83,7 +83,7 @@ final case class TypedStream[T](ds: Dataset[T], seqFn: T => Long) {
       lKey: T => K, rKey: R => K,
       residual: (T, R) => Boolean = StreamingJoins.noResidual[T, R],
       lenientResidual: Boolean = false)(
-      out: (Option[T], Option[R]) => O)(implicit te: Encoder[T]): Dataset[O] =
+      out: (Option[T], Option[R]) => O): Dataset[O] =
     StreamingJoins.enrichmentJoin[T, R, K, O](ds, right.ds, lKey, rKey,
       seqFn, right.seqFn, StreamingJoins.FullEnrichment, residual,
       lenientResidual = lenientResidual)(out)
@@ -91,7 +91,7 @@ final case class TypedStream[T](ds: Dataset[T], seqFn: T => Long) {
   def leftInnerJoin[R, K: Encoder, O: Encoder](right: TypedStream[R])(
       lKey: T => K, rKey: R => K,
       residual: (T, R) => Boolean = StreamingJoins.noResidual[T, R])(
-      out: (Option[T], Option[R]) => O)(implicit te: Encoder[T]): Dataset[O] =
+      out: (Option[T], Option[R]) => O): Dataset[O] =
     StreamingJoins.enrichmentJoin[T, R, K, O](ds, right.ds, lKey, rKey,
       seqFn, right.seqFn, StreamingJoins.LeftInner, residual)(out)
 }

@@ -147,7 +147,7 @@ object Arpa {
   private def exportModel(refDocs: DataFrame, refTextCol: String, order: Int,
                           path: String, minCount: Long, fixed: Option[Double],
                           fallback: (Double, Double, Double) = TextOps.MknFallback,
-                          sentenceMode: Boolean = false): Unit = {
+                          sentenceMode: Boolean): Unit = {
     require(order >= 2 && order <= 8,
       s"arpaExport order must be in [2, 8], got $order")
     require(!refDocs.isStreaming,
@@ -166,7 +166,7 @@ object Arpa {
           TextOps.knModel(train, refTextCol, order, minCount,
             dropBosTargets = sentenceMode)
         val st = stats.head()
-        require(!st.isNullAt(0) && st.getAs[Double]("__t1") > 0,
+        require(st.getAs[Double]("__t1") > 0,
           "arpaExport: the reference corpus yields an empty model " +
             "(needs at least one bigram)")
         val ds =
@@ -461,95 +461,50 @@ object Arpa {
         val (rawN, ctxN, cont, ctxc, stats) =
           TextOps.knModel(refKeyed, refTextCol, order, minCount,
             langCol = Some("__lraw"))
-        // the stats frame has ONE row per language WITH a bigram —
-        // exactly the modeled set; capped BEFORE collecting (a degenerate
-        // language column must fail by name, not materialize on the
-        // driver)
-        val statRows = stats.limit(1025).collect()
+        // the driver-built stats frame has ONE row per language WITH a
+        // bigram — exactly the modeled set
+        val statRows = stats.collect()
         require(statRows.nonEmpty,
           s"$label: the reference corpus yields no per-language model " +
             "(no language slice has a bigram)")
         require(statRows.length <= 1024,
           s"$label: more than 1024 modeled languages — one ARPA file per " +
             "language is an artifact layout, not a per-key operation")
-        val lIdx = statRows.head.fieldIndex("__l")
-        def langOf(r: Row): String = {
-          val s = r.getStruct(lIdx)
+        def langOf(l: Any): String = {
+          val s = l.asInstanceOf[Row]
           if (s.isNullAt(0)) null else s.getString(0)
         }
+        val statsByLang = statRows.map(r => langOf(r.getAs[Row]("__l")) -> r).toMap
         // per-language MKN discounts: every language and level in ONE
-        // small frame (order aggregates over the pinned tables), not a
-        // per-language derivation loop
-        val dsByLang: Map[String, Map[Int, (Double, Double, Double)]] =
-          if (fixed.nonEmpty) Map.empty
-          else TextOps.mknLangDiscounts(order, rawN, cont, fallback)
-            .collect().map { r =>
-              val s = r.getStruct(r.fieldIndex("__l"))
-              val l = if (s.isNullAt(0)) null else s.getString(0)
-              l -> (1 to order).map { j =>
-                // absent levels (language with no j-grams) keep the
-                // fallback triple: their entries never exist, so the
-                // value is never read — but the map must be total
-                j -> (if (r.isNullAt(r.fieldIndex(s"__d1_$j"))) fallback
-                      else (r.getDouble(r.fieldIndex(s"__d1_$j")),
-                            r.getDouble(r.fieldIndex(s"__d2_$j")),
-                            r.getDouble(r.fieldIndex(s"__d3_$j"))))
-              }.toMap
-            }.toMap
-        val names = statRows.map(langOf)
+        // fold over the pinned tables, not a per-language derivation loop
+        val dsRaw =
+          if (fixed.nonEmpty) Map.empty[Any, Map[Int, (Double, Double, Double)]]
+          else TextOps.mknDiscounts(order, rawN, cont, fallback)
+        val dsByLang = dsRaw.map { case (l, ds) => langOf(l) -> ds }
+        val names = statsByLang.keys.toSeq
           .sorted(Ordering.fromLessThan[String]((a, b) =>
             (if (a == null) "" else a) < (if (b == null) "" else b)))
         // KEYED write ([[writeArpaKeyed]]): the level frames build ONCE
         // over the shared pinned tables with per-language stats — and,
         // for MKN, per-language discounts — joined as columns holding
-        // exactly the values the per-slice path folded as literals (same
-        // doubles, same op tree, byte-identical files). Both join frames
-        // build DRIVER-SIDE from the rows already collected above: a live
-        // `stats` subtree would re-run its corpus-scan vocab aggregate
-        // inside every level frame
-        import org.apache.spark.sql.types._
-        import scala.jdk.CollectionConverters._
-        val lField = StructField("__l",
-          StructType(Seq(StructField("l", StringType))))
-        val statsKSchema = StructType(lField +: Seq(
-          StructField("__t1", DoubleType), StructField("__n1p1", LongType),
-          StructField("__nb11", LongType), StructField("__nb21", LongType),
-          StructField("__nb31", LongType), StructField("__v", LongType)))
-        val statsKRows = statRows.map(r => Row(r.getStruct(lIdx),
-          r.getAs[Double]("__t1"), r.getAs[Long]("__n1p1"),
-          r.getAs[Long]("__nb11"), r.getAs[Long]("__nb21"),
-          r.getAs[Long]("__nb31"), r.getAs[Long]("__v")))
-        val statsK = spark.createDataFrame(
-          new java.util.ArrayList[Row](statsKRows.toSeq.asJava), statsKSchema)
-        // the joined columns ARE dsByLang's values (fallback already
-        // substituted on absent levels — the same never-read totality rule
-        // as the driver map)
-        val discK = if (fixed.nonEmpty) None else {
-          val dkSchema = StructType(lField +: (1 to order).flatMap(j => Seq(
-            StructField(s"__d1_$j", DoubleType, nullable = false),
-            StructField(s"__d2_$j", DoubleType, nullable = false),
-            StructField(s"__d3_$j", DoubleType, nullable = false))).toSeq)
-          val dkRows = statRows.map { r =>
-            val ds = dsByLang(langOf(r))
-            Row.fromSeq(r.getStruct(lIdx) +: (1 to order).flatMap { j =>
-              val (d1, d2, d3) = ds(j); Seq(d1, d2, d3)
-            })
-          }
-          Some(spark.createDataFrame(
-            new java.util.ArrayList[Row](dkRows.toSeq.asJava), dkSchema))
-        }
+        // exactly the values the per-slice path folds in as literals
+        // (same doubles, same op tree, byte-identical files). Both join
+        // frames are DRIVER-BUILT ([[TextOps.knModel]]'s stats,
+        // [[TextOps.mknDiscFrame]]), so no level frame re-runs anything
+        // that built the model
+        val discK = Option.when(fixed.isEmpty)(TextOps.mknDiscFrame(order, rawN, dsRaw))
         val d = fixed.fold(TextOps.mknDiscCols)(new TextOps.KnFixed(_))
         // the <unk> entry stays a per-language driver scalar — the same
         // arithmetic [[writeArpa]]'s caller runs
         val unkLp10ByLang: Map[String, Double] = names.map { l =>
           l -> unkLp10(fixed, if (fixed.nonEmpty) Map.empty else dsByLang(l),
-            statRows.find(r => langOf(r) == l).get)
+            statsByLang(l))
         }.toMap
         def pathOf(l: String): String =
           new org.apache.hadoop.fs.Path(dir, s"${fileNameOf(l)}.arpa").toString
         writeArpaKeyed(spark, order, names.toSeq, pathOf,
           levelEntries(order, ModelTables(rawN, ctxN, cont, ctxc), Seq("__l"),
-            x => discK.foldLeft(x.join(statsK, Seq("__l")))((y, dk) => y.join(dk, Seq("__l"))),
+            x => discK.foldLeft(x.join(stats, Seq("__l")))((y, dk) => y.join(dk, Seq("__l"))),
             d),
           unkLp10ByLang)
         names.toSeq.map(l => (l, pathOf(l)))

@@ -598,9 +598,8 @@ object Dedup {
                          idCol: String, textCol: String,
                          k: Int, bands: Int, threshold: Double,
                          broadcastRef: Boolean = true): graft.api.MStream = {
-    import org.apache.spark.sql.{Encoder, Encoders, Row}
+    import org.apache.spark.sql.{Encoder, Row}
     import org.apache.spark.sql.catalyst.encoders.RowEncoder
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import org.apache.spark.sql.types._
     require(bands > 0 && k >= bands && k % bands == 0,
       s"need k a positive multiple of bands, got k=$k bands=$bands")
@@ -1332,7 +1331,7 @@ object Dedup {
                            sig: org.apache.spark.sql.Column,
                            short: org.apache.spark.sql.Column,
                            bits: Int, maxHamming: Int,
-                           withinWatermark: Boolean = false): graft.api.MStream = {
+                           withinWatermark: Boolean): graft.api.MStream = {
     import org.apache.spark.sql.{Encoder, Encoders, Row}
     import org.apache.spark.sql.catalyst.encoders.RowEncoder
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
@@ -1810,9 +1809,8 @@ object Dedup {
   def scrubKnownSpans(stream: graft.api.MStream, idCol: String, textCol: String,
                       refDocs: DataFrame, refTextCol: String,
                       k: Int): graft.api.MStream = {
-    import org.apache.spark.sql.{Encoder, Encoders, Row}
+    import org.apache.spark.sql.{Encoder, Row}
     import org.apache.spark.sql.catalyst.encoders.RowEncoder
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import org.apache.spark.sql.types._
     require(k >= 2, s"span gram size must be >= 2, got $k")
     val df = stream.df

@@ -270,9 +270,8 @@ object Ivf {
                    idCol: String, vecCol: String, qIdCol: String,
                    centroids: DataFrame, topK: Int, nProbe: Int,
                    broadcastCorpus: Boolean = true): graft.api.MStream = {
-    import org.apache.spark.sql.{Encoder, Encoders, Row}
+    import org.apache.spark.sql.{Encoder, Row}
     import org.apache.spark.sql.catalyst.encoders.RowEncoder
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import org.apache.spark.sql.types._
     val df = queries.df
     if (!df.isStreaming)

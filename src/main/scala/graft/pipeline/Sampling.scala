@@ -251,7 +251,6 @@ object Sampling {
   def capPerKey(df: DataFrame, strataCol: Column, keyCol: Column, n: Int,
                 salt: String = ""): DataFrame = {
     require(n > 0, s"cap must be positive, got $n")
-    import org.apache.spark.sql.expressions.Window
     val (stW, gtW, rkW) =
       (freshName(df, "st"), freshName(df, "gt"), freshName(df, "rk"))
     val base = df.withColumn(stW, strataCol).withColumn(gtW, gate(keyCol, salt))
@@ -291,7 +290,6 @@ object Sampling {
                       tokensCol: Column, budget: Long,
                       salt: String = ""): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    import org.apache.spark.sql.expressions.Window
     val tok = coalesce(tokensCol, lit(0L))
     val checked = when(tok >= 0, tok).otherwise(raise_error(concat(
       lit("capTokensPerKey: negative token count "), tok.cast("string"),

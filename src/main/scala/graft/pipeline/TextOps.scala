@@ -914,7 +914,6 @@ object TextOps {
                      textCol: String, alpha: Double = 0.5,
                      lambdas: (Double, Double, Double) = (0.6, 0.3, 0.1))
       : org.apache.spark.sql.DataFrame = {
-    require(alpha > 0, s"alpha must be positive, got $alpha")
     require(!docs.isStreaming,
       "trigramLmScore trains on its own input — batch only (score a stream " +
         "against a static reference with lm3ScoreAgainst)")
@@ -928,61 +927,146 @@ object TextOps {
       ngramLp(3, alpha, Seq(l3, l2, l1)))
   }
 
-  /** The self-scoring Jelinek-Mercer model of one corpus, built in ONE
-    * aggregate and ONE pin. Each token position explodes with its
-    * order−1 predecessors (__p1..__p{order-1}, null before the document
-    * start; __p{order} is the token); the positions count by the full
-    * n-gram, and a single `groupingSets` aggregate over those counts
-    * computes every count table counts(j) (keys: the last j
-    * position columns, count __c{j}) and every context total ctxs(j)
-    * (j >= 2; counts(j)'s keys minus the last, total __cx{j}) —
-    * `grouping_id()` names the table, and a row whose first key is null
-    * is a document-start position without that much context, dropped.
-    * The pinned result is the model artifact, orders of magnitude under
+  /** THE count builder of the LM family: every n-gram count table is
+    * built here, from ONE aggregate and ONE pin (two for Kneser-Ney).
+    * Each token position explodes with its order−1 predecessors
+    * (__p1..__p{order-1}, null before the document start; __p{order} is
+    * the token), keyed by the language `__l` when `langCol` is set; the
+    * positions count by the full n-gram, and a single `groupingSets`
+    * aggregate over those counts computes every count table (keys: the
+    * last j position columns) — `grouping_id()` names the table, and a
+    * row whose first key is null is a document-start position without
+    * that much context, dropped. The same `where` prunes the count
+    * tables at j >= 2 to `minCount` (KenLM's --prune). Positions that
+    * are no event never enter: with `vocabOfContinuations` a token
+    * without a predecessor (counts(1) then covers only tokens that
+    * follow some token), with `dropBosTargets` a `<s>` target
+    * (sentence-mode padding is context only, never predicted). The
+    * pinned result is the model artifact, orders of magnitude under
     * corpus size; each table is a slice of it, returned by its count
-    * column's name. N (counts(1)'s total) and V (its row count) collect
-    * once as scalars. With `vocabOfContinuations` the positions
-    * without a predecessor never enter the model, so counts(1) and V
-    * cover only tokens that follow some token. */
-  private def jmModel(docs: org.apache.spark.sql.DataFrame, textCol: String,
-                      order: Int, vocabOfContinuations: Boolean)
-      : (Map[String, org.apache.spark.sql.DataFrame], Double, Double) = {
+    * column's name:
+    *  - Jelinek-Mercer (`kn` false): counts __c{j} and context totals
+    *    __cx{j} (j >= 2; the table's keys minus the last). A context
+    *    total is the sum of its level's KEPT counts, so under a prune it
+    *    cannot ride the aggregate and sums the pinned count slice
+    *    instead.
+    *  - Kneser-Ney (`kn` true): raw counts __cr{j}, and the continuation
+    *    counts __cc{j} (j < order) from ONE more aggregate over the pin,
+    *    pinned once: each raw(j+1) row counts once toward its last j
+    *    keys, the distinct words preceding that j-gram; __cc0, the row
+    *    count of raw(1), is the vocabulary size. */
+  private def lmCounts(train: org.apache.spark.sql.DataFrame, textCol: String,
+                       order: Int, kn: Boolean, minCount: Long = 1L,
+                       langCol: Option[String] = None, dropBosTargets: Boolean = false,
+                       vocabOfContinuations: Boolean = false)
+      : Map[String, org.apache.spark.sql.DataFrame] = {
     val keys = gramCols(order, order)
+    val lang = langCol.map(_ => "__l").toSeq
+    def pin(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      val (cp, ids) = graft.api.Pinned.checkpointTracked(d)
+      graft.api.Pinned.register(train.sparkSession, ids)
+      cp
+    }
     // left-pad the tokens with order−1 nulls: key i of every position is
     // then the i-th of `order` aligned slices of the padded array
     val ws = col("__w")
     val padded = concat(array(Seq.fill(order - 1)(lit(null).cast("string")): _*), ws)
-    val pos = docs.select(words(col(textCol)).as("__w"))
-      .select(explode(arrays_zip(keys.indices.map(i =>
-        slice(padded, lit(i + 1), size(ws)).as(keys(i))): _*)).as("__g"))
-      .select(keys.map(k => col(s"__g.$k").as(k)): _*)
-    val kept = if (vocabOfContinuations) pos.where(col(keys(order - 2)).isNotNull) else pos
-    val tables = (1 to order).map(j => s"__c$j" -> gramCols(order, j)) ++
-      (2 to order).map(j => s"__cx$j" -> gramCols(order, j).dropRight(1))
+    val pos = train.select(langCol.map(c => col(c).as("__l")).toSeq :+
+        words(col(textCol)).as("__w"): _*)
+      .select(lang.map(col) :+ explode(arrays_zip(keys.indices.map(i =>
+        slice(padded, lit(i + 1), size(ws)).as(keys(i))): _*)).as("__g"): _*)
+      .select(lang.map(col) ++ keys.map(k => col(s"__g.$k").as(k)): _*)
+    val events = Seq(
+      Option.when(vocabOfContinuations)(col(keys(order - 2)).isNotNull),
+      Option.when(dropBosTargets)(col(keys.last) =!= lit("<s>"))).flatten
+      .foldLeft(pos)(_ where _)
+    val cnt = if (kn) "__cr" else "__c"
+    // (name, keys, pruned)
+    val tables = (1 to order).map(j => (s"$cnt$j", gramCols(order, j), j >= 2 && minCount > 1L)) ++
+      (if (!kn && minCount == 1L)
+        (2 to order).map(j => (s"__cx$j", gramCols(order, j).dropRight(1), false))
+      else Nil)
     // grouping_id(): bit (order-1-i) set iff key i is NOT in the set
+    // (`__l`, in every set, never sets its bit)
     def gid(ks: Seq[String]): Long =
       keys.indices.filterNot(i => ks.contains(keys(i))).map(i => 1L << (order - 1 - i)).sum
     // count the full n-grams first: the grouping sets then expand the
     // distinct n-grams, spread over the shuffle's partitions, instead of
     // every position inside the scan's task
-    val grams = kept.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__c"))
-    val (model, ids) = graft.api.Pinned.checkpointTracked(
-      grams.groupingSets(tables.map(_._2.map(col)), keys.map(col): _*)
+    val grams = events.groupBy((lang ++ keys).map(col): _*).agg(count(lit(1)).as("__c"))
+    val model = pin(
+      grams.groupingSets(tables.map(t => (lang ++ t._2).map(col)), (lang ++ keys).map(col): _*)
         .agg(sum(col("__c")).as("__c"), grouping_id().as("__g"))
-        .where(tables.map { case (_, ks) =>
-          col("__g") === gid(ks) && col(ks.head).isNotNull }.reduce(_ || _)))
-    graft.api.Pinned.register(docs.sparkSession, ids)
-    val table = tables.map { case (c, ks) =>
-      c -> model.where(col("__g") === gid(ks)).select(ks.map(col) :+ col("__c").as(c): _*)
+        .where(tables.map { case (_, ks, pruned) =>
+          val kept = col("__g") === gid(ks) && col(ks.head).isNotNull
+          if (pruned) kept && col("__c") >= minCount else kept
+        }.reduce(_ || _)))
+    val table = tables.map { case (c, ks, _) =>
+      c -> model.where(col("__g") === gid(ks)).select((lang ++ ks).map(col) :+ col("__c").as(c): _*)
     }.toMap
-    // N and V in ONE job: a shuffle-free fold over the pinned slice (an
-    // aggregate would add an exchange, hence a job)
-    val (n, v) = table("__c1").select(col("__c1")).rdd.aggregate((0L, 0L))(
-      (a, r) => (a._1 + r.getLong(0), a._2 + 1L), (a, b) => (a._1 + b._1, a._2 + b._2))
-    (table, n.toDouble, v.toDouble)
+    if (kn) {
+      val cont = pin((0 until order).map { j =>
+        table(s"__cr${j + 1}").select(lang.map(col) ++ (lit(j).as("__j") +: keys.map(k =>
+          if (gramCols(order, j).contains(k)) col(k) else lit(null).cast("string").as(k))): _*)
+      }.reduce(_ unionByName _)
+        .groupBy((lang ++ ("__j" +: keys)).map(col): _*).agg(count(lit(1)).as("__cc")))
+      table ++ (0 until order).map { j =>
+        s"__cc$j" -> cont.where(col("__j") === j)
+          .select((lang ++ gramCols(order, j)).map(col) :+ col("__cc").as(s"__cc$j"): _*)
+      }
+    } else if (minCount > 1L) table ++ (2 to order).map { j =>
+      s"__cx$j" -> table(s"__c$j")
+        .groupBy((lang ++ gramCols(order, j).dropRight(1)).map(col): _*)
+        .agg(sum(col(s"__c$j")).as(s"__cx$j"))
+    } else table
   }
 
-  /** Score every document of `docs` against [[jmModel]] of `docs` itself:
+  /** Per-language sums of the long columns `cs` over `d`, a slice of a
+    * pin, in ONE shuffle-free driver job (an aggregate would add an
+    * exchange, hence a job): the corpus scalars the scoring folds take
+    * as literals or as a driver-built per-language frame. Keyed by the
+    * `__l` value of a language-keyed slice (one key otherwise); one
+    * small array per language rides each task. */
+  private def sumsByLang(d: org.apache.spark.sql.DataFrame,
+                         cs: Seq[Column]): Map[Any, Seq[Long]] = {
+    val width = cs.size
+    val key = if (d.columns.contains("__l")) col("__l") else lit(0)
+    d.select(key +: cs: _*).rdd
+      .aggregate(scala.collection.mutable.HashMap.empty[Any, Array[Long]])(
+        (m, r) => {
+          val a = m.getOrElseUpdate(r.get(0), new Array[Long](width))
+          (0 until width).foreach(i => a(i) += r.getLong(i + 1))
+          m
+        },
+        (m, o) => {
+          o.foreach { case (k, b) =>
+            val a = m.getOrElseUpdate(k, new Array[Long](width))
+            (0 until width).foreach(i => a(i) += b(i))
+          }
+          m
+        })
+      .map { case (k, a) => k -> a.toSeq }.toMap
+  }
+
+  /** [[sumsByLang]] of an unkeyed slice: zeros when it is empty. */
+  private def sumsOf(d: org.apache.spark.sql.DataFrame, cs: Seq[Column]): Seq[Long] =
+    sumsByLang(d, cs).values.headOption.getOrElse(cs.map(_ => 0L))
+
+  /** A driver-built scalar frame: `rows` (the language key first on a
+    * language-keyed pin) under the pin's `__l` field plus `fields`, so
+    * it joins the model by `__l` or folds in as literals without
+    * re-running anything that built the model. */
+  private def scalarFrame(pin: org.apache.spark.sql.DataFrame,
+                          fields: Seq[org.apache.spark.sql.types.StructField],
+                          rows: Seq[Seq[Any]]): org.apache.spark.sql.DataFrame = {
+    import scala.jdk.CollectionConverters._
+    pin.sparkSession.createDataFrame(
+      new java.util.ArrayList(rows.map(org.apache.spark.sql.Row.fromSeq).asJava),
+      org.apache.spark.sql.types.StructType(
+        pin.schema.fields.filter(_.name == "__l").toSeq ++ fields))
+  }
+
+  /** Score every document of `docs` against [[lmCounts]] of `docs` itself:
     * the order-n positions (a second pass over the corpus — the two-scan
     * floor of every corpus-stat-then-score operator here) join counts(j)
     * and ctxs(j) from the top order down (suffix-aligned equi joins),
@@ -1003,7 +1087,9 @@ object TextOps {
                           textCol: String, order: Int, nCol: String, spread: Boolean,
                           vocabOfContinuations: Boolean = false)(lp: Column)
       : org.apache.spark.sql.DataFrame = {
-    val (table, n, vv) = jmModel(docs, textCol, order, vocabOfContinuations)
+    val table = lmCounts(docs, textCol, order, kn = false,
+      vocabOfContinuations = vocabOfContinuations)
+    val Seq(n, vv) = sumsOf(table("__c1"), Seq(col("__c1"), lit(1L))).map(_.toDouble)
     val bc = decideBroadcast(None, table("__c1"))
     val sides = levelSides(order, order, j => table(s"__c$j"), j => table(s"__cx$j"),
       _ => bc, unigrams = !vocabOfContinuations)
@@ -1063,73 +1149,13 @@ object TextOps {
   /** [[awaitAll]] over pin futures, registering EVERY completed
     * checkpoint's ids on the CALLING thread (Pinned scopes are
     * thread-local) even when a sibling FAILS. Without this, one failing
-    * count-table build would orphan every sibling's already-persisted
+    * pin would orphan every sibling's already-persisted
     * blocks (nothing registered, so scope release could never unpersist
     * them); with it the failure path leaks zero blocks. */
   private[graft] def awaitPinned[A](spark: org.apache.spark.sql.SparkSession,
                                     futs: Seq[scala.concurrent.Future[A]])(
                                     ids: A => Set[Int]): Seq[A] =
     awaitAll(futs)(x => graft.api.Pinned.register(spark, ids(x)))
-
-  /** Per-order count tables of the n-gram LM: counts(j) is keyed by the
-    * last j position columns (__p{order-j+1}..__p{order}) with count
-    * __c{j}; ctxs(j) (j >= 2) drops the last key with total __cx{j}.
-    * Suffix-aligned key names make every scoring join a plain
-    * Seq-column equi join against the position frame. Each table is
-    * pinned once (two consumers: its context derivation and the scoring
-    * join) — the model artifact, orders of magnitude under corpus size. */
-  private def ngramModel(train: org.apache.spark.sql.DataFrame, textCol: String,
-                         order: Int,
-                         /** prune counts < minCount at orders >= 2 (KenLM
-                           * practice — a raw order-5 table is near
-                           * position-count-sized; pruning is what makes
-                           * the model a broadcastable ARTIFACT at scale;
-                           * unigrams never prune, matching KenLM). */
-                         minCount: Long = 1L,
-                         /** Some(c) = PER-LANGUAGE models in one pass
-                           * ([[knModel]]'s convention): column c threads
-                           * as key "__l" through every count/context
-                           * groupBy, so each language's model is an
-                           * independent slice of the same tables. None
-                           * keeps the shared-model shape byte-for-byte. */
-                         langCol: Option[String] = None)
-      : (Map[Int, org.apache.spark.sql.DataFrame],
-         Map[Int, org.apache.spark.sql.DataFrame]) = {
-    val spark = train.sparkSession
-    // materialize the key ONCE under its canonical name (gramsOf
-    // re-evaluates its keep expressions on the intermediate frame)
-    val train2 = langCol.map(c => train.withColumn("__l", col(c))).getOrElse(train)
-    val keyNames: Seq[String] = langCol.map(_ => "__l").toSeq
-    val keyKeep: Seq[Column] = keyNames.map(col)
-    // the per-order count builds are INDEPENDENT actions; submit their
-    // eager checkpoints concurrently (Spark schedules jobs from multiple
-    // threads — later small stages fill slots the earlier shuffle leaves
-    // idle, cutting the serial job-floor tax of `order` sequential pins)
-    // and register the ids on the CALLING thread, where a per-run Pinned
-    // scope (thread-local) still captures them
-    val counts = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      awaitPinned(spark, (1 to order).map { j =>
-        Future {
-          val names = gramCols(order, j)
-          val raw = gramsOf(train2, textCol, j, names, keyKeep)
-            .groupBy((keyNames ++ names).map(col): _*).agg(count(lit(1)).as(s"__c$j"))
-          val kept =
-            if (j >= 2 && minCount > 1L) raw.filter(col(s"__c$j") >= minCount)
-            else raw
-          val (cp, ids) = graft.api.Pinned.checkpointTracked(kept)
-          (j, cp, ids)
-        }
-      }.toSeq)(_._3).map { case (j, cp, _) => j -> cp }.toMap
-    }
-    val ctxs = (2 to order).map { j =>
-      val names = gramCols(order, j)
-      j -> counts(j).groupBy((keyNames ++ names.dropRight(1)).map(col): _*)
-        .agg(sum(col(s"__c$j")).as(s"__cx$j"))
-    }.toMap
-    (counts, ctxs)
-  }
 
   /** Suffix-aligned key names of the j-gram within an order-n position:
     * __p{n-j+1}..__p{n}. */
@@ -1138,9 +1164,9 @@ object TextOps {
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.pipeline.TextOps")
 
-  /** Measured persisted bytes (memory + disk blocks) of a PINNED model
-    * table — known exactly at decision time because the count tables are
-    * localCheckpointed before scoring. Deserialized block sizes
+  /** Measured persisted bytes (memory + disk blocks) of the pin under a
+    * model frame — known exactly at decision time because the count
+    * tables are localCheckpointed before scoring. Deserialized block sizes
     * overestimate the broadcast wire size, so the auto decision errs
     * toward shuffling — the safe direction. */
   private def pinnedBytes(df: org.apache.spark.sql.DataFrame): Long = {
@@ -1149,11 +1175,11 @@ object TextOps {
       .filter(i => ids.contains(i.id)).map(i => i.memSize + i.diskSize).sum
   }
 
-  /** The AUTO broadcast decision for one pinned model table: its caller
-    * passed no explicit lever, so broadcast iff the measured table fits
-    * the session's autoBroadcastJoinThreshold (a disabled threshold, -1,
-    * auto-broadcasts nothing). Derived frames (context aggregates) are
-    * bounded by their pinned parent and inherit its decision. */
+  /** The AUTO broadcast decision for one pin: its caller passed no
+    * explicit lever, so every table sliced or derived from the pin
+    * broadcasts iff the measured pin fits the session's
+    * autoBroadcastJoinThreshold (a disabled threshold, -1, auto-broadcasts
+    * nothing). */
   private def decideBroadcast(lever: Option[Boolean],
                               table: org.apache.spark.sql.DataFrame): Boolean =
     lever.getOrElse {
@@ -1174,8 +1200,8 @@ object TextOps {
   }
 
   /** The against engines' broadcast decisions: one [[decideBroadcast]]
-    * per pinned model table (the derived context aggregates inherit
-    * their parent's), then the lever hygiene — warn when an unpruned
+    * per pin (`pinned` holds one frame over each), then the lever
+    * hygiene — warn when an unpruned
     * high-order model is being built (the count tables approach
     * position-count size — the 100 TB posture depends on `minCount`),
     * and name the streaming constraint when the model does not
@@ -1351,12 +1377,14 @@ object TextOps {
     * columns; counts/contexts absent after a LEFT join (the
     * score-against face) coalesce to 0 — the unseen-context backoff
     * (0+α)/(0+Vα) the self-scoring face never needs. */
-  private def ngramLp(order: Int, alpha: Double, l: Seq[Double]): Column =
+  private def ngramLp(order: Int, alpha: Double, l: Seq[Double]): Column = {
+    require(alpha > 0, s"alpha must be positive, got $alpha")
     log((order to 1 by -1).zip(l).map { case (j, w) =>
       val c = coalesce(col(s"__c$j"), lit(0L))
       val cx = if (j >= 2) coalesce(col(s"__cx$j"), lit(0L)) else col("__n")
       lit(w) * (c + lit(alpha)) / (cx + col("__vv") * lit(alpha))
     }.reduce(_ + _))
+  }
 
   /** Order-n interpolated LM quality score — [[trigramLmScore]]
     * parameterized to the 5-gram shape real CCNet pipelines score with
@@ -1379,7 +1407,6 @@ object TextOps {
       s"ngramLmScore order must be in [2, 8], got $order (order 1 is a " +
         "unigram table, not an LM; past 8 the count tables stop being " +
         "model-sized on real corpora)")
-    require(alpha > 0, s"alpha must be positive, got $alpha")
     require(!docs.isStreaming,
       "ngramLmScore trains on its own input — batch only (score a stream " +
         "against a static reference with ngramLmScoreAgainst)")
@@ -1419,66 +1446,69 @@ object TextOps {
                             * corpus is large. */
                           minCount: Long = 1L,
                           /** The broadcast lever, now AUTO by default:
-                            * None = decide PER PINNED TABLE from its
+                            * None = decide from the model pin's
                             * measured size vs the session broadcast
-                            * threshold (the tables are checkpointed
-                            * before scoring, so their statistics are
-                            * known); Some(true)/Some(false) force the
+                            * threshold (the model is checkpointed
+                            * before scoring, so its size is known); Some(true)/Some(false) force the
                             * round-14 explicit behavior. Streaming
                             * requires every table to broadcast —
                             * Some(false) or an oversized auto decision
                             * is a named error there. */
                           broadcastModel: Option[Boolean] = None): graft.api.MStream =
-    jmAgainstScore(stream, refDocs, idCol, textCol, refTextCol, None, order, alpha,
-      lambdas, nCol, minCount, broadcastModel, "ngramLmScoreAgainst")
+    jmAgainstScore(stream, refDocs, idCol, textCol, refTextCol, None, order, nCol,
+      minCount, broadcastModel, "ngramLmScoreAgainst")(
+      ngramLp(order, alpha, lambdasFor(order, lambdas)))
 
   /** The Jelinek-Mercer against engine, shared model or per language
-    * (`lang` = (document, reference) language columns): [[ngramModel]]
-    * on the reference, one broadcast decision per pinned count table,
-    * then [[lmApply]]. The shared model folds (N, V) as literals; the
-    * per-language (N, V) stats frame (languages × 2) always broadcasts
-    * and joins by `__l` — an unmodeled language misses it, so every term
-    * of the interpolation goes NULL, the no-model verdict. */
+    * (`lang` = (document, reference) language columns): [[lmCounts]] on
+    * the reference, one broadcast decision for its one pin, then
+    * [[lmApply]] scoring `lp`. The shared model folds (N, V) as
+    * literals; the per-language (N, V) frame (languages × 2) is built on
+    * the driver, always broadcasts and joins by `__l` — an unmodeled
+    * language misses it, so every term of the interpolation goes NULL,
+    * the no-model verdict. With `vocabOfContinuations` the model's
+    * unigrams are the tokens that follow some token and only V reads
+    * them (the bigram face). */
   private def jmAgainstScore(stream: graft.api.MStream,
                              refDocs: org.apache.spark.sql.DataFrame,
                              idCol: String, textCol: String, refTextCol: String,
-                             lang: Option[(String, String)], order: Int,
-                             alpha: Double, lambdas: Seq[Double], nCol: String,
+                             lang: Option[(String, String)], order: Int, nCol: String,
                              minCount: Long, broadcastModel: Option[Boolean],
-                             label: String): graft.api.MStream = {
+                             label: String, vocabOfContinuations: Boolean = false)(
+                             lp: => Column): graft.api.MStream = {
     checkAgainst(label, order, minCount, refDocs, lang.isDefined)
-    require(alpha > 0, s"alpha must be positive, got $alpha")
-    val l = lambdasFor(order, lambdas)
+    val lpCol = lp
     val df = stream.df
     // struct-wrapped language key: null-safe under plain equi-join keys
     val train = lang.fold(refDocs) { case (_, refLang) =>
       refDocs.withColumn("__lraw", struct(col(refLang))) }
-    val (counts, ctxs) = ngramModel(train, refTextCol, order, minCount,
-      langCol = lang.map(_ => "__lraw"))
+    val table = lmCounts(train, refTextCol, order, kn = false, minCount,
+      langCol = lang.map(_ => "__lraw"), vocabOfContinuations = vocabOfContinuations)
+    val nvCols = Seq(col("__c1"), lit(1L))
     val bc = modelBroadcasts(label, order, minCount, df.isStreaming, broadcastModel,
-      (1 to order).map(counts))
-    val sides = levelSides(order, order, counts, ctxs, j => bc(j - 1))
+      Seq(table("__c1"))).head
+    val sides = levelSides(order, order, j => table(s"__c$j"), j => table(s"__cx$j"),
+      _ => bc, unigrams = !vocabOfContinuations)
     val withJoins: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       lang match {
         case None =>
-          val nvRow = counts(1).agg(sum(col("__c1")).cast("double"),
-            count(lit(1)).cast("double")).head()
-          require(!nvRow.isNullAt(0) && nvRow.getDouble(1) > 0,
-            s"$label: the reference corpus yields an empty model")
+          val Seq(n, v) = sumsOf(table("__c1"), nvCols)
+          require(v > 0, s"$label: the reference corpus yields an empty model")
           pos => joinTower(pos, sides, Nil, "left")
-            .withColumn("__n", lit(nvRow.getDouble(0)))
-            .withColumn("__vv", lit(nvRow.getDouble(1)))
+            .withColumn("__n", lit(n.toDouble))
+            .withColumn("__vv", lit(v.toDouble))
         case Some(_) =>
-          val stats = counts(1).groupBy(col("__l"))
-            .agg(sum(col("__c1")).cast("double").as("__n"),
-              count(lit(1)).cast("double").as("__vv"))
-          require(!stats.isEmpty,
+          val nv = sumsByLang(table("__c1"), nvCols)
+          require(nv.nonEmpty,
             s"$label: the reference corpus yields no per-language model " +
               "(no language slice has a token)")
+          import org.apache.spark.sql.types.{DoubleType, StructField}
+          val stats = scalarFrame(table("__c1"),
+            Seq(StructField("__n", DoubleType), StructField("__vv", DoubleType)),
+            nv.toSeq.map { case (l, s) => l +: s.map(_.toDouble) })
           pos => joinTower(pos, sides :+ ((stats, Nil, true)), Seq("__l"), "left")
       }
-    stream.lift(lmApply(df, idCol, textCol, order, nCol, withJoins,
-      ngramLp(order, alpha, l),
+    stream.lift(lmApply(df, idCol, textCol, order, nCol, withJoins, lpCol,
       scoringSpread(order, selfScored = false, knFamily = false),
       langCol = lang.map(_._1)))
   }
@@ -1501,6 +1531,12 @@ object TextOps {
 
   // ---------------------------------------------------------- Kneser-Ney LM
 
+  /** Training-pass counter: how many times [[knModel]] has built its
+    * count tables this JVM — ArpaSpec pins the by-language export to ONE
+    * training pass (the count tables train once with the language as a
+    * key; per-language files are slices, not re-trainings). */
+  private[graft] val knModelBuilds = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** The interpolated Kneser-Ney model tables for order n (Kneser & Ney
     * 1995; Chen & Goodman 1999's interpolated form — the fixed-discount
     * face [[knLmScore]] and the count-bucketed modified-KN face
@@ -1511,19 +1547,14 @@ object TextOps {
     * contexts has this word completed" estimate that keeps "Francisco"
     * rare outside "San") — and per-context aggregates carrying BOTH the
     * denominator total and N1+ (the discount mass) from ONE groupBy
-    * each. Pinned: the top raw table and every continuation table (each
-    * has two consumers — its context aggregate and the scoring join);
-    * intermediate raw tables are single-consumer and stay lazy.
-    * Returns (rawN, ctxN, cont(1..n-1), ctxc(2..n-1), one-row stats
-    * (__t1 = total bigram types as double, __n1p1, __nb{1,2,3}1 count
-    * buckets, __v = vocabulary)); every context aggregate also carries
-    * its count buckets __nb{1,2,3}{j} for the modified-KN face. */
-  /** Training-pass counter: how many times [[knModel]] has built its
-    * count tables this JVM — ArpaSpec pins the by-language export to ONE
-    * training pass (the count tables train once with the language as a
-    * key; per-language files are slices, not re-trainings). */
-  private[graft] val knModelBuilds = new java.util.concurrent.atomic.AtomicLong(0L)
-
+    * each. The raw and continuation tables are [[lmCounts]]'s two
+    * Kneser-Ney pins; the context aggregates stay lazy over them, and
+    * the level-1 stats fold on the driver ([[sumsByLang]]).
+    * Returns (rawN, ctxN, cont(1..n-1), ctxc(2..n-1), the driver-built
+    * stats frame (__t1 = total bigram types as double, __n1p1,
+    * __nb{1,2,3}1 count buckets, __v = vocabulary)); every context
+    * aggregate also carries its count buckets __nb{1,2,3}{j} for the
+    * modified-KN face. */
   private[pipeline] def knModel(train: org.apache.spark.sql.DataFrame, textCol: String,
                       order: Int,
                       /** prune RAW counts < minCount at orders >= 2
@@ -1535,16 +1566,16 @@ object TextOps {
                       /** Some(c) = PER-LANGUAGE models in one pass (the
                         * literal CCNet architecture): column c threads as
                         * key "__l" through every count/context/stats
-                        * groupBy, so each language's model is an
+                        * table, so each language's model is an
                         * independent slice of the same tables; the stats
-                        * frame becomes one row per language instead of a
-                        * global one-row. None keeps today's shared-model
-                        * shape byte-for-byte (an empty key prefix changes
-                        * nothing). */
+                        * frame becomes one row per language with a
+                        * bigram instead of a global one-row. None keeps
+                        * the shared-model shape (an empty key prefix
+                        * changes nothing). */
                       langCol: Option[String] = None,
                       /** Sentence-mode training ([[Sentences]]): drop the
-                        * lower-order grams whose TARGET is `<s>` and keep
-                        * `<s>` out of the vocabulary — it is padding, a
+                        * grams whose TARGET is `<s>` and keep `<s>` out
+                        * of the vocabulary — it is padding, a
                         * context-only token that is never predicted. */
                       dropBosTargets: Boolean = false)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
@@ -1552,42 +1583,11 @@ object TextOps {
          Map[Int, org.apache.spark.sql.DataFrame],
          org.apache.spark.sql.DataFrame) = {
     knModelBuilds.incrementAndGet()
-    val spark = train.sparkSession
-    // materialize the key ONCE under its canonical name (gramsOf
-    // re-evaluates its keep expressions on the intermediate frame, so an
-    // aliased keep would not resolve on the second select)
-    val train2 = langCol.map(c => train.withColumn("__l", col(c))).getOrElse(train)
-    val keyNames: Seq[String] = langCol.map(_ => "__l").toSeq
-    val keyKeep: Seq[Column] = keyNames.map(col)
-    def keyed(names: Seq[String]): Seq[Column] = (keyNames ++ names).map(col)
-    def raw(j: Int): org.apache.spark.sql.DataFrame = {
-      val g0 = gramsOf(train2, textCol, j, gramCols(order, j), keyKeep)
-      // sentence mode: a gram ending at the `<s>` padding is not an
-      // event (only the top order is pad-free by construction)
-      val g = if (dropBosTargets)
-        g0.filter(col(gramCols(order, j).last) =!= lit("<s>")) else g0
-      val c = g.groupBy(keyed(gramCols(order, j)): _*)
-        .agg(count(lit(1)).as(s"__cr$j"))
-      if (j >= 2 && minCount > 1L) c.filter(col(s"__cr$j") >= minCount) else c
-    }
-    // independent count builds pin CONCURRENTLY (the ngramModel pattern);
-    // only cont(order-1) depends on the pinned top table and chains off
-    // its future. Ids register on the CALLING thread (Pinned scopes are
-    // thread-local).
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    def contOf(src: org.apache.spark.sql.DataFrame, j: Int) =
-      graft.api.Pinned.checkpointTracked(
-        src.groupBy(keyed(gramCols(order, j)): _*)
-          .agg(count(lit(1)).as(s"__cc$j")))
-    val rawNF = Future { (order, graft.api.Pinned.checkpointTracked(raw(order))) }
-    val contFs = (1 until order).map { j =>
-      if (j + 1 == order) rawNF.map { case (_, (cp, _)) => (j, contOf(cp, j)) }
-      else Future { (j, contOf(raw(j + 1), j)) }
-    }
-    val all = awaitPinned(spark, rawNF +: contFs.toSeq)(_._2._2)
-    val rawN = all.find(_._1 == order).get._2._1
-    val contDone = all.filter(_._1 != order)
+    val lang = langCol.map(_ => "__l").toSeq
+    def keyed(names: Seq[String]): Seq[Column] = (lang ++ names).map(col)
+    val t = lmCounts(train, textCol, order, kn = true, minCount, langCol, dropBosTargets)
+    val rawN = t(s"__cr$order")
+    val cont = (1 until order).map(j => j -> t(s"__cc$j")).toMap
     // per-context COUNT BUCKETS (types with count 1 / 2 / >= 3) ride the
     // same groupBy — the fixed-discount face ignores them, the
     // modified-KN face's per-context discount mass γ·tot = D1·N1 + D2·N2
@@ -1600,34 +1600,29 @@ object TextOps {
       .agg(sum(col(s"__cr$order")).as(s"__tot$order"),
         (count(lit(1)).as(s"__n1p$order") +:
           buckets(s"__cr$order", order.toString)): _*)
-    val cont = contDone.map { case (j, (cp, _)) => j -> cp }.toMap
     val ctxc = (2 until order).map { j =>
       j -> cont(j).groupBy(keyed(gramCols(order, j).dropRight(1)): _*)
         .agg(sum(col(s"__cc$j")).as(s"__ctot$j"),
           (count(lit(1)).as(s"__n1p$j") +: buckets(s"__cc$j", j.toString)): _*)
     }.toMap
-    val statAggs = sum(col("__cc1")).cast("double").as("__t1") +:
-      (count(lit(1)).as("__n1p1") +: buckets("__cc1", "1"))
-    // sentence mode: `<s>` is padding, not a predictable token — it
-    // stays out of the vocabulary (the `</s>` event IS predictable and
-    // counts, KenLM's convention)
-    def vocabTokens(d: org.apache.spark.sql.DataFrame, keep: Seq[Column]) = {
-      val t = d.select(keep :+ explode(words(col(textCol))).as("__t"): _*)
-      if (dropBosTargets) t.where(col("__t") =!= lit("<s>")) else t
-    }
-    val stats = langCol match {
-      case None =>
-        cont(1).agg(statAggs.head, statAggs.tail: _*)
-          .crossJoin(vocabTokens(train, Nil)
-            .agg(count_distinct(col("__t")).as("__v")))
-      case Some(_) =>
-        val t1s = cont(1).groupBy(col("__l")).agg(statAggs.head, statAggs.tail: _*)
-        val vocabs = vocabTokens(train2, Seq(col("__l").as("__lv")))
-          .groupBy(col("__lv")).agg(count_distinct(col("__t")).as("__v"))
-        // null-safe: a null LANGUAGE is its own model, the engine-wide
-        // null-group convention
-        t1s.join(vocabs, col("__l") <=> col("__lv")).drop("__lv")
-    }
+    // the level-1 stats (__t1, __n1p1, __nb11, __nb21, __nb31) of cont(1)
+    // and __v of cont(0), in one fold; per language, a language without a
+    // bigram has no model and no row
+    def at(j: Int, v: Column): Column = when(col("__j") === j, v).otherwise(0L)
+    val cc = col("__cc")
+    val slice = Seq(0, 1).map(j => t(s"__cc$j")
+      .select(lang.map(col) :+ lit(j).as("__j") :+ col(s"__cc$j").as("__cc"): _*))
+      .reduce(_ unionByName _)
+    val statCols = Seq(at(1, cc), at(1, lit(1L)), at(1, (cc === 1).cast("long")),
+      at(1, (cc === 2).cast("long")), at(1, (cc >= 3).cast("long")), at(0, cc))
+    def statRow(s: Seq[Long]): Seq[Any] = s.head.toDouble +: s.tail
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
+    val stats = scalarFrame(rawN,
+      StructField("__t1", DoubleType) +:
+        Seq("__n1p1", "__nb11", "__nb21", "__nb31", "__v").map(StructField(_, LongType)),
+      if (langCol.isEmpty) Seq(statRow(sumsOf(slice, statCols)))
+      else sumsByLang(slice, statCols).toSeq.collect {
+        case (l, s) if s(1) > 0 => l +: statRow(s) })
     (rawN, ctxN, cont, ctxc, stats)
   }
 
@@ -1666,7 +1661,7 @@ object TextOps {
     new KnBucketed(j => { val (d1, d2, d3) = ds(j); (lit(d1), lit(d2), lit(d3)) })
 
   /** Modified-KN discounts as PER-LANGUAGE columns `__d{1,2,3}_$j`
-    * ([[mknLangDiscounts]], joined by __l); NULL discounts (an unmodeled
+    * ([[mknDiscFrame]], joined by __l); NULL discounts (an unmodeled
     * language) propagate to a NULL score. */
   private[pipeline] val mknDiscCols: KnDisc =
     new KnBucketed(j => (col(s"__d1_$j"), col(s"__d2_$j"), col(s"__d3_$j")))
@@ -1754,81 +1749,56 @@ object TextOps {
     }
   }
 
-  /** Count-of-counts per level over the PINNED model tables (top level =
-    * the raw order-n table, lower levels = the continuation tables —
-    * exactly the tables each level draws probability mass from), folded
-    * to discounts via [[mknDerive]]. The aggs are independent scalar
-    * collects over checkpointed tables; submit them concurrently like
-    * the table builds themselves, and settle every one ([[awaitAll]])
-    * before returning or throwing. */
+  /** Modified-KN discounts per language from ONE shuffle-free fold
+    * ([[sumsByLang]]) over the two pins: count-of-counts n1..n4 per
+    * level (top level = the raw order-n table, lower levels = the
+    * continuation tables — exactly the tables each level draws
+    * probability mass from), derived per level by [[mknDerive]]. A
+    * language-keyed model yields one map per language with a bigram (a
+    * level without grams keeps the fallback triple — its entries never
+    * exist, so the value is never read); a shared model one map, keyed
+    * by a constant. */
+  private[pipeline] def mknDiscounts(order: Int, rawN: org.apache.spark.sql.DataFrame,
+                                     cont: Map[Int, org.apache.spark.sql.DataFrame],
+                                     fallback: (Double, Double, Double))
+      : Map[Any, Map[Int, (Double, Double, Double)]] = {
+    val lang = rawN.columns.filter(_ == "__l").toSeq.map(col)
+    val levels = (1 until order).map(j => cont(j).select(lang :+ lit(j).as("__j") :+
+        col(s"__cc$j").as("__c"): _*)) :+
+      rawN.select(lang :+ lit(order).as("__j") :+ col(s"__cr$order").as("__c"): _*)
+    // n_r per level, then the level-1 row count (the language's bigram types)
+    val nr = (for (j <- 1 to order; r <- 1 to 4)
+      yield (col("__j") === j && col("__c") === r).cast("long")) :+
+      (col("__j") === 1).cast("long")
+    sumsByLang(levels.reduce(_ unionByName _), nr).collect {
+      case (l, n) if n.last > 0 || lang.isEmpty =>
+        l -> (1 to order).map { j =>
+          val Seq(n1, n2, n3, n4) = n.slice(4 * (j - 1), 4 * j)
+          j -> mknDerive(n1, n2, n3, n4, fallback)
+        }.toMap
+    }
+  }
+
+  /** [[mknDiscounts]] of a shared model: every level's triple. */
   private[pipeline] def mknDiscountsFor(order: Int, rawN: org.apache.spark.sql.DataFrame,
-                              cont: Map[Int, org.apache.spark.sql.DataFrame],
-                              fallback: (Double, Double, Double))
-      : Map[Int, (Double, Double, Double)] = {
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    awaitAll((1 to order).map { j =>
-      Future {
-        val (t, c) =
-          if (j == order) (rawN, s"__cr$order") else (cont(j), s"__cc$j")
-        val r = t.agg(
-          count(when(col(c) === 1, true)).as("n1"),
-          count(when(col(c) === 2, true)).as("n2"),
-          count(when(col(c) === 3, true)).as("n3"),
-          count(when(col(c) === 4, true)).as("n4")).head()
-        j -> mknDerive(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          fallback)
-      }
-    })().toMap
-  }
+                                        cont: Map[Int, org.apache.spark.sql.DataFrame],
+                                        fallback: (Double, Double, Double))
+      : Map[Int, (Double, Double, Double)] =
+    mknDiscounts(order, rawN, cont, fallback).values.headOption
+      .getOrElse((1 to order).map(_ -> fallback).toMap)
 
-  /** [[mknDerive]] as COLUMN arithmetic over per-language count-of-counts
-    * (n1..n4 columns) — same expression shapes, same all-or-none validity
-    * rule, so a per-language discount table is derivable in-plan and an
-    * oracle reproduces every language's decision. Returns (d1, d2, d3)
-    * columns named `__d1$sfx`/`__d2$sfx`/`__d3$sfx`. */
-  private def mknDeriveCols(sfx: String, fallback: (Double, Double, Double))
-      : Seq[Column] = {
-    val (n1, n2, n3, n4) = (col("__n1"), col("__n2"), col("__n3"), col("__n4"))
-    val y = n1.cast("double") / (n1 + lit(2.0) * n2)
-    val dv1 = lit(1.0) - lit(2.0) * y * n2 / n1
-    val dv2 = lit(2.0) - lit(3.0) * y * n3 / n2
-    val dv3 = lit(3.0) - lit(4.0) * y * n4 / n3
-    // NESTED CaseWhen: the divisions only evaluate once n1..n3 > 0 holds
-    // (CaseWhen branches are lazy; ANSI double division by zero throws)
-    val some = n1 > 0 && n2 > 0 && n3 > 0
-    val bounds = dv1 >= 0 && dv1 <= 1 && dv2 >= 0 && dv2 <= 2 &&
-      dv3 >= 0 && dv3 <= 3
-    val (f1, f2, f3) = fallback
-    def pick(dv: Column, f: Double): Column =
-      when(some, when(bounds, dv).otherwise(lit(f))).otherwise(lit(f))
-    Seq(pick(dv1, f1).as(s"__d1$sfx"), pick(dv2, f2).as(s"__d2$sfx"),
-      pick(dv3, f3).as(s"__d3$sfx"))
-  }
-
-  /** Per-LANGUAGE modified-KN discounts, every level in ONE small frame
-    * keyed __l: each level's count table groups by language into
-    * count-of-counts, derives (D1, D2, D3+) via [[mknDeriveCols]], and
-    * the levels left-join onto level 1's language set (a language with
-    * any bigram has level-1 continuations; higher levels may be absent —
-    * their discount columns stay NULL and are never read, because the
-    * back-off guards skip a level whose context total is 0/NULL). */
-  private[pipeline] def mknLangDiscounts(order: Int, rawN: org.apache.spark.sql.DataFrame,
-                               cont: Map[Int, org.apache.spark.sql.DataFrame],
-                               fallback: (Double, Double, Double))
+  /** Per-LANGUAGE modified-KN discounts as a driver-built frame keyed
+    * `__l` (the type of `keyed`'s), with columns `__d{1,2,3}_$j` for
+    * [[mknDiscCols]]: one row per language of `ds`, so an unmodeled
+    * language misses the join and scores NULL. */
+  private[pipeline] def mknDiscFrame(order: Int, keyed: org.apache.spark.sql.DataFrame,
+                                     ds: Map[Any, Map[Int, (Double, Double, Double)]])
       : org.apache.spark.sql.DataFrame = {
-    def level(j: Int): org.apache.spark.sql.DataFrame = {
-      val (t, c) = if (j == order) (rawN, s"__cr$order") else (cont(j), s"__cc$j")
-      t.groupBy(col("__l")).agg(
-          count(when(col(c) === 1, true)).as("__n1"),
-          count(when(col(c) === 2, true)).as("__n2"),
-          count(when(col(c) === 3, true)).as("__n3"),
-          count(when(col(c) === 4, true)).as("__n4"))
-        .select(col("__l") +: mknDeriveCols(s"_$j", fallback): _*)
-    }
-    (2 to order).foldLeft(level(1)) { (acc, j) =>
-      acc.join(level(j), Seq("__l"), "left")
-    }
+    import org.apache.spark.sql.types.{DoubleType, StructField}
+    scalarFrame(keyed,
+      for (j <- 1 to order; k <- 1 to 3) yield StructField(s"__d${k}_$j", DoubleType, nullable = false),
+      ds.toSeq.map { case (l, m) =>
+        l +: (1 to order).flatMap { j => val (d1, d2, d3) = m(j); Seq(d1, d2, d3) } })
   }
 
   /** Order-n interpolated Kneser-Ney LM quality score over the corpus
@@ -1840,9 +1810,8 @@ object TextOps {
     * KenLM's float quantization would not. Documents under `order`
     * tokens score (n_grams 0, NULL).
     *
-    * Scale shape: the model is the raw top-order table plus n−2
-    * continuation tables (each a partial-aggregated groupBy over the
-    * order above, corpus-token-bounded, pinned once); scoring joins the
+    * Scale shape: the model is the raw top-order table plus n−1
+    * continuation tables, two pins ([[lmCounts]]); scoring joins the
     * exploded positions against count frames exactly like
     * [[ngramLmScore]] — same two-pass stat-then-score floor, same
     * streamed-probe posture under hot tokens. */
@@ -1895,8 +1864,8 @@ object TextOps {
     * (level 1 = continuation unigrams, level `order` = raw counts).
     *
     * Scale shape: identical to [[knLmScore]] — the count tables ARE the
-    * model; the only addition is one four-scalar agg per pinned table
-    * (submitted concurrently) and three small longs per context row. */
+    * model; the only additions are one count-of-counts fold over its
+    * pins ([[mknDiscounts]]) and three small longs per context row. */
   def mknLmScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
                  textCol: String, order: Int,
                  discounts: Map[Int, (Double, Double, Double)] = Map.empty,
@@ -1932,8 +1901,9 @@ object TextOps {
                          * ones. The scale lever that keeps a high-order
                          * model a broadcastable artifact. */
                        minCount: Long = 1L,
-                       /** None (default) = AUTO: per pinned table from
-                         * its measured size vs the broadcast threshold;
+                       /** None (default) = AUTO: per pin (raw tables,
+                         * continuation tables) from its measured size vs
+                         * the broadcast threshold;
                          * Some(false) = unhinted model joins (planner/
                          * AQE-sized) for a beyond-broadcast model, batch
                          * face only — streaming requires every table to
@@ -1973,8 +1943,8 @@ object TextOps {
     * Scale shape: identical tables to [[knLmScoreAgainst]] with one more
     * key column — per-language models are SLICES of the same pinned
     * artifacts, so the count shuffles, the broadcast decisions (per
-    * pinned table, AUTO lever) and the streamed-probe posture all carry
-    * over; the per-language stats frame (languages × 7) always
+    * pin, AUTO lever) and the streamed-probe posture all carry over; the
+    * driver-built per-language stats frame (languages × 7) always
     * broadcasts. */
   def knLmScoreAgainstByLang(stream: graft.api.MStream,
                              refDocs: org.apache.spark.sql.DataFrame,
@@ -1994,10 +1964,10 @@ object TextOps {
   /** Per-language MODIFIED-KN scoring against a labeled reference — the
     * complete CCNet matrix cell (per-language models AND KenLM's real
     * smoothing): each language's three count-bucketed discounts derive
-    * from ITS OWN slices' count-of-counts ([[mknDeriveCols]] — the same
+    * from ITS OWN slices' count-of-counts ([[mknDiscounts]] — the same
     * all-or-none `--discount_fallback` rule as [[mknDerive]], per
-    * language), joined onto the scoring rows as a languages-sized
-    * discount frame. Unmodeled languages keep their position count with
+    * language), joined onto the scoring rows as a driver-built,
+    * languages-sized discount frame. Unmodeled languages keep their position count with
     * a NULL score; dual-mode like [[knLmScoreAgainstByLang]]. */
   def mknLmScoreAgainstByLang(stream: graft.api.MStream,
                               refDocs: org.apache.spark.sql.DataFrame,
@@ -2012,7 +1982,8 @@ object TextOps {
     knAgainstScore(stream, refDocs, idCol, textCol, refTextCol,
       Some((langCol, refLangCol)), order, minCount, broadcastModel,
       "mknLmScoreAgainstByLang",
-      (rawN, cont) => (mknDiscCols, Some(mknLangDiscounts(order, rawN, cont, fallback))))
+      (rawN, cont) => (mknDiscCols,
+        Some(mknDiscFrame(order, rawN, mknDiscounts(order, rawN, cont, fallback)))))
   }
 
   /** PER-LANGUAGE order-n Jelinek-Mercer LM scoring against a LABELED
@@ -2032,8 +2003,8 @@ object TextOps {
     *
     * Scale shape: identical tables to [[ngramLmScoreAgainst]] with one
     * more key column, so the count shuffles, the AUTO broadcast lever
-    * (per pinned table, measured size) and the streamed-probe posture
-    * all carry over; the per-language (N, V) stats frame (languages × 2)
+    * (per pin, measured size) and the streamed-probe posture all carry
+    * over; the driver-built per-language (N, V) frame (languages × 2)
     * always broadcasts. */
   def ngramLmScoreAgainstByLang(stream: graft.api.MStream,
                                 refDocs: org.apache.spark.sql.DataFrame,
@@ -2046,8 +2017,8 @@ object TextOps {
                                 broadcastModel: Option[Boolean] = None)
       : graft.api.MStream =
     jmAgainstScore(stream, refDocs, idCol, textCol, refTextCol,
-      Some((langCol, refLangCol)), order, alpha, lambdas, nCol, minCount,
-      broadcastModel, "ngramLmScoreAgainstByLang")
+      Some((langCol, refLangCol)), order, nCol, minCount, broadcastModel,
+      "ngramLmScoreAgainstByLang")(ngramLp(order, alpha, lambdasFor(order, lambdas)))
 
   /** Modified-KN scoring AGAINST a pretrained reference corpus — the
     * KenLM-parity sibling of [[knLmScoreAgainst]] ([[mknLmScore]]'s
@@ -2076,11 +2047,11 @@ object TextOps {
   /** The against engine of the KN family, shared model or per language
     * (`lang` = (document, reference) language columns — the language
     * threads as key `__l` through every table and join): train the
-    * model tables on `refDocs`, one broadcast decision per pinned table,
-    * score the batch frame or arriving stream through left joins with
-    * full back-off in [[lmApply]]. The shared model's one-row stats
-    * fold to literals; the per-language stats frame (languages × 7)
-    * always broadcasts, as does the optional per-language side frame
+    * model tables on `refDocs` ([[knModel]]), one broadcast decision per
+    * pin, score the batch frame or arriving stream through left joins
+    * with full back-off in [[lmApply]]. The shared model's one-row stats
+    * fold to literals; the driver-built per-language stats frame
+    * (languages × 7) always broadcasts, as does the optional per-language side frame
     * `discOf` returns (per-language discounts), and an unmodeled
     * language misses every join and scores NULL. `discOf(rawN, cont)`
     * runs after the model pins (so discount derivation sees
@@ -2107,17 +2078,17 @@ object TextOps {
     }
     val (rawN, ctxN, cont, ctxc, stats) = knModel(train, refTextCol, order,
       minCount, langCol = lang.map(_ => "__lraw"), dropBosTargets = sentenceMode)
-    // the raw top order and each continuation level are pinned; their
-    // context aggregates inherit the decision
-    val bc = modelBroadcasts(label, order, minCount, df.isStreaming, broadcastModel,
-      (1 to order).map(j => if (j == order) rawN else cont(j)))
+    // the top level rides the raw pin, the continuation levels the
+    // second; the context aggregates ride their table's pin
+    val Seq(bcRaw, bcCont) = modelBroadcasts(label, order, minCount, df.isStreaming,
+      broadcastModel, Seq(rawN, cont(1)))
     val sides = levelSides(order, order, j => if (j == order) rawN else cont(j),
-      j => if (j == order) ctxN else ctxc(j), j => bc(j - 1))
+      j => if (j == order) ctxN else ctxc(j), j => if (j == order) bcRaw else bcCont)
     val withStats: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       lang match {
         case None =>
           val st = stats.head()
-          require(!st.isNullAt(0) && st.getAs[Double]("__t1") > 0,
+          require(st.getAs[Double]("__t1") > 0,
             s"$label: the reference corpus yields an empty model " +
               "(needs at least one bigram)")
           statLiterals(_, st)
@@ -2184,7 +2155,6 @@ object TextOps {
                         textCol: String, langCol: String, buckets: Int = 3,
                         alpha: Double = 0.5): org.apache.spark.sql.DataFrame = {
     require(buckets >= 2, s"perplexityBuckets needs >= 2 buckets, got $buckets")
-    import org.apache.spark.sql.expressions.Window
     val scored = bigramLmScore(docs, idCol, textCol, alpha)
       .join(docs.select(col(idCol), col(langCol)), Seq(idCol))
     bucketByScore(scored, idCol, langCol, buckets, "n_pairs")
@@ -2687,39 +2657,27 @@ object TextOps {
   /** Dual-mode bigram-LM scoring AGAINST a reference corpus — the full
     * CCNet shape (Wenzek et al. 2020 score crawl text with an LM trained
     * on Wikipedia; [[bigramLmScore]] is the self-scoring variant): the
-    * add-alpha bigram model trains on `refDocs` in one pass (tables
-    * localCheckpoint'ed and registered with `Pinned`; the vocabulary size
-    * is a scalar collected once and folded as a literal), then documents
-    * — batch frame or arriving stream — score by average per-pair
-    * log-likelihood ln((c(u,v)+a)/(c(u)+a·V)). Pairs UNSEEN in the
-    * reference back off to the smoothed floor via left joins (c=0), the
-    * piece self-scoring never needs. Documents under 2 tokens emit
-    * (n_pairs=0, avg_logprob NULL) in both modes. Streaming is two
-    * stream-static broadcast joins + the stateless per-batch combine —
-    * zero state-store rows; the model frames are model-sized, never
-    * corpus-sized. */
+    * add-alpha bigram model trains on `refDocs` in one pass (the JM
+    * against engine at order 2 over continuations — one pin; the
+    * vocabulary size V, the distinct tokens that follow some token, is
+    * a scalar folded as a literal), then documents — batch frame or
+    * arriving stream — score by average per-pair log-likelihood
+    * ln((c(u,v)+a) / (c(u)+a·V)). Pairs UNSEEN in the reference back off
+    * to the smoothed floor via left joins (c=0), the piece self-scoring
+    * never needs. Documents under 2 tokens emit (n_pairs=0, avg_logprob
+    * NULL) in both modes. Streaming is two stream-static broadcast joins
+    * + the stateless per-batch combine — zero state-store rows; the
+    * model is always broadcast (no lever on this face), model-sized,
+    * never corpus-sized. */
   def lmScoreAgainst(stream: graft.api.MStream, refDocs: org.apache.spark.sql.DataFrame,
                      idCol: String, textCol: String, refTextCol: String,
                      alpha: Double = 0.5): graft.api.MStream = {
     require(alpha > 0.0, s"add-alpha smoothing needs alpha > 0, got $alpha")
-    val df = stream.df
-    val spark = df.sparkSession
-    val keys = gramCols(2, 2)
-    // reference model: one corpus pass; bc is THE trained artifact
-    val (bc, bcIds) = graft.api.Pinned.checkpointTracked(
-      gramsOf(refDocs, refTextCol, 2, keys, Nil)
-        .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__c")))
-    val (cc, ccIds) = graft.api.Pinned.checkpointTracked(
-      bc.groupBy(col("__p1")).agg(sum(col("__c")).as("__cu")))
-    graft.api.Pinned.register(spark, bcIds ++ ccIds)
-    val nv = bc.agg(count_distinct(col("__p2"))).head().getLong(0)
-    require(nv > 0, "lmScoreAgainst: the reference corpus yields an empty bigram model")
-    val lp = log((coalesce(col("__c"), lit(0L)) + alpha) /
-      (coalesce(col("__cu"), lit(0L)) + lit(nv) * alpha))
-    val sides = Seq((bc, keys, true), (cc, Seq("__p1"), true))
-    stream.lift(lmApply(df, idCol, textCol, 2, "n_pairs",
-      joinTower(_, sides, Nil, "left"), lp,
-      scoringSpread(2, selfScored = false, knFamily = false)))
+    jmAgainstScore(stream, refDocs, idCol, textCol, refTextCol, None, 2, "n_pairs",
+      minCount = 1L, broadcastModel = Some(true), label = "lmScoreAgainst",
+      vocabOfContinuations = true)(
+      log((coalesce(col("__c2"), lit(0L)) + alpha) /
+        (coalesce(col("__cx2"), lit(0L)) + col("__vv") * alpha)))
   }
 
   /** Dual-mode [[encodeTokens]] — apply a FIXED vocabulary at ingest.
@@ -2736,9 +2694,8 @@ object TextOps {
   def encodeTokensIngest(stream: graft.api.MStream, vocab: org.apache.spark.sql.DataFrame,
                          idCol: String, textCol: String,
                          oovId: Long = -1L): graft.api.MStream = {
-    import org.apache.spark.sql.{Encoder, Encoders, Row}
+    import org.apache.spark.sql.{Encoder, Row}
     import org.apache.spark.sql.catalyst.encoders.RowEncoder
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import org.apache.spark.sql.types._
     val df = stream.df
     if (!df.isStreaming)
@@ -2779,9 +2736,8 @@ object TextOps {
   def decontaminateIngest(stream: graft.api.MStream, bench: org.apache.spark.sql.DataFrame,
                           idCol: String, textCol: String, benchTextCol: String,
                           n: Int = 8, minOverlap: Int = 1): graft.api.MStream = {
-    import org.apache.spark.sql.{Encoder, Encoders, Row}
+    import org.apache.spark.sql.{Encoder, Row}
     import org.apache.spark.sql.catalyst.encoders.RowEncoder
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import org.apache.spark.sql.types._
     val df = stream.df
     if (!df.isStreaming)
@@ -2864,7 +2820,7 @@ object TextOps {
         graft.functions.VectorFunctions.wordShingleHashes(col(text), 2)).as("__h"): _*)
       .select(keep :+ (col("__h") % buckets).as("__b"): _*)
     // the two reference sketches are independent actions — pin and total
-    // them concurrently (the ngramModel pattern), register on the caller
+    // them concurrently ([[awaitPinned]]), register on the caller
     import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
     def sketch(d: org.apache.spark.sql.DataFrame, as: String) = Future {
@@ -3365,8 +3321,6 @@ object TextOps {
     // under its own key)
     val pending = scala.collection.mutable.LinkedHashMap
       .empty[Option[String], scala.collection.mutable.ArrayBuffer[(String, String)]]
-    def chainFor(l: Option[String]): Seq[(String, String)] =
-      pending.get(l).map(_.toSeq).getOrElse(Nil)
     /** The per-row conditional apply: each language's pending chain as
       * one CASE branch (languages are bounded by the 1024 cap; the
       * re-materialization below bounds chain length, so expression size
@@ -3618,9 +3572,8 @@ object TextOps {
     * Hadoop FS (object stores on a cluster). */
   def byteBpeExportVocabJson(merges: org.apache.spark.sql.DataFrame,
                              path: String): Unit = {
-    import org.json4s.JsonDSL._
     import org.json4s.jackson.JsonMethods
-    import org.json4s.{JObject, JInt}
+    import org.json4s.JObject
     val ms = collectMerges(merges, "byteBpeExportVocabJson")
     val fields = byteBpeVocabLayout(ms).zipWithIndex
       .map { case (piece, i) => piece -> org.json4s.JInt(i) }
@@ -3651,7 +3604,7 @@ object TextOps {
     val text = try src.mkString finally src.close()
     val obj = JsonMethods.parse(text) match {
       case o: org.json4s.JObject => o.obj
-      case other => throw new IllegalArgumentException(
+      case _ => throw new IllegalArgumentException(
         s"byteBpeImportVocabJson: $path is not a JSON object (token -> id)")
     }
     val rows = obj.map {

@@ -7,11 +7,12 @@ import graft.api.MStream
 import graft.pipeline.TextOps
 
 /** The AUTO broadcast lever of the LM against faces (round 15): with no
-  * explicit `broadcastModel`, each pinned count table broadcasts iff its
-  * MEASURED persisted size fits the session's autoBroadcastJoinThreshold.
-  * Pinned at both boundaries — a small model broadcasts, an
-  * over-threshold model shuffles — plus scores identical across all
-  * three lever settings, and the streaming-face rejection when auto
+  * explicit `broadcastModel`, the tables of each pin broadcast iff the
+  * pin's MEASURED persisted size fits the session's
+  * autoBroadcastJoinThreshold. Pinned at both boundaries — a small model
+  * broadcasts, an over-threshold model shuffles, and each pin of a KN
+  * model flips exactly at its own size — plus scores identical across
+  * all three lever settings, and the streaming-face rejection when auto
   * decides the model cannot broadcast. */
 class LmAutoLeverSpec extends SparkSpec {
   import spark.implicits._
@@ -95,6 +96,37 @@ class LmAutoLeverSpec extends SparkSpec {
       }.collect().toSet
       assert(auto == shuffled, "auto-shuffled face is score-identical")
     } finally graft.api.Pinned.release(spark)
+  }
+
+  test("auto decides once per pin, at the pin's exact measured size") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    import org.apache.spark.sql.execution.LogicalRDD
+    def build(): org.apache.spark.sql.DataFrame = TextOps.knLmScoreAgainst(
+      MStream(docs.toDF("doc_id", "text")), corpus.toDF("doc_id", "text"),
+      "doc_id", "text", "text", order = 3).df
+    // the pins under the broadcast-hinted model sides
+    def hintedPins(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.analyzed.collect {
+        case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) =>
+          h.child.collect { case lr: LogicalRDD => lr.rdd.id }
+      }.flatten.toSet
+    def pinBytes(): Map[Int, Long] = {
+      val ids = graft.api.Pinned.registered(spark)
+      spark.sparkContext.getRDDStorageInfo.filter(i => ids.contains(i.id))
+        .map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    }
+    val sizes = try { build(); pinBytes().values.toSeq.sorted }
+      finally graft.api.Pinned.release(spark)
+    assert(sizes.size == 2 && sizes.head < sizes.last,
+      s"a KN model pins its raw and its continuation tables apart: $sizes")
+    // just under, at, and just over each pin's size
+    for ((thr, hinted) <- Seq(sizes.head - 1 -> 0, sizes.head -> 1,
+                              sizes.last - 1 -> 1, sizes.last -> 2))
+      try {
+        val (df, bytes) = withThreshold(thr) { val d = build(); (d, pinBytes()) }
+        assert(hintedPins(df) == bytes.filter(_._2 <= thr).keySet && bytes.count(_._2 <= thr) == hinted,
+          s"threshold $thr: hinted pins ${hintedPins(df)} of $bytes")
+      } finally graft.api.Pinned.release(spark)
   }
 
   test("streaming face: auto rejection when the model cannot broadcast") {

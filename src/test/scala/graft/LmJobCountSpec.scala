@@ -22,32 +22,43 @@ class LmJobCountSpec extends SparkSpec {
   private def against(f: (MStream, DataFrame) => MStream): DataFrame => DataFrame =
     d => f(MStream(d), d).df
 
-  // the self JM faces: the counts measured with the one-pass model (one
-  // grouping-sets pin, one N/V collect); the rest: the counts measured
-  // before their scoring stages were merged into one
+  // the counts measured with the one count builder: one grouping-sets
+  // pin and one driver fold per JM model, a second (continuation) pin
+  // for a KN model, one more fold for the MKN discounts
   private val faces: Seq[(String, Int, DataFrame => DataFrame)] = Seq(
     ("bigramLmScore", 9, TextOps.bigramLmScore(_, "doc_id", "text")),
     ("trigramLmScore", 13, TextOps.trigramLmScore(_, "doc_id", "text")),
     ("ngramLmScore(order = 5)", 17, TextOps.ngramLmScore(_, "doc_id", "text", order = 5)),
-    ("knLmScore(order = 3)", 23, TextOps.knLmScore(_, "doc_id", "text", order = 3)),
-    ("mknLmScore(order = 3)", 29, TextOps.mknLmScore(_, "doc_id", "text", order = 3)),
-    ("ngramLmScoreAgainst(order = 3)", 19, against(TextOps.ngramLmScoreAgainst(
+    ("knLmScore(order = 3)", 17, TextOps.knLmScore(_, "doc_id", "text", order = 3)),
+    ("mknLmScore(order = 3)", 18, TextOps.mknLmScore(_, "doc_id", "text", order = 3)),
+    ("ngramLmScoreAgainst(order = 3)", 13, against(TextOps.ngramLmScoreAgainst(
       _, _, "doc_id", "text", "text", order = 3))),
-    ("knLmScoreAgainst(order = 3)", 23, against(TextOps.knLmScoreAgainst(
+    ("knLmScoreAgainst(order = 3)", 17, against(TextOps.knLmScoreAgainst(
       _, _, "doc_id", "text", "text", order = 3))),
-    ("mknLmScoreAgainst(order = 3)", 29, against(TextOps.mknLmScoreAgainst(
+    ("mknLmScoreAgainst(order = 3)", 18, against(TextOps.mknLmScoreAgainst(
       _, _, "doc_id", "text", "text", order = 3))),
-    ("lmScoreAgainst", 12, against(TextOps.lmScoreAgainst(
+    ("lmScoreAgainst", 9, against(TextOps.lmScoreAgainst(
       _, _, "doc_id", "text", "text"))),
-    ("ngramLmScoreAgainstByLang(order = 3)", 20, against(TextOps.ngramLmScoreAgainstByLang(
+    ("ngramLmScoreAgainstByLang(order = 3)", 14, against(TextOps.ngramLmScoreAgainstByLang(
       _, _, "doc_id", "text", "lang", "text", "lang", order = 3))),
-    ("knLmScoreAgainstByLang(order = 3)", 27, against(TextOps.knLmScoreAgainstByLang(
+    ("knLmScoreAgainstByLang(order = 3)", 18, against(TextOps.knLmScoreAgainstByLang(
       _, _, "doc_id", "text", "lang", "text", "lang", order = 3))),
-    ("mknLmScoreAgainstByLang(order = 3)", 33, against(TextOps.mknLmScoreAgainstByLang(
+    ("mknLmScoreAgainstByLang(order = 3)", 20, against(TextOps.mknLmScoreAgainstByLang(
       _, _, "doc_id", "text", "lang", "text", "lang", order = 3))))
 
+  // test names keep the bound they were first registered under, so test
+  // ids stay stable as bounds tighten: a tightened face asserts its
+  // current (lower) bound from `faces` under its original name
+  private val namedBound = Map(
+    "knLmScore(order = 3)" -> 23, "mknLmScore(order = 3)" -> 29,
+    "ngramLmScoreAgainst(order = 3)" -> 19, "knLmScoreAgainst(order = 3)" -> 23,
+    "mknLmScoreAgainst(order = 3)" -> 29, "lmScoreAgainst" -> 12,
+    "ngramLmScoreAgainstByLang(order = 3)" -> 20,
+    "knLmScoreAgainstByLang(order = 3)" -> 27,
+    "mknLmScoreAgainstByLang(order = 3)" -> 33)
+
   for ((face, bound, score) <- faces)
-    test(s"$face runs at most $bound jobs") {
+    test(s"$face runs at most ${namedBound.getOrElse(face, bound)} jobs") {
       val docs = corpus.toDF("doc_id", "text")
         .withColumn("lang", when(col("doc_id") % 2 === 0, "en").otherwise("fr"))
       val jobs =

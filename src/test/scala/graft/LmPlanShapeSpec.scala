@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec,
   BroadcastNestedLoopJoinExec}
 import graft.api.MStream
@@ -16,7 +17,10 @@ import graft.pipeline.{Arpa, TextOps}
   *    small data (the AUTO lever): keyed joins as broadcast hash joins,
   *    the one-row stats cross joins as broadcast nested-loop joins. The
   *    one join left out is the output join that brings every input id
-  *    back (keyed by the id column).
+  *    back (keyed by the id column);
+  *  - that the plan scans its input at most twice: once for the
+  *    positions, once for the id join-back. The model is pinned, and its
+  *    scalars are driver-built, so nothing that trained it re-runs.
   * The corpus is read from a ONE-file parquet: its scan is one
   * partition, so the spread helper takes its repartition branch. A local
   * relation already splits across the session's cores, and a
@@ -115,6 +119,10 @@ class LmPlanShapeSpec extends SparkSpec {
             else j.isInstanceOf[BroadcastHashJoinExec]
           assert(broadcastJoin, s"$face: a model join does not broadcast:\n$j")
         }
+        val scans = df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+        assert(scans.size <= 2,
+          s"$face: ${scans.size} input scans, at most 2 (positions + id join-back):\n" +
+            df.queryExecution.sparkPlan)
       } finally graft.api.Pinned.release(spark)
     }
 }

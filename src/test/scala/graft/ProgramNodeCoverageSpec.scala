@@ -261,7 +261,7 @@ class ProgramNodeCoverageSpec extends AnyFunSuite {
       "mknDisc" -> excluded(block), "mknDiscCols" -> excluded(block),
       "statLiterals" -> excluded(block), "awaitAll" -> excluded(block),
       "mknDiscountsFor" -> excluded(block),
-      "mknLangDiscounts" -> excluded(block),
+      "mknDiscounts" -> excluded(block), "mknDiscFrame" -> excluded(block),
       "knModelBuilds" -> excluded(diag),
       "Utf8Ordering" -> excluded(const),
       "bpeEncodeIds" -> node("bpeIds"),
