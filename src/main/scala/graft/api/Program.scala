@@ -5,6 +5,10 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.json4s.{DefaultFormats, Formats, JArray, JBool, JDouble, JInt, JNothing,
+  JNull, JObject, JString, JValue, jvalue2extractable, jvalue2monadic}
+import org.json4s.jackson.JsonMethods
+import scala.reflect.runtime.{universe => ru}
 
 /**
  * Program-as-data: a serializable JSON document describing a dataflow over
@@ -81,7 +85,7 @@ object Program {
     }
   }
 
-  sealed trait Node { def name: String }
+  sealed trait Node extends Product { def name: String }
 
   /** A named external input, resolved by the configuration at run time. */
   final case class External(name: String) extends Node
@@ -123,7 +127,7 @@ object Program {
                         as: Option[String]) extends Node
   /** Exact dedup by key columns, first record wins (batch + streaming). */
   final case class DedupBy(name: String, input: String, cols: Seq[String],
-                           withinWatermark: Boolean) extends Node
+                           withinWatermark: Boolean = false) extends Node
   /** Event-time watermark for streaming inputs. */
   final case class Watermark(name: String, input: String, ts: String,
                              delay: String) extends Node
@@ -132,8 +136,8 @@ object Program {
   final case class Asof(name: String, left: String, right: String,
                         leftTs: String, rightTs: String,
                         keys: Seq[(String, String)], rightOrder: Seq[String],
-                        tolerance: Option[Long], direction: String,
-                        inner: Boolean) extends Node
+                        tolerance: Option[Long], direction: String = "backward",
+                        inner: Boolean = false) extends Node
   /** Milan `unique`/UniqueBy: latest record per (value columns), by the
     * keep-latest ordering columns, before any aggregation. */
   final case class UniqueBy(name: String, input: String, valueCols: Seq[String],
@@ -159,7 +163,7 @@ object Program {
     * stream as an extra output of the same name for the channel sink
     * (`Cycles.feedbackChannel` provides both bindings). */
   final case class BeginCycle(name: String, input: String,
-                              maxIterations: Int) extends Node
+                              maxIterations: Int = 50) extends Node
   /** Milan `ApplyFunction(FunctionReference(type, name), args)`
     * (`program/Expression.scala:407`) as a document node: apply the
     * [[Functions]]-registered function `function` to the SQL-expression
@@ -169,7 +173,7 @@ object Program {
     * `as`). Unregistered names and arity mismatches reject at
     * [[validate]] with this node's name. */
   final case class ApplyFn(name: String, input: String, function: String,
-                           args: Seq[String], kind: String,
+                           args: Seq[String], kind: String = "map",
                            as: Option[String]) extends Node
   /** Milan `closeCycle`: connects `feedback`'s records back into the head
     * `cycle`. Evaluates to the closed head stream. Nodes between a
@@ -191,34 +195,34 @@ object Program {
   final case class CorpusDedup(name: String, input: String, ref: String,
                                idCol: String, textCol: String, k: Int,
                                bands: Int, threshold: Double,
-                               broadcastRef: Boolean) extends Node
+                               broadcastRef: Boolean = true) extends Node
   /** Cross-corpus embedding dedup (`Dedup.embeddingDedupAgainstCorpus`):
     * exact anti-join when `centroids` is empty, the IVF-routed
     * beyond-broadcast face when it names a codebook input. */
   final case class EmbedDedup(name: String, input: String, ref: String,
                               idCol: String, vecCol: String, threshold: Double,
-                              centroids: Option[String], nProbe: Int,
-                              broadcastRef: Boolean) extends Node
+                              centroids: Option[String], nProbe: Int = 1,
+                              broadcastRef: Boolean = true) extends Node
   /** Cross-corpus bigram-LM scoring (`TextOps.lmScoreAgainst`): train on
     * the reference once, score arrivals. Build-time eager (the model
     * artifact pins at program build, like residual joins). */
   final case class LmScore(name: String, input: String, ref: String,
                            idCol: String, textCol: String, refTextCol: String,
-                           alpha: Double) extends Node
+                           alpha: Double = 0.5) extends Node
   /** DSIR importance scoring (`TextOps.dsirScore`, format version 3):
     * hashed-bigram bucket log-ratio of a `target` vs a `raw` reference
     * corpus. Build-time eager (the bucket-count artifacts pin at program
     * build, like [[LmScore]]'s model). */
   final case class DsirScore(name: String, input: String, target: String,
                              raw: String, idCol: String, textCol: String,
-                             refTextCol: String, buckets: Int,
-                             alpha: Double) extends Node
+                             refTextCol: String, buckets: Int = 4096,
+                             alpha: Double = 1.0) extends Node
   /** Token-frequency annotation against a reference-corpus count–min
     * sketch (`TextOps.tokenFrequencyStats`, format version 3).
     * Build-time eager (the sketch collects at program build). */
   final case class TokenFreq(name: String, input: String, ref: String,
                              idCol: String, textCol: String, refTextCol: String,
-                             depth: Int, width: Int, rareMax: Long) extends Node
+                             depth: Int = 4, width: Int = 2048, rareMax: Long = 2L) extends Node
   /** Frozen-BPE tokenization at ingest (`TextOps.bpeTokenizeIngest`,
     * format version 3); `merges` names a (merge_rank, lhs, rhs) input —
     * a `trainBpeMerges` artifact. Build-time eager (the merge table
@@ -328,39 +332,39 @@ object Program {
     * `vocab` names a (word, id) input. */
   final case class EncodeIngest(name: String, input: String, vocab: String,
                                 idCol: String, textCol: String,
-                                oovId: Long) extends Node
+                                oovId: Long = -1L) extends Node
   /** Benchmark-overlap decontamination at ingest
     * (`TextOps.decontaminateIngest`); `bench` names the benchmark corpus. */
   final case class DecontamIngest(name: String, input: String, bench: String,
                                   idCol: String, textCol: String,
-                                  benchTextCol: String, n: Int,
-                                  minOverlap: Int) extends Node
+                                  benchTextCol: String, n: Int = 8,
+                                  minOverlap: Int = 1) extends Node
   /** Naive Bayes classification against a labeled reference
     * (`TextOps.nbClassifyAgainst`, format version 4). Build-time eager
     * (the count-model artifacts pin at program build, like [[LmScore]]). */
   final case class NbClassify(name: String, input: String, ref: String,
                               idCol: String, textCol: String,
                               refTextCol: String, refLabelCol: String,
-                              alpha: Double) extends Node
+                              alpha: Double = 1.0) extends Node
   /** Exact (Bloom-pre-screened) cross-corpus dedup at ingest
     * (`Dedup.exactDedupAgainstCorpus`, format version 4). Build-time
     * eager (the filter aggregate collects at program build, like
     * [[LmScore]]'s model). */
   final case class ExactDedup(name: String, input: String, ref: String,
-                              idCol: String, textCol: String, numBits: Int,
-                              numHashes: Int, broadcastRef: Boolean) extends Node
+                              idCol: String, textCol: String, numBits: Int = 1 << 20,
+                              numHashes: Int = 7, broadcastRef: Boolean = true) extends Node
   /** Gopher quality-rule gate (`TextOps.gopherGate`, format version 4):
     * a pure zero-shuffle flag projection — no static side. */
   final case class GopherGate(name: String, input: String, idCol: String,
-                              textCol: String, minWords: Int,
-                              maxWords: Int) extends Node
+                              textCol: String, minWords: Int = 50,
+                              maxWords: Int = 100000) extends Node
   /** IVF ANN probe at ingest (`Ivf.searchIngest`): arriving query vectors
     * probe a static indexed corpus; `centroids` names the codebook input.
     * Build-time eager (collects the driver-sized codebook). */
   final case class IvfProbe(name: String, input: String, corpus: String,
                             centroids: String, idCol: String, vecCol: String,
                             qIdCol: String, topK: Int, nProbe: Int,
-                            broadcastCorpus: Boolean) extends Node
+                            broadcastCorpus: Boolean = true) extends Node
 
   // --- sampling / training-mix nodes (format version 5): the deterministic
   // hash-gate family (`pipeline.Sampling`) as shippable document nodes —
@@ -369,54 +373,54 @@ object Program {
 
   /** Keep each row with probability ~`rate` by key hash (`Sampling.hashSample`). */
   final case class HashSample(name: String, input: String, keyCol: String,
-                              rate: Double, salt: String) extends Node
+                              rate: Double, salt: String = "") extends Node
   /** Per-stratum rates (`Sampling.stratifiedHashSample`); strata compare
     * as strings, absent strata fall to `defaultRate`. */
   final case class StratifiedSample(name: String, input: String, keyCol: String,
                                     strataCol: String, rates: Map[String, Double],
-                                    defaultRate: Double, salt: String) extends Node
+                                    defaultRate: Double = 0.0, salt: String = "") extends Node
   /** Deterministic split labeling (`Sampling.assignSplit`); `splits` are
     * ordered (name, fraction) bands summing to 1. */
   final case class AssignSplit(name: String, input: String, keyCol: String,
-                               splits: Seq[(String, Double)], as: String,
-                               salt: String) extends Node
+                               splits: Seq[(String, Double)], as: String = "split",
+                               salt: String = "") extends Node
   /** Epoch-style up/down-sampling (`Sampling.weightedMix`): weights may
     * exceed 1; output adds the `epoch` copy index. */
   final case class WeightedMix(name: String, input: String, keyCol: String,
                                strataCol: String, weights: Map[String, Double],
-                               defaultWeight: Double, salt: String) extends Node
+                               defaultWeight: Double = 0.0, salt: String = "") extends Node
   /** Per-stratum quota cap (`Sampling.capPerKey`) — batch face.
     * BUILD-TIME EAGER since the distributed-prefix rewrite
     * ([[CapTokens]]'s reason); validation is schema-only. */
   final case class CapPerKey(name: String, input: String, strataCol: String,
-                             keyCol: String, n: Int, salt: String) extends Node
+                             keyCol: String, n: Int, salt: String = "") extends Node
   /** Global exact-k deterministic sample (`Sampling.exactKSample`) —
     * bounded-heap lowering, batch face. */
   final case class ExactKSample(name: String, input: String, idCol: String,
-                                k: Int, salt: String) extends Node
+                                k: Int, salt: String = "") extends Node
   /** Per-stratum exact-k (`Sampling.exactKPerKey`) — the bounded-heap
     * sibling of [[CapPerKey]] for unique integral ids. */
   final case class ExactKStrata(name: String, input: String, strataCol: String,
-                                idCol: String, k: Int, salt: String) extends Node
+                                idCol: String, k: Int, salt: String = "") extends Node
   /** Per-stratum token-budget prefix fill (`Sampling.capTokensPerKey`) —
     * batch face. BUILD-TIME EAGER since the distributed-prefix rewrite
     * (`RangedPrefix` checkpoints the range assignment at lowering), so
     * validation is schema-only like [[TemperatureMix]]. */
   final case class CapTokens(name: String, input: String, strataCol: String,
                              keyCol: String, tokensCol: String, budget: Long,
-                             salt: String) extends Node
+                             salt: String = "") extends Node
   /** Temperature-based source rebalancing (`Sampling.temperatureMix`) —
     * batch face; BUILD-TIME EAGER (collects the capped per-stratum counts),
     * so validation is schema-only like [[LmScore]]. */
   final case class TemperatureMix(name: String, input: String, keyCol: String,
                                   strataCol: String, alpha: Double,
-                                  budgetRows: Long, salt: String) extends Node
+                                  budgetRows: Long, salt: String = "") extends Node
   /** Leakage-safe split (`Sampling.leakageSafeSplit`): `pairs` names the
     * near-dup edge input; no cluster straddles a band. */
   final case class SafeSplit(name: String, input: String, pairs: String,
                              idCol: String, aCol: String, bCol: String,
-                             splits: Seq[(String, Double)], as: String,
-                             salt: String) extends Node
+                             splits: Seq[(String, Double)], as: String = "split",
+                             salt: String = "") extends Node
 
   // --- corpus-curation nodes (format version 6): the within-corpus dedup
   // and text-quality family (`pipeline.Dedup` / `pipeline.TextOps`) as
@@ -458,20 +462,20 @@ object Program {
     * per-doc (n_lines, n_dropped, scrubbed) keeping each line's first
     * (id, position) occurrence corpus-wide. */
   final case class LineScrub(name: String, input: String, idCol: String,
-                             textCol: String, minWords: Int) extends Node
+                             textCol: String, minWords: Int = 3) extends Node
   /** Duplicate-paragraph scrub (`Dedup.scrubDuplicateParagraphs` — the
     * C4 rule one granularity up): per-doc (n_paras, n_dropped, scrubbed)
     * keeping each blank-line-separated paragraph's first (id, position)
     * occurrence corpus-wide. */
   final case class ParaScrub(name: String, input: String, idCol: String,
-                             textCol: String, minWords: Int) extends Node
+                             textCol: String, minWords: Int = 3) extends Node
   /** Repeated-span scrub (`Dedup.scrubRepeatedSpans`, Lee et al. 2022):
     * per-doc (n_kept, kept_hash) after dropping spans of `k`-grams seen
     * in >= `minDocs` documents. BUILD-TIME EAGER (pins the corpus-wide
     * candidate frame), so validation is schema-only. */
   final case class SpanScrub(name: String, input: String, idCol: String,
                              textCol: String, k: Int, minDocs: Int,
-                             keepCanonical: Boolean) extends Node
+                             keepCanonical: Boolean = false) extends Node
   /** Quality-feature annotation (`TextOps.qualityFeatures`): appends
     * n_words, avg_word_len, stopword_ratio, punct_count. */
   final case class QualityAnnotate(name: String, input: String,
@@ -482,7 +486,7 @@ object Program {
                             textCol: String) extends Node
   /** Marker-word language-ID annotation (`TextOps.langId`) as `as`. */
   final case class LangId(name: String, input: String, textCol: String,
-                          as: String) extends Node
+                          as: String = "lang") extends Node
   /** Sliding token-window chunking (`TextOps.chunkTokens`): one row per
     * (doc, chunk) — a per-row generator, so dual-mode. */
   final case class ChunkTokens(name: String, input: String, idCol: String,
@@ -496,7 +500,7 @@ object Program {
   /** Winnowing fingerprints (`TextOps.winnowFingerprints`, Schleimer
     * et al. SIGMOD 2003): one row per selected (pos, fp) per doc. */
   final case class Winnow(name: String, input: String, idCol: String,
-                          textCol: String, n: Int, w: Int) extends Node
+                          textCol: String, n: Int = 3, w: Int = 4) extends Node
   /** Repetition-feature annotation (`TextOps.repetitionFeatures`):
     * (id, dup_word_frac, max_word_frac, top_bigram_frac). */
   final case class Repetition(name: String, input: String, idCol: String,
@@ -504,33 +508,34 @@ object Program {
   /** CCNet unicode-normalization annotation (`TextOps.normalizeText`)
     * as `as` — stateless per-row, dual-mode. */
   final case class Normalize(name: String, input: String, textCol: String,
-                             as: String) extends Node
+                             as: String = "norm_text") extends Node
   /** Markup-strip annotation (`TextOps.stripMarkup`) as `as`, plus the
     * extracted URL hosts (`TextOps.domainsOf`) as `domainsAs` —
     * stateless per-row, dual-mode. */
   final case class StripMarkup(name: String, input: String, textCol: String,
-                               as: String, domainsAs: String) extends Node
+                               as: String = "clean_text",
+                               domainsAs: String = "domains") extends Node
   /** Johnson–Lindenstrauss projection (`Similarity.randomProject`) of
     * `vecCol` to `outDim` dims as `as` — stateless per-row, dual-mode. */
   final case class JlProjection(name: String, input: String, vecCol: String,
-                                outDim: Int, seed: Int, as: String) extends Node
+                                outDim: Int, seed: Int = 0, as: String = "projected") extends Node
   /** Bounded-heap group top-k (`operators.GroupTopK.topKPerKey`):
     * `score` is a SQL expression; output (keys, idCol, scoreAs, rank).
     * Batch face (an aggregation). */
   final case class TopKPerKey(name: String, input: String, keys: Seq[String],
                               idCol: String, score: String, k: Int,
-                              scoreAs: String) extends Node
+                              scoreAs: String = "score") extends Node
   /** SQ8 encode at ingest (`pipeline.Sq.sq8Encode`): `stats` names a
     * (dim, lo, hi) input — a `sq8Train` artifact, pinned like an IVF
     * codebook. BUILD-TIME EAGER (collects the capped stats artifact);
     * once pinned the encode is a stateless dual-mode projection. */
   final case class Sq8Ingest(name: String, input: String, stats: String,
-                             vecCol: String, as: String) extends Node
+                             vecCol: String, as: String = "codes") extends Node
   /** Z-order clustering (`operators.Layout.zorderBy`) for scan pruning —
     * batch face (range exchange + sort). BUILD-TIME EAGER (one min/max
     * aggregation pins the per-column ranges). */
   final case class ZOrder(name: String, input: String, cols: Seq[String],
-                          numFiles: Int, bits: Int) extends Node
+                          numFiles: Int, bits: Int = 12) extends Node
 
   // --- round-13 node (format version 7) ---
   /** Interpolated trigram-LM quality score over the input corpus ITSELF
@@ -542,8 +547,8 @@ object Program {
     * on its own input — score a stream against a static reference with
     * [[LmScore]]). */
   final case class Lm3Score(name: String, input: String, idCol: String,
-                            textCol: String, alpha: Double, l3: Double,
-                            l2: Double, l1: Double) extends Node
+                            textCol: String, alpha: Double = 0.5, l3: Double = 0.6,
+                            l2: Double = 0.3, l1: Double = 0.1) extends Node
 
   // --- round-14 nodes (format version 8) ---
   /** Dual-mode trigram-LM scoring against a PRETRAINED reference corpus
@@ -554,8 +559,8 @@ object Program {
     * pin at lowering); validation is schema-only. */
   final case class Lm3Against(name: String, input: String, ref: String,
                               idCol: String, textCol: String, refTextCol: String,
-                              alpha: Double, l3: Double, l2: Double,
-                              l1: Double, minCount: Long = 1L,
+                              alpha: Double = 0.5, l3: Double = 0.6, l2: Double = 0.3,
+                              l1: Double = 0.1, minCount: Long = 1L,
                               broadcastModel: Option[Boolean] = None) extends Node
 
   /** Order-n interpolated LM quality score over the input corpus itself
@@ -564,15 +569,15 @@ object Program {
     * exactly `order` weights, highest order first, non-negative, sum 1.
     * BUILD-TIME EAGER; batch-only (score a stream with [[LmNAgainst]]). */
   final case class LmNScore(name: String, input: String, idCol: String,
-                            textCol: String, order: Int, alpha: Double,
-                            lambdas: Seq[Double]) extends Node
+                            textCol: String, order: Int, alpha: Double = 0.5,
+                            lambdas: Seq[Double] = Nil) extends Node
 
   /** Dual-mode order-n LM scoring against a PRETRAINED reference corpus
     * (`TextOps.ngramLmScoreAgainst`), output column n_grams. */
   final case class LmNAgainst(name: String, input: String, ref: String,
                               idCol: String, textCol: String, refTextCol: String,
-                              order: Int, alpha: Double, lambdas: Seq[Double],
-                              minCount: Long = 1L,
+                              order: Int, alpha: Double = 0.5,
+                              lambdas: Seq[Double] = Nil, minCount: Long = 1L,
                               broadcastModel: Option[Boolean] = None) extends Node
 
   /** Batched BM25 retrieval (`TextOps.bm25Retrieve`): top-k corpus
@@ -598,15 +603,15 @@ object Program {
 
   final case class Bm25Retrieve(name: String, input: String, queries: String,
                                 idCol: String, textCol: String, qIdCol: String,
-                                qTextCol: String, k: Int, k1: Double, b: Double,
-                                broadcastQueries: Boolean) extends Node
+                                qTextCol: String, k: Int, k1: Double = 1.2, b: Double = 0.75,
+                                broadcastQueries: Boolean = true) extends Node
 
   /** Winnowing fingerprint-overlap candidate pairs
     * (`TextOps.winnowOverlapPairs`) — the MOSS-style clone-pair miner as
     * a shippable node. Batch-only (corpus-wide fingerprint self-join). */
   final case class WinnowPairs(name: String, input: String, idCol: String,
-                               textCol: String, n: Int, w: Int,
-                               minShared: Int, maxBucket: Int) extends Node
+                               textCol: String, n: Int = 3, w: Int = 4,
+                               minShared: Int = 2, maxBucket: Int = 64) extends Node
 
   /** Order-n interpolated Kneser-Ney LM score over the input corpus
     * itself (`TextOps.knLmScore`) — the KenLM smoothing family at a
@@ -614,14 +619,14 @@ object Program {
     * [[KnAgainst]]). */
   final case class KnScore(name: String, input: String, idCol: String,
                            textCol: String, order: Int,
-                           discount: Double) extends Node
+                           discount: Double = 0.75) extends Node
 
   /** Sentence-aware chunking (`TextOps.chunkSentencesIngest`) — greedy
     * sentence packing into ~maxTokens chunks, dual-mode (the per-doc
     * fold is stateless at ingest). */
   final case class SentChunk(name: String, input: String, idCol: String,
                              textCol: String, maxTokens: Long,
-                             sep: String) extends Node
+                             sep: String = " ") extends Node
 
   /** Dual-mode order-n Kneser-Ney scoring against a PRETRAINED reference
     * corpus (`TextOps.knLmScoreAgainst`) — the literal CCNet crawl-vs-
@@ -630,7 +635,7 @@ object Program {
     * from its measured size vs the broadcast threshold. */
   final case class KnAgainst(name: String, input: String, ref: String,
                              idCol: String, textCol: String, refTextCol: String,
-                             order: Int, discount: Double,
+                             order: Int, discount: Double = 0.75,
                              minCount: Long = 1L,
                              broadcastModel: Option[Boolean] = None) extends Node
 
@@ -641,7 +646,7 @@ object Program {
   final case class KnAgainstLang(name: String, input: String, ref: String,
                                  idCol: String, textCol: String, langCol: String,
                                  refTextCol: String, refLangCol: String,
-                                 order: Int, discount: Double,
+                                 order: Int, discount: Double = 0.75,
                                  minCount: Long = 1L,
                                  broadcastModel: Option[Boolean] = None) extends Node
 
@@ -918,107 +923,15 @@ object Program {
     env
   }
 
-  /** Input node names of a node (dataflow edges). */
-  private def nodeInputs(n: Node): Seq[String] = n match {
-    case External(_) => Nil
-    case m: MapCols => Seq(m.input)
-    case w: Where => Seq(w.input)
-    case a: AddTo => Seq(a.input)
-    case o: OrderBy => Seq(o.input)
-    case u: Union => u.inputs
-    case d: Distinct => Seq(d.input)
-    case g: GroupSelect => Seq(g.input)
-    case w: WindowSelect => Seq(w.input)
-    case j: Join => Seq(j.left, j.right)
-    case s: Scan => Seq(s.input)
-    case d: DedupBy => Seq(d.input)
-    case w: Watermark => Seq(w.input)
-    case a: Asof => Seq(a.left, a.right)
-    case u: UniqueBy => Seq(u.input)
-    case t: ToField => Seq(t.input)
-    case ss: SessionSelect => Seq(ss.input)
-    case rw: RecordWindow => Seq(rw.input)
-    case a: ApplyFn => Seq(a.input)
-    case b: BeginCycle => Seq(b.input)
-    case c: CloseCycle => Seq(c.feedback)
-    case cd: CorpusDedup => Seq(cd.input, cd.ref)
-    case ed: EmbedDedup => Seq(ed.input, ed.ref) ++ ed.centroids
-    case lm: LmScore => Seq(lm.input, lm.ref)
-    case l3: Lm3Score => Seq(l3.input)
-    case la: Lm3Against => Seq(la.input, la.ref)
-    case ln: LmNScore => Seq(ln.input)
-    case na: LmNAgainst => Seq(na.input, na.ref)
-    case br: Bm25Retrieve => Seq(br.input, br.queries)
-    case hr: HybridRrf => Seq(hr.input, hr.queries)
-    case wp: WinnowPairs => Seq(wp.input)
-    case ks: KnScore => Seq(ks.input)
-    case sx: SentChunk => Seq(sx.input)
-    case ka: KnAgainst => Seq(ka.input, ka.ref)
-    case kl: KnAgainstLang => Seq(kl.input, kl.ref)
-    case jl: LmAgainstLang => Seq(jl.input, jl.ref)
-    case ml: MknAgainstLang => Seq(ml.input, ml.ref)
-    case ms: MknScore => Seq(ms.input)
-    case as: ArpaScore => Seq(as.input)
-    case al: ArpaScoreLang => Seq(al.input)
-    case bi: BpeIds => Seq(bi.input, bi.merges)
-    case st: SpTokenize => Seq(st.input)
-    case si: SpIds => Seq(si.input)
-    case sv: SaveArtifact => Seq(sv.input)
-    case _: LoadArtifact => Nil
-    case ma: MknAgainst => Seq(ma.input, ma.ref)
-    case es: ExactSubstr => Seq(es.input)
-    case pt: PplThresholds => Seq(pt.input, pt.ref)
-    case ba: BucketApply => Seq(ba.input, ba.thresholds)
-    case rb: RankBuckets => Seq(rb.input)
-    case ds: DsirScore => Seq(ds.input, ds.target, ds.raw)
-    case tf: TokenFreq => Seq(tf.input, tf.ref)
-    case be: BpeEncode => Seq(be.input, be.merges)
-    case ue: UnigramEncode => Seq(ue.input, ue.vocab)
-    case ui: UnigramIds => Seq(ui.input, ui.vocab)
-    case wt: WpTokenize => Seq(wt.input, wt.vocab)
-    case we: WpEncode => Seq(we.input, we.vocab)
-    case wi: WpIds => Seq(wi.input, wi.vocab)
-    case bb: ByteBpeEncode => Seq(bb.input, bb.merges)
-    case bj: ByteBpeIds => Seq(bj.input, bj.merges)
-    case bv: ByteBpeIdsVocab => Seq(bv.input, bv.merges, bv.vocab)
-    case bl: BpeLangEncode => Seq(bl.input, bl.merges)
-    case ei: EncodeIngest => Seq(ei.input, ei.vocab)
-    case di: DecontamIngest => Seq(di.input, di.bench)
-    case ip: IvfProbe => Seq(ip.input, ip.corpus, ip.centroids)
-    case xd: ExactDedup => Seq(xd.input, xd.ref)
-    case gg: GopherGate => Seq(gg.input)
-    case nb: NbClassify => Seq(nb.input, nb.ref)
-    case hs: HashSample => Seq(hs.input)
-    case ss: StratifiedSample => Seq(ss.input)
-    case as: AssignSplit => Seq(as.input)
-    case wm: WeightedMix => Seq(wm.input)
-    case cp: CapPerKey => Seq(cp.input)
-    case ek: ExactKSample => Seq(ek.input)
-    case es: ExactKStrata => Seq(es.input)
-    case ct: CapTokens => Seq(ct.input)
-    case tm: TemperatureMix => Seq(tm.input)
-    case sp: SafeSplit => Seq(sp.input, sp.pairs)
-    case dc: DedupCorpus => Seq(dc.input)
-    case db: DedupCorpusBest => Seq(db.input)
-    case sd: SemanticDedup => Seq(sd.input, sd.centroids)
-    case sb: SemanticDedupBest => Seq(sb.input, sb.centroids)
-    case ls: LineScrub => Seq(ls.input)
-    case pp: ParaScrub => Seq(pp.input)
-    case sc: SpanScrub => Seq(sc.input)
-    case qa: QualityAnnotate => Seq(qa.input)
-    case ps: PiiScrub => Seq(ps.input)
-    case li: LangId => Seq(li.input)
-    case ct: ChunkTokens => Seq(ct.input)
-    case pc: PackChunks => Seq(pc.input)
-    case wn: Winnow => Seq(wn.input)
-    case rp: Repetition => Seq(rp.input)
-    case nm2: Normalize => Seq(nm2.input)
-    case sm: StripMarkup => Seq(sm.input)
-    case jp: JlProjection => Seq(jp.input)
-    case tk: TopKPerKey => Seq(tk.input)
-    case sq: Sq8Ingest => Seq(sq.input, sq.stats)
-    case zo: ZOrder => Seq(zo.input)
-  }
+  /** Input node names of a node (dataflow edges): the values of its
+    * [[EdgeFields]], in field order. */
+  private[graft] def nodeInputs(n: Node): Seq[String] =
+    n.productElementNames.zip(n.productIterator).toList.flatMap {
+      case (k, s: String) if EdgeFields(k) => List(s)
+      case (k, o: Option[_]) if EdgeFields(k) => o.toList.map(_.toString)
+      case (k, xs: Seq[_]) if EdgeFields(k) => xs.map(_.toString)
+      case _ => Nil
+    }
 
   /** Static shape of a cycle body, deciding the batch fixpoint strategy.
     *
@@ -1540,107 +1453,10 @@ object Program {
 
   // -------------------------------------------------------------- capture
 
-  /** Copy a node with a new name (for [[Rec.as]]). */
-  private def withNodeName(n: Node, name: String): Node = n match {
-    case x: External => x.copy(name = name)
-    case x: MapCols => x.copy(name = name)
-    case x: Where => x.copy(name = name)
-    case x: AddTo => x.copy(name = name)
-    case x: OrderBy => x.copy(name = name)
-    case x: Union => x.copy(name = name)
-    case x: Distinct => x.copy(name = name)
-    case x: GroupSelect => x.copy(name = name)
-    case x: WindowSelect => x.copy(name = name)
-    case x: Join => x.copy(name = name)
-    case x: Scan => x.copy(name = name)
-    case x: DedupBy => x.copy(name = name)
-    case x: Watermark => x.copy(name = name)
-    case x: Asof => x.copy(name = name)
-    case x: UniqueBy => x.copy(name = name)
-    case x: ToField => x.copy(name = name)
-    case x: SessionSelect => x.copy(name = name)
-    case x: RecordWindow => x.copy(name = name)
-    case x: ApplyFn => x.copy(name = name)
-    case x: BeginCycle => x.copy(name = name)
-    case x: CloseCycle => x.copy(name = name)
-    case x: CorpusDedup => x.copy(name = name)
-    case x: EmbedDedup => x.copy(name = name)
-    case x: LmScore => x.copy(name = name)
-    case x: Lm3Score => x.copy(name = name)
-    case x: Lm3Against => x.copy(name = name)
-    case x: LmNScore => x.copy(name = name)
-    case x: LmNAgainst => x.copy(name = name)
-    case x: Bm25Retrieve => x.copy(name = name)
-    case x: HybridRrf => x.copy(name = name)
-    case x: WinnowPairs => x.copy(name = name)
-    case x: KnScore => x.copy(name = name)
-    case x: KnAgainstLang => x.copy(name = name)
-    case x: LmAgainstLang => x.copy(name = name)
-    case x: MknAgainstLang => x.copy(name = name)
-    case x: MknScore => x.copy(name = name)
-    case x: ArpaScore => x.copy(name = name)
-    case x: ArpaScoreLang => x.copy(name = name)
-    case x: BpeIds => x.copy(name = name)
-    case x: SpTokenize => x.copy(name = name)
-    case x: SpIds => x.copy(name = name)
-    case x: SaveArtifact => x.copy(name = name)
-    case x: LoadArtifact => x.copy(name = name)
-    case x: MknAgainst => x.copy(name = name)
-    case x: ExactSubstr => x.copy(name = name)
-    case x: PplThresholds => x.copy(name = name)
-    case x: BucketApply => x.copy(name = name)
-    case x: RankBuckets => x.copy(name = name)
-    case x: SentChunk => x.copy(name = name)
-    case x: KnAgainst => x.copy(name = name)
-    case x: DsirScore => x.copy(name = name)
-    case x: TokenFreq => x.copy(name = name)
-    case x: BpeEncode => x.copy(name = name)
-    case x: UnigramEncode => x.copy(name = name)
-    case x: UnigramIds => x.copy(name = name)
-    case x: WpTokenize => x.copy(name = name)
-    case x: WpEncode => x.copy(name = name)
-    case x: WpIds => x.copy(name = name)
-    case x: ByteBpeEncode => x.copy(name = name)
-    case x: ByteBpeIds => x.copy(name = name)
-    case x: ByteBpeIdsVocab => x.copy(name = name)
-    case x: BpeLangEncode => x.copy(name = name)
-    case x: EncodeIngest => x.copy(name = name)
-    case x: DecontamIngest => x.copy(name = name)
-    case x: IvfProbe => x.copy(name = name)
-    case x: ExactDedup => x.copy(name = name)
-    case x: GopherGate => x.copy(name = name)
-    case x: NbClassify => x.copy(name = name)
-    case x: HashSample => x.copy(name = name)
-    case x: StratifiedSample => x.copy(name = name)
-    case x: AssignSplit => x.copy(name = name)
-    case x: WeightedMix => x.copy(name = name)
-    case x: CapPerKey => x.copy(name = name)
-    case x: ExactKSample => x.copy(name = name)
-    case x: ExactKStrata => x.copy(name = name)
-    case x: CapTokens => x.copy(name = name)
-    case x: TemperatureMix => x.copy(name = name)
-    case x: SafeSplit => x.copy(name = name)
-    case x: DedupCorpus => x.copy(name = name)
-    case x: DedupCorpusBest => x.copy(name = name)
-    case x: SemanticDedup => x.copy(name = name)
-    case x: SemanticDedupBest => x.copy(name = name)
-    case x: LineScrub => x.copy(name = name)
-    case x: ParaScrub => x.copy(name = name)
-    case x: SpanScrub => x.copy(name = name)
-    case x: QualityAnnotate => x.copy(name = name)
-    case x: PiiScrub => x.copy(name = name)
-    case x: LangId => x.copy(name = name)
-    case x: ChunkTokens => x.copy(name = name)
-    case x: PackChunks => x.copy(name = name)
-    case x: Winnow => x.copy(name = name)
-    case x: Repetition => x.copy(name = name)
-    case x: Normalize => x.copy(name = name)
-    case x: StripMarkup => x.copy(name = name)
-    case x: JlProjection => x.copy(name = name)
-    case x: TopKPerKey => x.copy(name = name)
-    case x: Sq8Ingest => x.copy(name = name)
-    case x: ZOrder => x.copy(name = name)
-  }
+  /** Copy a node with a new name (for [[Rec.as]]): the same constructor,
+    * a new first field. */
+  private def withNodeName(n: Node, name: String): Node =
+    codecOf(n).build(name +: n.productIterator.drop(1).toSeq)
 
   /** Order-preserving merge of upstream node lists for a multi-input op:
     * each list is topologically ordered and cross-list references only hit
@@ -2399,478 +2215,233 @@ object Program {
     * round, so no v6-stamped artifact can predate any v6 op. */
   val FormatVersion: Int = 12
 
-  /** The lowest format version expressing every node in `doc`. */
-  private def requiredVersion(doc: Doc): Int =
-    if (doc.nodes.exists {
-      case _: WpTokenize | _: WpEncode | _: WpIds | _: ByteBpeEncode |
-           _: ByteBpeIds | _: ByteBpeIdsVocab | _: BpeLangEncode => true
-      case _ => false }) 12
-    else if (doc.nodes.exists {
-      case _: ArpaScoreLang | _: BpeIds | _: SpTokenize | _: SpIds => true
-      case as: ArpaScore => as.sentence
-      case hr: HybridRrf => hr.ivfCells != 0 || hr.nProbe != 0
-      case _ => false }) 11
-    else if (doc.nodes.exists {
-      case _: LmAgainstLang | _: ParaScrub | _: HybridRrf | _: ArpaScore |
-           _: SaveArtifact | _: LoadArtifact | _: UnigramEncode |
-           _: UnigramIds => true
-      case _ => false }) 10
-    else if (doc.nodes.exists {
-      case _: MknScore | _: MknAgainst | _: ExactSubstr | _: PplThresholds |
-           _: BucketApply | _: RankBuckets | _: KnAgainstLang |
-           _: MknAgainstLang => true
-      case la: Lm3Against => la.broadcastModel.isEmpty
-      case na: LmNAgainst => na.broadcastModel.isEmpty
-      case ka: KnAgainst => ka.broadcastModel.isEmpty
-      case _ => false }) 9
-    else if (doc.nodes.exists {
-      case _: Lm3Against | _: LmNScore | _: LmNAgainst | _: Bm25Retrieve |
-           _: WinnowPairs | _: KnScore | _: KnAgainst | _: SentChunk => true
-      case _ => false }) 8
-    else if (doc.nodes.exists { case _: Lm3Score => true; case _ => false }) 7
-    else if (doc.nodes.exists {
-      case _: DedupCorpus | _: DedupCorpusBest | _: SemanticDedup |
-           _: SemanticDedupBest | _: LineScrub | _: SpanScrub |
-           _: QualityAnnotate | _: PiiScrub | _: LangId | _: ChunkTokens |
-           _: PackChunks | _: Winnow | _: Repetition | _: Normalize |
-           _: StripMarkup | _: JlProjection | _: TopKPerKey | _: Sq8Ingest |
-           _: ZOrder | _: ExactKSample | _: ExactKStrata => true
-      case _ => false }) 6
-    else if (doc.nodes.exists {
-      case _: HashSample | _: StratifiedSample | _: AssignSplit | _: WeightedMix |
-           _: CapPerKey | _: CapTokens | _: TemperatureMix | _: SafeSplit => true
-      case _ => false }) 5
-    else if (doc.nodes.exists {
-      case _: ExactDedup | _: GopherGate | _: NbClassify => true; case _ => false }) 4
-    else if (doc.nodes.exists {
-      case _: DsirScore | _: TokenFreq | _: BpeEncode => true; case _ => false }) 3
-    else if (doc.nodes.exists {
-      case _: CorpusDedup | _: EmbedDedup | _: LmScore | _: EncodeIngest |
-           _: DecontamIngest | _: IvfProbe => true
-      case _ => false
-    }) 2 else 1
+  /** The format version that introduced each document op (the version
+    * history above, as data). */
+  private val OpSince: Map[String, Int] = Seq(
+    1 -> "external map where addFields orderBy union distinct groupSelect windowSelect join",
+    1 -> "scan dedupBy watermark asof uniqueBy toField sessionSelect recordWindow applyFn",
+    1 -> "beginCycle closeCycle",
+    2 -> "corpusDedup embedDedup lmScore encodeIngest decontaminateIngest ivfProbe",
+    3 -> "dsirScore tokenFreq bpeEncode",
+    4 -> "exactDedup gopherGate nbClassify",
+    5 -> "hashSample stratifiedSample assignSplit weightedMix capPerKey capTokens",
+    5 -> "temperatureMix safeSplit",
+    6 -> "dedupCorpus dedupCorpusBest semanticDedup semanticDedupBest lineScrub spanScrub",
+    6 -> "quality piiScrub langId chunkTokens packChunks winnow repetition normalize",
+    6 -> "stripMarkup jlProject topkPerKey sq8Encode zorder exactK exactKStrata",
+    7 -> "lm3Score",
+    8 -> "lm3Against lmnScore lmnAgainst bm25Retrieve winnowPairs knScore knAgainst",
+    8 -> "chunkSentences",
+    9 -> "mknScore mknAgainst exactSubstr pplThresholds bucketApply rankBuckets",
+    9 -> "knAgainstLang mknAgainstLang",
+    10 -> "lmAgainstLang paraScrub hybridRrf arpaScore saveArtifact loadArtifact",
+    10 -> "unigramEncode unigramIds",
+    11 -> "arpaScoreLang bpeIds spTokenize spIds",
+    12 -> "wpTokenize wpEncode wpIds byteBpeEncode byteBpeIds byteBpeIdsVocab bpeLangEncode"
+  ).flatMap { case (v, ops) => ops.split(' ').map(_ -> v) }.toMap
+
+  /** Document op names that are not the node class name with its first
+    * letter lower-cased. */
+  private val OpAlias: Map[String, String] = Map("MapCols" -> "map", "AddTo" -> "addFields",
+    "DecontamIngest" -> "decontaminateIngest", "ExactKSample" -> "exactK", "ZOrder" -> "zorder",
+    "QualityAnnotate" -> "quality", "JlProjection" -> "jlProject", "TopKPerKey" -> "topkPerKey",
+    "Sq8Ingest" -> "sq8Encode", "LmNScore" -> "lmnScore", "LmNAgainst" -> "lmnAgainst",
+    "SentChunk" -> "chunkSentences")
+
+  /** A tuple-valued field writes each tuple as an object with these keys. */
+  private val TupleKeys: Map[String, Seq[String]] = Map(
+    "keys" -> Seq("l", "r"), "aggs" -> Seq("kind", "in", "as"),
+    "splits" -> Seq("name", "fraction"))
+
+  /** The fields that name another node — a node's dataflow edges. */
+  private val EdgeFields: Set[String] = Set("input", "inputs", "left",
+    "right", "ref", "queries", "target", "raw", "merges", "vocab", "bench",
+    "corpus", "centroids", "pairs", "stats", "thresholds", "feedback")
+
+  /** Parameter groups a document gives all or none of: defaulting the
+    * absent ones independently would turn a hand-written partial artifact
+    * (say l3=1.0 alone) into weights summing past 1 that only fail later
+    * in validate, blaming values the author never wrote — the partial
+    * spec fails at load with the real cause instead. */
+  private val AllOrNone: Seq[(String, Seq[String])] = Seq(
+    "lambdas" -> Seq("l3", "l2", "l1"),
+    "fallback discounts" -> Seq("fb1", "fb2", "fb3"))
+
+  /** Fields left out of a document while they hold their default, so a
+    * document that does not use them keeps the bytes and the version
+    * stamp of the grammar that predates them. */
+  private def elided(n: Node, field: String): Boolean = (n, field) match {
+    case (j: Join, "lenientResidual") => !j.lenientResidual
+    // ivfIters only matters on the IVF route, so it rides with ivfCells
+    case (h: HybridRrf, "ivfCells" | "ivfIters") => h.ivfCells == 0
+    case (h: HybridRrf, "nProbe") => h.nProbe == 0
+    case (a: ArpaScore, "sentence") => !a.sentence
+    case (s: SaveArtifact, "overwrite") => !s.overwrite
+    case _ => false
+  }
+
+  /** The value an ABSENT field takes when it depends on the document's
+    * format version. The broadcast lever: absent means AUTO under the v9
+    * grammar but the explicit-true default under v8 and earlier — old
+    * artifacts keep their shipped semantics, unversioned ones get the
+    * current (auto) behavior. */
+  private def versionedDefault(field: String, effVer: Int): Option[Any] =
+    if (field == "broadcastModel" && effVer < 9) Some(Some(true)) else None
+
+  private implicit val jsonFormats: Formats = DefaultFormats
+  private lazy val mirror = ru.runtimeMirror(getClass.getClassLoader)
+
+  /** One document field: its key (the constructor parameter name), its
+    * decoder, and the value it takes when absent (the case-class default,
+    * else None for an Option and Nil for a Seq; a required field has none). */
+  private final case class CodecField(name: String, decode: JValue => Any,
+                                      absent: Option[Any])
+
+  /** One row of the codec table: a node class, its document op, the format
+    * version that introduced the op, and its constructor fields, whose
+    * names are the document keys in document order. */
+  private final class NodeCodec(sym: ru.ClassSymbol) {
+    val cls: Class[_] = mirror.runtimeClass(sym)
+    val op: String = OpAlias.getOrElse(sym.name.toString,
+      sym.name.toString.head.toLower +: sym.name.toString.tail)
+    val since: Int = OpSince.getOrElse(op, throw new IllegalStateException(
+      s"program op '$op' has no format version in Program.OpSince"))
+    private val ctor = cls.getConstructors.head
+    private def field(k: String): CodecField = fields.find(_.name == k).get
+    val fields: Seq[CodecField] = {
+      lazy val companion = mirror.reflectModule(sym.companion.asModule).instance
+      sym.primaryConstructor.asMethod.paramLists.head.zipWithIndex.map { case (p, i) =>
+        val t = p.typeSignature.dealias
+        val default =
+          if (p.asTerm.isParamWithDefault) Some(companion.getClass
+            .getMethod("$lessinit$greater$default$" + (i + 1)).invoke(companion))
+          else if (t <:< ru.typeOf[Option[Any]]) Some(None)
+          else if (t <:< ru.typeOf[Seq[Any]]) Some(Nil)
+          else None
+        CodecField(p.name.toString, decoder(t, p.name.toString), default)
+      }
+    }
+
+    def build(args: Seq[Any]): Node =
+      try ctor.newInstance(args.map(_.asInstanceOf[AnyRef]): _*).asInstanceOf[Node]
+      catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+
+    def encode(n: Node): JValue = JObject(("op" -> JString(op)) ::
+      n.productElementNames.zip(n.productIterator).map { case (k, x) =>
+        k -> (if (elided(n, k)) JNothing else encodeValue(x, k))
+      }.toList)
+
+    def decode(v: JValue, name: String, effVer: Int): Node = {
+      // lm3Score documents stamped v7 or earlier keep round 13's
+      // independent lambda defaults (a shipped v7 artifact that loaded then
+      // must keep loading — the FormatVersion promise)
+      if (!(op == "lm3Score" && effVer <= 7)) AllOrNone.foreach { case (what, keys) =>
+        if (keys.forall(k => fields.exists(_.name == k))) {
+          val got = keys.map(k => k -> (v \ k).extractOpt[Double])
+          if (got.exists(_._2.isDefined) && got.exists(_._2.isEmpty))
+            throw new IllegalArgumentException(
+              s"node '$name': $op $what are all-or-none — specify " +
+                s"${keys.init.mkString(", ")} AND ${keys.last}, or none of them " +
+                s"(defaults ${keys.map(k => field(k).absent.get).mkString("/")}); got " +
+                got.collect { case (k, Some(x)) => s"$k=$x" }.mkString(", "))
+        }
+      }
+      build(fields.map { f =>
+        val raw = v \ f.name
+        if (raw != JNothing && raw != JNull) f.decode(raw)
+        else versionedDefault(f.name, effVer).orElse(f.absent).getOrElse(f.decode(raw))
+      })
+    }
+  }
+
+  /** The decoder of one field type: scalars through json4s, Options and
+    * Seqs element-wise, tuples from the field's [[TupleKeys]]. */
+  private def decoder(t: ru.Type, field: String): JValue => Any = {
+    import ru.typeOf
+    if (t =:= typeOf[String]) _.extract[String]
+    else if (t =:= typeOf[Int]) _.extract[Int]
+    else if (t =:= typeOf[Long]) _.extract[Long]
+    else if (t =:= typeOf[Double]) _.extract[Double]
+    else if (t =:= typeOf[Boolean]) _.extract[Boolean]
+    else if (t =:= typeOf[Field]) v =>
+      Field((v \ "expr").extract[String], (v \ "as").extract[String])
+    else if (t =:= typeOf[Map[String, Double]]) _.extract[Map[String, Double]]
+    else if (t <:< typeOf[Option[Any]]) {
+      val elem = decoder(t.typeArgs.head.dealias, field)
+      v => Some(elem(v))
+    } else if (t <:< typeOf[Seq[Any]]) {
+      val elem = decoder(t.typeArgs.head.dealias, field)
+      (v: JValue) => v match {
+        case JArray(xs) => xs.map(elem)
+        case other => throw new IllegalArgumentException(
+          s"expected an array for '$field', got $other")
+      }
+    } else if (ru.definitions.TupleClass.seq.contains(t.typeSymbol)) {
+      val parts = TupleKeys(field).zip(t.typeArgs.map(a => decoder(a.dealias, field)))
+      v => parts.map { case (k, elem) => elem(v \ k) } match {
+        case Seq(a, b) => (a, b)
+        case Seq(a, b, c) => (a, b, c)
+      }
+    } else throw new IllegalStateException(
+      s"program field '$field' has a type the document codec cannot read: $t")
+  }
+
+  private def encodeValue(x: Any, field: String): JValue = x match {
+    case s: String => JString(s)
+    case i: Int => JInt(i)
+    case l: Long => JInt(l)
+    case d: Double => JDouble(d)
+    case b: Boolean => JBool(b)
+    case o: Option[_] => o.fold[JValue](JNothing)(encodeValue(_, field))
+    case m: Map[_, _] =>
+      JObject(m.toList.map { case (k, v) => k.toString -> encodeValue(v, field) })
+    case xs: Seq[_] => JArray(xs.map(encodeValue(_, field)).toList)
+    case Field(e, as) => JObject("expr" -> JString(e), "as" -> JString(as))
+    case t: Product => JObject(TupleKeys(field).toList.zip(
+      t.productIterator.map(encodeValue(_, field)).toList))
+  }
+
+  /** The codec table: one row per [[Node]] case class. */
+  private lazy val codecs: Seq[NodeCodec] = {
+    val rows = ru.typeOf[Node].typeSymbol.asClass.knownDirectSubclasses.toSeq
+      .map(s => new NodeCodec(s.asClass))
+    val unused = OpSince.keySet -- rows.map(_.op)
+    require(unused.isEmpty, s"Program.OpSince names ops with no node class: $unused")
+    rows
+  }
+  private lazy val codecByClass: Map[Class[_], NodeCodec] = codecs.map(c => c.cls -> c).toMap
+  private lazy val codecByOp: Map[String, NodeCodec] = codecs.map(c => c.op -> c).toMap
+  private def codecOf(n: Node): NodeCodec = codecByClass(n.getClass)
+
+  /** Every document op this library reads and writes. */
+  private[graft] def nodeOps: Set[String] = codecByOp.keySet
+
+  /** The lowest format version expressing every node in `doc`: each op's
+    * own version, raised by the three value rules — an against-face whose
+    * `broadcastModel` is absent (AUTO) needs v9, and a sentence-windowed
+    * arpaScore or an IVF-routed hybridRrf needs v11. */
+  private def requiredVersion(doc: Doc): Int = doc.nodes.map {
+    case a: ArpaScore if a.sentence => 11
+    case h: HybridRrf if h.ivfCells != 0 || h.nProbe != 0 => 11
+    case n if n.productElementNames.zip(n.productIterator).contains("broadcastModel" -> None) =>
+      codecOf(n).since max 9
+    case n => codecOf(n).since
+  }.foldLeft(1)(_ max _)
 
   /** Serialize a program document (milan `ApplicationInstance.toJsonString`
-    * parity, program half — [[App.configToJson]] carries the bindings). */
-  def toJson(doc: Doc): String = {
-    import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
-    import org.json4s.JObject
-    def fields(fs: Seq[Field]) = fs.map(f => ("expr" -> f.expr) ~ ("as" -> f.as))
-    def nodeJson(n: Node): JObject = n match {
-      case External(name) => ("op" -> "external") ~ ("name" -> name)
-      case MapCols(name, i, cols) =>
-        ("op" -> "map") ~ ("name" -> name) ~ ("input" -> i) ~ ("cols" -> fields(cols))
-      case Where(name, i, p) =>
-        ("op" -> "where") ~ ("name" -> name) ~ ("input" -> i) ~ ("predicate" -> p)
-      case AddTo(name, i, fs) =>
-        ("op" -> "addFields") ~ ("name" -> name) ~ ("input" -> i) ~ ("fields" -> fields(fs))
-      case OrderBy(name, i, cols) =>
-        ("op" -> "orderBy") ~ ("name" -> name) ~ ("input" -> i) ~ ("cols" -> cols)
-      case Union(name, inputs) =>
-        ("op" -> "union") ~ ("name" -> name) ~ ("inputs" -> inputs)
-      case Distinct(name, i) =>
-        ("op" -> "distinct") ~ ("name" -> name) ~ ("input" -> i)
-      case GroupSelect(name, i, keys, aggs) =>
-        ("op" -> "groupSelect") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("keys" -> keys) ~ ("aggs" -> fields(aggs))
-      case WindowSelect(name, i, keys, ts, size, slide, offset, windowAs, aggs) =>
-        ("op" -> "windowSelect") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("keys" -> keys) ~ ("ts" -> ts) ~ ("size" -> size) ~ ("slide" -> slide) ~
-          ("offset" -> offset) ~ ("windowAs" -> windowAs) ~ ("aggs" -> fields(aggs))
-      case Join(name, kind, l, r, condition, select, lenient) =>
-        ("op" -> "join") ~ ("name" -> name) ~ ("kind" -> kind) ~
-          ("left" -> l) ~ ("right" -> r) ~ ("condition" -> condition) ~
-          ("select" -> fields(select)) ~
-          ("lenientResidual" -> (if (lenient) Some(true) else None))
-      case Scan(name, i, kind, keys, arg, as) =>
-        ("op" -> "scan") ~ ("name" -> name) ~ ("input" -> i) ~ ("kind" -> kind) ~
-          ("keys" -> keys) ~ ("arg" -> arg) ~ ("as" -> as)
-      case DedupBy(name, i, cols, withinWm) =>
-        ("op" -> "dedupBy") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("cols" -> cols) ~ ("withinWatermark" -> withinWm)
-      case Watermark(name, i, ts, delay) =>
-        ("op" -> "watermark") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ts" -> ts) ~ ("delay" -> delay)
-      case Asof(name, l, r, lts, rts, keys, rightOrder, tol, direction, inner) =>
-        ("op" -> "asof") ~ ("name" -> name) ~ ("left" -> l) ~ ("right" -> r) ~
-          ("leftTs" -> lts) ~ ("rightTs" -> rts) ~
-          ("keys" -> keys.map { case (lk, rk) => ("l" -> lk) ~ ("r" -> rk) }) ~
-          ("rightOrder" -> rightOrder) ~ ("tolerance" -> tol) ~
-          ("direction" -> direction) ~ ("inner" -> inner)
-      case UniqueBy(name, i, valueCols, keepLatestBy) =>
-        ("op" -> "uniqueBy") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("valueCols" -> valueCols) ~ ("keepLatestBy" -> keepLatestBy)
-      case ToField(name, i, fieldName) =>
-        ("op" -> "toField") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("fieldName" -> fieldName)
-      case SessionSelect(name, i, keys, ts, gap, startAs, aggs) =>
-        ("op" -> "sessionSelect") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("keys" -> keys) ~ ("ts" -> ts) ~ ("gap" -> gap) ~
-          ("startAs" -> startAs) ~ ("aggs" -> fields(aggs))
-      case RecordWindow(name, i, keys, nWin, aggs) =>
-        ("op" -> "recordWindow") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("keys" -> keys) ~ ("n" -> nWin) ~
-          ("aggs" -> aggs.map { case (k, in0, as) =>
-            ("kind" -> k) ~ ("in" -> in0) ~ ("as" -> as) })
-      case ApplyFn(name, i, fn, args, kind, as) =>
-        ("op" -> "applyFn") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("function" -> fn) ~ ("args" -> args) ~ ("kind" -> kind) ~ ("as" -> as)
-      case BeginCycle(name, i, maxIter) =>
-        ("op" -> "beginCycle") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("maxIterations" -> maxIter)
-      case CloseCycle(name, cycle, feedback) =>
-        ("op" -> "closeCycle") ~ ("name" -> name) ~ ("cycle" -> cycle) ~
-          ("feedback" -> feedback)
-      case CorpusDedup(name, i, ref, idCol, textCol, k, bands, threshold, bRef) =>
-        ("op" -> "corpusDedup") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("k" -> k) ~ ("bands" -> bands) ~ ("threshold" -> threshold) ~
-          ("broadcastRef" -> bRef)
-      case EmbedDedup(name, i, ref, idCol, vecCol, threshold, cents, nProbe, bRef) =>
-        ("op" -> "embedDedup") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("vecCol" -> vecCol) ~
-          ("threshold" -> threshold) ~ ("centroids" -> cents) ~
-          ("nProbe" -> nProbe) ~ ("broadcastRef" -> bRef)
-      case Lm3Score(name, i, idCol, textCol, alpha, l3, l2, l1) =>
-        ("op" -> "lm3Score") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~ ("alpha" -> alpha) ~
-          ("l3" -> l3) ~ ("l2" -> l2) ~ ("l1" -> l1)
-      case Lm3Against(name, i, ref, idCol, textCol, refTextCol, alpha, l3, l2, l1, mc, bm) =>
-        ("op" -> "lm3Against") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("refTextCol" -> refTextCol) ~ ("alpha" -> alpha) ~
-          ("l3" -> l3) ~ ("l2" -> l2) ~ ("l1" -> l1) ~
-          ("minCount" -> mc) ~ ("broadcastModel" -> bm)
-      case LmNScore(name, i, idCol, textCol, order, alpha, lambdas) =>
-        ("op" -> "lmnScore") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~ ("order" -> order) ~
-          ("alpha" -> alpha) ~ ("lambdas" -> lambdas)
-      case LmNAgainst(name, i, ref, idCol, textCol, refTextCol, order, alpha, lambdas, mc, bm) =>
-        ("op" -> "lmnAgainst") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("refTextCol" -> refTextCol) ~ ("order" -> order) ~
-          ("alpha" -> alpha) ~ ("lambdas" -> lambdas) ~
-          ("minCount" -> mc) ~ ("broadcastModel" -> bm)
-      case Bm25Retrieve(name, i, q, idCol, textCol, qIdCol, qTextCol, k, k1, b, bq) =>
-        ("op" -> "bm25Retrieve") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("queries" -> q) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("qIdCol" -> qIdCol) ~ ("qTextCol" -> qTextCol) ~ ("k" -> k) ~
-          ("k1" -> k1) ~ ("b" -> b) ~ ("broadcastQueries" -> bq)
-      case HybridRrf(name, i, q, idCol, textCol, vecCol, qIdCol, qTextCol,
-                     qVecCol, k, legK, kRrf, k1, b, bq, ivfCells, ivfIters,
-                     nProbe) =>
-        ("op" -> "hybridRrf") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("queries" -> q) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("vecCol" -> vecCol) ~ ("qIdCol" -> qIdCol) ~
-          ("qTextCol" -> qTextCol) ~ ("qVecCol" -> qVecCol) ~ ("k" -> k) ~
-          ("legK" -> legK) ~ ("kRrf" -> kRrf) ~ ("k1" -> k1) ~ ("b" -> b) ~
-          ("broadcastQueries" -> bq) ~
-          // absent when default: a brute-leg document keeps its v10 bytes
-          ("ivfCells" -> (if (ivfCells != 0) Some(ivfCells) else None)) ~
-          ("ivfIters" -> (if (ivfCells != 0) Some(ivfIters) else None)) ~
-          ("nProbe" -> (if (nProbe != 0) Some(nProbe) else None))
-      case WinnowPairs(name, i, idCol, textCol, nn, w, minShared, maxBucket) =>
-        ("op" -> "winnowPairs") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~ ("n" -> nn) ~
-          ("w" -> w) ~ ("minShared" -> minShared) ~ ("maxBucket" -> maxBucket)
-      case SentChunk(name, i, idCol, textCol, maxTokens, sep) =>
-        ("op" -> "chunkSentences") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("maxTokens" -> maxTokens) ~ ("sep" -> sep)
-      case KnScore(name, i, idCol, textCol, order, discount) =>
-        ("op" -> "knScore") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~ ("order" -> order) ~
-          ("discount" -> discount)
-      case KnAgainst(name, i, ref, idCol, textCol, refTextCol, order, discount, mc, bm) =>
-        ("op" -> "knAgainst") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("refTextCol" -> refTextCol) ~ ("order" -> order) ~
-          ("discount" -> discount) ~
-          ("minCount" -> mc) ~ ("broadcastModel" -> bm)
-      case KnAgainstLang(name, i, ref, idCol, textCol, langCol, refTextCol,
-                         refLangCol, order, discount, mc, bm) =>
-        ("op" -> "knAgainstLang") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("langCol" -> langCol) ~ ("refTextCol" -> refTextCol) ~
-          ("refLangCol" -> refLangCol) ~ ("order" -> order) ~
-          ("discount" -> discount) ~ ("minCount" -> mc) ~
-          ("broadcastModel" -> bm)
-      case LmAgainstLang(name, i, ref, idCol, textCol, langCol, refTextCol,
-                         refLangCol, order, alpha, lambdas, mc, bm) =>
-        ("op" -> "lmAgainstLang") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("langCol" -> langCol) ~ ("refTextCol" -> refTextCol) ~
-          ("refLangCol" -> refLangCol) ~ ("order" -> order) ~
-          ("alpha" -> alpha) ~ ("lambdas" -> lambdas) ~
-          ("minCount" -> mc) ~ ("broadcastModel" -> bm)
-      case MknAgainstLang(name, i, ref, idCol, textCol, langCol, refTextCol,
-                          refLangCol, order, f1, f2, f3, mc, bm) =>
-        ("op" -> "mknAgainstLang") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("langCol" -> langCol) ~ ("refTextCol" -> refTextCol) ~
-          ("refLangCol" -> refLangCol) ~ ("order" -> order) ~
-          ("fb1" -> f1) ~ ("fb2" -> f2) ~ ("fb3" -> f3) ~
-          ("minCount" -> mc) ~ ("broadcastModel" -> bm)
-      case ArpaScore(name, i, path, idCol, textCol, sentence) =>
-        ("op" -> "arpaScore") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("path" -> path) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("sentence" -> (if (sentence) Some(true) else None))
-      case ArpaScoreLang(name, i, dir, idCol, textCol, langCol) =>
-        ("op" -> "arpaScoreLang") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("dir" -> dir) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("langCol" -> langCol)
-      case SaveArtifact(name, i, dir, kind, ow) =>
-        ("op" -> "saveArtifact") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("dir" -> dir) ~ ("kind" -> kind) ~
-          ("overwrite" -> (if (ow) Some(true) else None))
-      case LoadArtifact(name, dir, kind, table) =>
-        ("op" -> "loadArtifact") ~ ("name" -> name) ~ ("dir" -> dir) ~
-          ("kind" -> kind) ~ ("table" -> table)
-      case MknScore(name, i, idCol, textCol, order, f1, f2, f3) =>
-        ("op" -> "mknScore") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~ ("order" -> order) ~
-          ("fb1" -> f1) ~ ("fb2" -> f2) ~ ("fb3" -> f3)
-      case MknAgainst(name, i, ref, idCol, textCol, refTextCol, order, f1, f2, f3, mc, bm) =>
-        ("op" -> "mknAgainst") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("refTextCol" -> refTextCol) ~ ("order" -> order) ~
-          ("fb1" -> f1) ~ ("fb2" -> f2) ~ ("fb3" -> f3) ~
-          ("minCount" -> mc) ~ ("broadcastModel" -> bm)
-      case ExactSubstr(name, i, idCol, textCol, minLen, maxExtend, minDocs) =>
-        ("op" -> "exactSubstr") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("minLen" -> minLen) ~ ("maxExtend" -> maxExtend) ~
-          ("minDocs" -> minDocs)
-      case PplThresholds(name, i, ref, idCol, textCol, langCol, refTextCol,
-                         buckets, order, discount, mc, bm) =>
-        ("op" -> "pplThresholds") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("langCol" -> langCol) ~ ("refTextCol" -> refTextCol) ~
-          ("buckets" -> buckets) ~ ("order" -> order) ~
-          ("discount" -> discount) ~ ("minCount" -> mc) ~
-          ("broadcastModel" -> bm)
-      case BucketApply(name, i, thr, langCol, scoreCol) =>
-        ("op" -> "bucketApply") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("thresholds" -> thr) ~ ("langCol" -> langCol) ~
-          ("scoreCol" -> scoreCol)
-      case RankBuckets(name, i, groupCol, scoreCol, tieCol, buckets) =>
-        ("op" -> "rankBuckets") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("groupCol" -> groupCol) ~ ("scoreCol" -> scoreCol) ~
-          ("tieCol" -> tieCol) ~ ("buckets" -> buckets)
-      case LmScore(name, i, ref, idCol, textCol, refTextCol, alpha) =>
-        ("op" -> "lmScore") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("refTextCol" -> refTextCol) ~ ("alpha" -> alpha)
-      case DsirScore(name, i, tgt, raw, idCol, textCol, refTextCol, buckets, alpha) =>
-        ("op" -> "dsirScore") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("target" -> tgt) ~ ("raw" -> raw) ~ ("idCol" -> idCol) ~
-          ("textCol" -> textCol) ~ ("refTextCol" -> refTextCol) ~
-          ("buckets" -> buckets) ~ ("alpha" -> alpha)
-      case TokenFreq(name, i, ref, idCol, textCol, refTextCol, depth, width, rareMax) =>
-        ("op" -> "tokenFreq") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("refTextCol" -> refTextCol) ~ ("depth" -> depth) ~
-          ("width" -> width) ~ ("rareMax" -> rareMax)
-      case BpeEncode(name, i, merges, idCol, textCol) =>
-        ("op" -> "bpeEncode") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("merges" -> merges) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol)
-      case BpeIds(name, i, merges, textCol, oovId, as) =>
-        ("op" -> "bpeIds") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("merges" -> merges) ~ ("textCol" -> textCol) ~
-          ("oovId" -> oovId) ~ ("as" -> as)
-      case SpTokenize(name, i, path, textCol, as) =>
-        ("op" -> "spTokenize") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("path" -> path) ~ ("textCol" -> textCol) ~ ("as" -> as)
-      case SpIds(name, i, path, textCol, oovId, as) =>
-        ("op" -> "spIds") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("path" -> path) ~ ("textCol" -> textCol) ~
-          ("oovId" -> oovId) ~ ("as" -> as)
-      case UnigramEncode(name, i, vocab, textCol, maxPieceLen, as) =>
-        ("op" -> "unigramEncode") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("vocab" -> vocab) ~ ("textCol" -> textCol) ~
-          ("maxPieceLen" -> maxPieceLen) ~ ("as" -> as)
-      case UnigramIds(name, i, vocab, textCol, maxPieceLen, oovId, as) =>
-        ("op" -> "unigramIds") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("vocab" -> vocab) ~ ("textCol" -> textCol) ~
-          ("maxPieceLen" -> maxPieceLen) ~ ("oovId" -> oovId) ~ ("as" -> as)
-      case WpTokenize(name, i, vocab, textCol, unk, maxChars, as) =>
-        ("op" -> "wpTokenize") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("vocab" -> vocab) ~ ("textCol" -> textCol) ~ ("unk" -> unk) ~
-          ("maxInputChars" -> maxChars) ~ ("as" -> as)
-      case WpEncode(name, i, vocab, idCol, textCol, unk, maxChars) =>
-        ("op" -> "wpEncode") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("vocab" -> vocab) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("unk" -> unk) ~ ("maxInputChars" -> maxChars)
-      case WpIds(name, i, vocab, textCol, unk, maxChars, oovId, as) =>
-        ("op" -> "wpIds") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("vocab" -> vocab) ~ ("textCol" -> textCol) ~ ("unk" -> unk) ~
-          ("maxInputChars" -> maxChars) ~ ("oovId" -> oovId) ~ ("as" -> as)
-      case ByteBpeEncode(name, i, merges, idCol, textCol) =>
-        ("op" -> "byteBpeEncode") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("merges" -> merges) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol)
-      case ByteBpeIds(name, i, merges, textCol, oovId, as) =>
-        ("op" -> "byteBpeIds") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("merges" -> merges) ~ ("textCol" -> textCol) ~
-          ("oovId" -> oovId) ~ ("as" -> as)
-      case ByteBpeIdsVocab(name, i, merges, vocab, textCol, oovId, as) =>
-        ("op" -> "byteBpeIdsVocab") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("merges" -> merges) ~ ("vocab" -> vocab) ~ ("textCol" -> textCol) ~
-          ("oovId" -> oovId) ~ ("as" -> as)
-      case BpeLangEncode(name, i, merges, idCol, langCol, textCol) =>
-        ("op" -> "bpeLangEncode") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("merges" -> merges) ~ ("idCol" -> idCol) ~
-          ("langCol" -> langCol) ~ ("textCol" -> textCol)
-      case EncodeIngest(name, i, vocab, idCol, textCol, oovId) =>
-        ("op" -> "encodeIngest") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("vocab" -> vocab) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("oovId" -> oovId)
-      case DecontamIngest(name, i, bench, idCol, textCol, benchTextCol, nn, minOv) =>
-        ("op" -> "decontaminateIngest") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("bench" -> bench) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("benchTextCol" -> benchTextCol) ~ ("n" -> nn) ~ ("minOverlap" -> minOv)
-      case IvfProbe(name, i, corpus, cents, idCol, vecCol, qIdCol, topK, nProbe, bc) =>
-        ("op" -> "ivfProbe") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("corpus" -> corpus) ~ ("centroids" -> cents) ~ ("idCol" -> idCol) ~
-          ("vecCol" -> vecCol) ~ ("qIdCol" -> qIdCol) ~ ("topK" -> topK) ~
-          ("nProbe" -> nProbe) ~ ("broadcastCorpus" -> bc)
-      case ExactDedup(name, i, ref, idCol, textCol, numBits, numHashes, bRef) =>
-        ("op" -> "exactDedup") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("numBits" -> numBits) ~ ("numHashes" -> numHashes) ~
-          ("broadcastRef" -> bRef)
-      case GopherGate(name, i, idCol, textCol, minW, maxW) =>
-        ("op" -> "gopherGate") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("minWords" -> minW) ~ ("maxWords" -> maxW)
-      case NbClassify(name, i, ref, idCol, textCol, refTextCol, refLabelCol, alpha) =>
-        ("op" -> "nbClassify") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("ref" -> ref) ~ ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("refTextCol" -> refTextCol) ~ ("refLabelCol" -> refLabelCol) ~
-          ("alpha" -> alpha)
-      case HashSample(name, i, key, rate, salt) =>
-        ("op" -> "hashSample") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("keyCol" -> key) ~ ("rate" -> rate) ~ ("salt" -> salt)
-      case StratifiedSample(name, i, key, strata, rates, dflt, salt) =>
-        ("op" -> "stratifiedSample") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("keyCol" -> key) ~ ("strataCol" -> strata) ~ ("rates" -> rates) ~
-          ("defaultRate" -> dflt) ~ ("salt" -> salt)
-      case AssignSplit(name, i, key, splits, as, salt) =>
-        ("op" -> "assignSplit") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("keyCol" -> key) ~
-          ("splits" -> splits.map { case (s, f) => ("name" -> s) ~ ("fraction" -> f) }) ~
-          ("as" -> as) ~ ("salt" -> salt)
-      case WeightedMix(name, i, key, strata, weights, dflt, salt) =>
-        ("op" -> "weightedMix") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("keyCol" -> key) ~ ("strataCol" -> strata) ~ ("weights" -> weights) ~
-          ("defaultWeight" -> dflt) ~ ("salt" -> salt)
-      case CapPerKey(name, i, strata, key, cap, salt) =>
-        ("op" -> "capPerKey") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("strataCol" -> strata) ~ ("keyCol" -> key) ~ ("n" -> cap) ~ ("salt" -> salt)
-      case ExactKSample(name, i, idc, k, salt) =>
-        ("op" -> "exactK") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idc) ~ ("k" -> k) ~ ("salt" -> salt)
-      case ExactKStrata(name, i, strata, idc, k, salt) =>
-        ("op" -> "exactKStrata") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("strataCol" -> strata) ~ ("idCol" -> idc) ~ ("k" -> k) ~ ("salt" -> salt)
-      case CapTokens(name, i, strata, key, tokens, budget, salt) =>
-        ("op" -> "capTokens") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("strataCol" -> strata) ~ ("keyCol" -> key) ~ ("tokensCol" -> tokens) ~
-          ("budget" -> budget) ~ ("salt" -> salt)
-      case TemperatureMix(name, i, key, strata, alpha, budget, salt) =>
-        ("op" -> "temperatureMix") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("keyCol" -> key) ~ ("strataCol" -> strata) ~ ("alpha" -> alpha) ~
-          ("budgetRows" -> budget) ~ ("salt" -> salt)
-      case SafeSplit(name, i, pairs, idCol, aCol, bCol, splits, as, salt) =>
-        ("op" -> "safeSplit") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("pairs" -> pairs) ~ ("idCol" -> idCol) ~ ("aCol" -> aCol) ~
-          ("bCol" -> bCol) ~
-          ("splits" -> splits.map { case (s, f) => ("name" -> s) ~ ("fraction" -> f) }) ~
-          ("as" -> as) ~ ("salt" -> salt)
-      case DedupCorpus(name, i, idCol, textCol, k, bands, threshold) =>
-        ("op" -> "dedupCorpus") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~ ("k" -> k) ~
-          ("bands" -> bands) ~ ("threshold" -> threshold)
-      case DedupCorpusBest(name, i, idCol, textCol, k, bands, threshold, score) =>
-        ("op" -> "dedupCorpusBest") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~ ("k" -> k) ~
-          ("bands" -> bands) ~ ("threshold" -> threshold) ~ ("score" -> score)
-      case SemanticDedup(name, i, cents, idCol, vecCol, threshold) =>
-        ("op" -> "semanticDedup") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("centroids" -> cents) ~ ("idCol" -> idCol) ~ ("vecCol" -> vecCol) ~
-          ("threshold" -> threshold)
-      case SemanticDedupBest(name, i, cents, idCol, vecCol, threshold, score) =>
-        ("op" -> "semanticDedupBest") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("centroids" -> cents) ~ ("idCol" -> idCol) ~ ("vecCol" -> vecCol) ~
-          ("threshold" -> threshold) ~ ("score" -> score)
-      case LineScrub(name, i, idCol, textCol, minWords) =>
-        ("op" -> "lineScrub") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~ ("minWords" -> minWords)
-      case ParaScrub(name, i, idCol, textCol, minWords) =>
-        ("op" -> "paraScrub") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~ ("minWords" -> minWords)
-      case SpanScrub(name, i, idCol, textCol, k, minDocs, keepCanonical) =>
-        ("op" -> "spanScrub") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~ ("k" -> k) ~
-          ("minDocs" -> minDocs) ~ ("keepCanonical" -> keepCanonical)
-      case QualityAnnotate(name, i, textCol) =>
-        ("op" -> "quality") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("textCol" -> textCol)
-      case PiiScrub(name, i, textCol) =>
-        ("op" -> "piiScrub") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("textCol" -> textCol)
-      case LangId(name, i, textCol, as) =>
-        ("op" -> "langId") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("textCol" -> textCol) ~ ("as" -> as)
-      case ChunkTokens(name, i, idCol, textCol, chunkSize, stride) =>
-        ("op" -> "chunkTokens") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("chunkSize" -> chunkSize) ~ ("stride" -> stride)
-      case PackChunks(name, i, idCol, textCol, partCol, budget) =>
-        ("op" -> "packChunks") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~
-          ("partCol" -> partCol) ~ ("budget" -> budget)
-      case Winnow(name, i, idCol, textCol, nGram, w) =>
-        ("op" -> "winnow") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol) ~ ("n" -> nGram) ~
-          ("w" -> w)
-      case Repetition(name, i, idCol, textCol) =>
-        ("op" -> "repetition") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("idCol" -> idCol) ~ ("textCol" -> textCol)
-      case Normalize(name, i, textCol, as) =>
-        ("op" -> "normalize") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("textCol" -> textCol) ~ ("as" -> as)
-      case StripMarkup(name, i, textCol, as, domainsAs) =>
-        ("op" -> "stripMarkup") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("textCol" -> textCol) ~ ("as" -> as) ~ ("domainsAs" -> domainsAs)
-      case JlProjection(name, i, vecCol, outDim, seed, as) =>
-        ("op" -> "jlProject") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("vecCol" -> vecCol) ~ ("outDim" -> outDim) ~ ("seed" -> seed) ~
-          ("as" -> as)
-      case TopKPerKey(name, i, keys, idCol, score, k, scoreAs) =>
-        ("op" -> "topkPerKey") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("keys" -> keys) ~ ("idCol" -> idCol) ~ ("score" -> score) ~
-          ("k" -> k) ~ ("scoreAs" -> scoreAs)
-      case Sq8Ingest(name, i, stats, vecCol, as) =>
-        ("op" -> "sq8Encode") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("stats" -> stats) ~ ("vecCol" -> vecCol) ~ ("as" -> as)
-      case ZOrder(name, i, cols, numFiles, bits) =>
-        ("op" -> "zorder") ~ ("name" -> name) ~ ("input" -> i) ~
-          ("cols" -> cols) ~ ("numFiles" -> numFiles) ~ ("bits" -> bits)
-    }
-    JsonMethods.compact(JsonMethods.render(
-      ("version" -> requiredVersion(doc)) ~ ("nodes" -> doc.nodes.map(nodeJson)) ~
-        ("outputs" -> doc.outputs)))
-  }
+    * parity, program half — [[App.configToJson]] carries the bindings):
+    * each node is its op followed by its constructor fields, in order. */
+  def toJson(doc: Doc): String =
+    JsonMethods.compact(JsonMethods.render(JObject(
+      "version" -> JInt(requiredVersion(doc)),
+      "nodes" -> JArray(doc.nodes.map(n => codecOf(n).encode(n)).toList),
+      "outputs" -> JArray(doc.outputs.map(JString(_)).toList))))
 
   /** Parse a `toJson` document back into a runnable [[Doc]] — the
     * reference's `TreeParser` role, except the scalar grammar is ANSI SQL
     * validated here by Catalyst's parser so a malformed document fails at
     * load, not run, time. */
   def fromJson(json: String): Doc = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    implicit val fmts: Formats = DefaultFormats
     val j = JsonMethods.parse(json)
     val verExplicit = (j \ "version").extractOpt[Int]
     val ver = verExplicit.getOrElse(1)
@@ -2883,501 +2454,21 @@ object Program {
       s"program document format version $ver is newer than this library's " +
         s"$FormatVersion — upgrade the reading side (refusing to " +
         "misinterpret a newer grammar)")
-    def fields(v: JValue): Seq[Field] = v match {
-      case JArray(xs) => xs.map(x =>
-        Field((x \ "expr").extract[String], (x \ "as").extract[String]))
-      case JNothing => Nil
-      case other => throw new IllegalArgumentException(s"expected field array, got $other")
+    val nodes = (j \ "nodes") match {
+      case JArray(xs) => xs.map { v =>
+        val name = (v \ "name").extract[String]
+        val op = (v \ "op").extract[String]
+        codecByOp.getOrElse(op, throw new IllegalArgumentException(
+          s"unknown program op '$op'")).decode(v, name, effVer)
+      }
+      case _ => throw new IllegalArgumentException("program document has no 'nodes' array")
     }
-    def strs(v: JValue): Seq[String] = v match {
+    val outputs = (j \ "outputs") match {
       case JArray(xs) => xs.map(_.extract[String])
       case JNothing => Nil
       case other => throw new IllegalArgumentException(s"expected string array, got $other")
     }
-    def splitsOf(v: JValue): Seq[(String, Double)] = (v \ "splits") match {
-      case JArray(xs) => xs.map(x =>
-        (x \ "name").extract[String] -> (x \ "fraction").extract[Double])
-      case _ => Nil
-    }
-    // version-gated broadcast lever: an ABSENT field means AUTO under the
-    // v9 grammar but the explicit-true default under v8 and earlier —
-    // old artifacts keep their shipped semantics, unversioned ones get
-    // the current (auto) behavior
-    def bmOf(v: JValue): Option[Boolean] = (v \ "broadcastModel") match {
-      case JNothing => if (effVer >= 9) None else Some(true)
-      case x => Some(x.extract[Boolean])
-    }
-    val nodes = (j \ "nodes") match {
-      case JArray(xs) => xs.map { v =>
-        val name = (v \ "name").extract[String]
-        (v \ "op").extract[String] match {
-          case "external" => External(name)
-          case "map" => MapCols(name, (v \ "input").extract[String], fields(v \ "cols"))
-          case "where" => Where(name, (v \ "input").extract[String],
-            (v \ "predicate").extract[String])
-          case "addFields" => AddTo(name, (v \ "input").extract[String], fields(v \ "fields"))
-          case "orderBy" => OrderBy(name, (v \ "input").extract[String], strs(v \ "cols"))
-          case "union" => Union(name, strs(v \ "inputs"))
-          case "distinct" => Distinct(name, (v \ "input").extract[String])
-          case "groupSelect" => GroupSelect(name, (v \ "input").extract[String],
-            strs(v \ "keys"), fields(v \ "aggs"))
-          case "windowSelect" => WindowSelect(name, (v \ "input").extract[String],
-            strs(v \ "keys"), (v \ "ts").extract[String], (v \ "size").extract[String],
-            (v \ "slide").extractOpt[String], (v \ "offset").extract[String],
-            (v \ "windowAs").extract[String], fields(v \ "aggs"))
-          case "join" => Join(name, (v \ "kind").extract[String],
-            (v \ "left").extract[String], (v \ "right").extract[String],
-            (v \ "condition").extract[String], fields(v \ "select"),
-            (v \ "lenientResidual").extractOpt[Boolean].getOrElse(false))
-          case "scan" => Scan(name, (v \ "input").extract[String],
-            (v \ "kind").extract[String], strs(v \ "keys"),
-            (v \ "arg").extractOpt[String], (v \ "as").extractOpt[String])
-          case "dedupBy" => DedupBy(name, (v \ "input").extract[String],
-            strs(v \ "cols"), (v \ "withinWatermark").extractOpt[Boolean].getOrElse(false))
-          case "watermark" => Watermark(name, (v \ "input").extract[String],
-            (v \ "ts").extract[String], (v \ "delay").extract[String])
-          case "asof" => Asof(name, (v \ "left").extract[String],
-            (v \ "right").extract[String], (v \ "leftTs").extract[String],
-            (v \ "rightTs").extract[String],
-            (v \ "keys") match {
-              case JArray(xs) => xs.map(x =>
-                (x \ "l").extract[String] -> (x \ "r").extract[String])
-              case _ => Nil
-            },
-            strs(v \ "rightOrder"), (v \ "tolerance").extractOpt[Long],
-            (v \ "direction").extractOpt[String].getOrElse("backward"),
-            (v \ "inner").extractOpt[Boolean].getOrElse(false))
-          case "uniqueBy" => UniqueBy(name, (v \ "input").extract[String],
-            strs(v \ "valueCols"), strs(v \ "keepLatestBy"))
-          case "toField" => ToField(name, (v \ "input").extract[String],
-            (v \ "fieldName").extract[String])
-          case "sessionSelect" => SessionSelect(name, (v \ "input").extract[String],
-            strs(v \ "keys"), (v \ "ts").extract[String], (v \ "gap").extract[String],
-            (v \ "startAs").extract[String], fields(v \ "aggs"))
-          case "recordWindow" => RecordWindow(name, (v \ "input").extract[String],
-            strs(v \ "keys"), (v \ "n").extract[Int],
-            (v \ "aggs") match {
-              case JArray(xs) => xs.map(x => ((x \ "kind").extract[String],
-                (x \ "in").extract[String], (x \ "as").extract[String]))
-              case _ => Nil
-            })
-          case "applyFn" => ApplyFn(name, (v \ "input").extract[String],
-            (v \ "function").extract[String], strs(v \ "args"),
-            (v \ "kind").extractOpt[String].getOrElse("map"),
-            (v \ "as").extractOpt[String])
-          case "beginCycle" => BeginCycle(name, (v \ "input").extract[String],
-            (v \ "maxIterations").extractOpt[Int].getOrElse(50))
-          case "closeCycle" => CloseCycle(name, (v \ "cycle").extract[String],
-            (v \ "feedback").extract[String])
-          case "corpusDedup" => CorpusDedup(name, (v \ "input").extract[String],
-            (v \ "ref").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String], (v \ "k").extract[Int],
-            (v \ "bands").extract[Int], (v \ "threshold").extract[Double],
-            (v \ "broadcastRef").extractOpt[Boolean].getOrElse(true))
-          case "embedDedup" => EmbedDedup(name, (v \ "input").extract[String],
-            (v \ "ref").extract[String], (v \ "idCol").extract[String],
-            (v \ "vecCol").extract[String], (v \ "threshold").extract[Double],
-            (v \ "centroids").extractOpt[String],
-            (v \ "nProbe").extractOpt[Int].getOrElse(1),
-            (v \ "broadcastRef").extractOpt[Boolean].getOrElse(true))
-          case "lmScore" => LmScore(name, (v \ "input").extract[String],
-            (v \ "ref").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String], (v \ "refTextCol").extract[String],
-            (v \ "alpha").extractOpt[Double].getOrElse(0.5))
-          case "lm3Score" =>
-            // lambda defaults are ALL-OR-NONE from format version 8:
-            // defaulting the absent ones independently would turn a
-            // hand-written partial artifact (say l3=1.0 alone) into
-            // weights summing past 1 that only fail later in validate,
-            // blaming values the author never wrote — reject the partial
-            // spec here with the real cause. Documents EXPLICITLY stamped
-            // <= 7 keep round 13's independent defaults (a shipped v7
-            // artifact that loaded then must keep loading — the
-            // FormatVersion promise); an absent version gets the strict
-            // rule (see effVer above).
-            val ls = Seq("l3", "l2", "l1").map(k => (v \ k).extractOpt[Double])
-            if (effVer >= 8 && ls.exists(_.isDefined) && ls.exists(_.isEmpty))
-              throw new IllegalArgumentException(
-                s"node '$name': lm3Score lambdas are all-or-none — specify " +
-                  "l3, l2 AND l1, or none of them (defaults 0.6/0.3/0.1); got " +
-                  Seq("l3", "l2", "l1").zip(ls).collect {
-                    case (k, Some(x)) => s"$k=$x" }.mkString(", "))
-            val Seq(l3, l2, l1) =
-              if (effVer >= 8 && ls.head.isDefined) ls.map(_.get)
-              else ls.zip(Seq(0.6, 0.3, 0.1)).map { case (o, d) => o.getOrElse(d) }
-            Lm3Score(name, (v \ "input").extract[String],
-              (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-              (v \ "alpha").extractOpt[Double].getOrElse(0.5), l3, l2, l1)
-          case "lm3Against" =>
-            // lambda defaults all-or-none, same rule (and reason) as lm3Score
-            val ls = Seq("l3", "l2", "l1").map(k => (v \ k).extractOpt[Double])
-            if (ls.exists(_.isDefined) && ls.exists(_.isEmpty))
-              throw new IllegalArgumentException(
-                s"node '$name': lm3Against lambdas are all-or-none — specify " +
-                  "l3, l2 AND l1, or none of them (defaults 0.6/0.3/0.1); got " +
-                  Seq("l3", "l2", "l1").zip(ls).collect {
-                    case (k, Some(x)) => s"$k=$x" }.mkString(", "))
-            val Seq(l3, l2, l1) =
-              if (ls.head.isDefined) ls.map(_.get) else Seq(0.6, 0.3, 0.1)
-            Lm3Against(name, (v \ "input").extract[String],
-              (v \ "ref").extract[String], (v \ "idCol").extract[String],
-              (v \ "textCol").extract[String], (v \ "refTextCol").extract[String],
-              (v \ "alpha").extractOpt[Double].getOrElse(0.5), l3, l2, l1,
-              (v \ "minCount").extractOpt[Long].getOrElse(1L), bmOf(v))
-          case "lmnScore" => LmNScore(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "order").extract[Int],
-            (v \ "alpha").extractOpt[Double].getOrElse(0.5),
-            (v \ "lambdas").extractOpt[Seq[Double]].getOrElse(Nil))
-          case "lmnAgainst" => LmNAgainst(name, (v \ "input").extract[String],
-            (v \ "ref").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String], (v \ "refTextCol").extract[String],
-            (v \ "order").extract[Int],
-            (v \ "alpha").extractOpt[Double].getOrElse(0.5),
-            (v \ "lambdas").extractOpt[Seq[Double]].getOrElse(Nil),
-            (v \ "minCount").extractOpt[Long].getOrElse(1L), bmOf(v))
-          case "hybridRrf" => HybridRrf(name, (v \ "input").extract[String],
-            (v \ "queries").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String], (v \ "vecCol").extract[String],
-            (v \ "qIdCol").extract[String], (v \ "qTextCol").extract[String],
-            (v \ "qVecCol").extract[String], (v \ "k").extract[Int],
-            (v \ "legK").extractOpt[Int].getOrElse(0),
-            (v \ "kRrf").extractOpt[Int].getOrElse(60),
-            (v \ "k1").extractOpt[Double].getOrElse(1.2),
-            (v \ "b").extractOpt[Double].getOrElse(0.75),
-            (v \ "broadcastQueries").extractOpt[Boolean].getOrElse(true),
-            (v \ "ivfCells").extractOpt[Int].getOrElse(0),
-            (v \ "ivfIters").extractOpt[Int].getOrElse(2),
-            (v \ "nProbe").extractOpt[Int].getOrElse(0))
-          case "bm25Retrieve" => Bm25Retrieve(name, (v \ "input").extract[String],
-            (v \ "queries").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String], (v \ "qIdCol").extract[String],
-            (v \ "qTextCol").extract[String], (v \ "k").extract[Int],
-            (v \ "k1").extractOpt[Double].getOrElse(1.2),
-            (v \ "b").extractOpt[Double].getOrElse(0.75),
-            (v \ "broadcastQueries").extractOpt[Boolean].getOrElse(true))
-          case "winnowPairs" => WinnowPairs(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "n").extractOpt[Int].getOrElse(3),
-            (v \ "w").extractOpt[Int].getOrElse(4),
-            (v \ "minShared").extractOpt[Int].getOrElse(2),
-            (v \ "maxBucket").extractOpt[Int].getOrElse(64))
-          case "chunkSentences" => SentChunk(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "maxTokens").extract[Long],
-            (v \ "sep").extractOpt[String].getOrElse(" "))
-          case "knScore" => KnScore(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "order").extract[Int],
-            (v \ "discount").extractOpt[Double].getOrElse(0.75))
-          case "knAgainst" => KnAgainst(name, (v \ "input").extract[String],
-            (v \ "ref").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String], (v \ "refTextCol").extract[String],
-            (v \ "order").extract[Int],
-            (v \ "discount").extractOpt[Double].getOrElse(0.75),
-            (v \ "minCount").extractOpt[Long].getOrElse(1L), bmOf(v))
-          case "knAgainstLang" => KnAgainstLang(name,
-            (v \ "input").extract[String], (v \ "ref").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "langCol").extract[String], (v \ "refTextCol").extract[String],
-            (v \ "refLangCol").extract[String], (v \ "order").extract[Int],
-            (v \ "discount").extractOpt[Double].getOrElse(0.75),
-            (v \ "minCount").extractOpt[Long].getOrElse(1L), bmOf(v))
-          case "lmAgainstLang" => LmAgainstLang(name,
-            (v \ "input").extract[String], (v \ "ref").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "langCol").extract[String], (v \ "refTextCol").extract[String],
-            (v \ "refLangCol").extract[String], (v \ "order").extract[Int],
-            (v \ "alpha").extractOpt[Double].getOrElse(0.5),
-            (v \ "lambdas").extractOpt[Seq[Double]].getOrElse(Nil),
-            (v \ "minCount").extractOpt[Long].getOrElse(1L), bmOf(v))
-          case "mknAgainstLang" =>
-            val fs = Seq("fb1", "fb2", "fb3").map(k => (v \ k).extractOpt[Double])
-            if (fs.exists(_.isDefined) && fs.exists(_.isEmpty))
-              throw new IllegalArgumentException(
-                s"node '$name': mknAgainstLang fallback discounts are all-or-none — " +
-                  "specify fb1, fb2 AND fb3, or none (defaults 0.5/1.0/1.5)")
-            val Seq(f1, f2, f3) =
-              if (fs.head.isDefined) fs.map(_.get) else Seq(0.5, 1.0, 1.5)
-            MknAgainstLang(name, (v \ "input").extract[String],
-              (v \ "ref").extract[String], (v \ "idCol").extract[String],
-              (v \ "textCol").extract[String], (v \ "langCol").extract[String],
-              (v \ "refTextCol").extract[String], (v \ "refLangCol").extract[String],
-              (v \ "order").extract[Int], f1, f2, f3,
-              (v \ "minCount").extractOpt[Long].getOrElse(1L), bmOf(v))
-          case "arpaScore" => ArpaScore(name, (v \ "input").extract[String],
-            (v \ "path").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String],
-            (v \ "sentence").extractOpt[Boolean].getOrElse(false))
-          case "arpaScoreLang" => ArpaScoreLang(name,
-            (v \ "input").extract[String], (v \ "dir").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "langCol").extract[String])
-          case "saveArtifact" => SaveArtifact(name, (v \ "input").extract[String],
-            (v \ "dir").extract[String], (v \ "kind").extract[String],
-            (v \ "overwrite").extractOpt[Boolean].getOrElse(false))
-          case "loadArtifact" => LoadArtifact(name,
-            (v \ "dir").extract[String], (v \ "kind").extractOpt[String],
-            (v \ "table").extractOpt[String].getOrElse("table"))
-          case "mknScore" =>
-            // fallback discounts all-or-none, the lm3Score lambda rule
-            val fs = Seq("fb1", "fb2", "fb3").map(k => (v \ k).extractOpt[Double])
-            if (fs.exists(_.isDefined) && fs.exists(_.isEmpty))
-              throw new IllegalArgumentException(
-                s"node '$name': mknScore fallback discounts are all-or-none — " +
-                  "specify fb1, fb2 AND fb3, or none (defaults 0.5/1.0/1.5); got " +
-                  Seq("fb1", "fb2", "fb3").zip(fs).collect {
-                    case (k, Some(x)) => s"$k=$x" }.mkString(", "))
-            val Seq(f1, f2, f3) =
-              if (fs.head.isDefined) fs.map(_.get) else Seq(0.5, 1.0, 1.5)
-            MknScore(name, (v \ "input").extract[String],
-              (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-              (v \ "order").extract[Int], f1, f2, f3)
-          case "mknAgainst" =>
-            val fs = Seq("fb1", "fb2", "fb3").map(k => (v \ k).extractOpt[Double])
-            if (fs.exists(_.isDefined) && fs.exists(_.isEmpty))
-              throw new IllegalArgumentException(
-                s"node '$name': mknAgainst fallback discounts are all-or-none — " +
-                  "specify fb1, fb2 AND fb3, or none (defaults 0.5/1.0/1.5); got " +
-                  Seq("fb1", "fb2", "fb3").zip(fs).collect {
-                    case (k, Some(x)) => s"$k=$x" }.mkString(", "))
-            val Seq(f1, f2, f3) =
-              if (fs.head.isDefined) fs.map(_.get) else Seq(0.5, 1.0, 1.5)
-            MknAgainst(name, (v \ "input").extract[String],
-              (v \ "ref").extract[String], (v \ "idCol").extract[String],
-              (v \ "textCol").extract[String], (v \ "refTextCol").extract[String],
-              (v \ "order").extract[Int], f1, f2, f3,
-              (v \ "minCount").extractOpt[Long].getOrElse(1L), bmOf(v))
-          case "exactSubstr" => ExactSubstr(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "minLen").extract[Int], (v \ "maxExtend").extract[Int],
-            (v \ "minDocs").extractOpt[Int].getOrElse(2))
-          case "pplThresholds" => PplThresholds(name, (v \ "input").extract[String],
-            (v \ "ref").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String], (v \ "langCol").extract[String],
-            (v \ "refTextCol").extract[String],
-            (v \ "buckets").extractOpt[Int].getOrElse(3),
-            (v \ "order").extractOpt[Int].getOrElse(3),
-            (v \ "discount").extractOpt[Double].getOrElse(0.75),
-            (v \ "minCount").extractOpt[Long].getOrElse(1L), bmOf(v))
-          case "bucketApply" => BucketApply(name, (v \ "input").extract[String],
-            (v \ "thresholds").extract[String], (v \ "langCol").extract[String],
-            (v \ "scoreCol").extract[String])
-          case "rankBuckets" => RankBuckets(name, (v \ "input").extract[String],
-            (v \ "groupCol").extract[String], (v \ "scoreCol").extract[String],
-            (v \ "tieCol").extract[String],
-            (v \ "buckets").extractOpt[Int].getOrElse(3))
-          case "dsirScore" => DsirScore(name, (v \ "input").extract[String],
-            (v \ "target").extract[String], (v \ "raw").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "refTextCol").extract[String],
-            (v \ "buckets").extractOpt[Int].getOrElse(4096),
-            (v \ "alpha").extractOpt[Double].getOrElse(1.0))
-          case "tokenFreq" => TokenFreq(name, (v \ "input").extract[String],
-            (v \ "ref").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String], (v \ "refTextCol").extract[String],
-            (v \ "depth").extractOpt[Int].getOrElse(4),
-            (v \ "width").extractOpt[Int].getOrElse(2048),
-            (v \ "rareMax").extractOpt[Long].getOrElse(2L))
-          case "unigramEncode" => UnigramEncode(name,
-            (v \ "input").extract[String], (v \ "vocab").extract[String],
-            (v \ "textCol").extract[String],
-            (v \ "maxPieceLen").extractOpt[Int].getOrElse(4),
-            (v \ "as").extractOpt[String].getOrElse("pieces"))
-          case "unigramIds" => UnigramIds(name,
-            (v \ "input").extract[String], (v \ "vocab").extract[String],
-            (v \ "textCol").extract[String],
-            (v \ "maxPieceLen").extractOpt[Int].getOrElse(4),
-            (v \ "oovId").extractOpt[Long].getOrElse(-1L),
-            (v \ "as").extractOpt[String].getOrElse("ids"))
-          case "wpTokenize" => WpTokenize(name,
-            (v \ "input").extract[String], (v \ "vocab").extract[String],
-            (v \ "textCol").extract[String],
-            (v \ "unk").extractOpt[String].getOrElse("[UNK]"),
-            (v \ "maxInputChars").extractOpt[Int].getOrElse(100),
-            (v \ "as").extractOpt[String].getOrElse("pieces"))
-          case "wpEncode" => WpEncode(name,
-            (v \ "input").extract[String], (v \ "vocab").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "unk").extractOpt[String].getOrElse("[UNK]"),
-            (v \ "maxInputChars").extractOpt[Int].getOrElse(100))
-          case "wpIds" => WpIds(name,
-            (v \ "input").extract[String], (v \ "vocab").extract[String],
-            (v \ "textCol").extract[String],
-            (v \ "unk").extractOpt[String].getOrElse("[UNK]"),
-            (v \ "maxInputChars").extractOpt[Int].getOrElse(100),
-            (v \ "oovId").extractOpt[Long].getOrElse(-1L),
-            (v \ "as").extractOpt[String].getOrElse("ids"))
-          case "byteBpeEncode" => ByteBpeEncode(name, (v \ "input").extract[String],
-            (v \ "merges").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String])
-          case "byteBpeIds" => ByteBpeIds(name, (v \ "input").extract[String],
-            (v \ "merges").extract[String], (v \ "textCol").extract[String],
-            (v \ "oovId").extractOpt[Long].getOrElse(-1L),
-            (v \ "as").extractOpt[String].getOrElse("ids"))
-          case "byteBpeIdsVocab" => ByteBpeIdsVocab(name, (v \ "input").extract[String],
-            (v \ "merges").extract[String], (v \ "vocab").extract[String],
-            (v \ "textCol").extract[String],
-            (v \ "oovId").extractOpt[Long].getOrElse(-1L),
-            (v \ "as").extractOpt[String].getOrElse("ids"))
-          case "bpeLangEncode" => BpeLangEncode(name, (v \ "input").extract[String],
-            (v \ "merges").extract[String], (v \ "idCol").extract[String],
-            (v \ "langCol").extract[String], (v \ "textCol").extract[String])
-          case "bpeEncode" => BpeEncode(name, (v \ "input").extract[String],
-            (v \ "merges").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String])
-          case "bpeIds" => BpeIds(name, (v \ "input").extract[String],
-            (v \ "merges").extract[String], (v \ "textCol").extract[String],
-            (v \ "oovId").extractOpt[Long].getOrElse(-1L),
-            (v \ "as").extractOpt[String].getOrElse("ids"))
-          case "spTokenize" => SpTokenize(name, (v \ "input").extract[String],
-            (v \ "path").extract[String], (v \ "textCol").extract[String],
-            (v \ "as").extractOpt[String].getOrElse("pieces"))
-          case "spIds" => SpIds(name, (v \ "input").extract[String],
-            (v \ "path").extract[String], (v \ "textCol").extract[String],
-            (v \ "oovId").extractOpt[Long].getOrElse(-1L),
-            (v \ "as").extractOpt[String].getOrElse("ids"))
-          case "encodeIngest" => EncodeIngest(name, (v \ "input").extract[String],
-            (v \ "vocab").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String],
-            (v \ "oovId").extractOpt[Long].getOrElse(-1L))
-          case "decontaminateIngest" => DecontamIngest(name, (v \ "input").extract[String],
-            (v \ "bench").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String], (v \ "benchTextCol").extract[String],
-            (v \ "n").extractOpt[Int].getOrElse(8),
-            (v \ "minOverlap").extractOpt[Int].getOrElse(1))
-          case "ivfProbe" => IvfProbe(name, (v \ "input").extract[String],
-            (v \ "corpus").extract[String], (v \ "centroids").extract[String],
-            (v \ "idCol").extract[String], (v \ "vecCol").extract[String],
-            (v \ "qIdCol").extract[String], (v \ "topK").extract[Int],
-            (v \ "nProbe").extract[Int],
-            (v \ "broadcastCorpus").extractOpt[Boolean].getOrElse(true))
-          case "exactDedup" => ExactDedup(name, (v \ "input").extract[String],
-            (v \ "ref").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String],
-            (v \ "numBits").extractOpt[Int].getOrElse(1 << 20),
-            (v \ "numHashes").extractOpt[Int].getOrElse(7),
-            (v \ "broadcastRef").extractOpt[Boolean].getOrElse(true))
-          case "nbClassify" => NbClassify(name, (v \ "input").extract[String],
-            (v \ "ref").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String], (v \ "refTextCol").extract[String],
-            (v \ "refLabelCol").extract[String],
-            (v \ "alpha").extractOpt[Double].getOrElse(1.0))
-          case "gopherGate" => GopherGate(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "minWords").extractOpt[Int].getOrElse(50),
-            (v \ "maxWords").extractOpt[Int].getOrElse(100000))
-          case "hashSample" => HashSample(name, (v \ "input").extract[String],
-            (v \ "keyCol").extract[String], (v \ "rate").extract[Double],
-            (v \ "salt").extractOpt[String].getOrElse(""))
-          case "stratifiedSample" => StratifiedSample(name, (v \ "input").extract[String],
-            (v \ "keyCol").extract[String], (v \ "strataCol").extract[String],
-            (v \ "rates").extract[Map[String, Double]],
-            (v \ "defaultRate").extractOpt[Double].getOrElse(0.0),
-            (v \ "salt").extractOpt[String].getOrElse(""))
-          case "assignSplit" => AssignSplit(name, (v \ "input").extract[String],
-            (v \ "keyCol").extract[String], splitsOf(v),
-            (v \ "as").extractOpt[String].getOrElse("split"),
-            (v \ "salt").extractOpt[String].getOrElse(""))
-          case "weightedMix" => WeightedMix(name, (v \ "input").extract[String],
-            (v \ "keyCol").extract[String], (v \ "strataCol").extract[String],
-            (v \ "weights").extract[Map[String, Double]],
-            (v \ "defaultWeight").extractOpt[Double].getOrElse(0.0),
-            (v \ "salt").extractOpt[String].getOrElse(""))
-          case "capPerKey" => CapPerKey(name, (v \ "input").extract[String],
-            (v \ "strataCol").extract[String], (v \ "keyCol").extract[String],
-            (v \ "n").extract[Int], (v \ "salt").extractOpt[String].getOrElse(""))
-          case "exactK" => ExactKSample(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "k").extract[Int],
-            (v \ "salt").extractOpt[String].getOrElse(""))
-          case "exactKStrata" => ExactKStrata(name, (v \ "input").extract[String],
-            (v \ "strataCol").extract[String], (v \ "idCol").extract[String],
-            (v \ "k").extract[Int], (v \ "salt").extractOpt[String].getOrElse(""))
-          case "capTokens" => CapTokens(name, (v \ "input").extract[String],
-            (v \ "strataCol").extract[String], (v \ "keyCol").extract[String],
-            (v \ "tokensCol").extract[String], (v \ "budget").extract[Long],
-            (v \ "salt").extractOpt[String].getOrElse(""))
-          case "temperatureMix" => TemperatureMix(name, (v \ "input").extract[String],
-            (v \ "keyCol").extract[String], (v \ "strataCol").extract[String],
-            (v \ "alpha").extract[Double], (v \ "budgetRows").extract[Long],
-            (v \ "salt").extractOpt[String].getOrElse(""))
-          case "safeSplit" => SafeSplit(name, (v \ "input").extract[String],
-            (v \ "pairs").extract[String], (v \ "idCol").extract[String],
-            (v \ "aCol").extract[String], (v \ "bCol").extract[String],
-            splitsOf(v), (v \ "as").extractOpt[String].getOrElse("split"),
-            (v \ "salt").extractOpt[String].getOrElse(""))
-          case "dedupCorpus" => DedupCorpus(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "k").extract[Int], (v \ "bands").extract[Int],
-            (v \ "threshold").extract[Double])
-          case "dedupCorpusBest" => DedupCorpusBest(name,
-            (v \ "input").extract[String], (v \ "idCol").extract[String],
-            (v \ "textCol").extract[String], (v \ "k").extract[Int],
-            (v \ "bands").extract[Int], (v \ "threshold").extract[Double],
-            (v \ "score").extract[String])
-          case "semanticDedup" => SemanticDedup(name, (v \ "input").extract[String],
-            (v \ "centroids").extract[String], (v \ "idCol").extract[String],
-            (v \ "vecCol").extract[String], (v \ "threshold").extract[Double])
-          case "semanticDedupBest" => SemanticDedupBest(name,
-            (v \ "input").extract[String], (v \ "centroids").extract[String],
-            (v \ "idCol").extract[String], (v \ "vecCol").extract[String],
-            (v \ "threshold").extract[Double], (v \ "score").extract[String])
-          case "lineScrub" => LineScrub(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "minWords").extractOpt[Int].getOrElse(3))
-          case "paraScrub" => ParaScrub(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "minWords").extractOpt[Int].getOrElse(3))
-          case "spanScrub" => SpanScrub(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "k").extract[Int], (v \ "minDocs").extract[Int],
-            (v \ "keepCanonical").extractOpt[Boolean].getOrElse(false))
-          case "quality" => QualityAnnotate(name, (v \ "input").extract[String],
-            (v \ "textCol").extract[String])
-          case "piiScrub" => PiiScrub(name, (v \ "input").extract[String],
-            (v \ "textCol").extract[String])
-          case "langId" => LangId(name, (v \ "input").extract[String],
-            (v \ "textCol").extract[String],
-            (v \ "as").extractOpt[String].getOrElse("lang"))
-          case "chunkTokens" => ChunkTokens(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "chunkSize").extract[Int], (v \ "stride").extract[Int])
-          case "packChunks" => PackChunks(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "partCol").extract[String], (v \ "budget").extract[Long])
-          case "winnow" => Winnow(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String],
-            (v \ "n").extractOpt[Int].getOrElse(3),
-            (v \ "w").extractOpt[Int].getOrElse(4))
-          case "repetition" => Repetition(name, (v \ "input").extract[String],
-            (v \ "idCol").extract[String], (v \ "textCol").extract[String])
-          case "normalize" => Normalize(name, (v \ "input").extract[String],
-            (v \ "textCol").extract[String],
-            (v \ "as").extractOpt[String].getOrElse("norm_text"))
-          case "stripMarkup" => StripMarkup(name, (v \ "input").extract[String],
-            (v \ "textCol").extract[String],
-            (v \ "as").extractOpt[String].getOrElse("clean_text"),
-            (v \ "domainsAs").extractOpt[String].getOrElse("domains"))
-          case "jlProject" => JlProjection(name, (v \ "input").extract[String],
-            (v \ "vecCol").extract[String], (v \ "outDim").extract[Int],
-            (v \ "seed").extractOpt[Int].getOrElse(0),
-            (v \ "as").extractOpt[String].getOrElse("projected"))
-          case "topkPerKey" => TopKPerKey(name, (v \ "input").extract[String],
-            strs(v \ "keys"), (v \ "idCol").extract[String],
-            (v \ "score").extract[String], (v \ "k").extract[Int],
-            (v \ "scoreAs").extractOpt[String].getOrElse("score"))
-          case "sq8Encode" => Sq8Ingest(name, (v \ "input").extract[String],
-            (v \ "stats").extract[String], (v \ "vecCol").extract[String],
-            (v \ "as").extractOpt[String].getOrElse("codes"))
-          case "zorder" => ZOrder(name, (v \ "input").extract[String],
-            strs(v \ "cols"), (v \ "numFiles").extract[Int],
-            (v \ "bits").extractOpt[Int].getOrElse(12))
-          case other => throw new IllegalArgumentException(s"unknown program op '$other'")
-        }
-      }
-      case _ => throw new IllegalArgumentException("program document has no 'nodes' array")
-    }
-    val doc = Doc(nodes, strs(j \ "outputs"))
+    val doc = Doc(nodes, outputs)
     validate(doc)
     doc
   }
@@ -3900,8 +2991,7 @@ object Program {
     doc.nodes.foreach { n =>
       if (n.name.startsWith("__cycle_")) throw new IllegalArgumentException(
         s"node name '${n.name}' uses the reserved cycle-channel prefix '__cycle_'")
-      val inputs: Seq[String] = n match {
-        case External(_) => Nil
+      n match {
         case b: BeginCycle =>
           if (openCycle.isDefined) throw new IllegalArgumentException(
             s"node '${b.name}': nested cycles are not supported " +
@@ -3909,55 +2999,43 @@ object Program {
           if (b.maxIterations <= 0) throw new IllegalArgumentException(
             s"node '${b.name}': beginCycle needs maxIterations > 0, got ${b.maxIterations}")
           openCycle = Some(b.name)
-          Seq(b.input)
         case c: CloseCycle =>
           if (!openCycle.contains(c.cycle)) throw new IllegalArgumentException(
             s"node '${c.name}': closeCycle targets '${c.cycle}' but " +
               openCycle.fold("no cycle is open")(o => s"the open cycle is '$o'"))
           openCycle = None
-          Seq(c.feedback)
         case m: MapCols =>
           nonEmpty(m.cols, "column", n.name)
-          m.cols.foreach(f => parse(f.expr, s"node ${n.name}")); Seq(m.input)
-        case w: Where => parse(w.predicate, s"node ${n.name}"); Seq(w.input)
-        case a: AddTo => a.fields.foreach(f => parse(f.expr, s"node ${n.name}")); Seq(a.input)
-        case o: OrderBy => nonEmpty(o.cols, "order column", n.name); Seq(o.input)
-        case u: Union => nonEmpty(u.inputs, "input", n.name); u.inputs
-        case d: Distinct => Seq(d.input)
+          m.cols.foreach(f => parse(f.expr, s"node ${n.name}"))
+        case w: Where => parse(w.predicate, s"node ${n.name}")
+        case a: AddTo => a.fields.foreach(f => parse(f.expr, s"node ${n.name}"))
+        case o: OrderBy => nonEmpty(o.cols, "order column", n.name)
+        case u: Union => nonEmpty(u.inputs, "input", n.name)
         case g: GroupSelect =>
           nonEmpty(g.aggs, "aggregate", n.name)
-          g.aggs.foreach(f => parse(f.expr, s"node ${n.name}")); Seq(g.input)
+          g.aggs.foreach(f => parse(f.expr, s"node ${n.name}"))
         case w: WindowSelect =>
           nonEmpty(w.aggs, "aggregate", n.name)
           parse(w.ts, s"node ${n.name}"); w.aggs.foreach(f => parse(f.expr, s"node ${n.name}"))
-          Seq(w.input)
         case jn: Join =>
           parse(jn.condition, s"node ${n.name}")
           jn.select.foreach(f => parse(f.expr, s"node ${n.name}"))
-          Seq(jn.left, jn.right)
         case s: Scan =>
           s.arg.foreach(parse(_, s"node ${n.name}"))
           val kinds = Set("sumBy", "meanBy", "productBy", "countBy", "maxBy", "minBy", "last")
           if (!kinds.contains(s.kind)) throw new IllegalArgumentException(
             s"node ${n.name}: unknown scan kind '${s.kind}' (${kinds.mkString("|")})")
-          Seq(s.input)
-        case d: DedupBy => Seq(d.input)
-        case w: Watermark => Seq(w.input)
         case a: Asof =>
           if (a.direction != "backward" && a.direction != "forward")
             throw new IllegalArgumentException(
               s"node ${n.name}: unknown asof direction '${a.direction}' (backward|forward)")
-          Seq(a.left, a.right)
         case u: UniqueBy =>
           nonEmpty(u.valueCols, "value column", n.name)
           nonEmpty(u.keepLatestBy, "keep-latest ordering column", n.name)
-          Seq(u.input)
-        case t: ToField => Seq(t.input)
         case ss: SessionSelect =>
           nonEmpty(ss.aggs, "aggregate", n.name)
           parse(ss.ts, s"node ${n.name}")
           ss.aggs.foreach(f => parse(f.expr, s"node ${n.name}"))
-          Seq(ss.input)
         case rw: RecordWindow =>
           nonEmpty(rw.aggs, "aggregate", n.name)
           if (rw.n <= 0) throw new IllegalArgumentException(
@@ -3967,7 +3045,6 @@ object Program {
             if (!kinds.contains(k)) throw new IllegalArgumentException(
               s"node ${n.name}: unknown recordWindow agg kind '$k' (${kinds.mkString("|")})")
           }
-          Seq(rw.input)
         case af: ApplyFn =>
           af.args.foreach(parse(_, s"node ${n.name}"))
           if (!Set("map", "where", "addField").contains(af.kind))
@@ -3984,7 +3061,6 @@ object Program {
                 s"got ${af.args.size}")
             case _ =>
           }
-          Seq(af.input)
         case cd: CorpusDedup =>
           if (cd.bands <= 0 || cd.k < cd.bands || cd.k % cd.bands != 0)
             throw new IllegalArgumentException(s"node '${n.name}': corpusDedup " +
@@ -3992,7 +3068,6 @@ object Program {
           if (cd.threshold <= 0.0 || cd.threshold > 1.0)
             throw new IllegalArgumentException(s"node '${n.name}': corpusDedup " +
               s"threshold must be in (0,1], got ${cd.threshold}")
-          Seq(cd.input, cd.ref)
         case ed: EmbedDedup =>
           if (ed.centroids.isDefined && ed.nProbe <= 0)
             throw new IllegalArgumentException(s"node '${n.name}': embedDedup " +
@@ -4004,11 +3079,9 @@ object Program {
             throw new IllegalArgumentException(s"node '${n.name}': embedDedup's " +
               "exact face is broadcast-only; pass a centroids input for the " +
               "beyond-broadcast IVF route (broadcastRef = false)")
-          Seq(ed.input, ed.ref) ++ ed.centroids
         case lm: LmScore =>
           if (lm.alpha <= 0.0) throw new IllegalArgumentException(
             s"node '${n.name}': lmScore needs alpha > 0, got ${lm.alpha}")
-          Seq(lm.input, lm.ref)
         case l3: Lm3Score =>
           if (l3.alpha <= 0.0) throw new IllegalArgumentException(
             s"node '${n.name}': lm3Score needs alpha > 0, got ${l3.alpha}")
@@ -4017,7 +3090,6 @@ object Program {
             throw new IllegalArgumentException(
               s"node '${n.name}': lm3Score lambdas must be non-negative and " +
                 s"sum to 1, got (${l3.l3}, ${l3.l2}, ${l3.l1})")
-          Seq(l3.input)
         case la: Lm3Against =>
           if (la.alpha <= 0.0) throw new IllegalArgumentException(
             s"node '${n.name}': lm3Against needs alpha > 0, got ${la.alpha}")
@@ -4028,22 +3100,17 @@ object Program {
             throw new IllegalArgumentException(
               s"node '${n.name}': lm3Against lambdas must be non-negative " +
                 s"and sum to 1, got (${la.l3}, ${la.l2}, ${la.l1})")
-          Seq(la.input, la.ref)
-        case ln: LmNScore =>
-          checkNgram(n.name, "lmnScore", ln.order, ln.alpha, ln.lambdas)
-          Seq(ln.input)
+        case ln: LmNScore => checkNgram(n.name, "lmnScore", ln.order, ln.alpha, ln.lambdas)
         case na: LmNAgainst =>
           checkNgram(n.name, "lmnAgainst", na.order, na.alpha, na.lambdas)
           if (na.minCount < 1) throw new IllegalArgumentException(
             s"node '${n.name}': lmnAgainst needs minCount >= 1, got ${na.minCount}")
-          Seq(na.input, na.ref)
         case br: Bm25Retrieve =>
           if (br.k <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': bm25Retrieve needs k > 0, got ${br.k}")
           if (br.qIdCol == br.idCol) throw new IllegalArgumentException(
             s"node '${n.name}': bm25Retrieve qIdCol and idCol are both " +
               s"'${br.idCol}' — rename one (output is (qIdCol, idCol, bm25, rank))")
-          Seq(br.input, br.queries)
         case hr: HybridRrf =>
           if (hr.k <= 0 || hr.legK < 0 || hr.kRrf <= 0)
             throw new IllegalArgumentException(
@@ -4059,144 +3126,107 @@ object Program {
               s"node '${n.name}': hybridRrf IVF routing takes BOTH " +
                 s"ivfCells > 0 and nProbe > 0 (and ivfIters >= 1), got " +
                 s"ivfCells=${hr.ivfCells} nProbe=${hr.nProbe} ivfIters=${hr.ivfIters}")
-          Seq(hr.input, hr.queries)
         case wp: WinnowPairs =>
           if (wp.n < 1 || wp.w < 1 || wp.minShared < 1 || wp.maxBucket < 2)
             throw new IllegalArgumentException(
               s"node '${n.name}': winnowPairs needs n >= 1, w >= 1, " +
                 s"minShared >= 1 and maxBucket >= 2, got " +
                 s"(${wp.n}, ${wp.w}, ${wp.minShared}, ${wp.maxBucket})")
-          Seq(wp.input)
-        case ks: KnScore =>
-          checkKn(n.name, "knScore", ks.order, ks.discount)
-          Seq(ks.input)
+        case ks: KnScore => checkKn(n.name, "knScore", ks.order, ks.discount)
         case sx: SentChunk =>
           if (sx.maxTokens <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': chunkSentences needs maxTokens > 0, got ${sx.maxTokens}")
-          Seq(sx.input)
         case ka: KnAgainst =>
           checkKn(n.name, "knAgainst", ka.order, ka.discount)
           if (ka.minCount < 1) throw new IllegalArgumentException(
             s"node '${n.name}': knAgainst needs minCount >= 1, got ${ka.minCount}")
-          Seq(ka.input, ka.ref)
         case kl: KnAgainstLang =>
           checkKn(n.name, "knAgainstLang", kl.order, kl.discount)
           if (kl.minCount < 1) throw new IllegalArgumentException(
             s"node '${n.name}': knAgainstLang needs minCount >= 1, got ${kl.minCount}")
-          Seq(kl.input, kl.ref)
         case jl: LmAgainstLang =>
           checkNgram(n.name, "lmAgainstLang", jl.order, jl.alpha, jl.lambdas)
           if (jl.minCount < 1) throw new IllegalArgumentException(
             s"node '${n.name}': lmAgainstLang needs minCount >= 1, got ${jl.minCount}")
-          Seq(jl.input, jl.ref)
         case ml: MknAgainstLang =>
           checkMkn(n.name, "mknAgainstLang", ml.order, ml.fb1, ml.fb2, ml.fb3)
           if (ml.minCount < 1) throw new IllegalArgumentException(
             s"node '${n.name}': mknAgainstLang needs minCount >= 1, got ${ml.minCount}")
-          Seq(ml.input, ml.ref)
-        case ms: MknScore =>
-          checkMkn(n.name, "mknScore", ms.order, ms.fb1, ms.fb2, ms.fb3)
-          Seq(ms.input)
+        case ms: MknScore => checkMkn(n.name, "mknScore", ms.order, ms.fb1, ms.fb2, ms.fb3)
         case as: ArpaScore =>
           if (as.path.trim.isEmpty) throw new IllegalArgumentException(
             s"node '${n.name}': arpaScore needs a non-empty artifact path")
-          Seq(as.input)
         case al: ArpaScoreLang =>
           if (al.dir.trim.isEmpty) throw new IllegalArgumentException(
             s"node '${n.name}': arpaScoreLang needs a non-empty artifact dir")
-          Seq(al.input)
-        case bi: BpeIds => Seq(bi.input, bi.merges)
         case st: SpTokenize =>
           if (st.path.trim.isEmpty) throw new IllegalArgumentException(
             s"node '${n.name}': spTokenize needs a non-empty vocab path")
-          Seq(st.input)
         case si: SpIds =>
           if (si.path.trim.isEmpty) throw new IllegalArgumentException(
             s"node '${n.name}': spIds needs a non-empty vocab path")
-          Seq(si.input)
         case sv: SaveArtifact =>
           if (sv.dir.trim.isEmpty || sv.kind.trim.isEmpty)
             throw new IllegalArgumentException(
               s"node '${n.name}': saveArtifact needs a non-empty dir and kind")
-          Seq(sv.input)
         case la: LoadArtifact =>
           if (la.dir.trim.isEmpty || la.table.trim.isEmpty)
             throw new IllegalArgumentException(
               s"node '${n.name}': loadArtifact needs a non-empty dir and table")
-          Nil
         case ma: MknAgainst =>
           checkMkn(n.name, "mknAgainst", ma.order, ma.fb1, ma.fb2, ma.fb3)
           if (ma.minCount < 1) throw new IllegalArgumentException(
             s"node '${n.name}': mknAgainst needs minCount >= 1, got ${ma.minCount}")
-          Seq(ma.input, ma.ref)
         case es: ExactSubstr =>
           if (es.minLen < 2 || es.maxExtend < 1 || es.minDocs < 2)
             throw new IllegalArgumentException(
               s"node '${n.name}': exactSubstr needs minLen >= 2, " +
                 s"maxExtend >= 1 and minDocs >= 2, got " +
                 s"(${es.minLen}, ${es.maxExtend}, ${es.minDocs})")
-          Seq(es.input)
         case pt: PplThresholds =>
           checkKn(n.name, "pplThresholds", pt.order, pt.discount)
           if (pt.buckets < 2) throw new IllegalArgumentException(
             s"node '${n.name}': pplThresholds needs buckets >= 2, got ${pt.buckets}")
           if (pt.minCount < 1) throw new IllegalArgumentException(
             s"node '${n.name}': pplThresholds needs minCount >= 1, got ${pt.minCount}")
-          Seq(pt.input, pt.ref)
-        case ba: BucketApply => Seq(ba.input, ba.thresholds)
         case rb: RankBuckets =>
           if (rb.buckets < 2) throw new IllegalArgumentException(
             s"node '${n.name}': rankBuckets needs buckets >= 2, got ${rb.buckets}")
-          Seq(rb.input)
         case ds: DsirScore =>
           if (ds.alpha <= 0.0 || ds.buckets <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': dsirScore needs alpha > 0 and buckets > 0, " +
               s"got alpha=${ds.alpha} buckets=${ds.buckets}")
-          Seq(ds.input, ds.target, ds.raw)
         case tf: TokenFreq =>
           if (tf.depth < 1 || tf.width < 2 || tf.rareMax < 0)
             throw new IllegalArgumentException(
               s"node '${n.name}': tokenFreq needs depth >= 1, width >= 2 and " +
                 s"rareMax >= 0, got depth=${tf.depth} width=${tf.width} rareMax=${tf.rareMax}")
-          Seq(tf.input, tf.ref)
-        case be: BpeEncode => Seq(be.input, be.merges)
         case ue: UnigramEncode =>
           if (ue.maxPieceLen < 1 || ue.maxPieceLen > 16)
             throw new IllegalArgumentException(
               s"node '${n.name}': unigramEncode needs maxPieceLen in 1..16, " +
                 s"got ${ue.maxPieceLen}")
-          Seq(ue.input, ue.vocab)
         case ui: UnigramIds =>
           if (ui.maxPieceLen < 1 || ui.maxPieceLen > 16)
             throw new IllegalArgumentException(
               s"node '${n.name}': unigramIds needs maxPieceLen in 1..16, " +
                 s"got ${ui.maxPieceLen}")
-          Seq(ui.input, ui.vocab)
         case wt: WpTokenize =>
           if (wt.maxInputChars < 1) throw new IllegalArgumentException(
             s"node '${n.name}': wpTokenize needs maxInputChars >= 1, " +
               s"got ${wt.maxInputChars}")
-          Seq(wt.input, wt.vocab)
         case we: WpEncode =>
           if (we.maxInputChars < 1) throw new IllegalArgumentException(
             s"node '${n.name}': wpEncode needs maxInputChars >= 1, " +
               s"got ${we.maxInputChars}")
-          Seq(we.input, we.vocab)
         case wi: WpIds =>
           if (wi.maxInputChars < 1) throw new IllegalArgumentException(
             s"node '${n.name}': wpIds needs maxInputChars >= 1, " +
               s"got ${wi.maxInputChars}")
-          Seq(wi.input, wi.vocab)
-        case bb: ByteBpeEncode => Seq(bb.input, bb.merges)
-        case bj: ByteBpeIds => Seq(bj.input, bj.merges)
-        case bv: ByteBpeIdsVocab => Seq(bv.input, bv.merges, bv.vocab)
-        case bl: BpeLangEncode => Seq(bl.input, bl.merges)
-        case ei: EncodeIngest => Seq(ei.input, ei.vocab)
         case di: DecontamIngest =>
           if (di.n < 1 || di.minOverlap < 1) throw new IllegalArgumentException(
             s"node '${n.name}': decontaminateIngest needs n >= 1 and " +
               s"minOverlap >= 1, got n=${di.n} minOverlap=${di.minOverlap}")
-          Seq(di.input, di.bench)
         case ip: IvfProbe =>
           if (ip.topK <= 0 || ip.nProbe <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': ivfProbe needs topK > 0 and nProbe > 0, " +
@@ -4204,7 +3234,6 @@ object Program {
           if (ip.qIdCol == ip.idCol) throw new IllegalArgumentException(
             s"node '${n.name}': ivfProbe query and corpus id columns must " +
               s"differ (both are '${ip.idCol}')")
-          Seq(ip.input, ip.corpus, ip.centroids)
         case xd: ExactDedup =>
           if (xd.numBits < 64 || xd.numBits % 64 != 0 || xd.numBits > (1 << 23))
             throw new IllegalArgumentException(s"node '${n.name}': exactDedup " +
@@ -4212,56 +3241,43 @@ object Program {
           if (xd.numHashes < 1 || xd.numHashes > 32)
             throw new IllegalArgumentException(s"node '${n.name}': exactDedup " +
               s"numHashes must be in [1,32], got ${xd.numHashes}")
-          Seq(xd.input, xd.ref)
         case gg: GopherGate =>
           if (gg.minWords < 1 || gg.maxWords < gg.minWords)
             throw new IllegalArgumentException(s"node '${n.name}': gopherGate " +
               s"needs 1 <= minWords <= maxWords, got [${gg.minWords}, ${gg.maxWords}]")
-          Seq(gg.input)
         case nb: NbClassify =>
           if (nb.alpha <= 0.0) throw new IllegalArgumentException(
             s"node '${n.name}': nbClassify needs alpha > 0, got ${nb.alpha}")
-          Seq(nb.input, nb.ref)
         case hs: HashSample =>
           if (hs.rate < 0.0 || hs.rate > 1.0) throw new IllegalArgumentException(
             s"node '${n.name}': hashSample rate must be in [0,1], got ${hs.rate}")
-          Seq(hs.input)
         case ss2: StratifiedSample =>
           if ((ss2.defaultRate +: ss2.rates.values.toSeq).exists(r => r < 0.0 || r > 1.0))
             throw new IllegalArgumentException(
               s"node '${n.name}': stratifiedSample rates must be in [0,1]")
-          Seq(ss2.input)
-        case as2: AssignSplit =>
-          checkSplits(n.name, as2.splits); Seq(as2.input)
+        case as2: AssignSplit => checkSplits(n.name, as2.splits)
         case wm: WeightedMix =>
           if ((wm.defaultWeight +: wm.weights.values.toSeq).exists(_ < 0.0))
             throw new IllegalArgumentException(
               s"node '${n.name}': weightedMix weights must be non-negative")
-          Seq(wm.input)
         case cp: CapPerKey =>
           if (cp.n <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': capPerKey needs n > 0, got ${cp.n}")
-          Seq(cp.input)
         case ek: ExactKSample =>
           if (ek.k <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': exactK needs k > 0, got ${ek.k}")
-          Seq(ek.input)
         case es: ExactKStrata =>
           if (es.k <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': exactKStrata needs k > 0, got ${es.k}")
-          Seq(es.input)
         case ct: CapTokens =>
           if (ct.budget <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': capTokens needs budget > 0, got ${ct.budget}")
-          Seq(ct.input)
         case tm: TemperatureMix =>
           if (tm.alpha <= 0.0 || tm.alpha > 1.0) throw new IllegalArgumentException(
             s"node '${n.name}': temperatureMix alpha must be in (0,1], got ${tm.alpha}")
           if (tm.budgetRows <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': temperatureMix needs budgetRows > 0, got ${tm.budgetRows}")
-          Seq(tm.input)
-        case sp: SafeSplit =>
-          checkSplits(n.name, sp.splits); Seq(sp.input, sp.pairs)
+        case sp: SafeSplit => checkSplits(n.name, sp.splits)
         case dc: DedupCorpus =>
           if (dc.bands <= 0 || dc.k < dc.bands || dc.k % dc.bands != 0)
             throw new IllegalArgumentException(s"node '${n.name}': dedupCorpus " +
@@ -4269,7 +3285,6 @@ object Program {
           if (dc.threshold <= 0.0 || dc.threshold > 1.0)
             throw new IllegalArgumentException(s"node '${n.name}': dedupCorpus " +
               s"threshold must be in (0,1], got ${dc.threshold}")
-          Seq(dc.input)
         case db: DedupCorpusBest =>
           parse(db.score, s"node ${n.name}")
           if (db.bands <= 0 || db.k < db.bands || db.k % db.bands != 0)
@@ -4278,65 +3293,47 @@ object Program {
           if (db.threshold <= 0.0 || db.threshold > 1.0)
             throw new IllegalArgumentException(s"node '${n.name}': dedupCorpusBest " +
               s"threshold must be in (0,1], got ${db.threshold}")
-          Seq(db.input)
         case sd: SemanticDedup =>
           if (sd.threshold <= 0.0 || sd.threshold > 1.0)
             throw new IllegalArgumentException(s"node '${n.name}': semanticDedup " +
               s"threshold must be in (0,1], got ${sd.threshold}")
-          Seq(sd.input, sd.centroids)
         case sb: SemanticDedupBest =>
           parse(sb.score, s"node ${n.name}")
           if (sb.threshold <= 0.0 || sb.threshold > 1.0)
             throw new IllegalArgumentException(s"node '${n.name}': semanticDedupBest " +
               s"threshold must be in (0,1], got ${sb.threshold}")
-          Seq(sb.input, sb.centroids)
         case ls: LineScrub =>
           if (ls.minWords < 1) throw new IllegalArgumentException(
             s"node '${n.name}': lineScrub needs minWords >= 1, got ${ls.minWords}")
-          Seq(ls.input)
         case pp: ParaScrub =>
           if (pp.minWords < 1) throw new IllegalArgumentException(
             s"node '${n.name}': paraScrub needs minWords >= 1, got ${pp.minWords}")
-          Seq(pp.input)
         case sc: SpanScrub =>
           if (sc.k < 2 || sc.minDocs < 2) throw new IllegalArgumentException(
             s"node '${n.name}': spanScrub needs k >= 2 and minDocs >= 2, " +
               s"got k=${sc.k} minDocs=${sc.minDocs}")
-          Seq(sc.input)
-        case qa: QualityAnnotate => Seq(qa.input)
-        case ps: PiiScrub => Seq(ps.input)
-        case li: LangId => Seq(li.input)
         case ct2: ChunkTokens =>
           if (ct2.chunkSize <= 0 || ct2.stride <= 0 || ct2.stride > ct2.chunkSize)
             throw new IllegalArgumentException(s"node '${n.name}': chunkTokens " +
               s"needs 0 < stride <= chunkSize, got chunkSize=${ct2.chunkSize} " +
               s"stride=${ct2.stride}")
-          Seq(ct2.input)
         case pc: PackChunks =>
           if (pc.budget <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': packChunks needs budget > 0, got ${pc.budget}")
-          Seq(pc.input)
         case wn: Winnow =>
           if (wn.n < 1 || wn.w < 1) throw new IllegalArgumentException(
             s"node '${n.name}': winnow needs n >= 1 and w >= 1, " +
               s"got n=${wn.n} w=${wn.w}")
-          Seq(wn.input)
-        case rp: Repetition => Seq(rp.input)
-        case nm2: Normalize => Seq(nm2.input)
-        case sm: StripMarkup => Seq(sm.input)
         case jp: JlProjection =>
           if (jp.outDim < 1 || jp.outDim > 4096 || jp.seed < 0)
             throw new IllegalArgumentException(s"node '${n.name}': jlProject " +
               s"needs outDim in [1,4096] and seed >= 0, got outDim=${jp.outDim} " +
               s"seed=${jp.seed}")
-          Seq(jp.input)
         case tk: TopKPerKey =>
           parse(tk.score, s"node ${n.name}")
           nonEmpty(tk.keys, "grouping key", n.name)
           if (tk.k <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': topkPerKey needs k > 0, got ${tk.k}")
-          Seq(tk.input)
-        case sq: Sq8Ingest => Seq(sq.input, sq.stats)
         case zo: ZOrder =>
           nonEmpty(zo.cols, "z-order column", n.name)
           try graft.operators.Layout.checkDims(zo.cols.size, zo.bits)
@@ -4345,9 +3342,9 @@ object Program {
           if (zo.numFiles < 1)
             throw new IllegalArgumentException(s"node '${n.name}': zorder " +
               s"needs numFiles >= 1, got ${zo.numFiles}")
-          Seq(zo.input)
+        case _ =>
       }
-      inputs.foreach(i => if (!defined.contains(i)) throw new IllegalArgumentException(
+      nodeInputs(n).foreach(i => if (!defined.contains(i)) throw new IllegalArgumentException(
         s"node '${n.name}' references '$i' before it is defined"))
       defined += n.name
     }

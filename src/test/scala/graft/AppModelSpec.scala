@@ -797,6 +797,30 @@ class AppModelSpec extends SparkSpec {
       s"capture->toJson->fromJson->runProgram replays the recorded dataflow, got $replay")
   }
 
+  test("capture: fullJoinLenient records the lenient full Join node") {
+    import graft.api.Program
+    import graft.api.Program._
+    import graft.api.MStream
+    // BatchApiSpec's full-join residual trace: the lenient face keeps the
+    // arriving side of every failing pair
+    val lefts = Seq((2L, "a", 5.0), (3L, "a", 50.0)).toDF("seq", "k", "v")
+    val rights = Seq((1L, "a", 100), (4L, "a", 600), (5L, "a", 400)).toDF("seq", "k", "w")
+    val rec = Program.Rec.external("ls", new MStream(lefts, Seq("seq")))
+      .fullJoinLenient(Program.Rec.external("rs", new MStream(rights, Seq("seq"))),
+        "l.k = r.k AND r.w > l.v * 10", "l.seq" -> "lseq", "r.w" -> "rw").as("j")
+    val captured = Program.capture(rec)
+    assert(captured.nodes.last == Join("j", "full", "ls", "rs",
+      "l.k = r.k AND r.w > l.v * 10", Seq(Field("l.seq", "lseq"), Field("r.w", "rw")),
+      lenientResidual = true))
+    val json = Program.toJson(captured)
+    assert(json.contains("\"lenientResidual\":true") && Program.fromJson(json) == captured)
+    val live = rec.stream.df.collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+                 Option(r.get(1)).map(_.asInstanceOf[Int]))).toSet
+    assert(live == Set((None, Some(100)), (Some(2L), Some(100)), (Some(3L), None),
+      (Some(3L), Some(600)), (None, Some(400))), live.toString)
+  }
+
   test("capture: one captured document runs batch AND streaming") {
     import graft.api.Program
     import graft.api.MStream

@@ -274,6 +274,32 @@ class ByteBpeSpec extends SparkSpec {
     } finally graft.api.Pinned.release(spark)
   }
 
+  test("capture: byteBpeEncodeIdsVocab records the ByteBpeIdsVocab node") {
+    import graft.api.Program
+    import graft.api.Program._
+    try {
+      val docs = corpus.take(12).toDF("doc_id", "text")
+      val merges = TextOps.trainByteBpeMerges(docs, "text", 4)
+      // a foreign vocabulary: every single byte symbol and merge output
+      // of the trained table, numbered from 100
+      val pieces = merges.collect().flatMap(r =>
+        Seq(r.getString(1), r.getString(2), r.getString(1) + r.getString(2))).distinct.sorted
+      val vocab = pieces.zipWithIndex.map { case (p, i) => (p, 100L + i) }.toSeq
+        .toDF("piece", "gpt_id")
+      val rec = Program.Rec.external("in", MStream(docs))
+        .byteBpeEncodeIdsVocab(Program.Rec.external("m", MStream(merges)),
+          Program.Rec.external("v", MStream(vocab)), "text", oovId = -9L, as = "gz").as("a")
+      val cap = Program.capture(rec)
+      assert(cap.nodes.last == ByteBpeIdsVocab("a", "in", "m", "v", "text", -9L, "gz"))
+      assert(Program.fromJson(Program.toJson(cap)) == cap)
+      val direct = TextOps.byteBpeEncodeIdsImported(MStream(docs), merges, vocab, "text",
+        -9L, "gz")
+      def ids(df: org.apache.spark.sql.DataFrame) = df.select(col("doc_id"), col("gz"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toList)).sortBy(_._1).toSeq
+      assert(ids(rec.stream.df) == ids(direct.df), "live capture equals the direct API")
+    } finally graft.api.Pinned.release(spark)
+  }
+
   test("empty text emits (0, 0); contracts reject streaming merge tables") {
     val docs = Seq((1L, ""), (2L, "ab ab")).toDF("doc_id", "text")
     try {

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * every public method on the user-facing API objects/classes must be
  * classified as either
  *
- *   - `node("<op>")` — lowered by that v6 program-document node (the op
- *     name is verified to exist in Program.scala's serializer), or
+ *   - `node("<op>")` — lowered by that program-document node (the op
+ *     name is verified to be in the document codec's op table), or
  *   - `excluded("<reason>")` — a documented exclusion (building block of
  *     a node's lowering, driver-side artifact/schema helper, constant,
  *     diagnostic output, or a Scala-lambda face that is by design not
@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
  *
  * The surfaces are enumerated by reflection, so ADDING a public method
  * without classifying it here FAILS this spec — program-document coverage
- * cannot silently rot. Classifying is cheap; the point is that the choice
+ * cannot silently rot. The converse holds too: every op in the codec's
+ * table must be claimed by some surface method or be named on the
+ * document-only list with its reason. Classifying is cheap; the point is that the choice
  * is recorded and reviewed, mirroring the reference's stance that every
  * stream operation serializes into the ApplicationInstance artifact
  * (milan-lang `ApplicationInstance`/`StreamGraph`).
@@ -47,10 +49,17 @@ class ProgramNodeCoverageSpec extends AnyFunSuite {
       .toSet
   }
 
-  private lazy val programSource = {
-    val src = java.nio.file.Paths.get("src/main/scala/graft/api/Program.scala")
-    new String(java.nio.file.Files.readAllBytes(src), "UTF-8")
-  }
+  /** Ops claimed by the surface methods checked so far. */
+  private val claimed = scala.collection.mutable.Set.empty[String]
+
+  /** Ops with no surface method of their own, and why. */
+  private val documentOnly = Map(
+    "external" -> "a source bound by the configuration, not an operator",
+    "applyFn" -> "the Program.Functions escape: a registered function by name",
+    "beginCycle" -> "feedback cycles are authored on Program.Rec (Cycles lowers them)",
+    "closeCycle" -> "feedback cycles are authored on Program.Rec (Cycles lowers them)",
+    "saveArtifact" -> "the Artifacts store's tee, authored on Program.Rec",
+    "loadArtifact" -> "the Artifacts store's reader, authored on Program.Rec")
 
   private def check(className: String, classified: Map[String, Status]): Unit = {
     val actual = publicMethods(className)
@@ -62,8 +71,9 @@ class ProgramNodeCoverageSpec extends AnyFunSuite {
     assert(stale.isEmpty,
       s"$className: classified methods no longer on the surface ${stale.toSeq.sorted}")
     classified.collect { case (m, Node(op)) =>
-      assert(programSource.contains(s""""op" -> "$op""""),
-        s"$className.$m claims node '$op' but Program.scala serializes no such op")
+      assert(graft.api.Program.nodeOps.contains(op),
+        s"$className.$m claims node '$op' but the document codec has no such op")
+      claimed += op
     }
   }
 
@@ -419,5 +429,16 @@ class ProgramNodeCoverageSpec extends AnyFunSuite {
       "saltedAgg" -> excluded("physical-plan (salting) variant of the " +
         "groupSelect node — the program face IS groupSelect; skew salting " +
         "is an execution-strategy concern, not program semantics")))
+  }
+
+  test("every document op is claimed by a surface method or is document-only") {
+    // runs last: `claimed` holds the ops of every surface checked above
+    assert(claimed.nonEmpty, "run the whole suite: the surface tests fill `claimed`")
+    val ops = graft.api.Program.nodeOps
+    val unclaimed = ops -- claimed -- documentOnly.keySet
+    assert(unclaimed.isEmpty, s"document ops no surface method claims: " +
+      s"${unclaimed.toSeq.sorted} — claim each in a surface test or list it in documentOnly")
+    val stale = documentOnly.keySet.filter(op => !ops.contains(op) || claimed.contains(op))
+    assert(stale.isEmpty, s"documentOnly names ops that are gone or claimed: ${stale.toSeq.sorted}")
   }
 }

@@ -302,6 +302,25 @@ class WordPieceSpec extends SparkSpec {
     } finally graft.api.Pinned.release(spark)
   }
 
+  test("capture: wpEncodeIds records the WpIds node") {
+    import graft.api.Program
+    import graft.api.Program._
+    try {
+      val docs = corpus.take(15).toDF("doc_id", "text")
+      val vocab = WordPiece.trainVocab(docs, "text", numMerges = 4)
+      val rec = Program.Rec.external("in", MStream(docs))
+        .wpEncodeIds(Program.Rec.external("v", MStream(vocab)), "text",
+          unk = "<unk>", maxInputChars = 9, oovId = -3L, as = "wids").as("a")
+      val cap = Program.capture(rec)
+      assert(cap.nodes.last == WpIds("a", "in", "v", "text", "<unk>", 9, -3L, "wids"))
+      assert(Program.fromJson(Program.toJson(cap)) == cap)
+      val direct = WordPiece.encodeIds(MStream(docs), vocab, "text", "<unk>", 9, -3L, "wids")
+      def ids(df: org.apache.spark.sql.DataFrame) = df.select(col("doc_id"), col("wids"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toList)).sortBy(_._1).toSeq
+      assert(ids(rec.stream.df) == ids(direct.df), "live capture equals the direct API")
+    } finally graft.api.Pinned.release(spark)
+  }
+
   test("contracts: vocab shape, dense export ids, malformed files, bounds") {
     val docs = Seq((1L, "ab")).toDF("doc_id", "text")
     val bad1 = intercept[IllegalArgumentException](
