@@ -269,6 +269,14 @@ object Dedup {
     v
   }
 
+  /** [[longConf]] narrowed to Int, with a named range error. */
+  private[graft] def intConf(spark: org.apache.spark.sql.SparkSession,
+                             key: String, default: Int): Int = {
+    val v = longConf(spark, key, default)
+    require(v <= Int.MaxValue, s"$key must fit an Int, got $v")
+    v.toInt
+  }
+
   /** Hot-key-cover cap conf: like [[longConf]] but 0 is the EXPLICIT
     * ESCAPE — it disables the cover entirely (plain key-equi join, no
     * census, no salt columns) for corpora whose key entropy is trusted

@@ -2899,13 +2899,16 @@ object TextOps {
   private def bpeWrap(word: Column): Column =
     array_join(transform(chars(word), c => concat(lit(BpeS), c, lit(BpeE))), "")
 
-  private def bpeApply(s: Column, merges: Seq[(String, String)]): Column =
+  /** Rule (a, b) rewrites `⟨a⟩⟨b⟩` to `⟨merged(a, b)⟩`: `a + b` for BPE,
+    * [[WordPiece.mergedSym]] for WordPiece. */
+  private def bpeApply(s: Column, merges: Seq[(String, String)],
+                       merged: (String, String) => String = _ + _): Column =
     merges.foldLeft(s) { case (c, (a, b)) =>
       org.apache.spark.sql.functions.replace(c,
-        lit(BpeS + a + BpeE + BpeS + b + BpeE), lit(BpeS + a + b + BpeE))
+        lit(BpeS + a + BpeE + BpeS + b + BpeE), lit(BpeS + merged(a, b) + BpeE))
     }
 
-  private def bpeSymbols(s: Column): Column =
+  private[pipeline] def bpeSymbols(s: Column): Column =
     filter(split(s, s"[$BpeS$BpeE]"), x => x =!= "")
 
   /** Distributed BPE merge training (Sennrich, Haddow & Birch 2016,
@@ -2917,7 +2920,8 @@ object TextOps {
     * reference algorithm's statistic), (b) picks the most frequent pair
     * (ties to the lexicographically smaller), and (c) rewrites symbols
     * by applying the merge greedily left-to-right. The vocabulary is
-    * pinned once; each round scans it with the PENDING merge chain
+    * pinned once; each round ([[mergeRounds]], the loop every subword
+    * trainer shares) scans it with the PENDING merge chain
     * applied as chained literal replaces, and every
     * `graft.bpe.rematEvery` rounds (default 64) the vocabulary is
     * RE-MATERIALIZED with the chain applied and the chain reset — so
@@ -2942,7 +2946,6 @@ object TextOps {
     require(numMerges >= 1 && numMerges <= 65536,
       s"numMerges=$numMerges: each merge is one driver-coordinated round " +
         "and the merge table is a driver artifact; keep <= 65536")
-    val spark = docs.sparkSession
     // The ONE corpus-scale pass (the word count) runs in the CALLER's
     // session at its full shuffle width — narrowing applies to the tiny
     // per-round jobs over the distinct-word table, never to the corpus
@@ -2951,29 +2954,65 @@ object TextOps {
       .select(explode(words(col(textCol))).as("__w"))
       .groupBy("__w").agg(count(lit(1)).as("__c"))
       .select(bpeWrap(col("__w")).as("__s"), col("__c")))
-    bpeTrainCore(spark, vocab0, vocab0Ids, numMerges)
+    bpeMergeTable(vocab0, vocab0Ids, numMerges)
   }
 
-  /** The merge-round loop shared by [[trainBpeMerges]] (whitespace
-    * words, raw chars) and [[trainByteBpeMerges]] (GPT-2 pre-tokens,
-    * byte-mapped alphabet): takes the pinned bracketed (symbol-string,
-    * count) working set, returns the (merge_rank, lhs, rhs) table.
-    * Raw-pair-count scoring, lexicographic ties, greedy left-to-right
-    * rewrite, vocabulary re-materialization with collapsed-unit pruning
-    * every `graft.bpe.rematEvery` rounds. */
-  private def bpeTrainCore(spark: org.apache.spark.sql.SparkSession,
-                           vocab0: org.apache.spark.sql.DataFrame,
-                           vocab0Ids: Set[Int],
-                           numMerges: Int): org.apache.spark.sql.DataFrame = {
+  /** The BPE pick of [[mergeRounds]] for [[trainBpeMerges]] and
+    * [[trainByteBpeMerges]]: the raw pair count's top-1, ties to the
+    * lexicographically smaller pair. Output (merge_rank, lhs, rhs). */
+  private def bpeMergeTable(vocab0: org.apache.spark.sql.DataFrame, vocab0Ids: Set[Int],
+                            numMerges: Int): org.apache.spark.sql.DataFrame = {
+    val spark = vocab0.sparkSession
     import spark.implicits._
-    // one conf-parsing contract for the whole pipeline family
-    // ([[Dedup.longConf]]), narrowed to Int with a named range error
-    def intConf(key: String, default: Int): Int = {
-      val v = Dedup.longConf(spark, key, default)
-      require(v <= Int.MaxValue, s"$key must fit an Int, got $v")
-      v.toInt
-    }
-    val rematEvery = intConf("graft.bpe.rematEvery", 64)
+    mergeRounds(vocab0, vocab0Ids, numMerges, _ + _, prune = true)(
+      pairCounts(_).orderBy(col("__n").desc, col("a"), col("b")).limit(1))
+      .map { case (_, r, a, b) => (r, a, b) }.toDF("merge_rank", "lhs", "rhs")
+  }
+
+  /** The language key of a working set: `__l` when it has one. */
+  private def langKey(df: org.apache.spark.sql.DataFrame): Seq[Column] =
+    df.columns.toSeq.filter(_ == "__l").map(col)
+
+  /** Weighted adjacent-pair counts of a round's ([`__l`,] `__y`, `__c`)
+    * frame over its words of two or more symbols: ([`__l`,] a, b, `__n`).
+    * Overlapping occurrences count, the reference algorithms' statistic. */
+  private[pipeline] def pairCounts(
+      cur: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val keys = langKey(cur)
+    cur.where(size(col("__y")) >= 2)
+      .select(keys :+ explode(arrays_zip(
+        slice(col("__y"), lit(1), size(col("__y")) - 1).as("a"),
+        slice(col("__y"), lit(2), size(col("__y")) - 1).as("b"))).as("__p") :+
+        col("__c"): _*)
+      .groupBy(keys :+ col("__p.a").as("a") :+ col("__p.b").as("b"): _*)
+      .agg(sum(col("__c")).as("__n"))
+  }
+
+  /** The merge-round loop of every subword trainer ([[trainBpeMerges]],
+    * [[trainByteBpeMerges]], [[trainBpeMergesByLang]],
+    * [[WordPiece.trainVocab]]). `vocab0` is the front's pinned working
+    * set ([`__l`,] `__s` bracketed symbols, `__c` word count) and
+    * `vocab0Ids` its checkpoint ids, released here. Each round scans the
+    * working set with the PENDING merge chain applied as chained literal
+    * replaces — one chain per language key, each a CASE branch (bounded by
+    * the trainer's language cap x rematEvery); an unkeyed set applies its
+    * one chain bare — and `pick` maps that round's ([`__l`,] `__y`
+    * symbols, `__c`) frame to at most one ([`__l`,] a, b) row per key.
+    * Every `graft.bpe.rematEvery` rounds (default 64) the working set is
+    * RE-MATERIALIZED with the chains applied and the chains reset, so
+    * per-round expression depth and cost are O(rematEvery), constant in
+    * the total merge count. With `prune`, re-materialization also drops
+    * words already collapsed to one symbol (exact when `pick` reads pair
+    * counts alone: merges never split a symbol, so such a word never
+    * contributes a pair again). The loop ends after `numMerges` rounds or when a round picks
+    * nothing. Returns (lang key, round, a, b) in pick order. */
+  private[pipeline] def mergeRounds(
+      vocab0: org.apache.spark.sql.DataFrame, vocab0Ids: Set[Int], numMerges: Int,
+      merged: (String, String) => String, prune: Boolean)(
+      pick: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : Seq[(Option[String], Int, String, String)] = {
+    val spark = vocab0.sparkSession
+    val rematEvery = Dedup.intConf(spark, "graft.bpe.rematEvery", 64)
     // The training loop runs thousands of TINY driver-coordinated jobs
     // over the (word, count) vocabulary — a table of distinct WORDS, which
     // is small even when the corpus is not (a 100 TB crawl has millions of
@@ -2982,7 +3021,7 @@ object TextOps {
     // overhead — not data — dominates the trainer. Keep the working set on
     // a few partitions (graft.bpe.vocabPartitions, default 8) and narrow
     // the per-round shuffle to match (in the cloned loop session below).
-    val vocabParts = intConf("graft.bpe.vocabPartitions", 8)
+    val vocabParts = Dedup.intConf(spark, "graft.bpe.vocabPartitions", 8)
     // The thousands of tiny driver-coordinated rounds run in a CLONED
     // session (shared SparkContext, PRIVATE SQLConf): the narrow shuffle
     // width and AQE-off (whose per-stage re-planning round trip dominates
@@ -2992,38 +3031,44 @@ object TextOps {
     val loop = spark.newSession()
     loop.conf.set("spark.sql.shuffle.partitions", vocabParts.toString)
     loop.conf.set("spark.sql.adaptive.enabled", "false")
+    val keys = langKey(vocab0)
     var vocab = loop.createDataFrame(vocab0.rdd, vocab0.schema)
       .coalesce(vocabParts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var vocabCpIds = Set.empty[Int]
     def releaseIds(ids: Set[Int]): Unit = graft.api.Pinned.unpersist(spark, ids)
+    // merges learned since the last re-materialization, per language key
+    // (the null language's chain, or an unkeyed set's one chain, sits
+    // under None) — the only chains each round's scan replays
+    val pending = scala.collection.mutable.LinkedHashMap
+      .empty[Option[String], scala.collection.mutable.ArrayBuffer[(String, String)]]
+    def applyPending(s: Column): Column =
+      if (keys.isEmpty) bpeApply(s, pending.get(None).toSeq.flatten, merged)
+      else pending.foldLeft(s) { case (acc, (l, ms)) =>
+        val cond = l.map(v => col("__l") === lit(v)).getOrElse(col("__l").isNull)
+        when(cond, bpeApply(s, ms.toSeq, merged)).otherwise(acc)
+      }
     try {
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      // merges learned since the last vocabulary re-materialization — the
-      // only chain each round's scan replays
-      val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Option[String], Int, String, String)]
       var r = 0
       var exhausted = false
+      var sinceRemat = 0
       while (r < numMerges && !exhausted) {
-        val syms = bpeSymbols(bpeApply(col("__s"), pending.toSeq))
-        val best = vocab
-          .select(syms.as("__y"), col("__c")).where(size(col("__y")) >= 2)
-          .select(explode(arrays_zip(
-            slice(col("__y"), lit(1), size(col("__y")) - 1).as("a"),
-            slice(col("__y"), lit(2), size(col("__y")) - 1).as("b"))).as("__p"),
-            col("__c"))
-          .groupBy(col("__p.a").as("a"), col("__p.b").as("b"))
-          .agg(sum(col("__c")).as("__n"))
-          .orderBy(col("__n").desc, col("a"), col("b"))
-          .limit(1).collect()
+        val best = pick(vocab.select(
+          keys :+ bpeSymbols(applyPending(col("__s"))).as("__y") :+ col("__c"): _*)).collect()
         if (best.isEmpty) exhausted = true // every word is one symbol
         else {
-          val m = (best(0).getString(0), best(0).getString(1))
-          merges += m
-          pending += m
           r += 1
-          if (pending.size >= rematEvery && r < numMerges && !exhausted) {
-            // fold the pending chain into the data and TRUNCATE LINEAGE
+          sinceRemat += 1
+          best.foreach { row =>
+            val l = if (keys.isEmpty) None else Option(row.getString(0))
+            val (a, b) = (row.getString(keys.size), row.getString(keys.size + 1))
+            merges += ((l, r, a, b))
+            pending.getOrElseUpdate(l,
+              scala.collection.mutable.ArrayBuffer.empty[(String, String)]) += ((a, b))
+          }
+          if (sinceRemat >= rematEvery && r < numMerges) {
+            // fold the pending chains into the data and TRUNCATE LINEAGE
             // (tracked localCheckpoint, eager): without truncation the
             // logical plan stacks one projection per generation and
             // analyzer cost grows linearly with the merge count — the
@@ -3032,18 +3077,19 @@ object TextOps {
             // ids are tracked so each superseded generation is ACTUALLY
             // released (Dataset.unpersist is a CacheManager call — a
             // no-op for localCheckpoint's RDD-level persist).
-            val (next, nIds) = graft.api.Pinned.checkpointTracked(vocab
-              .select(bpeApply(col("__s"), pending.toSeq).as("__s"), col("__c"))
-              .where(size(bpeSymbols(col("__s"))) >= 2))
+            val folded = vocab.select(
+              keys :+ applyPending(col("__s")).as("__s") :+ col("__c"): _*)
+            val (next, nIds) = graft.api.Pinned.checkpointTracked(
+              if (prune) folded.where(size(bpeSymbols(col("__s"))) >= 2) else folded)
             vocab.unpersist(blocking = false)
             releaseIds(vocabCpIds); vocabCpIds = nIds
             vocab = next
             pending.clear()
+            sinceRemat = 0
           }
         }
       }
-      merges.toSeq.zipWithIndex
-        .map { case ((a, b), i) => (i + 1, a, b) }.toDF("merge_rank", "lhs", "rhs")
+      merges.toSeq
     } finally {
       vocab.unpersist(blocking = false)
       releaseIds(vocabCpIds)
@@ -3054,14 +3100,14 @@ object TextOps {
   /** Apply learned BPE merges to every document: per-doc subword token
     * count and a portable hash of the token sequence (word order
     * preserved, tokens space-joined). The merge table is a driver-sized
-    * artifact ([[trainBpeMerges]]'s contract); application is a pure
-    * zero-shuffle projection — chained codegen'd replaces — plus one
-    * per-doc aggregation. */
+    * artifact ([[trainBpeMerges]]'s contract); application posexplodes
+    * the words, rewrites each with the chained codegen'd replaces,
+    * groups the pieces by document (one shuffle) and left-joins the
+    * result back to the documents, so word-less documents emit (0, 0). */
   def bpeTokenize(docs: org.apache.spark.sql.DataFrame, idCol: String,
                   textCol: String,
                   merges: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val ms = merges.select(col("merge_rank"), col("lhs"), col("rhs"))
-      .collect().sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
+    val ms = mergeRules(merges)
     val id = col(idCol)
     val toks = spreadForCompute(docs)
       .select(id, posexplode(words(col(textCol))).as(Seq("__pos", "__w")))
@@ -3103,8 +3149,7 @@ object TextOps {
     val df = stream.df
     if (!df.isStreaming)
       return stream.lift(bpeTokenize(df, idCol, textCol, merges))
-    val ms = merges.select(col("merge_rank"), col("lhs"), col("rhs"))
-      .collect().sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
+    val ms = mergeRules(merges)
     val id = col(idCol)
     // word-less docs ride a sentinel (null word) row so they still emit
     val ws = words(col(textCol))
@@ -3178,21 +3223,8 @@ object TextOps {
     val df = stream.df
     require(!df.columns.contains(as),
       s"bpeEncodeIds input already carries a '$as' column")
-    require(!merges.isStreaming,
-      "bpeEncodeIds: the merge table is a batch artifact")
-    val ms = merges.select(col("merge_rank"), col("lhs"), col("rhs"))
-      .collect().sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
-    require(ms.nonEmpty && ms.length <= 65536,
-      s"bpeEncodeIds: the merge table must be a 1..65536-rule artifact, got ${ms.length}")
-    val outFirstRank = ms.zipWithIndex
-      .groupBy { case ((a, b), _) => a + b }
-      .map { case (p, xs) => p -> xs.map(_._2).min }
-    val atoms = ms.flatMap { case (a, b) => Seq(a, b) }.distinct
-      .filterNot(outFirstRank.contains).sorted(Utf8Ordering)
-    val idOf: Map[String, Long] =
-      (atoms.zipWithIndex.map { case (p, i) => p -> i.toLong } ++
-        outFirstRank.toSeq.sortBy(_._2).zipWithIndex
-          .map { case ((p, _), i) => p -> (atoms.length + i).toLong }).toMap
+    val ms = collectMerges(merges, "bpeEncodeIds")
+    val idOf = hfIdLayout(ms)
     val pieces = flatten(transform(words(col(textCol)),
       w => bpeSymbols(bpeApply(bpeWrap(w), ms))))
     val ids = transform(pieces,
@@ -3212,10 +3244,7 @@ object TextOps {
     * whitespace-split). Paths resolve through Hadoop FS (object stores
     * on a cluster). */
   def bpeExportMerges(merges: org.apache.spark.sql.DataFrame, path: String): Unit = {
-    val ms = merges.select(col("merge_rank"), col("lhs"), col("rhs"))
-      .collect().sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
-    require(ms.nonEmpty && ms.length <= 65536,
-      s"bpeExportMerges: the merge table must be a 1..65536-rule artifact, got ${ms.length}")
+    val ms = collectMerges(merges, "bpeExportMerges")
     ms.foreach { case (a, b) =>
       require(a.nonEmpty && b.nonEmpty && !(a + b).exists(_.isWhitespace),
         s"bpeExportMerges: rule '$a' + '$b' cannot ride the space-separated format") }
@@ -3275,9 +3304,12 @@ object TextOps {
     * round runs ONE job that argmaxes the pair statistic PER LANGUAGE
     * (a partial-aggregated (lang, a, b) count + a per-language top-1),
     * so 100 languages cost one round-trip per round, not 100 trainer
-    * runs. Each language's merge sequence is IDENTICAL to training
-    * [[trainBpeMerges]] on its slice alone (spec-pinned): languages
-    * never interact — the key only shares the scan. A language whose
+    * runs. The rounds run in [[mergeRounds]]: each language's pending
+    * chain is one CASE branch, and re-materialization prunes collapsed
+    * words as [[trainBpeMerges]]'s does. Each language's merge sequence
+    * is IDENTICAL to training [[trainBpeMerges]] on its slice alone
+    * (spec-pinned): languages never interact — the key only shares the
+    * scan. A language whose
     * words have all collapsed to one symbol stops receiving merges
     * (exhaustion is permanent, so a language's merge in global round r
     * is its rank-r rule in both engines). Modeled-language set capped
@@ -3294,13 +3326,6 @@ object TextOps {
         "and the merge tables are driver artifacts; keep <= 65536")
     val spark = docs.sparkSession
     import spark.implicits._
-    def intConf(key: String, default: Int): Int = {
-      val v = Dedup.longConf(spark, key, default)
-      require(v <= Int.MaxValue, s"$key must fit an Int, got $v")
-      v.toInt
-    }
-    val rematEvery = intConf("graft.bpe.rematEvery", 64)
-    val vocabParts = intConf("graft.bpe.vocabPartitions", 8)
     val (vocab0, vocab0Ids) = graft.api.Pinned.checkpointTracked(docs
       .select(col(langCol).as("__l"), explode(words(col(textCol))).as("__w"))
       .groupBy("__l", "__w").agg(count(lit(1)).as("__c"))
@@ -3309,78 +3334,15 @@ object TextOps {
     require(nLangs <= 1024,
       s"trainBpeMergesByLang: modeled-language set exceeds the 1024-language " +
         "artifact cap — filter or bucket the language column first")
-    val loop = spark.newSession()
-    loop.conf.set("spark.sql.shuffle.partitions", vocabParts.toString)
-    loop.conf.set("spark.sql.adaptive.enabled", "false")
-    var vocab = loop.createDataFrame(vocab0.rdd, vocab0.schema)
-      .coalesce(vocabParts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var vocabCpIds = Set.empty[Int]
-    def releaseIds(ids: Set[Int]): Unit = graft.api.Pinned.unpersist(spark, ids)
-    // pending merge chains per language (null language rides the map
-    // under its own key)
-    val pending = scala.collection.mutable.LinkedHashMap
-      .empty[Option[String], scala.collection.mutable.ArrayBuffer[(String, String)]]
-    /** The per-row conditional apply: each language's pending chain as
-      * one CASE branch (languages are bounded by the 1024 cap; the
-      * re-materialization below bounds chain length, so expression size
-      * stays O(langs x rematEvery)). */
-    def applyByLang(sCol: Column): Column =
-      pending.foldLeft(sCol) { case (acc, (l, ms)) =>
-        val cond = l.map(v => col("__l") === lit(v)).getOrElse(col("__l").isNull)
-        when(cond, bpeApply(sCol, ms.toSeq)).otherwise(acc)
-      }
-    try {
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(Option[String], Int, String, String)]
-      var r = 0
-      var exhausted = false
-      var sincePin = 0
-      while (r < numMerges && !exhausted) {
-        val syms = bpeSymbols(applyByLang(col("__s")))
-        val best = vocab
-          .select(col("__l"), syms.as("__y"), col("__c"))
-          .where(size(col("__y")) >= 2)
-          .select(col("__l"), explode(arrays_zip(
-            slice(col("__y"), lit(1), size(col("__y")) - 1).as("a"),
-            slice(col("__y"), lit(2), size(col("__y")) - 1).as("b"))).as("__p"),
-            col("__c"))
-          .groupBy(col("__l"), col("__p.a").as("a"), col("__p.b").as("b"))
-          .agg(sum(col("__c")).as("__n"))
-          .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("__l"))
-              .orderBy(col("__n").desc, col("a"), col("b"))))
-          .where(col("__rn") === 1)
-          .select(col("__l"), col("a"), col("b")).collect()
-        if (best.isEmpty) exhausted = true // every language fully collapsed
-        else {
-          r += 1
-          sincePin += 1
-          best.foreach { row =>
-            val l = Option(row.getString(0))
-            val m = (row.getString(1), row.getString(2))
-            merges += ((l, r, m._1, m._2))
-            pending.getOrElseUpdate(l,
-              scala.collection.mutable.ArrayBuffer.empty[(String, String)]) += m
-          }
-          if (sincePin >= rematEvery && r < numMerges) {
-            val (next, nIds) = graft.api.Pinned.checkpointTracked(vocab
-              .select(col("__l"), applyByLang(col("__s")).as("__s"), col("__c")))
-            vocab.unpersist(blocking = false)
-            releaseIds(vocabCpIds); vocabCpIds = nIds
-            vocab = next
-            pending.clear()
-            sincePin = 0
-          }
-        }
-      }
-      merges.toSeq
-        .map { case (l, mr, a, b) => (l.orNull, mr, a, b) }
-        .toDF("lang", "merge_rank", "lhs", "rhs")
-    } finally {
-      vocab.unpersist(blocking = false)
-      releaseIds(vocabCpIds)
-      releaseIds(vocab0Ids)
-    }
+    mergeRounds(vocab0, vocab0Ids, numMerges, _ + _, prune = true)(
+      pairCounts(_)
+        .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("__l"))
+            .orderBy(col("__n").desc, col("a"), col("b"))))
+        .where(col("__rn") === 1)
+        .select(col("__l"), col("a"), col("b")))
+      .map { case (l, r, a, b) => (l.orNull, r, a, b) }
+      .toDF("lang", "merge_rank", "lhs", "rhs")
   }
 
   /** Apply each document's OWN language's merge table: per-doc subword
@@ -3480,13 +3442,12 @@ object TextOps {
     require(numMerges >= 1 && numMerges <= 65536,
       s"numMerges=$numMerges: each merge is one driver-coordinated round " +
         "and the merge table is a driver artifact; keep <= 65536")
-    val spark = docs.sparkSession
     val (vocab0, vocab0Ids) = graft.api.Pinned.checkpointTracked(
       spreadForCompute(docs)
       .select(explode(gpt2PreTokens(col(textCol))).as("__w"))
       .groupBy("__w").agg(count(lit(1)).as("__c"))
       .select(bpeWrap(gpt2Bytes(col("__w"))).as("__s"), col("__c")))
-    bpeTrainCore(spark, vocab0, vocab0Ids, numMerges)
+    bpeMergeTable(vocab0, vocab0Ids, numMerges)
   }
 
   def byteBpeOutputSchema(idCol: String,
@@ -3533,15 +3494,7 @@ object TextOps {
     require(!df.columns.contains(as),
       s"byteBpeEncodeIds input already carries a '$as' column")
     val ms = collectMerges(merges, "byteBpeEncodeIds")
-    val outFirstRank = ms.zipWithIndex
-      .groupBy { case ((a, b), _) => a + b }
-      .map { case (p, xs) => p -> xs.map(_._2).min }
-    val atoms = ms.flatMap { case (a, b) => Seq(a, b) }.distinct
-      .filterNot(outFirstRank.contains).sorted(Utf8Ordering)
-    val idOf: Map[String, Long] =
-      (atoms.zipWithIndex.map { case (p, i) => p -> i.toLong } ++
-        outFirstRank.toSeq.sortBy(_._2).zipWithIndex
-          .map { case ((p, _), i) => p -> (atoms.length + i).toLong }).toMap
+    val idOf = hfIdLayout(ms)
     val pieces = flatten(transform(gpt2PreTokens(col(textCol)),
       t => bpeSymbols(bpeApply(bpeWrap(gpt2Bytes(t)), ms))))
     val ids = transform(pieces,
@@ -3555,14 +3508,9 @@ object TextOps {
     * merge's output in rank order (a string two merges both produce
     * keeps its first rank). Outputs have >= 2 chars so they never
     * collide with the alphabet; ids stay dense. */
-  private def byteBpeVocabLayout(ms: Seq[(String, String)]): Seq[String] = {
-    val alphabet = graft.functions.Gpt2Bytes.ByteToChar
-      .map(_.toString).toSeq.sorted(Utf8Ordering)
-    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    alphabet.foreach(seen += _)
-    ms.foreach { case (a, b) => seen += (a + b) }
-    seen.toSeq
-  }
+  private def byteBpeVocabLayout(ms: Seq[(String, String)]): Seq[String] =
+    (graft.functions.Gpt2Bytes.ByteToChar.map(_.toString).toSeq.sorted(Utf8Ordering) ++
+      ms.map { case (a, b) => a + b }).distinct
 
   /** Export the GPT-2 `vocab.json` half of the artifact pair (the
     * other half is [[bpeExportMerges]]'s `merges.txt`): a JSON object
@@ -3664,11 +3612,25 @@ object TextOps {
   private def collectMerges(merges: org.apache.spark.sql.DataFrame,
                             label: String): Seq[(String, String)] = {
     require(!merges.isStreaming, s"$label: the merge table is a batch artifact")
-    val ms = merges.select(col("merge_rank"), col("lhs"), col("rhs"))
-      .collect().sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
+    val ms = mergeRules(merges)
     require(ms.nonEmpty && ms.length <= 65536,
       s"$label: the merge table must be a 1..65536-rule artifact, got ${ms.length}")
     ms
+  }
+
+  /** A (merge_rank, lhs, rhs) table's rules in rank order, unchecked —
+    * [[bpeTokenize]] and [[bpeTokenizeIngest]] accept any such table. */
+  private def mergeRules(merges: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+    merges.select(col("merge_rank"), col("lhs"), col("rhs"))
+      .collect().sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
+
+  /** The HuggingFace-BPE id layout of a merge table, the id space of
+    * [[bpeEncodeIds]] (which spells it out) and [[byteBpeEncodeIds]]. */
+  private def hfIdLayout(ms: Seq[(String, String)]): Map[String, Long] = {
+    val outs = ms.map { case (a, b) => a + b }
+    val atoms = ms.flatMap { case (a, b) => Seq(a, b) }.distinct
+      .filterNot(outs.toSet).sorted(Utf8Ordering)
+    (atoms ++ outs).distinct.zipWithIndex.map { case (p, i) => p -> i.toLong }.toMap
   }
 
   /** Token-frequency annotation against a REFERENCE corpus sketch: one

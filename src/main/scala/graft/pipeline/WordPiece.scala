@@ -29,13 +29,16 @@ import org.apache.spark.sql.functions._
  * and DuckDB, so scores (and therefore argmaxes and ties) are
  * bit-identical; the oracle re-runs whole training rounds relationally.
  *
- * SCALE SHAPE: like the BPE trainer, the working set is the
+ * SCALE SHAPE: the rounds run in [[TextOps.mergeRounds]], the one loop
+ * every subword trainer shares, under its one pair of confs
+ * (`graft.bpe.rematEvery`, `graft.bpe.vocabPartitions`; WordPiece's own
+ * pair of the same two confs is retired): the working set is the
  * DISTINCT-WORD frequency table (one corpus pass), pinned once and
  * scanned per round with the pending merge chain applied as chained
- * codegen'd literal replaces; the vocabulary re-materializes every
- * `graft.wordpiece.rematEvery` rounds so per-round cost is constant in
- * the total merge count. Unlike BPE, fully-merged words are NOT pruned:
- * the score denominators count every symbol occurrence, including words
+ * codegen'd literal replaces, and re-materialized every
+ * `graft.bpe.rematEvery` rounds so per-round cost is constant in the
+ * total merge count. Unlike BPE, fully-merged words are NOT pruned: the
+ * score denominators count every symbol occurrence, including words
  * that have collapsed to one symbol (pruning them would undercount and
  * change merges). [[encode]]/[[encodeIds]] are ZERO-SHUFFLE stateless
  * projections (the greedy matcher is a native codegen'd expression,
@@ -68,22 +71,6 @@ object WordPiece {
   private[pipeline] def mergedSym(a: String, b: String): String =
     a + (if (b.startsWith("##")) b.substring(2) else b)
 
-  private def wpApply(s: Column, merges: Seq[(String, String)]): Column =
-    merges.foldLeft(s) { case (c, (a, b)) =>
-      org.apache.spark.sql.functions.replace(c,
-        lit(S + a + E + S + b + E), lit(S + mergedSym(a, b) + E))
-    }
-
-  private def wpSymbols(s: Column): Column =
-    filter(split(s, s"[$S$E]"), x => x =!= "")
-
-  private def intConf(spark: org.apache.spark.sql.SparkSession,
-                      key: String, default: Int): Int = {
-    val v = Dedup.longConf(spark, key, default)
-    require(v <= Int.MaxValue, s"$key must fit an Int, got $v")
-    v.toInt
-  }
-
   /** Train a WordPiece vocabulary: `numMerges` likelihood-scored merge
     * rounds over the corpus word-frequency table, then the id layout
     * `[unk]`=0, alphabet (UTF-8 byte order), merge outputs in rank
@@ -101,8 +88,6 @@ object WordPiece {
         "and the vocabulary is a driver artifact; keep <= 65536")
     val spark = docs.sparkSession
     import spark.implicits._
-    val rematEvery = intConf(spark, "graft.wordpiece.rematEvery", 64)
-    val vocabParts = intConf(spark, "graft.wordpiece.vocabPartitions", 8)
     // the ONE corpus-scale pass (the word count) runs at the caller's
     // full shuffle width; everything after works the distinct-word table
     val (vocab0, vocab0Ids) = graft.api.Pinned.checkpointTracked(docs
@@ -112,81 +97,32 @@ object WordPiece {
     // the alphabet (every bare first-char and ##-continuation symbol) is
     // fixed by the corpus — merges never mint new atomic characters
     val alphabet = vocab0
-      .select(explode(wpSymbols(col("__s"))).as("sym")).distinct()
+      .select(explode(TextOps.bpeSymbols(col("__s"))).as("sym")).distinct()
       .limit(65537).as[String].collect().toSeq
     require(alphabet.size <= 65536,
       s"trainVocab: corpus alphabet exceeds the 65536-piece artifact cap")
-    // tiny per-round jobs run in a CLONED session: narrow shuffle,
-    // AQE off (its per-stage re-planning dominates fixed-shape
-    // micro-jobs); concurrent queries on the caller's session keep
-    // their confs (the trainBpeMerges posture)
-    val loop = spark.newSession()
-    loop.conf.set("spark.sql.shuffle.partitions", vocabParts.toString)
-    loop.conf.set("spark.sql.adaptive.enabled", "false")
-    var vocab = loop.createDataFrame(vocab0.rdd, vocab0.schema)
-      .coalesce(vocabParts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var vocabCpIds = Set.empty[Int]
-    def releaseIds(ids: Set[Int]): Unit = graft.api.Pinned.unpersist(spark, ids)
-    try {
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      var r = 0
-      var exhausted = false
-      while (r < numMerges && !exhausted) {
-        val cur = vocab.select(
-          wpSymbols(wpApply(col("__s"), pending.toSeq)).as("__y"), col("__c"))
-        // symbol counts over ALL words (one-symbol words still count —
-        // they are the denominators), pair counts over mergeable words
-        val symCnt = cur
-          .select(explode(col("__y")).as("sym"), col("__c"))
-          .groupBy("sym").agg(sum(col("__c")).as("cnt"))
-        val best = cur.where(size(col("__y")) >= 2)
-          .select(explode(arrays_zip(
-            slice(col("__y"), lit(1), size(col("__y")) - 1).as("a"),
-            slice(col("__y"), lit(2), size(col("__y")) - 1).as("b"))).as("__p"),
-            col("__c"))
-          .groupBy(col("__p.a").as("a"), col("__p.b").as("b"))
-          .agg(sum(col("__c")).as("__n"))
-          .join(symCnt.select(col("sym").as("a"), col("cnt").as("__ca")), "a")
-          .join(symCnt.select(col("sym").as("b"), col("cnt").as("__cb")), "b")
-          // ONE division of ONE product — the exact op sequence the
-          // oracle mirrors, bit-identical across IEEE engines
-          .select(col("a"), col("b"), (col("__n").cast("double") /
-            (col("__ca").cast("double") * col("__cb").cast("double")))
-            .as("__score"))
-          .orderBy(col("__score").desc, col("a"), col("b"))
-          .limit(1).collect()
-        if (best.isEmpty) exhausted = true // every word is one symbol
-        else {
-          val m = (best(0).getString(0), best(0).getString(1))
-          merges += m
-          pending += m
-          r += 1
-          if (pending.size >= rematEvery && r < numMerges && !exhausted) {
-            // fold the pending chain in and truncate lineage (tracked
-            // localCheckpoint — the trainBpeMerges posture); no pruning:
-            // one-symbol words keep feeding the denominators
-            val (next, nIds) = graft.api.Pinned.checkpointTracked(vocab
-              .select(wpApply(col("__s"), pending.toSeq).as("__s"), col("__c")))
-            vocab.unpersist(blocking = false)
-            releaseIds(vocabCpIds); vocabCpIds = nIds
-            vocab = next
-            pending.clear()
-          }
-        }
-      }
-      val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-      seen += unk
-      alphabet.sorted(TextOps.Utf8Ordering).foreach(seen += _)
-      merges.foreach { case (a, b) => seen += mergedSym(a, b) }
-      seen.toSeq.zipWithIndex
-        .map { case (p, i) => (i.toLong, p) }.toDF("wp_id", "piece")
-    } finally {
-      vocab.unpersist(blocking = false)
-      releaseIds(vocabCpIds)
-      releaseIds(vocab0Ids)
+    // no pruning: one-symbol words keep feeding the denominators
+    val merges = TextOps.mergeRounds(vocab0, vocab0Ids, numMerges, mergedSym,
+        prune = false) { cur =>
+      // symbol counts over ALL words (one-symbol words still count —
+      // they are the denominators), pair counts over mergeable words
+      val symCnt = cur
+        .select(explode(col("__y")).as("sym"), col("__c"))
+        .groupBy("sym").agg(sum(col("__c")).as("cnt"))
+      TextOps.pairCounts(cur)
+        .join(symCnt.select(col("sym").as("a"), col("cnt").as("__ca")), "a")
+        .join(symCnt.select(col("sym").as("b"), col("cnt").as("__cb")), "b")
+        // ONE division of ONE product — the exact op sequence the
+        // oracle mirrors, bit-identical across IEEE engines
+        .select(col("a"), col("b"), (col("__n").cast("double") /
+          (col("__ca").cast("double") * col("__cb").cast("double")))
+          .as("__score"))
+        .orderBy(col("__score").desc, col("a"), col("b"))
+        .limit(1)
     }
+    (Seq(unk) ++ alphabet.sorted(TextOps.Utf8Ordering) ++
+      merges.map { case (_, _, a, b) => mergedSym(a, b) }).distinct.zipWithIndex
+      .map { case (p, i) => (i.toLong, p) }.toDF("wp_id", "piece")
   }
 
   /** Collect + validate a (wp_id, piece) vocabulary frame — the

@@ -41,6 +41,28 @@ class LangBpeSpec extends SparkSpec {
     } finally graft.api.Pinned.release(spark)
   }
 
+  test("re-materialization is invisible to the per-language merges") {
+    // graft.bpe.rematEvery=2 folds every language's pending chain into the
+    // working set (pruning collapsed words) five times inside a 12-round
+    // run: it must learn exactly the default run's merge tables
+    val docs = corpus.toDF("doc_id", "lang", "text")
+    def train(): Seq[(String, Int, String, String)] =
+      try TextOps.trainBpeMergesByLang(docs, "lang", "text", 12)
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))
+        .toSeq.sorted
+      finally graft.api.Pinned.release(spark)
+    val plain = train()
+    spark.conf.set("graft.bpe.rematEvery", "2")
+    val remat = try train() finally spark.conf.unset("graft.bpe.rematEvery")
+    assert(remat == plain, s"re-materialized run:\n$remat\nvs default run\n$plain")
+    assert(plain.map(_._2).max >= 10, s"the run reaches ten rounds: $plain")
+    val bad = intercept[IllegalArgumentException] {
+      spark.conf.set("graft.bpe.rematEvery", "often")
+      try train() finally spark.conf.unset("graft.bpe.rematEvery")
+    }
+    assert(bad.getMessage.contains("graft.bpe.rematEvery"))
+  }
+
   test("by-language encode == per-slice bpeTokenize; unmodeled lang gets NULL") {
     val docs = corpus.toDF("doc_id", "lang", "text")
     try {

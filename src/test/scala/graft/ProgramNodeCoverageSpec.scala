@@ -182,6 +182,8 @@ class ProgramNodeCoverageSpec extends AnyFunSuite {
         "0 = explicit plain-join escape)"),
       "longConf" -> excluded("internal conf parser shared with Similarity " +
         "(named-error contract for graft.* caps); not an operator"),
+      "intConf" -> excluded("internal conf parser: longConf narrowed to " +
+        "Int (the subword trainers' graft.bpe.* confs); not an operator"),
       "lastCcRounds" -> excluded("convergence metric accessor (diagnostics)"),
       "BandedStateVersion" -> excluded(const),
       "requireBandedStateVersion" -> excluded("state-format guard (diagnostics)")))
@@ -238,6 +240,8 @@ class ProgramNodeCoverageSpec extends AnyFunSuite {
       "bpeExportMerges" -> excluded(artifact),
       "bpeImportMerges" -> excluded(artifact),
       "BpeS" -> excluded(const), "BpeE" -> excluded(const),
+      "bpeSymbols" -> excluded(block), "pairCounts" -> excluded(block),
+      "mergeRounds" -> excluded(block),
       "bpeOutputSchema" -> excluded(artifact),
       "dsirOutputSchema" -> excluded(artifact),
       "lmScoreOutputSchema" -> excluded(artifact),

@@ -89,6 +89,34 @@ class WordPieceSpec extends SparkSpec {
     } finally graft.api.Pinned.release(spark)
   }
 
+  test("vocabulary re-materialization is invisible to the learned vocabulary") {
+    // graft.bpe.rematEvery=2 folds the pending chain into the working set
+    // five times inside a 12-merge run, WITHOUT pruning one-symbol words
+    // (they feed the score denominators): the run must learn exactly the
+    // default run's vocabulary, which is the reference training's. On
+    // this corpus pruning would show: "lo" collapses in round 6, and its
+    // 7 copies still count in c(lo) when (ne, ##w) beats (lo, ##w)
+    val wordCounts = Seq("wider" -> 8L, "pug" -> 18L, "new" -> 7L,
+      "lo" -> 7L, "low" -> 18L, "pun" -> 17L)
+    val docs = wordCounts.flatMap { case (w, n) => Seq.fill(n.toInt)(w) }
+      .zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("doc_id", "text")
+    def train(): Seq[String] =
+      try WordPiece.trainVocab(docs, "text", numMerges = 12)
+        .collect().sortBy(_.getLong(0)).map(_.getString(1)).toSeq
+      finally graft.api.Pinned.release(spark)
+    val plain = train()
+    spark.conf.set("graft.bpe.rematEvery", "2")
+    val remat = try train() finally spark.conf.unset("graft.bpe.rematEvery")
+    assert(remat == plain, s"re-materialized run:\n$remat\nvs default run\n$plain")
+    val (refMerges, refLayout) = refTrain(wordCounts, 12)
+    assert(refMerges.size == 12 && plain == refLayout, "12 merges, as the reference")
+    val bad = intercept[IllegalArgumentException] {
+      spark.conf.set("graft.bpe.rematEvery", "often")
+      try train() finally spark.conf.unset("graft.bpe.rematEvery")
+    }
+    assert(bad.getMessage.contains("graft.bpe.rematEvery"))
+  }
+
   test("HF-course example: likelihood scoring merges (##g, ##s) first, not BPE's pick") {
     // corpus from the HuggingFace LLM-course WordPiece chapter:
     // hug x10, pug x5, pun x12, bun x4, hugs x5. Raw BPE pair counts
