@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Arpa, Dedup, Multimodal, Similarity, TextOps}
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import graft.sources.Tables
 
 /**
@@ -2167,7 +2168,8 @@ object QueriesPipeline {
   /** CCNet-style bigram-LM quality score: the model trains on the corpus
     * itself, each doc scored by average smoothed pair log-likelihood. */
   def qLmScore(spark: SparkSession, dir: String): DataFrame =
-    TextOps.bigramLmScore(Tables.documents(spark, dir).df, "doc_id", "text")
+    TextOps.lmScore(graft.api.MStream(Tables.documents(spark, dir).df),
+      LmSpec(2, LmSpec.AddAlpha()), "doc_id", "text").df
 
   val qLmScoreSql: String =
     s"""WITH words AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r\\x0b]+'), x -> x <> '') AS w FROM documents),
@@ -2190,7 +2192,9 @@ object QueriesPipeline {
     * smoothing, V = distinct unigrams. The oracle rebuilds all three
     * count tables and the interpolation relationally. */
   def qLm3Score(spark: SparkSession, dir: String): DataFrame =
-    TextOps.trigramLmScore(Tables.documents(spark, dir).df, "doc_id", "text")
+    TextOps.lmScore(graft.api.MStream(Tables.documents(spark, dir).df),
+      LmSpec(3, LmSpec.JelinekMercer(0.5, Seq(0.6, 0.3, 0.1)), countCol = Some("n_tris")),
+      "doc_id", "text").df
 
   val qLm3ScoreSql: String =
     s"""WITH words AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r\\x0b]+'), x -> x <> '') AS w FROM documents),
@@ -2227,8 +2231,9 @@ object QueriesPipeline {
     * rebuilds all five count tables and the suffix-aligned interpolation
     * relationally. */
   def qLm5Score(spark: SparkSession, dir: String): DataFrame =
-    TextOps.ngramLmScore(Tables.documents(spark, dir).df, "doc_id", "text",
-      order = 5, alpha = 0.5, lambdas = Seq(0.4, 0.25, 0.15, 0.12, 0.08))
+    TextOps.lmScore(graft.api.MStream(Tables.documents(spark, dir).df),
+      LmSpec(5, LmSpec.JelinekMercer(0.5, Seq(0.4, 0.25, 0.15, 0.12, 0.08))),
+      "doc_id", "text").df
 
   /** The oracle mirror pins the join ORDER stepwise (MATERIALIZED CTEs,
     * each a 1:1 keyed join chain): letting the engine reorder the flat
@@ -2290,8 +2295,9 @@ object QueriesPipeline {
   def qLm3Against(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).df
     val ref = docs.filter(col("source").isin("src0", "src1", "src2", "src3"))
-    TextOps.lm3ScoreAgainst(graft.api.MStream(docs), ref,
-      "doc_id", "text", "text").df
+    TextOps.lmScore(graft.api.MStream(docs),
+      LmSpec(3, LmSpec.JelinekMercer(0.5, Seq(0.6, 0.3, 0.1)), countCol = Some("n_tris")),
+      "doc_id", "text", Some(LmRef(ref, "text"))).df
   }
 
   val qLm3AgainstSql: String =
@@ -2335,7 +2341,8 @@ object QueriesPipeline {
     * face every back-off guard is true by construction, so the SQL is
     * the guard-free nested formula. */
   def qKn3Score(spark: SparkSession, dir: String): DataFrame =
-    TextOps.knLmScore(Tables.documents(spark, dir).df, "doc_id", "text", order = 3)
+    TextOps.lmScore(graft.api.MStream(Tables.documents(spark, dir).df),
+      LmSpec(3, LmSpec.KneserNey()), "doc_id", "text").df
 
   val qKn3ScoreSql: String =
     s"""WITH words AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r\\x0b]+'), x -> x <> '') AS w FROM documents),
@@ -2376,8 +2383,8 @@ object QueriesPipeline {
   def qKn3Against(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).df
     val ref = docs.filter(col("source").isin("src0", "src1", "src2", "src3"))
-    TextOps.knLmScoreAgainst(graft.api.MStream(docs), ref,
-      "doc_id", "text", "text", order = 3).df
+    TextOps.lmScore(graft.api.MStream(docs), LmSpec(3, LmSpec.KneserNey()),
+      "doc_id", "text", Some(LmRef(ref, "text"))).df
   }
 
   /** The shared KN-against model + scoring CTE chain (train on the
@@ -2619,8 +2626,8 @@ object QueriesPipeline {
     val docs = Tables.documents(spark, dir).df
     val ref = docs.filter(col("source").isin("src0", "src1", "src2", "src3") &&
       col("lang") =!= "zh")
-    TextOps.knLmScoreAgainstByLang(graft.api.MStream(docs), ref,
-      "doc_id", "text", "lang", "text", "lang", order = 3).df
+    TextOps.lmScore(graft.api.MStream(docs), LmSpec(3, LmSpec.KneserNey()),
+      "doc_id", "text", Some(LmRef(ref, "text", Some(("lang", "lang"))))).df
   }
 
   /** The shared per-language-model CTE chain (train one model per
@@ -2686,9 +2693,9 @@ object QueriesPipeline {
     val docs = Tables.documents(spark, dir).df
     val ref = docs.filter(col("source").isin("src0", "src1", "src2", "src3") &&
       col("lang") =!= "zh")
-    TextOps.ngramLmScoreAgainstByLang(graft.api.MStream(docs), ref,
-      "doc_id", "text", "lang", "text", "lang", order = 3,
-      lambdas = Seq(0.6, 0.3, 0.1), nCol = "n_tris").df
+    TextOps.lmScore(graft.api.MStream(docs),
+      LmSpec(3, LmSpec.JelinekMercer(0.5, Seq(0.6, 0.3, 0.1)), countCol = Some("n_tris")),
+      "doc_id", "text", Some(LmRef(ref, "text", Some(("lang", "lang"))))).df
   }
 
   val qLm3ByLangSql: String =
@@ -2756,8 +2763,8 @@ object QueriesPipeline {
     val docs = Tables.documents(spark, dir).df
     val ref = docs.filter(col("source").isin("src0", "src1", "src2", "src3") &&
       col("lang") =!= "zh")
-    TextOps.mknLmScoreAgainstByLang(graft.api.MStream(docs), ref,
-      "doc_id", "text", "lang", "text", "lang", order = 3).df
+    TextOps.lmScore(graft.api.MStream(docs), LmSpec(3, LmSpec.ModifiedKn()),
+      "doc_id", "text", Some(LmRef(ref, "text", Some(("lang", "lang"))))).df
   }
 
   val qMkn3ByLangSql: String =
@@ -2834,8 +2841,8 @@ object QueriesPipeline {
     val docs = Tables.documents(spark, dir).df
     val ref = docs.filter(col("source").isin("src0", "src1", "src2", "src3") &&
       col("lang") =!= "zh")
-    val scored = TextOps.knLmScoreAgainstByLang(graft.api.MStream(docs), ref,
-        "doc_id", "text", "lang", "text", "lang", order = 3).df
+    val scored = TextOps.lmScore(graft.api.MStream(docs), LmSpec(3, LmSpec.KneserNey()),
+        "doc_id", "text", Some(LmRef(ref, "text", Some(("lang", "lang"))))).df
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
     TextOps.bucketByRank(scored, "lang", "avg_logprob", "doc_id", buckets = 3)
   }
@@ -2886,8 +2893,8 @@ object QueriesPipeline {
     val pop = docs.filter(col("source").isin((0 to 9).map(i => s"src$i"): _*))
     val thr = TextOps.perplexityBucketThresholds(pop, ref,
       "doc_id", "text", "lang", "text")
-    val scored = TextOps.knLmScoreAgainst(graft.api.MStream(docs), ref,
-        "doc_id", "text", "text", order = 3).df
+    val scored = TextOps.lmScore(graft.api.MStream(docs), LmSpec(3, LmSpec.KneserNey()),
+        "doc_id", "text", Some(LmRef(ref, "text"))).df
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
     TextOps.bucketByThresholds(graft.api.MStream(scored), thr,
       "lang", "avg_logprob").df
@@ -2913,8 +2920,8 @@ object QueriesPipeline {
   def qPplArtifact(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).df
     val ref = docs.filter(col("source").isin("src0", "src1", "src2", "src3"))
-    val scored = TextOps.knLmScoreAgainst(graft.api.MStream(docs), ref,
-        "doc_id", "text", "text", order = 3).df
+    val scored = TextOps.lmScore(graft.api.MStream(docs), LmSpec(3, LmSpec.KneserNey()),
+        "doc_id", "text", Some(LmRef(ref, "text"))).df
       .join(docs.select(col("doc_id"), col("lang"), col("source")), Seq("doc_id"))
     val pop = scored
       .filter(col("source").isin((0 to 9).map(i => s"src$i"): _*))
@@ -3119,7 +3126,8 @@ object QueriesPipeline {
     * level falls back (the probe-measured degenerate corpus shapes), so
     * both branches of the fallback rule are exercised across the SFs. */
   def qMkn3Score(spark: SparkSession, dir: String): DataFrame =
-    TextOps.mknLmScore(Tables.documents(spark, dir).df, "doc_id", "text", order = 3)
+    TextOps.lmScore(graft.api.MStream(Tables.documents(spark, dir).df),
+      LmSpec(3, LmSpec.ModifiedKn()), "doc_id", "text").df
 
   val qMkn3ScoreSql: String =
     s"""WITH words AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r\\x0b]+'), x -> x <> '') AS w FROM documents),
@@ -3175,8 +3183,8 @@ object QueriesPipeline {
   def qMkn3Against(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).df
     val ref = docs.filter(col("source").isin("src0", "src1", "src2", "src3"))
-    TextOps.mknLmScoreAgainst(graft.api.MStream(docs), ref,
-      "doc_id", "text", "text", order = 3).df
+    TextOps.lmScore(graft.api.MStream(docs), LmSpec(3, LmSpec.ModifiedKn()),
+      "doc_id", "text", Some(LmRef(ref, "text"))).df
   }
 
   /** The shared modified-KN against chain (train on src0-src3, score ALL
@@ -3247,12 +3255,13 @@ object QueriesPipeline {
     * MODIFIED-KN score against the pretrained reference (Wenzek's actual
     * 5-gram KenLM is modified-KN — this is the smoothing their pipeline
     * really uses), composed from the two public operators the shape
-    * decomposes into: mknLmScoreAgainst + the generic bucketByRank. */
+    * decomposes into: the modified-KN lmScore against a reference + the
+    * generic bucketByRank. */
   def qMknBuckets(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).df
     val ref = docs.filter(col("source").isin("src0", "src1", "src2", "src3"))
-    val scored = TextOps.mknLmScoreAgainst(graft.api.MStream(docs), ref,
-        "doc_id", "text", "text", order = 3).df
+    val scored = TextOps.lmScore(graft.api.MStream(docs), LmSpec(3, LmSpec.ModifiedKn()),
+        "doc_id", "text", Some(LmRef(ref, "text"))).df
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
     TextOps.bucketByRank(scored, "lang", "avg_logprob", "doc_id", buckets = 3)
   }
@@ -3449,10 +3458,9 @@ object QueriesPipeline {
     * floor. */
   def qLmAgainst(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).df
-    TextOps.lmScoreAgainst(
-      graft.api.MStream(docs.where(col("doc_id") % 3 === 0)),
-      docs.where(col("doc_id") % 3 =!= 0),
-      "doc_id", "text", "text").df
+    TextOps.lmScore(graft.api.MStream(docs.where(col("doc_id") % 3 === 0)),
+      LmSpec(2, LmSpec.AddAlpha()), "doc_id", "text",
+      Some(LmRef(docs.where(col("doc_id") % 3 =!= 0), "text"))).df
   }
 
   val qLmAgainstSql: String =

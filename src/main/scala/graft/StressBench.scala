@@ -786,9 +786,10 @@ object StressBench {
               for (rep <- 1 to 2) {
                 isolate()
                 val t0 = System.nanoTime()
-                val scored = graft.pipeline.TextOps.knLmScoreAgainstByLang(
-                  graft.api.MStream(docs), ref, "doc_id", "text", "lang",
-                  "text", "lang", order = 3).df
+                val scored = graft.pipeline.TextOps.lmScore(graft.api.MStream(docs),
+                  graft.pipeline.TextOps.LmSpec(3, graft.pipeline.TextOps.LmSpec.KneserNey()),
+                  "doc_id", "text", Some(graft.pipeline.TextOps.LmRef(ref, "text",
+                    Some(("lang", "lang"))))).df
                 scored.write.format("noop").mode("overwrite").save()
                 val secs = (System.nanoTime() - t0) / 1e9
                 val n = scored.count()

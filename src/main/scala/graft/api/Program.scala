@@ -203,12 +203,13 @@ object Program {
                               idCol: String, vecCol: String, threshold: Double,
                               centroids: Option[String], nProbe: Int = 1,
                               broadcastRef: Boolean = true) extends Node
-  /** Cross-corpus bigram-LM scoring (`TextOps.lmScoreAgainst`): train on
-    * the reference once, score arrivals. Build-time eager (the model
-    * artifact pins at program build, like residual joins). */
+  /** Cross-corpus bigram-LM scoring (`TextOps.lmScore`, add-alpha
+    * against a reference): train on the reference once, score
+    * arrivals. Build-time eager (the model artifact pins at program
+    * build, like residual joins). */
   final case class LmScore(name: String, input: String, ref: String,
                            idCol: String, textCol: String, refTextCol: String,
-                           alpha: Double = 0.5) extends Node
+                           alpha: Double = 0.5) extends Node with LmNode
   /** DSIR importance scoring (`TextOps.dsirScore`, format version 3):
     * hashed-bigram bucket log-ratio of a `target` vs a `raw` reference
     * corpus. Build-time eager (the bucket-count artifacts pin at program
@@ -539,46 +540,49 @@ object Program {
 
   // --- round-13 node (format version 7) ---
   /** Interpolated trigram-LM quality score over the input corpus ITSELF
-    * (`TextOps.trigramLmScore`) — the KenLM-direction upgrade of the v2
-    * cross-corpus [[LmScore]]. Jelinek-Mercer weights (l3, l2, l1) must
-    * be non-negative and sum to 1. BUILD-TIME EAGER (the three count
+    * (`TextOps.lmScore`, Jelinek-Mercer at order 3, n_tris) — the
+    * KenLM-direction upgrade of the v2 cross-corpus [[LmScore]].
+    * Jelinek-Mercer weights (l3, l2, l1) must be non-negative and sum
+    * to 1. BUILD-TIME EAGER (the three count
     * model artifacts pin at program build, like [[LmScore]]'s model);
     * validation is schema-only. Batch-only by nature (the model trains
     * on its own input — score a stream against a static reference with
     * [[LmScore]]). */
   final case class Lm3Score(name: String, input: String, idCol: String,
                             textCol: String, alpha: Double = 0.5, l3: Double = 0.6,
-                            l2: Double = 0.3, l1: Double = 0.1) extends Node
+                            l2: Double = 0.3, l1: Double = 0.1) extends Node with LmNode
 
   // --- round-14 nodes (format version 8) ---
   /** Dual-mode trigram-LM scoring against a PRETRAINED reference corpus
-    * (`TextOps.lm3ScoreAgainst`) — the CCNet ingest shape at order 3:
-    * [[LmScore]]'s pinned-count-artifact + broadcast-join machinery one
-    * order up, output drop-in for [[Lm3Score]] (n_tris). Lambdas must be
+    * (`TextOps.lmScore`, Jelinek-Mercer at order 3 against a reference)
+    * — the CCNet ingest shape at order 3: [[LmScore]]'s
+    * pinned-count-artifact + broadcast-join machinery one order up,
+    * output drop-in for [[Lm3Score]] (n_tris). Lambdas must be
     * non-negative and sum to 1. BUILD-TIME EAGER (the count artifacts
     * pin at lowering); validation is schema-only. */
   final case class Lm3Against(name: String, input: String, ref: String,
                               idCol: String, textCol: String, refTextCol: String,
                               alpha: Double = 0.5, l3: Double = 0.6, l2: Double = 0.3,
                               l1: Double = 0.1, minCount: Long = 1L,
-                              broadcastModel: Option[Boolean] = None) extends Node
+                              broadcastModel: Option[Boolean] = None) extends Node with LmNode
 
   /** Order-n interpolated LM quality score over the input corpus itself
-    * (`TextOps.ngramLmScore`) — [[Lm3Score]] parameterized toward the
+    * (`TextOps.lmScore`, Jelinek-Mercer) — [[Lm3Score]] parameterized toward the
     * 5-gram KenLM shape. Empty `lambdas` = the halving default; otherwise
     * exactly `order` weights, highest order first, non-negative, sum 1.
     * BUILD-TIME EAGER; batch-only (score a stream with [[LmNAgainst]]). */
   final case class LmNScore(name: String, input: String, idCol: String,
                             textCol: String, order: Int, alpha: Double = 0.5,
-                            lambdas: Seq[Double] = Nil) extends Node
+                            lambdas: Seq[Double] = Nil) extends Node with LmNode
 
   /** Dual-mode order-n LM scoring against a PRETRAINED reference corpus
-    * (`TextOps.ngramLmScoreAgainst`), output column n_grams. */
+    * (`TextOps.lmScore`, Jelinek-Mercer against a reference), output
+    * column n_grams. */
   final case class LmNAgainst(name: String, input: String, ref: String,
                               idCol: String, textCol: String, refTextCol: String,
                               order: Int, alpha: Double = 0.5,
                               lambdas: Seq[Double] = Nil, minCount: Long = 1L,
-                              broadcastModel: Option[Boolean] = None) extends Node
+                              broadcastModel: Option[Boolean] = None) extends Node with LmNode
 
   /** Batched BM25 retrieval (`TextOps.bm25Retrieve`): top-k corpus
     * documents per query — the RAG-curation stage as a shippable
@@ -614,12 +618,12 @@ object Program {
                                minShared: Int = 2, maxBucket: Int = 64) extends Node
 
   /** Order-n interpolated Kneser-Ney LM score over the input corpus
-    * itself (`TextOps.knLmScore`) — the KenLM smoothing family at a
+    * itself (`TextOps.lmScore`, Kneser-Ney) — the KenLM smoothing family at a
     * fixed discount. BUILD-TIME EAGER; batch-only (score a stream with
     * [[KnAgainst]]). */
   final case class KnScore(name: String, input: String, idCol: String,
                            textCol: String, order: Int,
-                           discount: Double = 0.75) extends Node
+                           discount: Double = 0.75) extends Node with LmNode
 
   /** Sentence-aware chunking (`TextOps.chunkSentencesIngest`) — greedy
     * sentence packing into ~maxTokens chunks, dual-mode (the per-doc
@@ -629,18 +633,18 @@ object Program {
                              sep: String = " ") extends Node
 
   /** Dual-mode order-n Kneser-Ney scoring against a PRETRAINED reference
-    * corpus (`TextOps.knLmScoreAgainst`) — the literal CCNet crawl-vs-
-    * Wikipedia shape with full back-off on unseen contexts.
+    * corpus (`TextOps.lmScore`, Kneser-Ney against a reference) — the
+    * literal CCNet crawl-vs-Wikipedia shape with full back-off on unseen contexts.
     * `broadcastModel` None (v9 grammar) = AUTO: decided per model pin
     * from its measured size vs the broadcast threshold. */
   final case class KnAgainst(name: String, input: String, ref: String,
                              idCol: String, textCol: String, refTextCol: String,
                              order: Int, discount: Double = 0.75,
                              minCount: Long = 1L,
-                             broadcastModel: Option[Boolean] = None) extends Node
+                             broadcastModel: Option[Boolean] = None) extends Node with LmNode
 
   /** Per-language Kneser-Ney scoring against a LABELED reference corpus
-    * (`TextOps.knLmScoreAgainstByLang`) — one model per language trained
+    * (`TextOps.lmScore`, Kneser-Ney per language) — one model per language trained
     * in one pass, the literal CCNet architecture; unmodeled languages
     * take a NULL score. Dual-mode; BUILD-TIME EAGER. */
   final case class KnAgainstLang(name: String, input: String, ref: String,
@@ -648,10 +652,10 @@ object Program {
                                  refTextCol: String, refLangCol: String,
                                  order: Int, discount: Double = 0.75,
                                  minCount: Long = 1L,
-                                 broadcastModel: Option[Boolean] = None) extends Node
+                                 broadcastModel: Option[Boolean] = None) extends Node with LmNode
 
   /** Per-language Jelinek-Mercer scoring against a LABELED reference
-    * corpus (`TextOps.ngramLmScoreAgainstByLang`) — the JM cell of the
+    * corpus (`TextOps.lmScore`, Jelinek-Mercer per language) — the JM cell of the
     * smoothing × per-language matrix (one add-alpha model per language,
     * trained in one pass); unmodeled languages take a NULL score.
     * Dual-mode; BUILD-TIME EAGER. */
@@ -661,10 +665,10 @@ object Program {
                                  order: Int, alpha: Double = 0.5,
                                  lambdas: Seq[Double] = Nil,
                                  minCount: Long = 1L,
-                                 broadcastModel: Option[Boolean] = None) extends Node
+                                 broadcastModel: Option[Boolean] = None) extends Node with LmNode
 
   /** Per-language MODIFIED-KN scoring against a labeled reference
-    * corpus (`TextOps.mknLmScoreAgainstByLang`) — the complete CCNet
+    * corpus (`TextOps.lmScore`, modified KN per language) — the complete CCNet
     * matrix cell: per-language models with each language's bucketed
     * discounts derived from its own slices' count-of-counts
     * (--discount_fallback per language). Dual-mode; BUILD-TIME EAGER. */
@@ -674,7 +678,7 @@ object Program {
                                   order: Int, fb1: Double = 0.5,
                                   fb2: Double = 1.0, fb3: Double = 1.5,
                                   minCount: Long = 1L,
-                                  broadcastModel: Option[Boolean] = None) extends Node
+                                  broadcastModel: Option[Boolean] = None) extends Node with LmNode
 
   /** Score against a KenLM-format ARPA artifact on the local filesystem
     * (`Arpa.arpaImport` + `Arpa.arpaScoreAgainst`): the pretrained model
@@ -716,7 +720,7 @@ object Program {
                                 table: String = "table") extends Node
 
   /** Modified Kneser-Ney LM score over the input corpus itself
-    * (`TextOps.mknLmScore`) — KenLM parity: three count-bucketed
+    * (`TextOps.lmScore`, modified KN) — KenLM parity: three count-bucketed
     * discounts per level, each derived from that level's count-of-counts,
     * falling back to (fb1, fb2, fb3) when the estimate is degenerate
     * (KenLM `--discount_fallback`). Explicit per-level discount maps are
@@ -725,17 +729,18 @@ object Program {
   final case class MknScore(name: String, input: String, idCol: String,
                             textCol: String, order: Int,
                             fb1: Double = 0.5, fb2: Double = 1.0,
-                            fb3: Double = 1.5) extends Node
+                            fb3: Double = 1.5) extends Node with LmNode
 
   /** Dual-mode modified-KN scoring against a PRETRAINED reference corpus
-    * (`TextOps.mknLmScoreAgainst`) — [[MknScore]]'s ingest face; bucketed
+    * (`TextOps.lmScore`, modified KN against a reference) — [[MknScore]]'s
+    * ingest face; bucketed
     * discounts derive from the REFERENCE model's count-of-counts.
     * `broadcastModel` None = AUTO (per model pin by measured size). */
   final case class MknAgainst(name: String, input: String, ref: String,
                               idCol: String, textCol: String, refTextCol: String,
                               order: Int, fb1: Double = 0.5, fb2: Double = 1.0,
                               fb3: Double = 1.5, minCount: Long = 1L,
-                              broadcastModel: Option[Boolean] = None) extends Node
+                              broadcastModel: Option[Boolean] = None) extends Node with LmNode
 
   /** Maximal exact-substring mining (`Dedup.maximalRepeats`) —
     * variable-length repeated extents >= minLen tokens with bounded
@@ -1119,28 +1124,16 @@ object Program {
             case None => graft.pipeline.Dedup.embeddingDedupAgainstCorpus(
               in(i), staticSide(name, in, ref), idCol, vecCol, threshold)
           }
-        case LmScore(name, i, ref, idCol, textCol, refTextCol, alpha) =>
-          graft.pipeline.TextOps.lmScoreAgainst(in(i),
-            staticSide(name, in, ref), idCol, textCol, refTextCol, alpha)
-        case Lm3Score(name, i, idCol, textCol, alpha, l3, l2, l1) =>
-          // lift (not verbatim eventOrder): the score schema drops the
-          // order columns, and validate's emptyOf assumes lift semantics —
-          // the two faces must agree on what survives
-          val s = in(i)
-          s.lift(graft.pipeline.TextOps.trigramLmScore(
-            batchFace(name, "lm3Score", s), idCol, textCol, alpha, (l3, l2, l1)))
-        case Lm3Against(name, i, ref, idCol, textCol, refTextCol, alpha, l3, l2, l1, mc, bm) =>
-          graft.pipeline.TextOps.lm3ScoreAgainst(in(i),
-            staticSide(name, in, ref), idCol, textCol, refTextCol, alpha,
-            (l3, l2, l1), mc, bm)
-        case LmNScore(name, i, idCol, textCol, order, alpha, lambdas) =>
-          val s = in(i)
-          s.lift(graft.pipeline.TextOps.ngramLmScore(
-            batchFace(name, "lmnScore", s), idCol, textCol, order, alpha, lambdas))
-        case LmNAgainst(name, i, ref, idCol, textCol, refTextCol, order, alpha, lambdas, mc, bm) =>
-          graft.pipeline.TextOps.ngramLmScoreAgainst(in(i),
-            staticSide(name, in, ref), idCol, textCol, refTextCol, order,
-            alpha, lambdas, minCount = mc, broadcastModel = bm)
+        case n: LmNode =>
+          val c = lmCall(n)
+          // a self-scored model lifts (not verbatim eventOrder): the score
+          // schema drops the order columns, and validate's emptyOf assumes
+          // lift semantics — the two faces must agree on what survives
+          val s = in(c.input)
+          if (c.ref.isEmpty) batchFace(node.name, codecOf(node).op, s)
+          graft.pipeline.TextOps.lmScore(s, c.spec, c.idCol, c.textCol,
+            c.ref.map { case (r, rt) =>
+              graft.pipeline.TextOps.LmRef(staticSide(node.name, in, r), rt, c.byLang) })
         case Bm25Retrieve(name, i, q, idCol, textCol, qIdCol, qTextCol, k, k1, b, bq) =>
           val s = in(i)
           s.lift(graft.pipeline.TextOps.bm25Retrieve(
@@ -1167,35 +1160,6 @@ object Program {
         case SentChunk(_, i, idCol, textCol, maxTokens, sep) =>
           graft.pipeline.TextOps.chunkSentencesIngest(in(i), idCol, textCol,
             maxTokens, sep)
-        case KnScore(name, i, idCol, textCol, order, discount) =>
-          val s = in(i)
-          s.lift(graft.pipeline.TextOps.knLmScore(
-            batchFace(name, "knScore", s), idCol, textCol, order, discount))
-        case KnAgainst(name, i, ref, idCol, textCol, refTextCol, order, discount, mc, bm) =>
-          graft.pipeline.TextOps.knLmScoreAgainst(in(i),
-            staticSide(name, in, ref), idCol, textCol, refTextCol, order,
-            discount, mc, bm)
-        case KnAgainstLang(name, i, ref, idCol, textCol, langCol, refTextCol,
-                           refLangCol, order, discount, mc, bm) =>
-          graft.pipeline.TextOps.knLmScoreAgainstByLang(in(i),
-            staticSide(name, in, ref), idCol, textCol, langCol, refTextCol,
-            refLangCol, order, discount, mc, bm)
-        case MknAgainstLang(name, i, ref, idCol, textCol, langCol, refTextCol,
-                            refLangCol, order, f1, f2, f3, mc, bm) =>
-          graft.pipeline.TextOps.mknLmScoreAgainstByLang(in(i),
-            staticSide(name, in, ref), idCol, textCol, langCol, refTextCol,
-            refLangCol, order, (f1, f2, f3), mc, bm)
-        case LmAgainstLang(name, i, ref, idCol, textCol, langCol, refTextCol,
-                           refLangCol, order, alpha, lambdas, mc, bm) =>
-          graft.pipeline.TextOps.ngramLmScoreAgainstByLang(in(i),
-            staticSide(name, in, ref), idCol, textCol, langCol, refTextCol,
-            refLangCol, order, alpha, lambdas, minCount = mc,
-            broadcastModel = bm)
-        case MknScore(name, i, idCol, textCol, order, f1, f2, f3) =>
-          val s = in(i)
-          s.lift(graft.pipeline.TextOps.mknLmScore(
-            batchFace(name, "mknScore", s), idCol, textCol, order,
-            fallback = (f1, f2, f3)))
         case ArpaScore(_, i, path, idCol, textCol, sentence) =>
           val s = in(i)
           graft.pipeline.Arpa.arpaScoreAgainst(s,
@@ -1219,10 +1183,6 @@ object Program {
             s"node '$name': artifact at $dir has no table '$table' " +
               s"(have: ${art.tables.keys.toSeq.sorted.mkString(", ")})")
           MStream(art.tables(table))
-        case MknAgainst(name, i, ref, idCol, textCol, refTextCol, order, f1, f2, f3, mc, bm) =>
-          graft.pipeline.TextOps.mknLmScoreAgainst(in(i),
-            staticSide(name, in, ref), idCol, textCol, refTextCol, order,
-            fallback = (f1, f2, f3), minCount = mc, broadcastModel = bm)
         case ExactSubstr(name, i, idCol, textCol, minLen, maxExtend, minDocs) =>
           val s = in(i)
           s.lift(graft.pipeline.Dedup.maximalRepeats(
@@ -1422,6 +1382,106 @@ object Program {
             batchFace(name, "zorder", in(i)), cols, numFiles, bits))
     }
   }
+
+  /** An LM node as the arguments of the one scoring entry
+    * ([[graft.pipeline.TextOps.lmScore]]): the spec, the scored input and
+    * its columns, the reference edge (the reference node and its text
+    * column) and, for per-language models, the (input, reference)
+    * language columns. */
+  private final case class LmCall(spec: graft.pipeline.TextOps.LmSpec, input: String,
+                                  idCol: String, textCol: String,
+                                  ref: Option[(String, String)],
+                                  byLang: Option[(String, String)])
+
+  /** Marks the twelve LM nodes, which lower through the one scoring entry
+    * by [[lmCall]]. */
+  sealed trait LmNode
+
+  /** THE mapping of the twelve LM nodes onto [[LmCall]]: lowering and
+    * both validators handle every LM node through it, so a node's fields
+    * meet the one [[graft.pipeline.TextOps.LmSpec]] contract in one
+    * place. [[lmNodeOf]] is its inverse. */
+  private def lmCall(n: LmNode): LmCall = {
+    import graft.pipeline.TextOps.LmSpec
+    import graft.pipeline.TextOps.LmSpec._
+    n match {
+      case LmScore(_, i, r, id, t, rt, a) =>
+        LmCall(LmSpec(2, AddAlpha(a)), i, id, t, Some((r, rt)), None)
+      case Lm3Score(_, i, id, t, a, l3, l2, l1) =>
+        LmCall(LmSpec(3, JelinekMercer(a, Seq(l3, l2, l1)), countCol = Some("n_tris")),
+          i, id, t, None, None)
+      case Lm3Against(_, i, r, id, t, rt, a, l3, l2, l1, mc, bm) =>
+        LmCall(LmSpec(3, JelinekMercer(a, Seq(l3, l2, l1)), mc, bm,
+          countCol = Some("n_tris")), i, id, t, Some((r, rt)), None)
+      case LmNScore(_, i, id, t, o, a, l) =>
+        LmCall(LmSpec(o, JelinekMercer(a, l)), i, id, t, None, None)
+      case LmNAgainst(_, i, r, id, t, rt, o, a, l, mc, bm) =>
+        LmCall(LmSpec(o, JelinekMercer(a, l), mc, bm), i, id, t, Some((r, rt)), None)
+      case LmAgainstLang(_, i, r, id, t, lc, rt, rlc, o, a, l, mc, bm) =>
+        LmCall(LmSpec(o, JelinekMercer(a, l), mc, bm), i, id, t, Some((r, rt)),
+          Some((lc, rlc)))
+      case KnScore(_, i, id, t, o, d) =>
+        LmCall(LmSpec(o, KneserNey(d)), i, id, t, None, None)
+      case KnAgainst(_, i, r, id, t, rt, o, d, mc, bm) =>
+        LmCall(LmSpec(o, KneserNey(d), mc, bm), i, id, t, Some((r, rt)), None)
+      case KnAgainstLang(_, i, r, id, t, lc, rt, rlc, o, d, mc, bm) =>
+        LmCall(LmSpec(o, KneserNey(d), mc, bm), i, id, t, Some((r, rt)), Some((lc, rlc)))
+      case MknScore(_, i, id, t, o, f1, f2, f3) =>
+        LmCall(LmSpec(o, ModifiedKn(fallback = (f1, f2, f3))), i, id, t, None, None)
+      case MknAgainst(_, i, r, id, t, rt, o, f1, f2, f3, mc, bm) =>
+        LmCall(LmSpec(o, ModifiedKn(fallback = (f1, f2, f3)), mc, bm), i, id, t,
+          Some((r, rt)), None)
+      case MknAgainstLang(_, i, r, id, t, lc, rt, rlc, o, f1, f2, f3, mc, bm) =>
+        LmCall(LmSpec(o, ModifiedKn(fallback = (f1, f2, f3)), mc, bm), i, id, t,
+          Some((r, rt)), Some((lc, rlc)))
+    }
+  }
+
+  /** The LM node named `name` that records `spec` over `input` — the
+    * inverse of [[lmCall]], for [[Rec.lmScore]]. The spec must pass its
+    * own check; one no node carries is a named error. */
+  private def lmNodeOf(name: String, input: String, spec: graft.pipeline.TextOps.LmSpec,
+                       idCol: String, textCol: String, ref: Option[(String, String)],
+                       byLang: Option[(String, String)]): Node = {
+    import graft.pipeline.TextOps.LmSpec._
+    spec.check("lmScore", ref.isDefined, byLang.isDefined)
+    val (o, mc, bm) = (spec.order, spec.minCount, spec.broadcastModel)
+    def tri(l: Seq[Double]) = graft.pipeline.TextOps.lambdasFor(3, l)
+    val trigram = spec.nCol == "n_tris"
+    (spec.smoothing, ref, byLang) match {
+      case _ if spec.sentenceMode || !Set("n_grams", "n_pairs", "n_tris")(spec.nCol) =>
+        throw noNode(spec)
+      case (AddAlpha(a), Some((r, rt)), None) => LmScore(name, input, r, idCol, textCol, rt, a)
+      case (JelinekMercer(a, l), None, None) if trigram =>
+        val Seq(l3, l2, l1) = tri(l)
+        Lm3Score(name, input, idCol, textCol, a, l3, l2, l1)
+      case (JelinekMercer(a, l), None, None) => LmNScore(name, input, idCol, textCol, o, a, l)
+      case (JelinekMercer(a, l), Some((r, rt)), None) if trigram && o == 3 =>
+        val Seq(l3, l2, l1) = tri(l)
+        Lm3Against(name, input, r, idCol, textCol, rt, a, l3, l2, l1, mc, bm)
+      case (JelinekMercer(a, l), Some((r, rt)), None) if !trigram =>
+        LmNAgainst(name, input, r, idCol, textCol, rt, o, a, l, mc, bm)
+      case (JelinekMercer(a, l), Some((r, rt)), Some((lc, rlc))) if !trigram =>
+        LmAgainstLang(name, input, r, idCol, textCol, lc, rt, rlc, o, a, l, mc, bm)
+      case (KneserNey(d), None, None) => KnScore(name, input, idCol, textCol, o, d)
+      case (KneserNey(d), Some((r, rt)), None) =>
+        KnAgainst(name, input, r, idCol, textCol, rt, o, d, mc, bm)
+      case (KneserNey(d), Some((r, rt)), Some((lc, rlc))) =>
+        KnAgainstLang(name, input, r, idCol, textCol, lc, rt, rlc, o, d, mc, bm)
+      case (ModifiedKn(ds, (f1, f2, f3)), None, None) if ds.isEmpty =>
+        MknScore(name, input, idCol, textCol, o, f1, f2, f3)
+      case (ModifiedKn(ds, (f1, f2, f3)), Some((r, rt)), None) if ds.isEmpty =>
+        MknAgainst(name, input, r, idCol, textCol, rt, o, f1, f2, f3, mc, bm)
+      case (ModifiedKn(_, (f1, f2, f3)), Some((r, rt)), Some((lc, rlc))) =>
+        MknAgainstLang(name, input, r, idCol, textCol, lc, rt, rlc, o, f1, f2, f3, mc, bm)
+      case _ => throw noNode(spec)
+    }
+  }
+
+  private def noNode(spec: graft.pipeline.TextOps.LmSpec): IllegalArgumentException =
+    new IllegalArgumentException(s"capture: no program node records $spec (explicit " +
+      "modified-KN discounts, sentenceMode and other count columns are Scala-face " +
+      "escapes of TextOps.lmScore)")
 
   /** Batch-face guard: the corpus-aggregation/layout nodes run driver
     * jobs or global sorts a streaming frame cannot express — fail with
@@ -1684,43 +1744,20 @@ object Program {
       derive("embedDedup", Seq(ref) ++ centroids)(n => EmbedDedup(n, name,
         ref.name, idCol, vecCol, threshold, centroids.map(_.name), nProbe,
         broadcastRef))
-    /** Cross-corpus bigram-LM scoring trained on `ref`. */
-    def lmScoreAgainst(ref: Rec, idCol: String, textCol: String,
-                       refTextCol: String, alpha: Double = 0.5): Rec =
-      derive("lmScore", Seq(ref))(n => LmScore(n, name, ref.name, idCol,
-        textCol, refTextCol, alpha))
-    /** Interpolated trigram-LM quality score over this corpus itself
-      * (format version 7). */
-    def trigramLmScore(idCol: String, textCol: String, alpha: Double = 0.5,
-                       lambdas: (Double, Double, Double) = (0.6, 0.3, 0.1)): Rec =
-      derive1("lm3Score")(n => Lm3Score(n, name, idCol, textCol, alpha,
-        lambdas._1, lambdas._2, lambdas._3))
-    /** Cross-corpus trigram-LM scoring trained on `ref` (format version
-      * 8) — the CCNet ingest shape at order 3. */
-    def lm3ScoreAgainst(ref: Rec, idCol: String, textCol: String,
-                        refTextCol: String, alpha: Double = 0.5,
-                        lambdas: (Double, Double, Double) = (0.6, 0.3, 0.1),
-                        minCount: Long = 1L,
-                        broadcastModel: Option[Boolean] = None): Rec =
-      derive("lm3Against", Seq(ref))(n => Lm3Against(n, name, ref.name, idCol,
-        textCol, refTextCol, alpha, lambdas._1, lambdas._2, lambdas._3,
-        minCount, broadcastModel))
-    /** Order-n interpolated LM score over this corpus itself (format
-      * version 8); empty lambdas = the halving default. */
-    def ngramLmScore(idCol: String, textCol: String, order: Int,
-                     alpha: Double = 0.5, lambdas: Seq[Double] = Nil): Rec =
-      derive1("lmnScore")(n => LmNScore(n, name, idCol, textCol, order,
-        alpha, lambdas))
-    /** Order-n LM scoring against `ref`'s pretrained counts (format
-      * version 8). */
-    def ngramLmScoreAgainst(ref: Rec, idCol: String, textCol: String,
-                            refTextCol: String, order: Int,
-                            alpha: Double = 0.5,
-                            lambdas: Seq[Double] = Nil,
-                            minCount: Long = 1L,
-                            broadcastModel: Option[Boolean] = None): Rec =
-      derive("lmnAgainst", Seq(ref))(n => LmNAgainst(n, name, ref.name, idCol,
-        textCol, refTextCol, order, alpha, lambdas, minCount, broadcastModel))
+    /** Record the LM node that `spec` declares ([[graft.pipeline.TextOps.lmScore]]):
+      * scored against `ref` (the reference Rec and its text column) when
+      * given, with per-language models when `byLang` names the (this,
+      * reference) language columns. A spec no node carries (explicit
+      * modified-KN discounts, `sentenceMode`, a count column other than
+      * the nodes' own) is an error here — those stay Scala-face
+      * escapes. */
+    def lmScore(spec: graft.pipeline.TextOps.LmSpec, idCol: String, textCol: String,
+                ref: Option[(Rec, String)] = None,
+                byLang: Option[(String, String)] = None): Rec = {
+      val proto = lmNodeOf("", name, spec, idCol, textCol,
+        ref.map { case (r, rt) => (r.name, rt) }, byLang)
+      derive(codecOf(proto).op, ref.map(_._1).toSeq)(withNodeName(proto, _))
+    }
     /** Batched BM25 retrieval of this corpus against `queries` (format
       * version 8). */
     def bm25Retrieve(queries: Rec, idCol: String, textCol: String,
@@ -1754,53 +1791,6 @@ object Program {
                        sep: String = " "): Rec =
       derive1("chunkSentences")(n => SentChunk(n, name, idCol, textCol,
         maxTokens, sep))
-    /** Order-n Kneser-Ney LM score over this corpus itself (format
-      * version 8). */
-    def knLmScore(idCol: String, textCol: String, order: Int,
-                  discount: Double = 0.75): Rec =
-      derive1("knScore")(n => KnScore(n, name, idCol, textCol, order, discount))
-    /** Order-n Kneser-Ney scoring against `ref`'s pretrained counts
-      * (format version 8). */
-    def knLmScoreAgainst(ref: Rec, idCol: String, textCol: String,
-                         refTextCol: String, order: Int,
-                         discount: Double = 0.75, minCount: Long = 1L,
-                         broadcastModel: Option[Boolean] = None): Rec =
-      derive("knAgainst", Seq(ref))(n => KnAgainst(n, name, ref.name, idCol,
-        textCol, refTextCol, order, discount, minCount, broadcastModel))
-    /** Per-language KN scoring against `ref`'s labeled slices (format
-      * version 9) — the literal CCNet one-model-per-language shape. */
-    def knLmScoreAgainstByLang(ref: Rec, idCol: String, textCol: String,
-                               langCol: String, refTextCol: String,
-                               refLangCol: String, order: Int,
-                               discount: Double = 0.75, minCount: Long = 1L,
-                               broadcastModel: Option[Boolean] = None): Rec =
-      derive("knAgainstLang", Seq(ref))(n => KnAgainstLang(n, name, ref.name,
-        idCol, textCol, langCol, refTextCol, refLangCol, order, discount,
-        minCount, broadcastModel))
-    /** Per-language Jelinek-Mercer scoring against `ref`'s labeled
-      * slices (format version 10) — the JM cell of the smoothing ×
-      * per-language matrix. */
-    def ngramLmScoreAgainstByLang(ref: Rec, idCol: String, textCol: String,
-                                  langCol: String, refTextCol: String,
-                                  refLangCol: String, order: Int,
-                                  alpha: Double = 0.5,
-                                  lambdas: Seq[Double] = Nil,
-                                  minCount: Long = 1L,
-                                  broadcastModel: Option[Boolean] = None): Rec =
-      derive("lmAgainstLang", Seq(ref))(n => LmAgainstLang(n, name, ref.name,
-        idCol, textCol, langCol, refTextCol, refLangCol, order, alpha,
-        lambdas, minCount, broadcastModel))
-    /** Per-language modified-KN scoring against `ref`'s labeled slices
-      * (format version 9) — the complete CCNet matrix cell. */
-    def mknLmScoreAgainstByLang(ref: Rec, idCol: String, textCol: String,
-                                langCol: String, refTextCol: String,
-                                refLangCol: String, order: Int,
-                                fallback: (Double, Double, Double) = (0.5, 1.0, 1.5),
-                                minCount: Long = 1L,
-                                broadcastModel: Option[Boolean] = None): Rec =
-      derive("mknAgainstLang", Seq(ref))(n => MknAgainstLang(n, name, ref.name,
-        idCol, textCol, langCol, refTextCol, refLangCol, order,
-        fallback._1, fallback._2, fallback._3, minCount, broadcastModel))
     /** Score against a KenLM-format ARPA file (format version 10;
       * `sentence = true` stamps 11). */
     def arpaScoreAgainst(path: String, idCol: String, textCol: String,
@@ -1818,22 +1808,6 @@ object Program {
     def saveArtifact(dir: String, kind: String,
                      overwrite: Boolean = false): Rec =
       derive1("saveArtifact")(n => SaveArtifact(n, name, dir, kind, overwrite))
-    /** Modified-KN score over this corpus itself (format version 9) —
-      * KenLM parity with `--discount_fallback` semantics. */
-    def mknLmScore(idCol: String, textCol: String, order: Int,
-                   fallback: (Double, Double, Double) = (0.5, 1.0, 1.5)): Rec =
-      derive1("mknScore")(n => MknScore(n, name, idCol, textCol, order,
-        fallback._1, fallback._2, fallback._3))
-    /** Modified-KN scoring against `ref`'s pretrained counts (format
-      * version 9). */
-    def mknLmScoreAgainst(ref: Rec, idCol: String, textCol: String,
-                          refTextCol: String, order: Int,
-                          fallback: (Double, Double, Double) = (0.5, 1.0, 1.5),
-                          minCount: Long = 1L,
-                          broadcastModel: Option[Boolean] = None): Rec =
-      derive("mknAgainst", Seq(ref))(n => MknAgainst(n, name, ref.name, idCol,
-        textCol, refTextCol, order, fallback._1, fallback._2, fallback._3,
-        minCount, broadcastModel))
     /** Maximal exact-substring mining over this corpus (format version 9). */
     def maximalRepeats(idCol: String, textCol: String, minLen: Int,
                        maxExtend: Int, minDocs: Int = 2): Rec =
@@ -2517,85 +2491,28 @@ object Program {
           // collect) must not run driver jobs during validation: force the
           // column references each side needs, then emit the operator's
           // known output schema directly
-          case lm: LmScore =>
-            val s = env(lm.input)
-            s.df.select(col(lm.idCol), col(lm.textCol)).schema
-            env(lm.ref).df.select(col(lm.refTextCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.lmScoreOutputSchema(
-              lm.idCol, s.df.schema(lm.idCol).dataType))
-          case l3: Lm3Score =>
-            // build-time eager (the three count models pin at lowering):
-            // force the column references, emit the score schema
-            val s = env(l3.input)
-            s.df.select(col(l3.idCol), col(l3.textCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.lm3ScoreOutputSchema(
-              l3.idCol, s.df.schema(l3.idCol).dataType))
-          case la: Lm3Against =>
-            val s = env(la.input)
-            s.df.select(col(la.idCol), col(la.textCol)).schema
-            env(la.ref).df.select(col(la.refTextCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.lm3ScoreOutputSchema(
-              la.idCol, s.df.schema(la.idCol).dataType))
-          case ln: LmNScore =>
-            val s = env(ln.input)
-            s.df.select(col(ln.idCol), col(ln.textCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.ngramOutputSchema(
-              ln.idCol, s.df.schema(ln.idCol).dataType))
-          case na: LmNAgainst =>
-            val s = env(na.input)
-            s.df.select(col(na.idCol), col(na.textCol)).schema
-            env(na.ref).df.select(col(na.refTextCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.ngramOutputSchema(
-              na.idCol, s.df.schema(na.idCol).dataType))
-          case ks: KnScore =>
-            val s = env(ks.input)
-            s.df.select(col(ks.idCol), col(ks.textCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.ngramOutputSchema(
-              ks.idCol, s.df.schema(ks.idCol).dataType))
-          case ka: KnAgainst =>
-            val s = env(ka.input)
-            s.df.select(col(ka.idCol), col(ka.textCol)).schema
-            env(ka.ref).df.select(col(ka.refTextCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.ngramOutputSchema(
-              ka.idCol, s.df.schema(ka.idCol).dataType))
-          case kl: KnAgainstLang =>
-            val s = env(kl.input)
-            s.df.select(col(kl.idCol), col(kl.textCol), col(kl.langCol)).schema
-            env(kl.ref).df.select(col(kl.refTextCol), col(kl.refLangCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.ngramOutputSchema(
-              kl.idCol, s.df.schema(kl.idCol).dataType))
-          case jl: LmAgainstLang =>
-            val s = env(jl.input)
-            s.df.select(col(jl.idCol), col(jl.textCol), col(jl.langCol)).schema
-            env(jl.ref).df.select(col(jl.refTextCol), col(jl.refLangCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.ngramOutputSchema(
-              jl.idCol, s.df.schema(jl.idCol).dataType))
-          case ml: MknAgainstLang =>
-            val s = env(ml.input)
-            s.df.select(col(ml.idCol), col(ml.textCol), col(ml.langCol)).schema
-            env(ml.ref).df.select(col(ml.refTextCol), col(ml.refLangCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.ngramOutputSchema(
-              ml.idCol, s.df.schema(ml.idCol).dataType))
-          case ms: MknScore =>
-            // build-time eager (model + discount derivation): schema-only
-            val s = env(ms.input)
-            s.df.select(col(ms.idCol), col(ms.textCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.ngramOutputSchema(
-              ms.idCol, s.df.schema(ms.idCol).dataType))
+          case n: LmNode =>
+            val c = lmCall(n)
+            val s = env(c.input)
+            s.df.select((Seq(c.idCol, c.textCol) ++ c.byLang.map(_._1)).map(col): _*).schema
+            c.ref.foreach { case (r, rt) =>
+              env(r).df.select((rt +: c.byLang.map(_._2).toSeq).map(col): _*).schema }
+            emptyOf(s, graft.pipeline.TextOps.lmOutputSchema(
+              c.idCol, s.df.schema(c.idCol).dataType, c.spec.nCol))
           case as: ArpaScore =>
             // the artifact file is a RUNTIME binding (like a source
             // path): validation checks column references and the output
             // schema fact only, never reads the file
             val s = env(as.input)
             s.df.select(col(as.idCol), col(as.textCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.ngramOutputSchema(
-              as.idCol, s.df.schema(as.idCol).dataType))
+            emptyOf(s, graft.pipeline.TextOps.lmOutputSchema(
+              as.idCol, s.df.schema(as.idCol).dataType, "n_grams"))
           case al: ArpaScoreLang =>
             // same runtime-binding stance for the per-language directory
             val s = env(al.input)
             s.df.select(col(al.idCol), col(al.textCol), col(al.langCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.ngramOutputSchema(
-              al.idCol, s.df.schema(al.idCol).dataType))
+            emptyOf(s, graft.pipeline.TextOps.lmOutputSchema(
+              al.idCol, s.df.schema(al.idCol).dataType, "n_grams"))
           case sv: SaveArtifact =>
             // the tee must NOT write during validation — pass the input
             // schema through, exactly what the real lowering returns
@@ -2611,12 +2528,6 @@ object Program {
             new MStream(spark.createDataFrame(
               new java.util.ArrayList[org.apache.spark.sql.Row](),
               art.tables(la.table).schema), Nil, Nil, la.name)
-          case ma: MknAgainst =>
-            val s = env(ma.input)
-            s.df.select(col(ma.idCol), col(ma.textCol)).schema
-            env(ma.ref).df.select(col(ma.refTextCol)).schema
-            emptyOf(s, graft.pipeline.TextOps.ngramOutputSchema(
-              ma.idCol, s.df.schema(ma.idCol).dataType))
           case es: ExactSubstr =>
             // build-time eager (candidate census checkpoint): schema-only
             val s = env(es.input)
@@ -2931,43 +2842,6 @@ object Program {
     }
   }
 
-  /** Shared structural contract of the order-n LM nodes — mirrors
-    * `TextOps.lambdasFor` / the operator requires so a bad artifact
-    * fails at load with the node's name. */
-  private def checkNgram(node: String, op: String, order: Int,
-                         alpha: Double, lambdas: Seq[Double]): Unit = {
-    if (order < 2 || order > 8) throw new IllegalArgumentException(
-      s"node '$node': $op order must be in [2, 8], got $order")
-    if (alpha <= 0.0) throw new IllegalArgumentException(
-      s"node '$node': $op needs alpha > 0, got $alpha")
-    if (lambdas.nonEmpty && (lambdas.length != order ||
-        lambdas.exists(_ < 0) || math.abs(lambdas.sum - 1.0) >= 1e-9))
-      throw new IllegalArgumentException(
-        s"node '$node': $op lambdas must be $order non-negative weights " +
-          s"summing to 1, highest order first (or empty for the halving " +
-          s"default), got ${lambdas.mkString(", ")}")
-  }
-
-  /** Structural contract of the Kneser-Ney nodes — mirrors the operator
-    * requires so a bad artifact fails at load with the node's name. */
-  private def checkKn(node: String, op: String, order: Int,
-                      discount: Double): Unit = {
-    if (order < 2 || order > 8) throw new IllegalArgumentException(
-      s"node '$node': $op order must be in [2, 8], got $order")
-    if (discount <= 0.0 || discount >= 1.0) throw new IllegalArgumentException(
-      s"node '$node': $op discount must be in (0, 1), got $discount")
-  }
-
-  private def checkMkn(node: String, op: String, order: Int,
-                       fb1: Double, fb2: Double, fb3: Double): Unit = {
-    if (order < 2 || order > 8) throw new IllegalArgumentException(
-      s"node '$node': $op order must be in [2, 8], got $order")
-    if (!(fb1 > 0 && fb1 <= 1 && fb2 > 0 && fb2 <= 2 && fb3 > 0 && fb3 <= 3))
-      throw new IllegalArgumentException(
-        s"node '$node': $op fallback discounts must satisfy 0 < D1 <= 1, " +
-          s"0 < D2 <= 2, 0 < D3+ <= 3, got ($fb1, $fb2, $fb3)")
-  }
-
   /** Load-time validation: every SQL fragment must parse, every input
     * reference must resolve to an earlier node. Catches a corrupt or
     * hand-edited document before any Spark job is planned. */
@@ -3079,32 +2953,10 @@ object Program {
             throw new IllegalArgumentException(s"node '${n.name}': embedDedup's " +
               "exact face is broadcast-only; pass a centroids input for the " +
               "beyond-broadcast IVF route (broadcastRef = false)")
-        case lm: LmScore =>
-          if (lm.alpha <= 0.0) throw new IllegalArgumentException(
-            s"node '${n.name}': lmScore needs alpha > 0, got ${lm.alpha}")
-        case l3: Lm3Score =>
-          if (l3.alpha <= 0.0) throw new IllegalArgumentException(
-            s"node '${n.name}': lm3Score needs alpha > 0, got ${l3.alpha}")
-          if (l3.l3 < 0.0 || l3.l2 < 0.0 || l3.l1 < 0.0 ||
-              math.abs(l3.l3 + l3.l2 + l3.l1 - 1.0) >= 1e-9)
-            throw new IllegalArgumentException(
-              s"node '${n.name}': lm3Score lambdas must be non-negative and " +
-                s"sum to 1, got (${l3.l3}, ${l3.l2}, ${l3.l1})")
-        case la: Lm3Against =>
-          if (la.alpha <= 0.0) throw new IllegalArgumentException(
-            s"node '${n.name}': lm3Against needs alpha > 0, got ${la.alpha}")
-          if (la.minCount < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': lm3Against needs minCount >= 1, got ${la.minCount}")
-          if (la.l3 < 0.0 || la.l2 < 0.0 || la.l1 < 0.0 ||
-              math.abs(la.l3 + la.l2 + la.l1 - 1.0) >= 1e-9)
-            throw new IllegalArgumentException(
-              s"node '${n.name}': lm3Against lambdas must be non-negative " +
-                s"and sum to 1, got (${la.l3}, ${la.l2}, ${la.l1})")
-        case ln: LmNScore => checkNgram(n.name, "lmnScore", ln.order, ln.alpha, ln.lambdas)
-        case na: LmNAgainst =>
-          checkNgram(n.name, "lmnAgainst", na.order, na.alpha, na.lambdas)
-          if (na.minCount < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': lmnAgainst needs minCount >= 1, got ${na.minCount}")
+        case lm: LmNode =>
+          val c = lmCall(lm)
+          c.spec.check(s"node '${n.name}': ${codecOf(n).op}", c.ref.isDefined,
+            c.byLang.isDefined)
         case br: Bm25Retrieve =>
           if (br.k <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': bm25Retrieve needs k > 0, got ${br.k}")
@@ -3132,27 +2984,9 @@ object Program {
               s"node '${n.name}': winnowPairs needs n >= 1, w >= 1, " +
                 s"minShared >= 1 and maxBucket >= 2, got " +
                 s"(${wp.n}, ${wp.w}, ${wp.minShared}, ${wp.maxBucket})")
-        case ks: KnScore => checkKn(n.name, "knScore", ks.order, ks.discount)
         case sx: SentChunk =>
           if (sx.maxTokens <= 0) throw new IllegalArgumentException(
             s"node '${n.name}': chunkSentences needs maxTokens > 0, got ${sx.maxTokens}")
-        case ka: KnAgainst =>
-          checkKn(n.name, "knAgainst", ka.order, ka.discount)
-          if (ka.minCount < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': knAgainst needs minCount >= 1, got ${ka.minCount}")
-        case kl: KnAgainstLang =>
-          checkKn(n.name, "knAgainstLang", kl.order, kl.discount)
-          if (kl.minCount < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': knAgainstLang needs minCount >= 1, got ${kl.minCount}")
-        case jl: LmAgainstLang =>
-          checkNgram(n.name, "lmAgainstLang", jl.order, jl.alpha, jl.lambdas)
-          if (jl.minCount < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': lmAgainstLang needs minCount >= 1, got ${jl.minCount}")
-        case ml: MknAgainstLang =>
-          checkMkn(n.name, "mknAgainstLang", ml.order, ml.fb1, ml.fb2, ml.fb3)
-          if (ml.minCount < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': mknAgainstLang needs minCount >= 1, got ${ml.minCount}")
-        case ms: MknScore => checkMkn(n.name, "mknScore", ms.order, ms.fb1, ms.fb2, ms.fb3)
         case as: ArpaScore =>
           if (as.path.trim.isEmpty) throw new IllegalArgumentException(
             s"node '${n.name}': arpaScore needs a non-empty artifact path")
@@ -3173,10 +3007,6 @@ object Program {
           if (la.dir.trim.isEmpty || la.table.trim.isEmpty)
             throw new IllegalArgumentException(
               s"node '${n.name}': loadArtifact needs a non-empty dir and table")
-        case ma: MknAgainst =>
-          checkMkn(n.name, "mknAgainst", ma.order, ma.fb1, ma.fb2, ma.fb3)
-          if (ma.minCount < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': mknAgainst needs minCount >= 1, got ${ma.minCount}")
         case es: ExactSubstr =>
           if (es.minLen < 2 || es.maxExtend < 1 || es.minDocs < 2)
             throw new IllegalArgumentException(
@@ -3184,11 +3014,13 @@ object Program {
                 s"maxExtend >= 1 and minDocs >= 2, got " +
                 s"(${es.minLen}, ${es.maxExtend}, ${es.minDocs})")
         case pt: PplThresholds =>
-          checkKn(n.name, "pplThresholds", pt.order, pt.discount)
+          // the knAgainst model it scores under, by the same contract
+          graft.pipeline.TextOps.LmSpec(pt.order,
+            graft.pipeline.TextOps.LmSpec.KneserNey(pt.discount), pt.minCount,
+            pt.broadcastModel).check(s"node '${n.name}': pplThresholds",
+            against = true, byLang = false)
           if (pt.buckets < 2) throw new IllegalArgumentException(
             s"node '${n.name}': pplThresholds needs buckets >= 2, got ${pt.buckets}")
-          if (pt.minCount < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': pplThresholds needs minCount >= 1, got ${pt.minCount}")
         case rb: RankBuckets =>
           if (rb.buckets < 2) throw new IllegalArgumentException(
             s"node '${n.name}': rankBuckets needs buckets >= 2, got ${rb.buckets}")

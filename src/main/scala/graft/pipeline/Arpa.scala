@@ -86,10 +86,10 @@ object Arpa {
   // ------------------------------------------------------------- export
 
   /** Export the fixed-discount interpolated-KN model of `refDocs` (the
-    * [[TextOps.knLmScoreAgainst]] model at the same `order`/`discount`/
-    * `minCount`) as an ARPA text file at `path` (resolved through the
+    * [[TextOps.lmScore]] [[TextOps.LmSpec.KneserNey]] model at the same
+    * `order`/`discount`/`minCount`) as an ARPA text file at `path` (resolved through the
     * session's Hadoop conf). Round-trip guarantee: importing the file and
-    * scoring with [[arpaScoreAgainst]] reproduces `knLmScoreAgainst`'s
+    * scoring with [[arpaScoreAgainst]] reproduces that `lmScore`'s
     * scores (same reference, same levers) — ArpaSpec pins it at orders 3
     * and 5, pruned and unpruned. `sentenceMode` trains on sentence-
     * delimited windows with `<s>` padding and `</s>` events (score with
@@ -106,14 +106,15 @@ object Arpa {
 
   /** Export the MODIFIED-KN model (KenLM parity: count-bucketed D1/D2/D3+
     * per level, derived from each level's count-of-counts with
-    * `--discount_fallback` semantics — [[TextOps.mknLmScoreAgainst]]'s
+    * `--discount_fallback` semantics — the [[TextOps.LmSpec.ModifiedKn]] against face's
     * model) as an ARPA text file at `path`. */
   def arpaExportMkn(refDocs: DataFrame, refTextCol: String, order: Int,
                     path: String,
                     fallback: (Double, Double, Double) = TextOps.MknFallback,
                     minCount: Long = 1L,
                     sentenceMode: Boolean = false): Unit = {
-    TextOps.checkMknParams(order, Map.empty, fallback)
+    TextOps.LmSpec(order, TextOps.LmSpec.ModifiedKn(fallback = fallback))
+      .check("arpaExportMkn", against = true, byLang = false)
     exportModel(refDocs, refTextCol, order, path, minCount, None,
       fallback = fallback, sentenceMode = sentenceMode)
   }
@@ -405,11 +406,12 @@ object Arpa {
     * artifact per language): `dir/<file>.arpa` per language via
     * [[fileNameOf]]'s injective, reversible name mapping. ALL languages'
     * models train in ONE pass (the language threads as a key through
-    * every count/context/stats groupBy — the [[TextOps.knLmScoreAgainstByLang]]
-    * tables); each file is a SLICE of the shared pinned tables, written
-    * byte-identically to a per-slice [[arpaExportKn]] of that language's
-    * documents. Languages whose slice has no bigram are SKIPPED (no
-    * model — the by-lang scorer's NULL-verdict languages); at most 1024
+    * every count/context/stats groupBy — the per-language
+    * [[TextOps.lmScore]] Kneser-Ney tables); each file is a SLICE of the
+    * shared pinned tables, written byte-identically to a per-slice
+    * [[arpaExportKn]] of that language's documents. Languages whose
+    * slice has no bigram are SKIPPED (no model — the by-lang scorer's
+    * NULL-verdict languages); at most 1024
     * modeled languages (a named error — one file per language is an
     * artifact layout, not a per-key operation). Returns (language, file
     * path) for each written file. */
@@ -431,7 +433,8 @@ object Arpa {
                           refLangCol: String, order: Int, dir: String,
                           fallback: (Double, Double, Double) = TextOps.MknFallback,
                           minCount: Long = 1L): Seq[(String, String)] = {
-    TextOps.checkMknParams(order, Map.empty, fallback)
+    TextOps.LmSpec(order, TextOps.LmSpec.ModifiedKn(fallback = fallback))
+      .check("arpaExportMknByLang", against = true, byLang = true)
     exportByLang(refDocs, refTextCol, refLangCol, order, dir,
       "arpaExportMknByLang", minCount, None, fallback)
   }
@@ -693,7 +696,7 @@ object Arpa {
     * set); a document whose language has no model (or whose text is
     * under the directory's top order) keeps its position count and takes
     * a NULL score — exactly the in-session
-    * [[TextOps.knLmScoreAgainstByLang]] verdict; a null language is its
+    * per-language [[TextOps.lmScore]] verdict; a null language is its
     * own model (the engine-wide null-group convention). Models of mixed
     * orders score at their own order's windows aligned to the
     * directory's MAX order (documents window at the max order — the

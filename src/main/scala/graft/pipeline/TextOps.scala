@@ -877,54 +877,264 @@ object TextOps {
         (coalesce(col("__n"), lit(0L)) >= minOverlap).cast("int").as("contaminated"))
   }
 
-  /** CCNet-style LM quality signal (Wenzek et al., "CCNet: Extracting High
-    * Quality Monolingual Datasets from Web Crawl Data", 2020 — their
-    * KenLM perplexity filter, with the LM trained on the corpus itself):
-    * an add-alpha-smoothed bigram model over adjacent token pairs, each
-    * document scored by its average per-pair log-likelihood
-    * ln((c(u,v) + a) / (c(u) + a·V)), V = the distinct tokens that
-    * follow some token. Low scores flag OCR noise and gibberish;
-    * anomalously high ones flag boilerplate (the corpus's own
-    * most-repeated continuations).
-    *
-    * Scale shape: [[jmSelfScore]] — the one-pass pinned model, then a
-    * second pass joining the pairs against it. Pair keys are the token
-    * strings so an independent engine reproduces scores exactly; at
-    * 100 TB the join key would be a 64-bit pair hash with the strings
-    * kept only in the model table. Documents with under 2 tokens score
-    * NULL (no pairs). */
-  def bigramLmScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                    textCol: String, alpha: Double = 0.5): org.apache.spark.sql.DataFrame =
-    jmSelfScore(docs, idCol, textCol, 2, "n_pairs",
-      spread = scoringSpread(2, selfScored = true, knFamily = false),
-      vocabOfContinuations = true)(
-      log((col("__c2") + alpha) / (col("__cx2") + col("__vv") * alpha)))
+  // ================================================================ the LM
 
-  /** Interpolated trigram LM quality score — one model order up from
-    * [[bigramLmScore]] toward the 5-gram KenLM real CCNet pipelines score
-    * with (counts-based n-gram models are the exact, oracle-able family;
-    * the interpolation is Jelinek-Mercer): P(t | u v) =
-    * λ3·P̂3(t|u,v) + λ2·P̂2(t|v) + λ1·P̂1(t), each P̂ add-alpha-smoothed
-    * over the self-corpus counts with V = the distinct-unigram vocabulary,
-    * and each document scored by the average ln P over its trigram
-    * positions (< 3 tokens → NULL score, n_tris 0 — the bigram face's
-    * convention). [[ngramLmScore]] at order 3 with the scoring stage kept
-    * narrow; scale shape in [[jmSelfScore]]. */
-  def trigramLmScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                     textCol: String, alpha: Double = 0.5,
-                     lambdas: (Double, Double, Double) = (0.6, 0.3, 0.1))
-      : org.apache.spark.sql.DataFrame = {
-    require(!docs.isStreaming,
-      "trigramLmScore trains on its own input — batch only (score a stream " +
-        "against a static reference with lm3ScoreAgainst)")
-    val (l3, l2, l1) = lambdas
-    require(l3 >= 0 && l2 >= 0 && l1 >= 0 && math.abs(l3 + l2 + l1 - 1.0) < 1e-9,
-      s"lambdas must be non-negative and sum to 1, got $lambdas")
-    // the one face off the [[scoringSpread]] table: its order-3 stage
-    // stays NARROW — an explicit choice, not derived. Spreading it changes
-    // batch_sf001's q_lm3_score plan and needs its own ABBA run first.
-    jmSelfScore(docs, idCol, textCol, 3, "n_tris", spread = false)(
-      ngramLp(3, alpha, Seq(l3, l2, l1)))
+  /** ONE n-gram language model, declared: its order, its smoothing with
+    * that smoothing's parameters, the levers of the against faces and the
+    * output count column — the spec the one scoring entry [[lmScore]]
+    * takes, batch or streaming, self-scored or against a reference. This
+    * is the CCNet quality signal (Wenzek et al., "CCNet: Extracting High
+    * Quality Monolingual Datasets from Web Crawl Data", 2020: score crawl
+    * text by the perplexity of a 5-gram KenLM trained per language on
+    * Wikipedia); every smoothing here is counts-based and deterministic,
+    * so an independent engine reproduces the scores bit-for-bit, which
+    * KenLM's float quantization would not.
+    *  - `minCount` prunes reference counts < minCount at orders >= 2
+    *    (KenLM's --prune; on Kneser-Ney before the continuation counts
+    *    derive, so they count surviving types): pruned grams score as
+    *    unseen. THE scale lever that keeps a high-order model a
+    *    broadcastable artifact when the reference corpus is large.
+    *  - `broadcastModel`: None = AUTO, decided per model pin from its
+    *    measured size vs the session broadcast threshold (the model is
+    *    checkpointed before scoring, so its size is known); Some(false)
+    *    = unhinted model joins for a beyond-broadcast model, batch only —
+    *    streaming needs every table to broadcast; Some(true) forces the
+    *    broadcast (the streaming escape).
+    *  - `sentenceMode`: sentence-delimited `<s>`/`</s>` windowing on BOTH
+    *    sides ([[Sentences]]) — each sentence scores its n words plus one
+    *    `</s>` event under `<s>`-padded contexts; the opt-in that makes a
+    *    sentence-trained artifact ([[Arpa]]'s `sentenceMode` export)
+    *    numerically drop-in.
+    *  - `countCol`: the output position-count column; None = n_pairs
+    *    for add-alpha, n_grams otherwise. A Jelinek-Mercer against face
+    *    may name any column (n_tris keeps order-3 outputs drop-in for
+    *    the self-scored trigram's); a self-scored Jelinek-Mercer model of
+    *    order 3 may name n_tris, and its order-3 scoring stage then stays
+    *    NARROW — the one stage off the [[scoringSpread]] table, an
+    *    explicit choice, not derived: spreading it changes batch_sf001's
+    *    q_lm3_score plan and needs its own ABBA run first.
+    * [[check]] is the one parameter contract; the program-document LM
+    * nodes map onto this spec and share it. */
+  final case class LmSpec(order: Int, smoothing: LmSpec.Smoothing,
+                          minCount: Long = 1L,
+                          broadcastModel: Option[Boolean] = None,
+                          sentenceMode: Boolean = false,
+                          countCol: Option[String] = None) {
+    import LmSpec._
+
+    /** The output position-count column. */
+    def nCol: String = countCol.getOrElse(smoothing match {
+      case _: AddAlpha => "n_pairs"
+      case _ => "n_grams"
+    })
+
+    /** The Kneser-Ney family (fixed or modified discounts). */
+    def kn: Boolean = smoothing match {
+      case _: KneserNey | _: ModifiedKn => true
+      case _ => false
+    }
+
+    /** THE parameter contract of the LM family — exactly the
+      * combinations the engines take, for a model scored `against` a
+      * reference or not, `byLang` (per-language models) or shared.
+      * Throws an IllegalArgumentException whose message starts with
+      * `label`. */
+    def check(label: String, against: Boolean, byLang: Boolean): Unit = {
+      def need(ok: Boolean, msg: => String): Unit =
+        if (!ok) throw new IllegalArgumentException(s"$label $msg")
+      def triple(what: String, t: (Double, Double, Double)): Unit = {
+        val (d1, d2, d3) = t
+        need(d1 > 0 && d1 <= 1 && d2 > 0 && d2 <= 2 && d3 > 0 && d3 <= 3,
+          s"$what discounts must satisfy 0 < D1 <= 1, 0 < D2 <= 2, " +
+            s"0 < D3+ <= 3, got ($d1, $d2, $d3)")
+      }
+      // order 1 is a unigram table, not an LM; past 8 the count tables
+      // stop being model-sized on real corpora
+      need(order >= 2 && order <= 8, s"order must be in [2, 8], got $order")
+      need(minCount >= 1, s"needs minCount >= 1, got $minCount")
+      need(against || (minCount == 1L && broadcastModel.isEmpty),
+        "takes minCount and broadcastModel only against a reference (they " +
+          "prune and ship a reference model; a self-scored model is neither)")
+      need(!sentenceMode || (kn && against && !byLang),
+        "takes sentenceMode only on a shared Kneser-Ney model against a " +
+          "reference (the sentence-trained artifact's face)")
+      need(countCol.forall(c => c.nonEmpty && (smoothing match {
+          case _: JelinekMercer => against || c == "n_grams" || (c == "n_tris" && order == 3)
+          case _ => false
+        })),
+        s"cannot name its count column ${countCol.getOrElse("")} (a " +
+          "Jelinek-Mercer against face names any; a self-scored one n_tris " +
+          "at order 3; the others keep n_pairs / n_grams)")
+      smoothing match {
+        case AddAlpha(alpha) =>
+          need(order == 2 && !byLang, "add-alpha smoothing is the order-2 " +
+            s"shared-model bigram, got order $order" +
+            (if (byLang) " with language columns" else ""))
+          need(alpha > 0, s"needs alpha > 0, got $alpha")
+          need(minCount == 1L && broadcastModel.isEmpty, "add-alpha smoothing " +
+            "takes neither minCount nor broadcastModel (its model is " +
+            "never pruned and always broadcasts)")
+        case JelinekMercer(alpha, lambdas) =>
+          need(alpha > 0, s"needs alpha > 0, got $alpha")
+          need(lambdas.isEmpty || lambdas.length == order,
+            s"of order $order needs $order lambdas (highest order first), " +
+              s"got ${lambdas.length}")
+          need(lambdas.isEmpty || (lambdas.forall(_ >= 0) &&
+            math.abs(lambdas.sum - 1.0) < 1e-9),
+            s"lambdas must be non-negative and sum to 1, got " +
+              lambdas.mkString("(", ", ", ")"))
+        case KneserNey(discount) =>
+          need(discount > 0 && discount < 1,
+            s"discount must be in (0, 1), got $discount")
+        case ModifiedKn(discounts, fallback) =>
+          triple("fallback", fallback)
+          need(discounts.isEmpty || !byLang, "takes explicit modified-KN " +
+            "discounts only on a shared model (per-language discounts " +
+            "derive from each language's own counts)")
+          need(discounts.isEmpty || discounts.keySet == (1 to order).toSet,
+            s"explicit modified-KN discounts must cover every level 1..$order " +
+              "(highest = raw counts, lower = continuation counts), got levels " +
+              discounts.keySet.toSeq.sorted.mkString(","))
+          discounts.toSeq.sortBy(_._1).foreach { case (j, t) => triple(s"level-$j", t) }
+      }
+    }
+  }
+
+  object LmSpec {
+    /** How an [[LmSpec]] turns counts into probabilities. */
+    sealed trait Smoothing
+
+    /** Add-alpha bigram: ln((c(u,v) + α) / (c(u) + α·V)) over adjacent
+      * token pairs, V = the distinct tokens that follow some token.
+      * Order 2, one shared model. */
+    final case class AddAlpha(alpha: Double = 0.5) extends Smoothing
+
+    /** Jelinek-Mercer interpolation of add-alpha estimates: P(t | ctx) =
+      * Σ_j λ_j · P̂_j(t | last j−1 tokens), V = the distinct-unigram
+      * vocabulary (a documented deviation from KenLM's modified KN — the
+      * counts-based exact family). `lambdas`: `order` weights, highest
+      * order first, non-negative, sum 1; Nil takes the halving default
+      * λ_j ∝ 2^j (normalized), the standard strong preference for the
+      * longest context. */
+    final case class JelinekMercer(alpha: Double = 0.5,
+                                   lambdas: Seq[Double] = Nil) extends Smoothing
+
+    /** Interpolated Kneser-Ney at one fixed discount (Kneser & Ney 1995;
+      * Chen & Goodman 1999 §3): continuation counts below the top order,
+      * full back-off on unseen contexts. */
+    final case class KneserNey(discount: Double = 0.75) extends Smoothing
+
+    /** Modified Kneser-Ney — KenLM parity: three count-bucketed discounts
+      * (D1, D2, D3+) per level, each derived from that level's
+      * count-of-counts ([[mknDerive]], with KenLM's `--discount_fallback`
+      * semantics: the all-or-none per-order rule an independent engine
+      * reproduces exactly, `fallback` when the estimate is degenerate).
+      * `discounts` overrides the derivation per level (level 1 =
+      * continuation unigrams, level `order` = raw counts); shared models
+      * only. */
+    final case class ModifiedKn(discounts: Map[Int, (Double, Double, Double)] = Map.empty,
+                                fallback: (Double, Double, Double) = MknFallback)
+        extends Smoothing
+  }
+
+  /** The reference corpus an [[LmSpec]] trains on: a batch frame and its
+    * text column, plus, for per-language models, the (scored documents',
+    * reference's) language columns. */
+  final case class LmRef(docs: org.apache.spark.sql.DataFrame, textCol: String,
+                         byLang: Option[(String, String)] = None)
+
+  /** THE LM scoring entry: every document of `stream` scores by its
+    * average per-position ln P under the model `spec` declares — trained
+    * on the input itself (batch only) or on `ref`, one model shared by
+    * all documents or one per language. Output (idCol, spec.nCol,
+    * avg_logprob); documents under `order` tokens emit (0, NULL), and
+    * under per-language models a document whose language has no
+    * reference model (or whose language's slice has no bigram) keeps
+    * its position count and scores NULL — the deterministic no-model
+    * verdict; a null language is its own model (struct-wrapped keys, the
+    * engine-wide null-group convention).
+    *
+    * Scale shape: the model is [[lmCounts]]'s pinned count tables (one
+    * grouping-sets aggregate, two pins for Kneser-Ney), orders of
+    * magnitude under corpus size; per-language models are SLICES of the
+    * same pins with the language as one more key, trained in one pass.
+    * Scoring explodes the order-n positions and joins them against the
+    * count slices ([[lmApply]]) — inner joins on the self face (a
+    * position's own occurrence puts every suffix in the model), LEFT
+    * joins against a reference, where unseen contexts back off (the
+    * smoothed floor (0+α)/(0+Vα), or Kneser-Ney's skipped level and
+    * uniform 1/(V+1) floor). A stream scores through stream-static
+    * broadcast joins and the stateless per-batch combine — zero
+    * state-store rows. The engines are [[jmSelfScore]],
+    * [[jmAgainstScore]], [[knSelfScore]] and [[knAgainstScore]]. */
+  def lmScore(stream: graft.api.MStream, spec: LmSpec, idCol: String, textCol: String,
+              ref: Option[LmRef] = None): graft.api.MStream = {
+    import LmSpec._
+    val label = "lmScore"
+    spec.check(label, ref.isDefined, ref.exists(_.byLang.isDefined))
+    val order = spec.order
+    val addAlpha = spec.smoothing.isInstanceOf[AddAlpha]
+    // the per-position log-likelihood of the add-alpha family (add-alpha
+    // and Jelinek-Mercer); counts absent after a LEFT join coalesce to 0
+    def jmLp(left: Boolean): Column = spec.smoothing match {
+      case AddAlpha(alpha) =>
+        def c(n: String): Column = if (left) coalesce(col(n), lit(0L)) else col(n)
+        log((c("__c2") + alpha) / (c("__cx2") + col("__vv") * alpha))
+      case JelinekMercer(alpha, lambdas) => ngramLp(order, alpha, lambdasFor(order, lambdas))
+      case other => throw new IllegalStateException(s"not the add-alpha family: $other")
+    }
+    // the Kneser-Ney discounts, read after the model pins (a derivation
+    // folds them): fixed, explicit, derived for the shared model, or
+    // derived per language as a driver-built frame joined by __l
+    def knDiscOf(byLang: Boolean)(rawN: org.apache.spark.sql.DataFrame,
+                                  cont: Map[Int, org.apache.spark.sql.DataFrame])
+        : (KnDisc, Option[org.apache.spark.sql.DataFrame]) = spec.smoothing match {
+      case KneserNey(d) => (new KnFixed(d), None)
+      case ModifiedKn(ds, _) if ds.nonEmpty => (mknDisc(ds), None)
+      case ModifiedKn(_, fb) if byLang =>
+        (mknDiscCols, Some(mknDiscFrame(order, rawN, mknDiscounts(order, rawN, cont, fb))))
+      case ModifiedKn(_, fb) => (mknDisc(mknDiscountsFor(order, rawN, cont, fb)), None)
+      case other => throw new IllegalStateException(s"not Kneser-Ney: $other")
+    }
+    ref match {
+      case None =>
+        require(!stream.df.isStreaming,
+          s"$label without a reference trains on its own input — batch only " +
+            "(score a stream against a static reference)")
+        val docs = stream.df
+        stream.lift(
+          if (spec.kn) knSelfScore(docs, idCol, textCol, order, knDiscOf(byLang = false)(_, _)._1)
+          else jmSelfScore(docs, idCol, textCol, order, spec.nCol,
+            spread = scoringSpread(order, selfScored = true, knFamily = false) &&
+              spec.nCol != "n_tris",
+            vocabOfContinuations = addAlpha)(jmLp(left = false)))
+      case Some(LmRef(refDocs, refTextCol, lang)) =>
+        require(!refDocs.isStreaming,
+          s"$label: the reference corpus must be a batch frame (the " +
+            (if (lang.isDefined) "models pin" else "model pins") +
+            " once; a streaming reference has no stable artifact)")
+        if (spec.kn)
+          knAgainstScore(stream, refDocs, idCol, textCol, refTextCol, lang, order,
+            spec.minCount, spec.broadcastModel, label, knDiscOf(lang.isDefined),
+            spec.sentenceMode)
+        else
+          jmAgainstScore(stream, refDocs, idCol, textCol, refTextCol, lang, order,
+            spec.nCol, spec.minCount,
+            if (addAlpha) Some(true) else spec.broadcastModel, label,
+            vocabOfContinuations = addAlpha)(jmLp(left = true))
+    }
+  }
+
+  /** Output schema of [[lmScore]] for a given id column and the spec's
+    * count column — the build-time fact `Program.validate` resolves the
+    * LM and ARPA nodes against, so the two cannot drift
+    * (IngestProgramSpec pins it equal to the real operator's schema). */
+  def lmOutputSchema(idCol: String, idType: org.apache.spark.sql.types.DataType,
+                     countCol: String): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField(idCol, idType),
+      StructField(countCol, LongType, nullable = false),
+      StructField("avg_logprob", DoubleType)))
   }
 
   /** THE count builder of the LM family: every n-gram count table is
@@ -1085,7 +1295,7 @@ object TextOps {
     * probe STREAMS (hash join, no per-key sort). */
   private def jmSelfScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
                           textCol: String, order: Int, nCol: String, spread: Boolean,
-                          vocabOfContinuations: Boolean = false)(lp: Column)
+                          vocabOfContinuations: Boolean)(lp: Column)
       : org.apache.spark.sql.DataFrame = {
     val table = lmCounts(docs, textCol, order, kn = false,
       vocabOfContinuations = vocabOfContinuations)
@@ -1098,26 +1308,18 @@ object TextOps {
         .withColumn("__n", lit(n)).withColumn("__vv", lit(vv)), lp, spread)
   }
 
-  // ================================================================ order-n LM
-
-  /** Jelinek-Mercer weights for [[ngramLmScore]], highest order first.
-    * Explicit weights must have `order` entries, be non-negative and sum
-    * to 1; `Nil` takes the halving default λ_j ∝ 2^j (normalized), the
-    * standard strong-preference-for-the-longest-context prior. */
-  private[graft] def lambdasFor(order: Int, lambdas: Seq[Double]): Seq[Double] = {
-    if (lambdas.isEmpty) {
+  /** Jelinek-Mercer weights, highest order first: explicit weights
+    * ([[LmSpec.check]] holds them to `order` entries, non-negative,
+    * summing to 1), or for `Nil` the halving default λ_j ∝ 2^j
+    * (normalized), the standard strong-preference-for-the-longest-context
+    * prior. */
+  private[graft] def lambdasFor(order: Int, lambdas: Seq[Double]): Seq[Double] =
+    if (lambdas.nonEmpty) lambdas
+    else {
       val raw = (order - 1 to 0 by -1).map(j => math.pow(2.0, j))
       val s = raw.sum
       raw.map(_ / s)
-    } else {
-      require(lambdas.length == order,
-        s"ngram LM of order $order needs $order lambdas (highest order " +
-          s"first), got ${lambdas.length}")
-      require(lambdas.forall(_ >= 0) && math.abs(lambdas.sum - 1.0) < 1e-9,
-        s"lambdas must be non-negative and sum to 1, got $lambdas")
-      lambdas
     }
-  }
 
   /** Await concurrently-submitted driver actions, SETTLING every one
     * before returning or throwing: `each` runs on the CALLING thread for
@@ -1186,18 +1388,6 @@ object TextOps {
       val thr = table.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
       thr > 0 && pinnedBytes(table) <= thr
     }
-
-  /** The against engines' argument checks, run before any model build. */
-  private def checkAgainst(label: String, order: Int, minCount: Long,
-                           refDocs: org.apache.spark.sql.DataFrame,
-                           byLang: Boolean): Unit = {
-    require(order >= 2 && order <= 8, s"$label order must be in [2, 8], got $order")
-    require(!refDocs.isStreaming,
-      s"$label: the reference corpus must be a batch frame (the " +
-        (if (byLang) "models pin" else "model pins") +
-        " once; a streaming reference has no stable artifact)")
-    require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-  }
 
   /** The against engines' broadcast decisions: one [[decideBroadcast]]
     * per pin (`pinned` holds one frame over each), then the lever
@@ -1378,86 +1568,12 @@ object TextOps {
     * score-against face) coalesce to 0 — the unseen-context backoff
     * (0+α)/(0+Vα) the self-scoring face never needs. */
   private def ngramLp(order: Int, alpha: Double, l: Seq[Double]): Column = {
-    require(alpha > 0, s"alpha must be positive, got $alpha")
     log((order to 1 by -1).zip(l).map { case (j, w) =>
       val c = coalesce(col(s"__c$j"), lit(0L))
       val cx = if (j >= 2) coalesce(col(s"__cx$j"), lit(0L)) else col("__n")
       lit(w) * (c + lit(alpha)) / (cx + col("__vv") * lit(alpha))
     }.reduce(_ + _))
   }
-
-  /** Order-n interpolated LM quality score — [[trigramLmScore]]
-    * parameterized to the 5-gram shape real CCNet pipelines score with
-    * (Wenzek et al. 2020 use 5-gram KenLM; the smoothing here is
-    * Jelinek-Mercer over add-alpha estimates rather than KenLM's
-    * modified Kneser-Ney — the counts-based exact family an independent
-    * engine can reproduce bit-for-bit, documented deviation): P(t | ctx)
-    * = Σ_j λ_j · P̂_j(t | last j−1 tokens), each P̂_j add-alpha-smoothed
-    * with V = the distinct-unigram vocabulary; a document scores the
-    * average ln P over its order-n positions (< order tokens → NULL
-    * score, n_grams 0).
-    *
-    * Scale shape: [[jmSelfScore]] — one pinned grouping-sets model, then
-    * the positions join the 2·order−1 count slices — the trigram face's
-    * posture at order n. */
-  def ngramLmScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                   textCol: String, order: Int, alpha: Double = 0.5,
-                   lambdas: Seq[Double] = Nil): org.apache.spark.sql.DataFrame = {
-    require(order >= 2 && order <= 8,
-      s"ngramLmScore order must be in [2, 8], got $order (order 1 is a " +
-        "unigram table, not an LM; past 8 the count tables stop being " +
-        "model-sized on real corpora)")
-    require(!docs.isStreaming,
-      "ngramLmScore trains on its own input — batch only (score a stream " +
-        "against a static reference with ngramLmScoreAgainst)")
-    val l = lambdasFor(order, lambdas)
-    jmSelfScore(docs, idCol, textCol, order, "n_grams",
-      spread = scoringSpread(order, selfScored = true, knFamily = false))(
-      ngramLp(order, alpha, l))
-  }
-
-  /** Dual-mode order-n LM scoring AGAINST a pretrained reference corpus —
-    * the full CCNet ingest shape (Wenzek et al. 2020: score crawl text
-    * with a 5-gram LM trained on Wikipedia; [[ngramLmScore]] is the
-    * self-scoring variant): the `order` add-alpha count tables train on
-    * `refDocs` in one pass (pinned — THE model artifact; N and V collect
-    * as scalars and fold as literals), then documents — batch frame or
-    * arriving stream — score by average interpolated per-position
-    * log-likelihood. Positions with contexts/continuations UNSEEN in the
-    * reference back off through left joins (count 0 → the smoothed floor
-    * (0+α)/(0+Vα)), the piece self-scoring never needs. Documents under
-    * `order` tokens emit (n 0, avg_logprob NULL) in both modes.
-    * Streaming is 2·order−1 stream-static broadcast joins + the
-    * stateless per-batch combine — zero state-store rows. */
-  def ngramLmScoreAgainst(stream: graft.api.MStream,
-                          refDocs: org.apache.spark.sql.DataFrame,
-                          idCol: String, textCol: String, refTextCol: String,
-                          order: Int, alpha: Double = 0.5,
-                          lambdas: Seq[Double] = Nil,
-                          /** Output count-column name — "n_tris" on the
-                            * [[lm3ScoreAgainst]] face so order-3 outputs
-                            * are drop-in for [[trigramLmScore]]'s. */
-                          nCol: String = "n_grams",
-                          /** Prune reference counts < minCount at orders
-                            * >= 2 (KenLM's --prune): pruned grams score
-                            * as unseen (the left-join floor). THE scale
-                            * lever — it is what keeps a high-order model
-                            * a broadcastable artifact when the reference
-                            * corpus is large. */
-                          minCount: Long = 1L,
-                          /** The broadcast lever, now AUTO by default:
-                            * None = decide from the model pin's
-                            * measured size vs the session broadcast
-                            * threshold (the model is checkpointed
-                            * before scoring, so its size is known); Some(true)/Some(false) force the
-                            * round-14 explicit behavior. Streaming
-                            * requires every table to broadcast —
-                            * Some(false) or an oversized auto decision
-                            * is a named error there. */
-                          broadcastModel: Option[Boolean] = None): graft.api.MStream =
-    jmAgainstScore(stream, refDocs, idCol, textCol, refTextCol, None, order, nCol,
-      minCount, broadcastModel, "ngramLmScoreAgainst")(
-      ngramLp(order, alpha, lambdasFor(order, lambdas)))
 
   /** The Jelinek-Mercer against engine, shared model or per language
     * (`lang` = (document, reference) language columns): [[lmCounts]] on
@@ -1474,9 +1590,8 @@ object TextOps {
                              idCol: String, textCol: String, refTextCol: String,
                              lang: Option[(String, String)], order: Int, nCol: String,
                              minCount: Long, broadcastModel: Option[Boolean],
-                             label: String, vocabOfContinuations: Boolean = false)(
+                             label: String, vocabOfContinuations: Boolean)(
                              lp: => Column): graft.api.MStream = {
-    checkAgainst(label, order, minCount, refDocs, lang.isDefined)
     val lpCol = lp
     val df = stream.df
     // struct-wrapped language key: null-safe under plain equi-join keys
@@ -1513,22 +1628,6 @@ object TextOps {
       langCol = lang.map(_._1)))
   }
 
-  /** Trigram face of [[ngramLmScoreAgainst]] — completes the CCNet ingest
-    * shape at order 3 ([[trigramLmScore]]'s doc points streams here):
-    * same count-artifact + broadcast-join machinery as [[lmScoreAgainst]]
-    * one order up, output drop-in for [[trigramLmScore]] (n_tris). */
-  def lm3ScoreAgainst(stream: graft.api.MStream,
-                      refDocs: org.apache.spark.sql.DataFrame,
-                      idCol: String, textCol: String, refTextCol: String,
-                      alpha: Double = 0.5,
-                      lambdas: (Double, Double, Double) = (0.6, 0.3, 0.1),
-                      minCount: Long = 1L,
-                      broadcastModel: Option[Boolean] = None)
-      : graft.api.MStream =
-    ngramLmScoreAgainst(stream, refDocs, idCol, textCol, refTextCol, 3, alpha,
-      Seq(lambdas._1, lambdas._2, lambdas._3), nCol = "n_tris",
-      minCount = minCount, broadcastModel = broadcastModel)
-
   // ---------------------------------------------------------- Kneser-Ney LM
 
   /** Training-pass counter: how many times [[knModel]] has built its
@@ -1539,8 +1638,8 @@ object TextOps {
 
   /** The interpolated Kneser-Ney model tables for order n (Kneser & Ney
     * 1995; Chen & Goodman 1999's interpolated form — the fixed-discount
-    * face [[knLmScore]] and the count-bucketed modified-KN face
-    * [[mknLmScore]] both read these tables): raw counts at the
+    * [[LmSpec.KneserNey]] and the count-bucketed [[LmSpec.ModifiedKn]]
+    * both read these tables): raw counts at the
     * top order, CONTINUATION counts below it — ĉ_j(g) = the number of
     * distinct words PRECEDING g in the corpus = the row count of the
     * raw (j+1)-gram table grouped by its last j columns (the "how many
@@ -1728,27 +1827,6 @@ object TextOps {
     } else fallback
   }
 
-  /** Validate an explicit per-level discount map (or an empty one =
-    * derive) and the fallback triple for the modified-KN faces. */
-  private[pipeline] def checkMknParams(order: Int,
-                             discounts: Map[Int, (Double, Double, Double)],
-                             fallback: (Double, Double, Double)): Unit = {
-    def checkTriple(what: String, t: (Double, Double, Double)): Unit = {
-      val (d1, d2, d3) = t
-      require(d1 > 0 && d1 <= 1 && d2 > 0 && d2 <= 2 && d3 > 0 && d3 <= 3,
-        s"$what discounts must satisfy 0 < D1 <= 1, 0 < D2 <= 2, " +
-          s"0 < D3+ <= 3, got ($d1, $d2, $d3)")
-    }
-    checkTriple("fallback", fallback)
-    if (discounts.nonEmpty) {
-      require(discounts.keySet == (1 to order).toSet,
-        s"explicit modified-KN discounts must cover every level 1..$order " +
-          s"(highest = raw counts, lower = continuation counts), got " +
-          s"levels ${discounts.keySet.toSeq.sorted.mkString(",")}")
-      discounts.foreach { case (j, t) => checkTriple(s"level-$j", t) }
-    }
-  }
-
   /** Modified-KN discounts per language from ONE shuffle-free fold
     * ([[sumsByLang]]) over the two pins: count-of-counts n1..n4 per
     * level (top level = the raw order-n table, lower levels = the
@@ -1801,33 +1879,6 @@ object TextOps {
         l +: (1 to order).flatMap { j => val (d1, d2, d3) = m(j); Seq(d1, d2, d3) } })
   }
 
-  /** Order-n interpolated Kneser-Ney LM quality score over the corpus
-    * itself — the KenLM smoothing FAMILY at a fixed discount (real KenLM
-    * is modified KN: three count-bucketed discounts per order; the fixed-D
-    * interpolated form is the exact, oracle-able member — Chen & Goodman
-    * 1999 §3). Counts-based and deterministic: an independent engine
-    * reproduces scores bit-for-bit, which absolute-discounting keeps and
-    * KenLM's float quantization would not. Documents under `order`
-    * tokens score (n_grams 0, NULL).
-    *
-    * Scale shape: the model is the raw top-order table plus n−1
-    * continuation tables, two pins ([[lmCounts]]); scoring joins the
-    * exploded positions against count frames exactly like
-    * [[ngramLmScore]] — same two-pass stat-then-score floor, same
-    * streamed-probe posture under hot tokens. */
-  def knLmScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                textCol: String, order: Int,
-                discount: Double = 0.75): org.apache.spark.sql.DataFrame = {
-    require(order >= 2 && order <= 8,
-      s"knLmScore order must be in [2, 8], got $order")
-    require(discount > 0 && discount < 1,
-      s"discount must be in (0, 1), got $discount")
-    require(!docs.isStreaming,
-      "knLmScore trains on its own input — batch only (score a stream " +
-        "against a static reference with knLmScoreAgainst)")
-    knSelfScore(docs, idCol, textCol, order, (_, _) => new KnFixed(discount))
-  }
-
   /** The shared self-scoring stage of the KN family: build the model on
     * the input itself, inner-join the exploded positions against every
     * count frame (a position's own occurrence puts every suffix, context
@@ -1853,197 +1904,6 @@ object TextOps {
       scoringSpread(order, selfScored = true, knFamily = true))
   }
 
-  /** Order-n MODIFIED Kneser-Ney LM quality score over the corpus itself
-    * — KenLM parity, closing [[knLmScore]]'s documented deviation: three
-    * count-bucketed discounts per level (D1, D2, D3+), each derived from
-    * that level's count-of-counts by the Chen & Goodman 1999 §3 /
-    * KenLM `AdjustCounts` estimator with KenLM's `--discount_fallback`
-    * semantics when the estimate is degenerate ([[mknDerive]] — the
-    * all-or-none per-order rule an independent engine reproduces
-    * exactly). Pass `discounts` to override derivation per level
-    * (level 1 = continuation unigrams, level `order` = raw counts).
-    *
-    * Scale shape: identical to [[knLmScore]] — the count tables ARE the
-    * model; the only additions are one count-of-counts fold over its
-    * pins ([[mknDiscounts]]) and three small longs per context row. */
-  def mknLmScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                 textCol: String, order: Int,
-                 discounts: Map[Int, (Double, Double, Double)] = Map.empty,
-                 fallback: (Double, Double, Double) = MknFallback)
-      : org.apache.spark.sql.DataFrame = {
-    require(order >= 2 && order <= 8,
-      s"mknLmScore order must be in [2, 8], got $order")
-    require(!docs.isStreaming,
-      "mknLmScore trains on its own input — batch only (score a stream " +
-        "against a static reference with mknLmScoreAgainst)")
-    checkMknParams(order, discounts, fallback)
-    knSelfScore(docs, idCol, textCol, order, (rawN, cont) => mknDisc(
-      if (discounts.nonEmpty) discounts
-      else mknDiscountsFor(order, rawN, cont, fallback)))
-  }
-
-  /** Dual-mode order-n Kneser-Ney scoring AGAINST a pretrained reference
-    * corpus — the literal CCNet shape (Wenzek et al. 2020 score crawl
-    * text with 5-gram KenLM trained on Wikipedia). Counts train on
-    * `refDocs` ([[knModel]]); arriving documents score through LEFT
-    * joins with full back-off: an unseen context skips its level
-    * entirely (γ = 1 in the standard formulation), an unseen token
-    * bottoms out at the uniform 1/(V+1) floor. Streaming is stream-static
-    * broadcast joins + the stateless per-batch combine — zero state rows,
-    * the [[ngramLmScoreAgainst]] posture. */
-  def knLmScoreAgainst(stream: graft.api.MStream,
-                       refDocs: org.apache.spark.sql.DataFrame,
-                       idCol: String, textCol: String, refTextCol: String,
-                       order: Int, discount: Double = 0.75,
-                       /** Prune reference raw counts < minCount at orders
-                         * >= 2 before continuation derivation (KenLM's
-                         * --prune): pruned grams back off like unseen
-                         * ones. The scale lever that keeps a high-order
-                         * model a broadcastable artifact. */
-                       minCount: Long = 1L,
-                       /** None (default) = AUTO: per pin (raw tables,
-                         * continuation tables) from its measured size vs
-                         * the broadcast threshold;
-                         * Some(false) = unhinted model joins (planner/
-                         * AQE-sized) for a beyond-broadcast model, batch
-                         * face only — streaming requires every table to
-                         * broadcast. */
-                       broadcastModel: Option[Boolean] = None,
-                       /** Sentence-delimited `<s>`/`</s>` windowing on
-                         * BOTH sides ([[Sentences]]) — each sentence
-                         * scores its n words plus one `</s>` event under
-                         * `<s>`-padded contexts; the opt-in that makes a
-                         * sentence-trained artifact ([[Arpa]]'s
-                         * `sentenceMode` export) numerically drop-in. */
-                       sentenceMode: Boolean = false): graft.api.MStream = {
-    require(discount > 0 && discount < 1,
-      s"discount must be in (0, 1), got $discount")
-    knAgainstScore(stream, refDocs, idCol, textCol, refTextCol, None, order,
-      minCount, broadcastModel, "knLmScoreAgainst",
-      (_, _) => (new KnFixed(discount), None), sentenceMode = sentenceMode)
-  }
-
-  /** PER-LANGUAGE Kneser-Ney scoring against a LABELED reference corpus —
-    * the literal CCNet architecture (Wenzek et al. train one 5-gram
-    * KenLM PER LANGUAGE on that language's Wikipedia; the shared-model
-    * [[knLmScoreAgainst]] was the documented deviation): every
-    * language's model trains in ONE pass (the language threads as a key
-    * through every count/context/stats groupBy — no per-language driver
-    * loop, no separate jobs per language), and each document scores
-    * under ITS OWN language's model with full back-off. Documents whose
-    * language has no reference model (or whose language's slice yields
-    * no bigram) keep their position count and take a NULL score — the
-    * deterministic no-model verdict, like [[bucketByThresholds]]'s
-    * unknown-language bucket; a null language is its own model (the
-    * engine-wide null-group convention, carried through the joins by
-    * struct-wrapped keys — struct equality treats null fields as equal,
-    * so plain hash-join keys stay null-safe). Dual-mode: streaming is
-    * stream-static broadcast joins + the stateless per-batch combine.
-    *
-    * Scale shape: identical tables to [[knLmScoreAgainst]] with one more
-    * key column — per-language models are SLICES of the same pinned
-    * artifacts, so the count shuffles, the broadcast decisions (per
-    * pin, AUTO lever) and the streamed-probe posture all carry over; the
-    * driver-built per-language stats frame (languages × 7) always
-    * broadcasts. */
-  def knLmScoreAgainstByLang(stream: graft.api.MStream,
-                             refDocs: org.apache.spark.sql.DataFrame,
-                             idCol: String, textCol: String, langCol: String,
-                             refTextCol: String, refLangCol: String,
-                             order: Int, discount: Double = 0.75,
-                             minCount: Long = 1L,
-                             broadcastModel: Option[Boolean] = None)
-      : graft.api.MStream = {
-    require(discount > 0 && discount < 1,
-      s"discount must be in (0, 1), got $discount")
-    knAgainstScore(stream, refDocs, idCol, textCol, refTextCol,
-      Some((langCol, refLangCol)), order, minCount, broadcastModel,
-      "knLmScoreAgainstByLang", (_, _) => (new KnFixed(discount), None))
-  }
-
-  /** Per-language MODIFIED-KN scoring against a labeled reference — the
-    * complete CCNet matrix cell (per-language models AND KenLM's real
-    * smoothing): each language's three count-bucketed discounts derive
-    * from ITS OWN slices' count-of-counts ([[mknDiscounts]] — the same
-    * all-or-none `--discount_fallback` rule as [[mknDerive]], per
-    * language), joined onto the scoring rows as a driver-built,
-    * languages-sized discount frame. Unmodeled languages keep their position count with
-    * a NULL score; dual-mode like [[knLmScoreAgainstByLang]]. */
-  def mknLmScoreAgainstByLang(stream: graft.api.MStream,
-                              refDocs: org.apache.spark.sql.DataFrame,
-                              idCol: String, textCol: String, langCol: String,
-                              refTextCol: String, refLangCol: String,
-                              order: Int,
-                              fallback: (Double, Double, Double) = MknFallback,
-                              minCount: Long = 1L,
-                              broadcastModel: Option[Boolean] = None)
-      : graft.api.MStream = {
-    checkMknParams(order, Map.empty, fallback)
-    knAgainstScore(stream, refDocs, idCol, textCol, refTextCol,
-      Some((langCol, refLangCol)), order, minCount, broadcastModel,
-      "mknLmScoreAgainstByLang",
-      (rawN, cont) => (mknDiscCols,
-        Some(mknDiscFrame(order, rawN, mknDiscounts(order, rawN, cont, fallback)))))
-  }
-
-  /** PER-LANGUAGE order-n Jelinek-Mercer LM scoring against a LABELED
-    * reference corpus — the JM cell of the smoothing × per-language
-    * matrix ([[knLmScoreAgainstByLang]] / [[mknLmScoreAgainstByLang]]
-    * are the Kneser-Ney cells): every language's add-alpha count tables
-    * train in ONE pass (the language threads as key "__l" through every
-    * count/context/stats groupBy — per-language models are SLICES of the
-    * same pinned artifacts, no per-language driver loop), and each
-    * document scores under ITS OWN language's model by average
-    * interpolated per-position log-likelihood with the
-    * [[ngramLmScoreAgainst]] back-off floors. Documents whose language
-    * has no reference model keep their position count and take a NULL
-    * score; a null language is its own model (struct-wrapped keys, the
-    * engine-wide null-group convention). Dual-mode: streaming is
-    * stream-static broadcast joins + the stateless per-batch combine.
-    *
-    * Scale shape: identical tables to [[ngramLmScoreAgainst]] with one
-    * more key column, so the count shuffles, the AUTO broadcast lever
-    * (per pin, measured size) and the streamed-probe posture all carry
-    * over; the driver-built per-language (N, V) frame (languages × 2)
-    * always broadcasts. */
-  def ngramLmScoreAgainstByLang(stream: graft.api.MStream,
-                                refDocs: org.apache.spark.sql.DataFrame,
-                                idCol: String, textCol: String, langCol: String,
-                                refTextCol: String, refLangCol: String,
-                                order: Int, alpha: Double = 0.5,
-                                lambdas: Seq[Double] = Nil,
-                                nCol: String = "n_grams",
-                                minCount: Long = 1L,
-                                broadcastModel: Option[Boolean] = None)
-      : graft.api.MStream =
-    jmAgainstScore(stream, refDocs, idCol, textCol, refTextCol,
-      Some((langCol, refLangCol)), order, nCol, minCount, broadcastModel,
-      "ngramLmScoreAgainstByLang")(ngramLp(order, alpha, lambdasFor(order, lambdas)))
-
-  /** Modified-KN scoring AGAINST a pretrained reference corpus — the
-    * KenLM-parity sibling of [[knLmScoreAgainst]] ([[mknLmScore]]'s
-    * dual-mode ingest face): count-bucketed discounts derive per level
-    * from the REFERENCE model's count-of-counts with `--discount_fallback`
-    * semantics ([[mknDerive]]); documents back off through the same left
-    * joins. Streaming is stream-static broadcast joins + the stateless
-    * per-batch combine — zero state rows. */
-  def mknLmScoreAgainst(stream: graft.api.MStream,
-                        refDocs: org.apache.spark.sql.DataFrame,
-                        idCol: String, textCol: String, refTextCol: String,
-                        order: Int,
-                        discounts: Map[Int, (Double, Double, Double)] = Map.empty,
-                        fallback: (Double, Double, Double) = MknFallback,
-                        minCount: Long = 1L,
-                        broadcastModel: Option[Boolean] = None,
-                        sentenceMode: Boolean = false): graft.api.MStream = {
-    checkMknParams(order, discounts, fallback)
-    knAgainstScore(stream, refDocs, idCol, textCol, refTextCol, None, order,
-      minCount, broadcastModel, "mknLmScoreAgainst", (rawN, cont) => (mknDisc(
-        if (discounts.nonEmpty) discounts
-        else mknDiscountsFor(order, rawN, cont, fallback)), None),
-      sentenceMode = sentenceMode)
-  }
-
   /** The against engine of the KN family, shared model or per language
     * (`lang` = (document, reference) language columns — the language
     * threads as key `__l` through every table and join): train the
@@ -2066,9 +1926,8 @@ object TextOps {
                              discOf: (org.apache.spark.sql.DataFrame,
                                       Map[Int, org.apache.spark.sql.DataFrame]) =>
                                (KnDisc, Option[org.apache.spark.sql.DataFrame]),
-                             sentenceMode: Boolean = false)
+                             sentenceMode: Boolean)
       : graft.api.MStream = {
-    checkAgainst(label, order, minCount, refDocs, lang.isDefined)
     val df = stream.df
     val train = lang match {
       // struct-wrapped language key: null-safe under plain equi-join keys
@@ -2128,7 +1987,7 @@ object TextOps {
   /** CCNet head/middle/tail perplexity bucketing (Wenzek et al. 2020
     * §4.3: per-language perplexity terciles decide which slice of the
     * crawl is kept for LM training — "head" is the best-scoring third):
-    * documents score under the [[bigramLmScore]] self-corpus LM, then
+    * documents score under the add-alpha bigram [[lmScore]] self-corpus LM, then
     * each LANGUAGE partition splits into `buckets` equal-depth ranks by
     * (avg_logprob DESC, id) — higher log-likelihood = lower perplexity =
     * bucket 1 = "head". The tiebreak on id makes the assignment a total
@@ -2155,7 +2014,8 @@ object TextOps {
                         textCol: String, langCol: String, buckets: Int = 3,
                         alpha: Double = 0.5): org.apache.spark.sql.DataFrame = {
     require(buckets >= 2, s"perplexityBuckets needs >= 2 buckets, got $buckets")
-    val scored = bigramLmScore(docs, idCol, textCol, alpha)
+    val scored = lmScore(graft.api.MStream(docs), LmSpec(2, LmSpec.AddAlpha(alpha)),
+        idCol, textCol).df
       .join(docs.select(col(idCol), col(langCol)), Seq(idCol))
     bucketByScore(scored, idCol, langCol, buckets, "n_pairs")
   }
@@ -2225,14 +2085,14 @@ object TextOps {
   /** CCNet bucketing against a PRETRAINED model — the LITERAL Wenzek et
     * al. 2020 §4.3 shape: score every document under a Kneser-Ney LM
     * trained on the REFERENCE corpus (their 5-gram KenLM on Wikipedia;
-    * here [[knLmScoreAgainst]] at `order`), then split each language
+    * here the [[LmSpec.KneserNey]] [[lmScore]] at `order`), then split each language
     * into `buckets` equal-depth tiles by (score desc, id) — bucket 1 =
     * "head", the slice kept for LM training. [[perplexityBuckets]] is
     * the self-trained variant. One shared model scores all languages
     * (CCNet trains per-language models; with per-language references,
     * call this per slice — documented deviation). Batch-only: the tile
     * assignment is a corpus-wide ranking (score a stream with
-    * [[knLmScoreAgainst]] and bucket per micro-batch via foreachBatch).
+    * [[lmScore]] and bucket per micro-batch via foreachBatch).
     * Output (idCol, langCol, n_grams, avg_logprob, bucket); documents
     * under `order` tokens take a NULL bucket. */
   def perplexityBucketsAgainst(docs: org.apache.spark.sql.DataFrame,
@@ -2240,7 +2100,7 @@ object TextOps {
                                idCol: String, textCol: String, langCol: String,
                                refTextCol: String, buckets: Int = 3,
                                order: Int = 3, discount: Double = 0.75,
-                               /** [[knLmScoreAgainst]]'s scale levers,
+                               /** [[LmSpec]]'s scale levers,
                                  * passed through — this is the large-
                                  * reference face that needs them most. */
                                minCount: Long = 1L,
@@ -2248,10 +2108,11 @@ object TextOps {
     require(buckets >= 2, s"perplexityBucketsAgainst needs >= 2 buckets, got $buckets")
     require(!docs.isStreaming,
       "perplexityBucketsAgainst is batch-only (the tile assignment is a " +
-        "corpus-wide ranking) — score a stream with knLmScoreAgainst and " +
+        "corpus-wide ranking) — score a stream with lmScore and " +
         "bucket per micro-batch via foreachBatch")
-    val scored = knLmScoreAgainst(graft.api.MStream(docs), refDocs,
-        idCol, textCol, refTextCol, order, discount, minCount, broadcastModel).df
+    val scored = lmScore(graft.api.MStream(docs),
+        LmSpec(order, LmSpec.KneserNey(discount), minCount, broadcastModel),
+        idCol, textCol, Some(LmRef(refDocs, refTextCol))).df
       .join(docs.select(col(idCol), col(langCol)), Seq(idCol))
     bucketByScore(scored, idCol, langCol, buckets, "n_grams")
   }
@@ -2590,39 +2451,6 @@ object TextOps {
                  minWords: Int = 50, maxWords: Int = 100000): graft.api.MStream =
     stream.lift(gopherRules(stream.df, idCol, textCol, minWords, maxWords))
 
-  /** Output schema of [[lmScoreAgainst]] (names + types) for a given id
-    * column — the single source `Program.validate` resolves against, so
-    * the two cannot drift (IngestProgramSpec pins this equal to the real
-    * operator's schema). */
-  def lmScoreOutputSchema(idCol: String,
-      idType: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField(idCol, idType),
-      StructField("n_pairs", LongType, nullable = false),
-      StructField("avg_logprob", DoubleType)))
-  }
-
-  /** Output schema of [[trigramLmScore]] — the build-time fact
-    * `Program.validate` resolves the Lm3Score node against. */
-  def lm3ScoreOutputSchema(idCol: String,
-      idType: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField(idCol, idType),
-      StructField("n_tris", LongType, nullable = false),
-      StructField("avg_logprob", DoubleType)))
-  }
-
-  /** Output schema of [[ngramLmScore]] / [[ngramLmScoreAgainst]] (generic
-    * n_grams face) — the build-time fact `Program.validate` resolves the
-    * LmNScore/LmNAgainst nodes against. */
-  def ngramOutputSchema(idCol: String,
-      idType: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField(idCol, idType),
-      StructField("n_grams", LongType, nullable = false),
-      StructField("avg_logprob", DoubleType)))
-  }
-
   /** Output schema of [[bm25Retrieve]] — the fact `Program.validate`
     * resolves the Bm25Retrieve node against. */
   def bm25RetrieveOutputSchema(qIdCol: String,
@@ -2652,32 +2480,6 @@ object TextOps {
     import org.apache.spark.sql.types._
     StructType(Seq(StructField("id_a", idType), StructField("id_b", idType),
       StructField("n_shared", LongType, nullable = false)))
-  }
-
-  /** Dual-mode bigram-LM scoring AGAINST a reference corpus — the full
-    * CCNet shape (Wenzek et al. 2020 score crawl text with an LM trained
-    * on Wikipedia; [[bigramLmScore]] is the self-scoring variant): the
-    * add-alpha bigram model trains on `refDocs` in one pass (the JM
-    * against engine at order 2 over continuations — one pin; the
-    * vocabulary size V, the distinct tokens that follow some token, is
-    * a scalar folded as a literal), then documents — batch frame or
-    * arriving stream — score by average per-pair log-likelihood
-    * ln((c(u,v)+a) / (c(u)+a·V)). Pairs UNSEEN in the reference back off
-    * to the smoothed floor via left joins (c=0), the piece self-scoring
-    * never needs. Documents under 2 tokens emit (n_pairs=0, avg_logprob
-    * NULL) in both modes. Streaming is two stream-static broadcast joins
-    * + the stateless per-batch combine — zero state-store rows; the
-    * model is always broadcast (no lever on this face), model-sized,
-    * never corpus-sized. */
-  def lmScoreAgainst(stream: graft.api.MStream, refDocs: org.apache.spark.sql.DataFrame,
-                     idCol: String, textCol: String, refTextCol: String,
-                     alpha: Double = 0.5): graft.api.MStream = {
-    require(alpha > 0.0, s"add-alpha smoothing needs alpha > 0, got $alpha")
-    jmAgainstScore(stream, refDocs, idCol, textCol, refTextCol, None, 2, "n_pairs",
-      minCount = 1L, broadcastModel = Some(true), label = "lmScoreAgainst",
-      vocabOfContinuations = true)(
-      log((coalesce(col("__c2"), lit(0L)) + alpha) /
-        (coalesce(col("__cx2"), lit(0L)) + col("__vv") * alpha)))
   }
 
   /** Dual-mode [[encodeTokens]] — apply a FIXED vocabulary at ingest.
@@ -2779,8 +2581,9 @@ object TextOps {
     * over `buckets` hash buckets. `selected` = rounded weight > 0 (the doc
     * is more target-like than raw-like); resample by ranking on `weight`.
     *
-    * Dual-mode like [[lmScoreAgainst]] (the trained artifact here is the
-    * pair of bucket-count tables): both reference corpora are counted in
+    * Dual-mode like the add-alpha [[lmScore]] against a reference (the
+    * trained artifact here is the pair of bucket-count tables): both
+    * reference corpora are counted in
     * ONE pass each, checkpointed as pinned model artifacts (≤ `buckets`
     * rows — broadcast by construction), and arrivals are scored by two
     * broadcast left joins + a per-doc fold. Batch groups by doc id;
@@ -2788,7 +2591,7 @@ object TextOps {
     * derives from its own input row — one micro-batch), zero state-store
     * rows. Documents with < 2 words emit (0, NULL, false) in both modes.
     * Bucket totals are scalar model constants (`.head()` on the count
-    * tables — model-sized by construction, like [[lmScoreAgainst]]'s V).
+    * tables — model-sized by construction, like the add-alpha model's V).
     *
     * Scale posture: the bucket space is fixed (`buckets`), so the model
     * is O(buckets) regardless of corpus size; scoring is a zero-shuffle
@@ -3012,7 +2815,12 @@ object TextOps {
       pick: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : Seq[(Option[String], Int, String, String)] = {
     val spark = vocab0.sparkSession
-    val rematEvery = Dedup.intConf(spark, "graft.bpe.rematEvery", 64)
+    // the loop owns the word-count pin from here: a malformed conf must
+    // release it like every later exit does
+    val (rematEvery, vocabParts) = releaseOnFailure(spark, vocab0Ids) {
+      (Dedup.intConf(spark, "graft.bpe.rematEvery", 64),
+        Dedup.intConf(spark, "graft.bpe.vocabPartitions", 8))
+    }
     // The training loop runs thousands of TINY driver-coordinated jobs
     // over the (word, count) vocabulary — a table of distinct WORDS, which
     // is small even when the corpus is not (a 100 TB crawl has millions of
@@ -3021,7 +2829,6 @@ object TextOps {
     // overhead — not data — dominates the trainer. Keep the working set on
     // a few partitions (graft.bpe.vocabPartitions, default 8) and narrow
     // the per-round shuffle to match (in the cloned loop session below).
-    val vocabParts = Dedup.intConf(spark, "graft.bpe.vocabPartitions", 8)
     // The thousands of tiny driver-coordinated rounds run in a CLONED
     // session (shared SparkContext, PRIVATE SQLConf): the narrow shuffle
     // width and AQE-off (whose per-stage re-planning round trip dominates
@@ -3096,6 +2903,14 @@ object TextOps {
       releaseIds(vocab0Ids)
     }
   }
+
+  /** Run `body`, a trainer front's work between its word-count pin `ids`
+    * and [[mergeRounds]] (a cap, a conf read), releasing the pin when it
+    * throws: the loop's `finally` releases it on every later exit. */
+  private[pipeline] def releaseOnFailure[A](spark: org.apache.spark.sql.SparkSession,
+                                            ids: Set[Int])(body: => A): A =
+    try body
+    catch { case e: Throwable => graft.api.Pinned.unpersist(spark, ids); throw e }
 
   /** Apply learned BPE merges to every document: per-doc subword token
     * count and a portable hash of the token sequence (word order
@@ -3330,10 +3145,12 @@ object TextOps {
       .select(col(langCol).as("__l"), explode(words(col(textCol))).as("__w"))
       .groupBy("__l", "__w").agg(count(lit(1)).as("__c"))
       .select(col("__l"), bpeWrap(col("__w")).as("__s"), col("__c")))
-    val nLangs = vocab0.select(col("__l")).distinct().limit(1025).count()
-    require(nLangs <= 1024,
-      s"trainBpeMergesByLang: modeled-language set exceeds the 1024-language " +
-        "artifact cap — filter or bucket the language column first")
+    releaseOnFailure(spark, vocab0Ids) {
+      val nLangs = vocab0.select(col("__l")).distinct().limit(1025).count()
+      require(nLangs <= 1024,
+        s"trainBpeMergesByLang: modeled-language set exceeds the 1024-language " +
+          "artifact cap — filter or bucket the language column first")
+    }
     mergeRounds(vocab0, vocab0Ids, numMerges, _ + _, prune = true)(
       pairCounts(_)
         .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(

@@ -96,11 +96,14 @@ object WordPiece {
       .select(wpWrap(col("__w")).as("__s"), col("__c")))
     // the alphabet (every bare first-char and ##-continuation symbol) is
     // fixed by the corpus — merges never mint new atomic characters
-    val alphabet = vocab0
-      .select(explode(TextOps.bpeSymbols(col("__s"))).as("sym")).distinct()
-      .limit(65537).as[String].collect().toSeq
-    require(alphabet.size <= 65536,
-      s"trainVocab: corpus alphabet exceeds the 65536-piece artifact cap")
+    val alphabet = TextOps.releaseOnFailure(spark, vocab0Ids) {
+      val a = vocab0
+        .select(explode(TextOps.bpeSymbols(col("__s"))).as("sym")).distinct()
+        .limit(65537).as[String].collect().toSeq
+      require(a.size <= 65536,
+        s"trainVocab: corpus alphabet exceeds the 65536-piece artifact cap")
+      a
+    }
     // no pruning: one-symbol words keep feeding the denominators
     val merges = TextOps.mergeRounds(vocab0, vocab0Ids, numMerges, mergedSym,
         prune = false) { cur =>

@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import graft.api.MStream
 import graft.pipeline.{Arpa, TextOps}
 
@@ -47,10 +48,12 @@ class ArpaSpec extends SparkSpec {
       val got = rowsOf(Arpa.arpaScoreAgainst(
         MStream(docsDf), model, "doc_id", "text").df)
       val want = rowsOf(
-        (if (mkn) TextOps.mknLmScoreAgainst(MStream(docsDf), refDf,
-          "doc_id", "text", "text", order, minCount = minCount)
-        else TextOps.knLmScoreAgainst(MStream(docsDf), refDf,
-          "doc_id", "text", "text", order, minCount = minCount)).df)
+        (if (mkn) TextOps.lmScore(MStream(docsDf),
+          LmSpec(order, LmSpec.ModifiedKn(), minCount = minCount), "doc_id", "text",
+          Some(LmRef(refDf, "text")))
+        else TextOps.lmScore(MStream(docsDf),
+          LmSpec(order, LmSpec.KneserNey(), minCount = minCount), "doc_id", "text",
+          Some(LmRef(refDf, "text")))).df)
       assert(got == want,
         s"round-trip (order=$order minCount=$minCount mkn=$mkn):\n$got\nvs in-session\n$want")
     } finally graft.api.Pinned.release(spark)
@@ -159,10 +162,9 @@ class ArpaSpec extends SparkSpec {
       assert(written.map(_._1).toSet == Set("en", "fr"),
         s"zz (no bigram) is skipped: $written")
       // per-language files score exactly like the by-lang engine's slices
-      val engine = TextOps.knLmScoreAgainstByLang(
-        MStream(docsL.toDF("doc_id", "text", "lang")),
-        refL.toDF("doc_id", "text", "lang"),
-        "doc_id", "text", "lang", "text", "lang", order = 3).df
+      val engine = TextOps.lmScore(MStream(docsL.toDF("doc_id", "text", "lang")),
+        LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+        Some(LmRef(refL.toDF("doc_id", "text", "lang"), "text", Some(("lang", "lang"))))).df
       val engineRows = rowsOf(engine)
       written.foreach { case (lang, path) =>
         val model = Arpa.arpaImport(spark, path)
@@ -182,10 +184,9 @@ class ArpaSpec extends SparkSpec {
       val writtenM = Arpa.arpaExportMknByLang(refL.toDF("doc_id", "text", "lang"),
         "text", "lang", order = 3, dirM)
       assert(writtenM.map(_._1).toSet == Set("en", "fr"))
-      val engineM = rowsOf(TextOps.mknLmScoreAgainstByLang(
-        MStream(docsL.toDF("doc_id", "text", "lang")),
-        refL.toDF("doc_id", "text", "lang"),
-        "doc_id", "text", "lang", "text", "lang", order = 3).df)
+      val engineM = rowsOf(TextOps.lmScore(MStream(docsL.toDF("doc_id", "text", "lang")),
+        LmSpec(3, LmSpec.ModifiedKn()), "doc_id", "text",
+        Some(LmRef(refL.toDF("doc_id", "text", "lang"), "text", Some(("lang", "lang"))))).df)
       writtenM.foreach { case (lang, path) =>
         val model = Arpa.arpaImport(spark, path)
         val slice = docsL.filter(_._3 == lang).map(d => (d._1, d._2))
@@ -330,10 +331,9 @@ class ArpaSpec extends SparkSpec {
       val got = rowsOf(Arpa.arpaScoreAgainstByLang(
         MStream(docsL.toDF("doc_id", "text", "lang")), models,
         "doc_id", "text", "lang").df)
-      val want = rowsOf(TextOps.knLmScoreAgainstByLang(
-        MStream(docsL.toDF("doc_id", "text", "lang")),
-        refL2.toDF("doc_id", "text", "lang"),
-        "doc_id", "text", "lang", "text", "lang", order = 3).df)
+      val want = rowsOf(TextOps.lmScore(MStream(docsL.toDF("doc_id", "text", "lang")),
+        LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+        Some(LmRef(refL2.toDF("doc_id", "text", "lang"), "text", Some(("lang", "lang"))))).df)
       assert(got == want, s"per-language ARPA scoring:\n$got\nvs engine\n$want")
       assert(got(103L)._2.isEmpty && got(104L)._2.isEmpty,
         "unmodeled languages take the NULL no-model verdict")
@@ -438,9 +438,9 @@ class ArpaSpec extends SparkSpec {
       val got = rowsOf(Arpa.arpaScoreAgainst(
         MStream(docsS.toDF("doc_id", "text")), model, "doc_id", "text",
         sentenceMode = true).df)
-      val want = rowsOf(TextOps.knLmScoreAgainst(
-        MStream(docsS.toDF("doc_id", "text")), refS.toDF("doc_id", "text"),
-        "doc_id", "text", "text", order = 3, sentenceMode = true).df)
+      val want = rowsOf(TextOps.lmScore(MStream(docsS.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.KneserNey(), sentenceMode = true), "doc_id", "text",
+        Some(LmRef(refS.toDF("doc_id", "text"), "text"))).df)
       assert(got == want, s"sentence round trip:\n$got\nvs in-session\n$want")
       // n_grams = tokens + one </s> per sentence; "a b" = ONE sentence =
       // 3 events even under the order (the <s> padding completes windows)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import org.apache.spark.sql.functions._
 import graft.api.{Artifacts, MStream}
 import graft.pipeline.TextOps
@@ -38,8 +39,8 @@ class ArtifactsSpec extends SparkSpec {
         "cuts round-trip bit-exact")
       // scoring from the LOADED artifact == scoring from the in-session
       // frame (the no-double-train contract)
-      val scored = TextOps.knLmScoreAgainst(MStream(docs), ref,
-          "doc_id", "text", "text", order = 2).df
+      val scored = TextOps.lmScore(MStream(docs), LmSpec(2, LmSpec.KneserNey()), "doc_id", "text",
+        Some(LmRef(ref, "text"))).df
         .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
       val fromMem = TextOps.bucketByThresholds(MStream(scored), cuts,
         "lang", "avg_logprob").df

@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.LmSpec
 import org.apache.spark.sql.functions._
 import graft.api.MStream
 import graft.pipeline.{Dedup, Multimodal, Similarity, TextOps}
@@ -244,7 +245,8 @@ class BatchApiSpec extends SparkSpec {
   }
 
   private def bigramScored(docs: Seq[(Long, String)]): Seq[(Long, (Long, Option[Double]))] =
-    try graft.pipeline.TextOps.bigramLmScore(docs.toDF("doc_id", "text"), "doc_id", "text")
+    try graft.pipeline.TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+      LmSpec(2, LmSpec.AddAlpha()), "doc_id", "text").df
       .collect().map(r => (r.getLong(0),
         (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toSeq
       .sortBy(_.toString)

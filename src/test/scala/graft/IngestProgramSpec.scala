@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import org.apache.spark.sql.functions._
 import graft.api.{App, MStream, Program}
 import graft.api.Program._
@@ -115,7 +116,8 @@ class IngestProgramSpec extends SparkSpec {
     val piped = docsR.where("length(text) >= 20").as("gated")
       .corpusDedup(refR, "doc_id", "text", 16, 8, 0.8)
       .encodeIngest(vocabR, "doc_id", "text").as("enc")
-    val lm = docsR.lmScoreAgainst(refR, "doc_id", "text", "text", alpha = 0.25).as("lmout")
+    val lm = docsR.lmScore(LmSpec(2, LmSpec.AddAlpha(0.25)), "doc_id", "text",
+      Some((refR, "text"))).as("lmout")
     val de = docsR.decontaminateIngest(refR, "doc_id", "text", "text", n = 4).as("deout")
     val ex = embR.embedDedup(embR, "vec_id", "embedding", 0.9).as("exact_dedup")
     val iv = embR.embedDedup(embR, "vec_id", "embedding", 0.9,
@@ -184,11 +186,11 @@ class IngestProgramSpec extends SparkSpec {
     def namesTypes(s: org.apache.spark.sql.types.StructType) =
       s.fields.map(f => (f.name, f.dataType)).toSeq
     val docs = arriving.toDF("doc_id", "text")
-    val lm = graft.pipeline.TextOps.lmScoreAgainst(
-      MStream(docs), ref, "doc_id", "text", "text")
+    val lm = graft.pipeline.TextOps.lmScore(MStream(docs), LmSpec(2, LmSpec.AddAlpha()),
+      "doc_id", "text", Some(LmRef(ref, "text")))
     assert(namesTypes(lm.df.schema) == namesTypes(
-      graft.pipeline.TextOps.lmScoreOutputSchema("doc_id",
-        docs.schema("doc_id").dataType)))
+      graft.pipeline.TextOps.lmOutputSchema("doc_id",
+        docs.schema("doc_id").dataType, "n_pairs")))
     val emb = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)))
       .toDF("vec_id", "embedding")
     val q = emb.select(col("vec_id").as("q_id"), col("embedding"))
@@ -431,9 +433,10 @@ class IngestProgramSpec extends SparkSpec {
       val refR = Program.Rec.external("refcorpus", MStream(ref))
       val qR = Program.Rec.external("queries", MStream(queries))
       val cap = Program.capture(
-        docsR.lm3ScoreAgainst(refR, "doc_id", "text", "text").as("lm3"),
-        docsR.ngramLmScore("doc_id", "text", order = 2,
-          lambdas = Seq(0.7, 0.3)).as("lmn"),
+        docsR.lmScore(LmSpec(3, LmSpec.JelinekMercer(0.5, Seq(0.6, 0.3, 0.1)),
+          countCol = Some("n_tris")), "doc_id", "text", Some((refR, "text"))).as("lm3"),
+        docsR.lmScore(LmSpec(2, LmSpec.JelinekMercer(lambdas = Seq(0.7, 0.3))),
+          "doc_id", "text").as("lmn"),
         docsR.bm25Retrieve(qR, "doc_id", "text", "q_id", "q_text", k = 3).as("hits"),
         docsR.winnowOverlapPairs("doc_id", "text").as("pairs"))
       assert(Program.fromJson(Program.toJson(cap)) == cap)
@@ -448,10 +451,11 @@ class IngestProgramSpec extends SparkSpec {
         .collect { case App.BatchOutput(n, out) => n -> out }.toMap
       def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
         df.collect().map(_.toSeq.toList: Seq[Any]).toSet
-      assert(rows(outs("lm3")) == rows(graft.pipeline.TextOps.lm3ScoreAgainst(
-        MStream(docsDf), ref, "doc_id", "text", "text").df))
-      assert(rows(outs("lmn")) == rows(graft.pipeline.TextOps.ngramLmScore(
-        docsDf, "doc_id", "text", 2, 0.5, Seq(0.7, 0.3))))
+      assert(rows(outs("lm3")) == rows(graft.pipeline.TextOps.lmScore(MStream(docsDf),
+        LmSpec(3, LmSpec.JelinekMercer(0.5, Seq(0.6, 0.3, 0.1)), countCol = Some("n_tris")),
+        "doc_id", "text", Some(LmRef(ref, "text"))).df))
+      assert(rows(outs("lmn")) == rows(graft.pipeline.TextOps.lmScore(MStream(docsDf),
+        LmSpec(2, LmSpec.JelinekMercer(alpha = 0.5, lambdas = Seq(0.7, 0.3))), "doc_id", "text").df))
       assert(rows(outs("hits")) == rows(graft.pipeline.TextOps.bm25Retrieve(
         docsDf, "doc_id", "text", queries, "q_id", "q_text", k = 3)))
       assert(rows(outs("pairs")) == rows(graft.pipeline.TextOps.winnowOverlapPairs(
@@ -461,8 +465,8 @@ class IngestProgramSpec extends SparkSpec {
       def namesTypes(s: org.apache.spark.sql.types.StructType) =
         s.fields.map(f => (f.name, f.dataType)).toSeq
       assert(namesTypes(outs("lmn").schema) == namesTypes(
-        graft.pipeline.TextOps.ngramOutputSchema("doc_id",
-          docsDf.schema("doc_id").dataType)))
+        graft.pipeline.TextOps.lmOutputSchema("doc_id",
+          docsDf.schema("doc_id").dataType, "n_grams")))
       assert(namesTypes(outs("hits").schema) == namesTypes(
         graft.pipeline.TextOps.bm25RetrieveOutputSchema("q_id",
           queries.schema("q_id").dataType, "doc_id",
@@ -503,7 +507,7 @@ class IngestProgramSpec extends SparkSpec {
       LmNScore("x", "a", "id", "t", 9, 0.5, Nil)), Seq("x")), "[2, 8]")
     loadFail(Doc(Seq(External("a"),
       LmNScore("x", "a", "id", "t", 3, 0.5, Seq(0.5, 0.5))), Seq("x")),
-      "3 non-negative weights")
+      "3 lambdas")
     loadFail(Doc(Seq(External("a"), External("r"),
       LmNAgainst("x", "a", "r", "id", "t", "rt", 3, 0.0, Nil)), Seq("x")), "alpha")
     loadFail(Doc(Seq(External("a"), External("q"),

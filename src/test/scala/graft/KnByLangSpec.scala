@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import org.apache.spark.sql.functions._
 import graft.api.MStream
 import graft.pipeline.TextOps
@@ -34,9 +35,9 @@ class KnByLangSpec extends SparkSpec {
 
   test("per-language models == the shared-model operator run per language slice") {
     try {
-      val got = rowsOf(TextOps.knLmScoreAgainstByLang(
-        MStream(docs.toDF("doc_id", "text", "lang")), ref.toDF("doc_id", "text", "lang"),
-        "doc_id", "text", "lang", "text", "lang", order = 3).df)
+      val got = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text", "lang")),
+        LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+        Some(LmRef(ref.toDF("doc_id", "text", "lang"), "text", Some(("lang", "lang"))))).df)
       // definitional: for each language present in the reference, run the
       // SHARED-model operator on that slice alone
       val langs = ref.map(_._3).distinct
@@ -44,9 +45,9 @@ class KnByLangSpec extends SparkSpec {
         val refSlice = ref.filter(_._3 == lg).map(r => (r._1, r._2))
         val docSlice = docs.filter(_._3 == lg).map(r => (r._1, r._2))
         if (docSlice.isEmpty) Nil
-        else rowsOf(TextOps.knLmScoreAgainst(
-          MStream(docSlice.toDF("doc_id", "text")), refSlice.toDF("doc_id", "text"),
-          "doc_id", "text", "text", order = 3).df).toSeq
+        else rowsOf(TextOps.lmScore(MStream(docSlice.toDF("doc_id", "text")),
+          LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+          Some(LmRef(refSlice.toDF("doc_id", "text"), "text"))).df).toSeq
       }.toMap
       perSlice.foreach { case (id, want) =>
         assert(got(id) == want, s"doc $id: by-lang ${got(id)} vs slice $want")
@@ -60,17 +61,17 @@ class KnByLangSpec extends SparkSpec {
 
   test("per-language MODIFIED-KN == the shared-model mkn operator run per language slice") {
     try {
-      val got = rowsOf(TextOps.mknLmScoreAgainstByLang(
-        MStream(docs.toDF("doc_id", "text", "lang")), ref.toDF("doc_id", "text", "lang"),
-        "doc_id", "text", "lang", "text", "lang", order = 3).df)
+      val got = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text", "lang")),
+        LmSpec(3, LmSpec.ModifiedKn()), "doc_id", "text",
+        Some(LmRef(ref.toDF("doc_id", "text", "lang"), "text", Some(("lang", "lang"))))).df)
       val langs = ref.map(_._3).distinct
       val perSlice: Map[Long, (Long, Option[Double])] = langs.flatMap { lg =>
         val refSlice = ref.filter(_._3 == lg).map(r => (r._1, r._2))
         val docSlice = docs.filter(_._3 == lg).map(r => (r._1, r._2))
         if (docSlice.isEmpty) Nil
-        else rowsOf(TextOps.mknLmScoreAgainst(
-          MStream(docSlice.toDF("doc_id", "text")), refSlice.toDF("doc_id", "text"),
-          "doc_id", "text", "text", order = 3).df).toSeq
+        else rowsOf(TextOps.lmScore(MStream(docSlice.toDF("doc_id", "text")),
+          LmSpec(3, LmSpec.ModifiedKn()), "doc_id", "text",
+          Some(LmRef(refSlice.toDF("doc_id", "text"), "text"))).df).toSeq
       }.toMap
       perSlice.foreach { case (id, want) =>
         assert(got(id) == want, s"doc $id: mkn by-lang ${got(id)} vs slice $want")
@@ -82,9 +83,9 @@ class KnByLangSpec extends SparkSpec {
       import org.apache.spark.sql.streaming.OutputMode
       implicit val sqlCtx = spark.sqlContext
       val in = MemoryStream[(Long, String, String)]
-      val out = TextOps.mknLmScoreAgainstByLang(
-        MStream(in.toDF().toDF("doc_id", "text", "lang")), ref.toDF("doc_id", "text", "lang"),
-        "doc_id", "text", "lang", "text", "lang", order = 3)
+      val out = TextOps.lmScore(MStream(in.toDF().toDF("doc_id", "text", "lang")),
+        LmSpec(3, LmSpec.ModifiedKn()), "doc_id", "text",
+        Some(LmRef(ref.toDF("doc_id", "text", "lang"), "text", Some(("lang", "lang")))))
       in.addData(docs.map(d => (d._1, d._2, d._3)): _*)
       val name = s"mknbl_${System.nanoTime()}"
       val q = out.df.writeStream.format("memory").queryName(name)
@@ -102,13 +103,13 @@ class KnByLangSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val refDf = ref.toDF("doc_id", "text", "lang")
     try {
-      val batch = rowsOf(TextOps.knLmScoreAgainstByLang(
-        MStream(docs.toDF("doc_id", "text", "lang")), refDf,
-        "doc_id", "text", "lang", "text", "lang", order = 3).df)
+      val batch = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text", "lang")),
+        LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+        Some(LmRef(refDf, "text", Some(("lang", "lang"))))).df)
       val in = MemoryStream[(Long, String, String)]
-      val out = TextOps.knLmScoreAgainstByLang(
-        MStream(in.toDF().toDF("doc_id", "text", "lang")), refDf,
-        "doc_id", "text", "lang", "text", "lang", order = 3)
+      val out = TextOps.lmScore(MStream(in.toDF().toDF("doc_id", "text", "lang")),
+        LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+        Some(LmRef(refDf, "text", Some(("lang", "lang")))))
       assert(out.df.isStreaming)
       in.addData(docs.take(2).map(d => (d._1, d._2, d._3)): _*)
       in.addData(docs.drop(2).map(d => (d._1, d._2, d._3)): _*)
@@ -126,9 +127,9 @@ class KnByLangSpec extends SparkSpec {
         val key = "spark.sql.autoBroadcastJoinThreshold"
         val old = spark.conf.get(key)
         spark.conf.set(key, "1")
-        try TextOps.knLmScoreAgainstByLang(
-          MStream(in.toDF().toDF("doc_id", "text", "lang")), refDf,
-          "doc_id", "text", "lang", "text", "lang", order = 3)
+        try TextOps.lmScore(MStream(in.toDF().toDF("doc_id", "text", "lang")),
+          LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+          Some(LmRef(refDf, "text", Some(("lang", "lang")))))
         finally spark.conf.set(key, old)
       }
       assert(e.getMessage.contains("streaming face"), e.getMessage)
@@ -153,8 +154,9 @@ class KnByLangSpec extends SparkSpec {
       val refDf = ref.toDF("doc_id", "text", "lang")
       val cap = Program.capture(
         Program.Rec.external("in", MStream(docsDf))
-          .knLmScoreAgainstByLang(Program.Rec.external("r", MStream(refDf)),
-            "doc_id", "text", "lang", "text", "lang", order = 3).as("a"))
+          .lmScore(LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+            Some((Program.Rec.external("r", MStream(refDf)), "text")),
+            Some(("lang", "lang"))).as("a"))
       assert(Program.fromJson(Program.toJson(cap)) == cap)
       val config = new App.Config()
         .setSource("in", App.Source("list", rows = Some(docsDf)))
@@ -163,8 +165,8 @@ class KnByLangSpec extends SparkSpec {
       Program.validate(cap, spark, config)
       val out = App.runProgram(spark, config, Program.toJson(cap))
         .collectFirst { case App.BatchOutput("a", o) => o }.get
-      assert(rowsOf(out) == rowsOf(TextOps.knLmScoreAgainstByLang(
-        MStream(docsDf), refDf, "doc_id", "text", "lang", "text", "lang", 3).df),
+      assert(rowsOf(out) == rowsOf(TextOps.lmScore(MStream(docsDf), LmSpec(3, LmSpec.KneserNey()),
+        "doc_id", "text", Some(LmRef(refDf, "text", Some(("lang", "lang"))))).df),
         "document execution equals the direct API")
     } finally graft.api.Pinned.release(spark)
   }
@@ -187,8 +189,9 @@ class KnByLangSpec extends SparkSpec {
       val refDf = ref.toDF("doc_id", "text", "lang")
       val cap = Program.capture(
         Program.Rec.external("in", MStream(docsDf))
-          .mknLmScoreAgainstByLang(Program.Rec.external("r", MStream(refDf)),
-            "doc_id", "text", "lang", "text", "lang", order = 3).as("a"))
+          .lmScore(LmSpec(3, LmSpec.ModifiedKn()), "doc_id", "text",
+            Some((Program.Rec.external("r", MStream(refDf)), "text")),
+            Some(("lang", "lang"))).as("a"))
       assert(Program.fromJson(Program.toJson(cap)) == cap)
       val config = new App.Config()
         .setSource("in", App.Source("list", rows = Some(docsDf)))
@@ -197,20 +200,23 @@ class KnByLangSpec extends SparkSpec {
       Program.validate(cap, spark, config)
       val out = App.runProgram(spark, config, Program.toJson(cap))
         .collectFirst { case App.BatchOutput("a", o) => o }.get
-      assert(rowsOf(out) == rowsOf(TextOps.mknLmScoreAgainstByLang(
-        MStream(docsDf), refDf, "doc_id", "text", "lang", "text", "lang", 3).df),
+      assert(rowsOf(out) == rowsOf(TextOps.lmScore(MStream(docsDf),
+        LmSpec(3, LmSpec.ModifiedKn()), "doc_id", "text",
+        Some(LmRef(refDf, "text", Some(("lang", "lang"))))).df),
         "document execution equals the direct API")
     } finally graft.api.Pinned.release(spark)
   }
 
   test("contracts: bounds and empty-model rejection") {
     val df = docs.toDF("doc_id", "text", "lang")
-    assert(intercept[IllegalArgumentException](TextOps.knLmScoreAgainstByLang(
-      MStream(df), df, "doc_id", "text", "lang", "text", "lang", 9))
+    assert(intercept[IllegalArgumentException](TextOps.lmScore(MStream(df),
+      LmSpec(9, LmSpec.KneserNey()), "doc_id", "text",
+      Some(LmRef(df, "text", Some(("lang", "lang"))))))
       .getMessage.contains("[2, 8]"))
     val tiny = Seq((1L, "one", "en")).toDF("doc_id", "text", "lang")
-    val e = intercept[IllegalArgumentException](TextOps.knLmScoreAgainstByLang(
-      MStream(df), tiny, "doc_id", "text", "lang", "text", "lang", 3))
+    val e = intercept[IllegalArgumentException](TextOps.lmScore(MStream(df),
+      LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+      Some(LmRef(tiny, "text", Some(("lang", "lang"))))))
     assert(e.getMessage.contains("no per-language model"), e.getMessage)
     graft.api.Pinned.release(spark)
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import org.apache.spark.sql.functions._
 import graft.api.MStream
 import graft.pipeline.TextOps
@@ -87,8 +88,8 @@ class KnLmSpec extends SparkSpec {
 
   test("knLmScore equals the independent fold at orders 2, 3 and 4") {
     for ((order, d) <- Seq((2, 0.75), (3, 0.75), (3, 0.4), (4, 0.75))) {
-      val got = rowsOf(TextOps.knLmScore(
-        corpus.toDF("doc_id", "text"), "doc_id", "text", order, d))
+      val got = rowsOf(TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+        LmSpec(order, LmSpec.KneserNey(d)), "doc_id", "text").df)
       assert(got == reference(order, d, corpus, corpus), s"order=$order d=$d")
       graft.api.Pinned.release(spark)
     }
@@ -96,11 +97,11 @@ class KnLmSpec extends SparkSpec {
 
   test("self-referenced against face equals the self-scoring face") {
     try {
-      val self = rowsOf(TextOps.knLmScore(
-        corpus.toDF("doc_id", "text"), "doc_id", "text", 3))
-      val agn = TextOps.knLmScoreAgainst(
-        MStream(corpus.toDF("doc_id", "text")), corpus.toDF("doc_id", "text"),
-        "doc_id", "text", "text", order = 3)
+      val self = rowsOf(TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.KneserNey()), "doc_id", "text").df)
+      val agn = TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+        Some(LmRef(corpus.toDF("doc_id", "text"), "text")))
       assert(rowsOf(agn.df) == self,
         "left-join face with everything seen equals the inner-join face")
     } finally graft.api.Pinned.release(spark)
@@ -117,9 +118,8 @@ class KnLmSpec extends SparkSpec {
       (12L, "q r s t u"),                 // everything unseen -> uniform floor
       (13L, "a b"))                       // under order tokens -> (0, NULL)
     try {
-      val batch = TextOps.knLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order = 3)
+      val batch = TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.KneserNey()), "doc_id", "text", Some(LmRef(ref, "text")))
       val b = rowsOf(batch.df)
       assert(b == reference(3, 0.75, corpus, docs),
         "against face equals the fold trained on ref, scored on docs")
@@ -128,9 +128,8 @@ class KnLmSpec extends SparkSpec {
         "in-distribution text scores above gibberish")
 
       val in = MemoryStream[(Long, String)]
-      val out = TextOps.knLmScoreAgainst(
-        MStream(in.toDF().toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order = 3)
+      val out = TextOps.lmScore(MStream(in.toDF().toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.KneserNey()), "doc_id", "text", Some(LmRef(ref, "text")))
       assert(out.df.isStreaming)
       in.addData(docs.take(2): _*)
       in.addData(docs.drop(2): _*)
@@ -171,7 +170,7 @@ class KnLmSpec extends SparkSpec {
       val docsDf = corpus.toDF("doc_id", "text")
       val cap = Program.capture(
         Program.Rec.external("in", MStream(docsDf))
-          .knLmScore("doc_id", "text", order = 3).as("s"))
+          .lmScore(LmSpec(3, LmSpec.KneserNey()), "doc_id", "text").as("s"))
       assert(Program.fromJson(Program.toJson(cap)) == cap)
       val config = new App.Config()
         .setSource("in", App.Source("list", rows = Some(docsDf)))
@@ -179,7 +178,8 @@ class KnLmSpec extends SparkSpec {
       Program.validate(cap, spark, config)
       val out = App.runProgram(spark, config, Program.toJson(cap))
         .collectFirst { case App.BatchOutput("s", o) => o }.get
-      assert(rowsOf(out) == rowsOf(TextOps.knLmScore(docsDf, "doc_id", "text", 3)),
+      assert(rowsOf(out) == rowsOf(TextOps.lmScore(MStream(docsDf), LmSpec(3, LmSpec.KneserNey()),
+        "doc_id", "text").df),
         "document execution equals the direct API")
     } finally graft.api.Pinned.release(spark)
   }
@@ -188,18 +188,16 @@ class KnLmSpec extends SparkSpec {
     val ref = corpus.toDF("doc_id", "text")
     val docs = Seq((20L, "a b a b c a"), (21L, "san francisco bay area"), (22L, "q r s"))
     try {
-      val pruned = rowsOf(TextOps.knLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order = 3, minCount = 2L).df)
+      val pruned = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.KneserNey(), minCount = 2L), "doc_id", "text", Some(LmRef(ref, "text"))).df)
       assert(pruned == reference(3, 0.75, corpus, docs, minCount = 2L),
         "pruned KN equals the fold with raw counts >= 2 feeding continuations")
-      val unpruned = rowsOf(TextOps.knLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order = 3).df)
+      val unpruned = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.KneserNey()), "doc_id", "text", Some(LmRef(ref, "text"))).df)
       assert(pruned != unpruned, "pruning must actually change rare-gram scores")
-      val shuffled = rowsOf(TextOps.knLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order = 3, minCount = 2L, broadcastModel = Some(false)).df)
+      val shuffled = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.KneserNey(), minCount = 2L, broadcastModel = Some(false)),
+        "doc_id", "text", Some(LmRef(ref, "text"))).df)
       assert(shuffled == pruned, "the beyond-broadcast face is score-identical")
     } finally graft.api.Pinned.release(spark)
   }
@@ -208,9 +206,10 @@ class KnLmSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val e = intercept[IllegalArgumentException](TextOps.knLmScoreAgainst(
-      MStream(in.toDF().toDF("doc_id", "text")), corpus.toDF("doc_id", "text"),
-      "doc_id", "text", "text", order = 3, broadcastModel = Some(false)))
+    val e = intercept[IllegalArgumentException](TextOps.lmScore(
+      MStream(in.toDF().toDF("doc_id", "text")),
+      LmSpec(3, LmSpec.KneserNey(), broadcastModel = Some(false)), "doc_id", "text",
+      Some(LmRef(corpus.toDF("doc_id", "text"), "text"))))
     assert(e.getMessage.contains("streaming face") &&
       e.getMessage.contains("minCount"), e.getMessage)
     graft.api.Pinned.release(spark)
@@ -218,8 +217,10 @@ class KnLmSpec extends SparkSpec {
 
   test("a corpus without a bigram scores every document (0 n-grams, NULL), KN and MKN") {
     val docs = Seq((0L, "a"), (1L, ""), (2L, "  b ")).toDF("doc_id", "text")
-    try for (scored <- Seq(TextOps.knLmScore(docs, "doc_id", "text", 3),
-                           TextOps.mknLmScore(docs, "doc_id", "text", 3)))
+    try for (scored <- Seq(TextOps.lmScore(MStream(docs), LmSpec(3, LmSpec.KneserNey()),
+      "doc_id", "text").df,
+                           TextOps.lmScore(MStream(docs), LmSpec(3, LmSpec.ModifiedKn()),
+                             "doc_id", "text").df))
       assert(rowsOf(scored) == Map(0L -> (0L, None), 1L -> (0L, None), 2L -> (0L, None)))
     finally graft.api.Pinned.release(spark)
   }
@@ -227,12 +228,14 @@ class KnLmSpec extends SparkSpec {
   test("parameter contracts: order and discount bounds") {
     val df = corpus.toDF("doc_id", "text")
     assert(intercept[IllegalArgumentException](
-      TextOps.knLmScore(df, "doc_id", "text", 1)).getMessage.contains("[2, 8]"))
+      TextOps.lmScore(MStream(df), LmSpec(1, LmSpec.KneserNey()), "doc_id", "text").df)
+      .getMessage.contains("[2, 8]"))
     assert(intercept[IllegalArgumentException](
-      TextOps.knLmScore(df, "doc_id", "text", 3, discount = 1.0))
+      TextOps.lmScore(MStream(df), LmSpec(3, LmSpec.KneserNey(1.0)), "doc_id", "text").df)
       .getMessage.contains("(0, 1)"))
     assert(intercept[IllegalArgumentException](
-      TextOps.knLmScoreAgainst(MStream(df), df, "doc_id", "text", "text", 9))
+      TextOps.lmScore(MStream(df), LmSpec(9, LmSpec.KneserNey()), "doc_id", "text",
+        Some(LmRef(df, "text"))))
       .getMessage.contains("[2, 8]"))
   }
 }

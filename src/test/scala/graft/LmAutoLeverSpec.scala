@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.QueryStageExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
@@ -52,9 +53,9 @@ class LmAutoLeverSpec extends SparkSpec {
   test("auto broadcasts a small model and shuffles an over-threshold one") {
     try {
       // tiny corpus, generous threshold: every model join broadcasts
-      val small = TextOps.knLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), corpus.toDF("doc_id", "text"),
-        "doc_id", "text", "text", order = 3).df
+      val small = TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+        Some(LmRef(corpus.toDF("doc_id", "text"), "text"))).df
       small.collect()
       assert(modelBroadcastJoins(small.queryExecution.executedPlan).nonEmpty,
         "under-threshold model tables broadcast")
@@ -63,13 +64,12 @@ class LmAutoLeverSpec extends SparkSpec {
       // no scoring join broadcasts (planned AND executed under the low
       // threshold: AQE would otherwise re-broadcast the tiny stages)
       val (big, forced) = withThreshold(1L) {
-        val b = TextOps.knLmScoreAgainst(
-          MStream(docs.toDF("doc_id", "text")), corpus.toDF("doc_id", "text"),
-          "doc_id", "text", "text", order = 3).df
-        val f = TextOps.knLmScoreAgainst(
-          MStream(docs.toDF("doc_id", "text")), corpus.toDF("doc_id", "text"),
-          "doc_id", "text", "text", order = 3,
-          broadcastModel = Some(true)).df
+        val b = TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+          LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+          Some(LmRef(corpus.toDF("doc_id", "text"), "text"))).df
+        val f = TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+          LmSpec(3, LmSpec.KneserNey(), broadcastModel = Some(true)), "doc_id", "text",
+          Some(LmRef(corpus.toDF("doc_id", "text"), "text"))).df
         b.collect(); f.collect()
         (b, f)
       }
@@ -86,13 +86,12 @@ class LmAutoLeverSpec extends SparkSpec {
 
   test("ngram face: auto decision applies per table and keeps scores identical") {
     try {
-      val auto = TextOps.ngramLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), corpus.toDF("doc_id", "text"),
-        "doc_id", "text", "text", order = 3).df.collect().toSet
+      val auto = TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.JelinekMercer()), "doc_id", "text",
+        Some(LmRef(corpus.toDF("doc_id", "text"), "text"))).df.collect().toSet
       val shuffled = withThreshold(1L) {
-        TextOps.ngramLmScoreAgainst(
-          MStream(docs.toDF("doc_id", "text")), corpus.toDF("doc_id", "text"),
-          "doc_id", "text", "text", order = 3).df
+        TextOps.lmScore(MStream(docs.toDF("doc_id", "text")), LmSpec(3, LmSpec.JelinekMercer()),
+          "doc_id", "text", Some(LmRef(corpus.toDF("doc_id", "text"), "text"))).df
       }.collect().toSet
       assert(auto == shuffled, "auto-shuffled face is score-identical")
     } finally graft.api.Pinned.release(spark)
@@ -101,9 +100,9 @@ class LmAutoLeverSpec extends SparkSpec {
   test("auto decides once per pin, at the pin's exact measured size") {
     import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
     import org.apache.spark.sql.execution.LogicalRDD
-    def build(): org.apache.spark.sql.DataFrame = TextOps.knLmScoreAgainst(
-      MStream(docs.toDF("doc_id", "text")), corpus.toDF("doc_id", "text"),
-      "doc_id", "text", "text", order = 3).df
+    def build(): org.apache.spark.sql.DataFrame = TextOps.lmScore(
+      MStream(docs.toDF("doc_id", "text")), LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+      Some(LmRef(corpus.toDF("doc_id", "text"), "text"))).df
     // the pins under the broadcast-hinted model sides
     def hintedPins(df: org.apache.spark.sql.DataFrame): Set[Int] =
       df.queryExecution.analyzed.collect {
@@ -135,17 +134,17 @@ class LmAutoLeverSpec extends SparkSpec {
     try {
       val in = MemoryStream[(Long, String)]
       val e = withThreshold(1L) {
-        intercept[IllegalArgumentException](TextOps.knLmScoreAgainst(
-          MStream(in.toDF().toDF("doc_id", "text")), corpus.toDF("doc_id", "text"),
-          "doc_id", "text", "text", order = 3))
+        intercept[IllegalArgumentException](TextOps.lmScore(
+          MStream(in.toDF().toDF("doc_id", "text")), LmSpec(3, LmSpec.KneserNey()), "doc_id", "text",
+          Some(LmRef(corpus.toDF("doc_id", "text"), "text"))))
       }
       assert(e.getMessage.contains("streaming face") &&
         e.getMessage.contains("minCount"), e.getMessage)
       // Some(true) is the explicit escape: the stream builds fine
       val ok = withThreshold(1L) {
-        TextOps.knLmScoreAgainst(
-          MStream(in.toDF().toDF("doc_id", "text")), corpus.toDF("doc_id", "text"),
-          "doc_id", "text", "text", order = 3, broadcastModel = Some(true))
+        TextOps.lmScore(MStream(in.toDF().toDF("doc_id", "text")),
+          LmSpec(3, LmSpec.KneserNey(), broadcastModel = Some(true)), "doc_id", "text",
+          Some(LmRef(corpus.toDF("doc_id", "text"), "text")))
       }
       assert(ok.df.isStreaming)
     } finally graft.api.Pinned.release(spark)

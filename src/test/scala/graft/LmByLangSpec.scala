@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import graft.api.MStream
 import graft.pipeline.TextOps
 
@@ -34,17 +35,17 @@ class LmByLangSpec extends SparkSpec {
 
   test("per-language JM models == the shared-model operator run per language slice") {
     try {
-      val got = rowsOf(TextOps.ngramLmScoreAgainstByLang(
-        MStream(docs.toDF("doc_id", "text", "lang")), ref.toDF("doc_id", "text", "lang"),
-        "doc_id", "text", "lang", "text", "lang", order = 3).df)
+      val got = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text", "lang")),
+        LmSpec(3, LmSpec.JelinekMercer()), "doc_id", "text",
+        Some(LmRef(ref.toDF("doc_id", "text", "lang"), "text", Some(("lang", "lang"))))).df)
       val langs = ref.map(_._3).distinct
       val perSlice: Map[Long, (Long, Option[Double])] = langs.flatMap { lg =>
         val refSlice = ref.filter(_._3 == lg).map(r => (r._1, r._2))
         val docSlice = docs.filter(_._3 == lg).map(r => (r._1, r._2))
         if (docSlice.isEmpty) Nil
-        else rowsOf(TextOps.ngramLmScoreAgainst(
-          MStream(docSlice.toDF("doc_id", "text")), refSlice.toDF("doc_id", "text"),
-          "doc_id", "text", "text", order = 3).df).toSeq
+        else rowsOf(TextOps.lmScore(MStream(docSlice.toDF("doc_id", "text")),
+          LmSpec(3, LmSpec.JelinekMercer()), "doc_id", "text",
+          Some(LmRef(refSlice.toDF("doc_id", "text"), "text"))).df).toSeq
       }.toMap
       perSlice.foreach { case (id, want) =>
         assert(got(id) == want, s"doc $id: by-lang ${got(id)} vs slice $want")
@@ -61,13 +62,13 @@ class LmByLangSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val refDf = ref.toDF("doc_id", "text", "lang")
     try {
-      val batch = rowsOf(TextOps.ngramLmScoreAgainstByLang(
-        MStream(docs.toDF("doc_id", "text", "lang")), refDf,
-        "doc_id", "text", "lang", "text", "lang", order = 3).df)
+      val batch = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text", "lang")),
+        LmSpec(3, LmSpec.JelinekMercer()), "doc_id", "text",
+        Some(LmRef(refDf, "text", Some(("lang", "lang"))))).df)
       val in = MemoryStream[(Long, String, String)]
-      val out = TextOps.ngramLmScoreAgainstByLang(
-        MStream(in.toDF().toDF("doc_id", "text", "lang")), refDf,
-        "doc_id", "text", "lang", "text", "lang", order = 3)
+      val out = TextOps.lmScore(MStream(in.toDF().toDF("doc_id", "text", "lang")),
+        LmSpec(3, LmSpec.JelinekMercer()), "doc_id", "text",
+        Some(LmRef(refDf, "text", Some(("lang", "lang")))))
       assert(out.df.isStreaming)
       in.addData(docs.take(2).map(d => (d._1, d._2, d._3)): _*)
       in.addData(docs.drop(2).map(d => (d._1, d._2, d._3)): _*)
@@ -85,9 +86,9 @@ class LmByLangSpec extends SparkSpec {
         val key = "spark.sql.autoBroadcastJoinThreshold"
         val old = spark.conf.get(key)
         spark.conf.set(key, "1")
-        try TextOps.ngramLmScoreAgainstByLang(
-          MStream(in.toDF().toDF("doc_id", "text", "lang")), refDf,
-          "doc_id", "text", "lang", "text", "lang", order = 3)
+        try TextOps.lmScore(MStream(in.toDF().toDF("doc_id", "text", "lang")),
+          LmSpec(3, LmSpec.JelinekMercer()), "doc_id", "text",
+          Some(LmRef(refDf, "text", Some(("lang", "lang")))))
         finally spark.conf.set(key, old)
       }
       assert(e.getMessage.contains("streaming face"), e.getMessage)
@@ -112,8 +113,9 @@ class LmByLangSpec extends SparkSpec {
       val refDf = ref.toDF("doc_id", "text", "lang")
       val cap = Program.capture(
         Program.Rec.external("in", MStream(docsDf))
-          .ngramLmScoreAgainstByLang(Program.Rec.external("r", MStream(refDf)),
-            "doc_id", "text", "lang", "text", "lang", order = 3).as("a"))
+          .lmScore(LmSpec(3, LmSpec.JelinekMercer()), "doc_id", "text",
+            Some((Program.Rec.external("r", MStream(refDf)), "text")),
+            Some(("lang", "lang"))).as("a"))
       assert(Program.fromJson(Program.toJson(cap)) == cap)
       val config = new App.Config()
         .setSource("in", App.Source("list", rows = Some(docsDf)))
@@ -122,23 +124,26 @@ class LmByLangSpec extends SparkSpec {
       Program.validate(cap, spark, config)
       val out = App.runProgram(spark, config, Program.toJson(cap))
         .collectFirst { case App.BatchOutput("a", o) => o }.get
-      assert(rowsOf(out) == rowsOf(TextOps.ngramLmScoreAgainstByLang(
-        MStream(docsDf), refDf, "doc_id", "text", "lang", "text", "lang", 3).df),
+      assert(rowsOf(out) == rowsOf(TextOps.lmScore(MStream(docsDf),
+        LmSpec(3, LmSpec.JelinekMercer()), "doc_id", "text",
+        Some(LmRef(refDf, "text", Some(("lang", "lang"))))).df),
         "document execution equals the direct API")
     } finally graft.api.Pinned.release(spark)
   }
 
   test("contracts: bounds, lambdas, empty-model rejection") {
     val df = docs.toDF("doc_id", "text", "lang")
-    assert(intercept[IllegalArgumentException](TextOps.ngramLmScoreAgainstByLang(
-      MStream(df), df, "doc_id", "text", "lang", "text", "lang", 9))
+    assert(intercept[IllegalArgumentException](TextOps.lmScore(MStream(df),
+      LmSpec(9, LmSpec.JelinekMercer()), "doc_id", "text",
+      Some(LmRef(df, "text", Some(("lang", "lang"))))))
       .getMessage.contains("[2, 8]"))
-    assert(intercept[IllegalArgumentException](TextOps.ngramLmScoreAgainstByLang(
-      MStream(df), df, "doc_id", "text", "lang", "text", "lang", 3,
-      lambdas = Seq(0.5, 0.5))).getMessage.contains("lambdas"))
+    assert(intercept[IllegalArgumentException](TextOps.lmScore(MStream(df),
+      LmSpec(3, LmSpec.JelinekMercer(lambdas = Seq(0.5, 0.5))), "doc_id", "text",
+      Some(LmRef(df, "text", Some(("lang", "lang")))))).getMessage.contains("lambdas"))
     val empty = Seq.empty[(Long, String, String)].toDF("doc_id", "text", "lang")
-    val e = intercept[IllegalArgumentException](TextOps.ngramLmScoreAgainstByLang(
-      MStream(df), empty, "doc_id", "text", "lang", "text", "lang", 3))
+    val e = intercept[IllegalArgumentException](TextOps.lmScore(MStream(df),
+      LmSpec(3, LmSpec.JelinekMercer()), "doc_id", "text",
+      Some(LmRef(empty, "text", Some(("lang", "lang"))))))
     assert(e.getMessage.contains("no per-language model"), e.getMessage)
     graft.api.Pinned.release(spark)
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, when}
 import graft.api.MStream
@@ -19,32 +20,32 @@ class LmJobCountSpec extends SparkSpec {
     (0L, "a b a b c a b"), (1L, "a b a b a"), (2L, "c c c c d c"),
     (3L, "x y z"), (4L, ""), (5L, "a b c a b c a b c"))
 
-  private def against(f: (MStream, DataFrame) => MStream): DataFrame => DataFrame =
-    d => f(MStream(d), d).df
+  private def self(spec: LmSpec): DataFrame => DataFrame =
+    d => TextOps.lmScore(MStream(d), spec, "doc_id", "text").df
+  private def against(spec: LmSpec, byLang: Boolean = false): DataFrame => DataFrame =
+    d => TextOps.lmScore(MStream(d), spec, "doc_id", "text",
+      Some(LmRef(d, "text", Option.when(byLang)(("lang", "lang"))))).df
 
   // the counts measured with the one count builder: one grouping-sets
   // pin and one driver fold per JM model, a second (continuation) pin
   // for a KN model, one more fold for the MKN discounts
   private val faces: Seq[(String, Int, DataFrame => DataFrame)] = Seq(
-    ("bigramLmScore", 9, TextOps.bigramLmScore(_, "doc_id", "text")),
-    ("trigramLmScore", 13, TextOps.trigramLmScore(_, "doc_id", "text")),
-    ("ngramLmScore(order = 5)", 17, TextOps.ngramLmScore(_, "doc_id", "text", order = 5)),
-    ("knLmScore(order = 3)", 17, TextOps.knLmScore(_, "doc_id", "text", order = 3)),
-    ("mknLmScore(order = 3)", 18, TextOps.mknLmScore(_, "doc_id", "text", order = 3)),
-    ("ngramLmScoreAgainst(order = 3)", 13, against(TextOps.ngramLmScoreAgainst(
-      _, _, "doc_id", "text", "text", order = 3))),
-    ("knLmScoreAgainst(order = 3)", 17, against(TextOps.knLmScoreAgainst(
-      _, _, "doc_id", "text", "text", order = 3))),
-    ("mknLmScoreAgainst(order = 3)", 18, against(TextOps.mknLmScoreAgainst(
-      _, _, "doc_id", "text", "text", order = 3))),
-    ("lmScoreAgainst", 9, against(TextOps.lmScoreAgainst(
-      _, _, "doc_id", "text", "text"))),
-    ("ngramLmScoreAgainstByLang(order = 3)", 14, against(TextOps.ngramLmScoreAgainstByLang(
-      _, _, "doc_id", "text", "lang", "text", "lang", order = 3))),
-    ("knLmScoreAgainstByLang(order = 3)", 18, against(TextOps.knLmScoreAgainstByLang(
-      _, _, "doc_id", "text", "lang", "text", "lang", order = 3))),
-    ("mknLmScoreAgainstByLang(order = 3)", 20, against(TextOps.mknLmScoreAgainstByLang(
-      _, _, "doc_id", "text", "lang", "text", "lang", order = 3))))
+    ("bigramLmScore", 9, self(LmSpec(2, LmSpec.AddAlpha()))),
+    ("trigramLmScore", 13, self(LmSpec(3,
+      LmSpec.JelinekMercer(0.5, Seq(0.6, 0.3, 0.1)), countCol = Some("n_tris")))),
+    ("ngramLmScore(order = 5)", 17, self(LmSpec(5, LmSpec.JelinekMercer()))),
+    ("knLmScore(order = 3)", 17, self(LmSpec(3, LmSpec.KneserNey()))),
+    ("mknLmScore(order = 3)", 18, self(LmSpec(3, LmSpec.ModifiedKn()))),
+    ("ngramLmScoreAgainst(order = 3)", 13, against(LmSpec(3, LmSpec.JelinekMercer()))),
+    ("knLmScoreAgainst(order = 3)", 17, against(LmSpec(3, LmSpec.KneserNey()))),
+    ("mknLmScoreAgainst(order = 3)", 18, against(LmSpec(3, LmSpec.ModifiedKn()))),
+    ("lmScoreAgainst", 9, against(LmSpec(2, LmSpec.AddAlpha()))),
+    ("ngramLmScoreAgainstByLang(order = 3)", 14,
+      against(LmSpec(3, LmSpec.JelinekMercer()), byLang = true)),
+    ("knLmScoreAgainstByLang(order = 3)", 18,
+      against(LmSpec(3, LmSpec.KneserNey()), byLang = true)),
+    ("mknLmScoreAgainstByLang(order = 3)", 20,
+      against(LmSpec(3, LmSpec.ModifiedKn()), byLang = true)))
 
   // test names keep the bound they were first registered under, so test
   // ids stay stable as bounds tighten: a tightened face asserts its

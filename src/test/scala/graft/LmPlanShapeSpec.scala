@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -41,50 +42,49 @@ class LmPlanShapeSpec extends SparkSpec {
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("lm_plan_arpa").toString
 
-  private def against(f: (MStream, DataFrame) => MStream): () => DataFrame =
-    () => f(MStream(docs), docs).df
+  private def self(spec: LmSpec): () => DataFrame =
+    () => TextOps.lmScore(MStream(docs), spec, "doc_id", "text").df
+  private def against(spec: LmSpec, byLang: Boolean = false): () => DataFrame =
+    () => TextOps.lmScore(MStream(docs), spec, "doc_id", "text",
+      Some(LmRef(docs, "text", Option.when(byLang)(("lang", "lang"))))).df
 
   // (face, spreads the scoring stage, batch plan)
   private val faces: Seq[(String, Boolean, () => DataFrame)] = Seq(
-    ("bigramLmScore", false, () => TextOps.bigramLmScore(docs, "doc_id", "text")),
-    ("trigramLmScore", false, () => TextOps.trigramLmScore(docs, "doc_id", "text")),
+    ("bigramLmScore", false, self(LmSpec(2, LmSpec.AddAlpha()))),
+    ("trigramLmScore", false, self(LmSpec(3,
+      LmSpec.JelinekMercer(0.5, Seq(0.6, 0.3, 0.1)), countCol = Some("n_tris")))),
     ("ngramLmScore(order = 2)", false,
-      () => TextOps.ngramLmScore(docs, "doc_id", "text", order = 2)),
+      self(LmSpec(2, LmSpec.JelinekMercer()))),
     ("ngramLmScore(order = 3)", true,
-      () => TextOps.ngramLmScore(docs, "doc_id", "text", order = 3)),
+      self(LmSpec(3, LmSpec.JelinekMercer()))),
     ("knLmScore(order = 3)", false,
-      () => TextOps.knLmScore(docs, "doc_id", "text", order = 3)),
+      self(LmSpec(3, LmSpec.KneserNey()))),
     ("mknLmScore(order = 3)", false,
-      () => TextOps.mknLmScore(docs, "doc_id", "text", order = 3)),
+      self(LmSpec(3, LmSpec.ModifiedKn()))),
     ("lmScoreAgainst", false,
-      against(TextOps.lmScoreAgainst(_, _, "doc_id", "text", "text"))),
+      against(LmSpec(2, LmSpec.AddAlpha()))),
     ("ngramLmScoreAgainst(order = 2)", false,
-      against(TextOps.ngramLmScoreAgainst(_, _, "doc_id", "text", "text", order = 2))),
+      against(LmSpec(2, LmSpec.JelinekMercer()))),
     ("ngramLmScoreAgainst(order = 3)", true,
-      against(TextOps.ngramLmScoreAgainst(_, _, "doc_id", "text", "text", order = 3))),
+      against(LmSpec(3, LmSpec.JelinekMercer()))),
     ("lm3ScoreAgainst", true,
-      against(TextOps.lm3ScoreAgainst(_, _, "doc_id", "text", "text"))),
+      against(LmSpec(3, LmSpec.JelinekMercer(0.5, Seq(0.6, 0.3, 0.1)), countCol = Some("n_tris")))),
     ("knLmScoreAgainst(order = 2)", false,
-      against(TextOps.knLmScoreAgainst(_, _, "doc_id", "text", "text", order = 2))),
+      against(LmSpec(2, LmSpec.KneserNey()))),
     ("knLmScoreAgainst(order = 3)", true,
-      against(TextOps.knLmScoreAgainst(_, _, "doc_id", "text", "text", order = 3))),
+      against(LmSpec(3, LmSpec.KneserNey()))),
     ("knLmScoreAgainst(order = 3, sentenceMode)", true,
-      against(TextOps.knLmScoreAgainst(_, _, "doc_id", "text", "text", order = 3,
-        sentenceMode = true))),
+      against(LmSpec(3, LmSpec.KneserNey(), sentenceMode = true))),
     ("mknLmScoreAgainst(order = 3)", true,
-      against(TextOps.mknLmScoreAgainst(_, _, "doc_id", "text", "text", order = 3))),
+      against(LmSpec(3, LmSpec.ModifiedKn()))),
     ("ngramLmScoreAgainstByLang(order = 2)", false,
-      against(TextOps.ngramLmScoreAgainstByLang(_, _, "doc_id", "text", "lang",
-        "text", "lang", order = 2))),
+      against(LmSpec(2, LmSpec.JelinekMercer()), byLang = true)),
     ("ngramLmScoreAgainstByLang(order = 3)", true,
-      against(TextOps.ngramLmScoreAgainstByLang(_, _, "doc_id", "text", "lang",
-        "text", "lang", order = 3))),
+      against(LmSpec(3, LmSpec.JelinekMercer()), byLang = true)),
     ("knLmScoreAgainstByLang(order = 3)", true,
-      against(TextOps.knLmScoreAgainstByLang(_, _, "doc_id", "text", "lang",
-        "text", "lang", order = 3))),
+      against(LmSpec(3, LmSpec.KneserNey()), byLang = true)),
     ("mknLmScoreAgainstByLang(order = 3)", true,
-      against(TextOps.mknLmScoreAgainstByLang(_, _, "doc_id", "text", "lang",
-        "text", "lang", order = 3))),
+      against(LmSpec(3, LmSpec.ModifiedKn()), byLang = true)),
     ("arpaScoreAgainst(order = 3)", true, () => {
       val path = java.nio.file.Paths.get(tmpDir(), "m.arpa").toString
       Arpa.arpaExportKn(docs, "text", 3, path)

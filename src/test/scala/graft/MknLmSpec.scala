@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import org.apache.spark.sql.functions._
 import graft.api.MStream
 import graft.pipeline.TextOps
@@ -145,8 +146,8 @@ class MknLmSpec extends SparkSpec {
     val ds3 = Map(1 -> (0.4, 1.1, 1.6), 2 -> (0.6, 0.9, 2.1), 3 -> (0.5, 1.0, 1.5))
     for (order <- Seq(2, 3, 4)) {
       val ds = (1 to order).map(j => j -> ds3(math.min(j, 3))).toMap
-      val got = rowsOf(TextOps.mknLmScore(
-        corpus.toDF("doc_id", "text"), "doc_id", "text", order, ds))
+      val got = rowsOf(TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+        LmSpec(order, LmSpec.ModifiedKn(discounts = ds)), "doc_id", "text").df)
       assert(got == referenceMkn(order, ds, corpus, corpus), s"order=$order")
       graft.api.Pinned.release(spark)
     }
@@ -155,8 +156,8 @@ class MknLmSpec extends SparkSpec {
   test("derived discounts: Spark count-of-counts agg equals the fold's derivation") {
     for (order <- Seq(2, 3)) {
       val ds = foldDiscounts(order, corpus)
-      val got = rowsOf(TextOps.mknLmScore(
-        corpus.toDF("doc_id", "text"), "doc_id", "text", order))
+      val got = rowsOf(TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+        LmSpec(order, LmSpec.ModifiedKn()), "doc_id", "text").df)
       assert(got == referenceMkn(order, ds, corpus, corpus),
         s"order=$order derived=$ds")
       graft.api.Pinned.release(spark)
@@ -167,10 +168,10 @@ class MknLmSpec extends SparkSpec {
     val d = 0.75 // binary-exact so D*(N1+N2+N3+) == D*N1 + D*N2 + D*N3 bitwise
     val ds = (1 to 3).map(j => j -> (d, d, d)).toMap
     try {
-      val mkn = rowsOf(TextOps.mknLmScore(
-        corpus.toDF("doc_id", "text"), "doc_id", "text", 3, ds))
-      val kn = rowsOf(TextOps.knLmScore(
-        corpus.toDF("doc_id", "text"), "doc_id", "text", 3, d))
+      val mkn = rowsOf(TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.ModifiedKn(discounts = ds)), "doc_id", "text").df)
+      val kn = rowsOf(TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.KneserNey(d)), "doc_id", "text").df)
       assert(mkn == kn, "modified KN at equal discounts IS interpolated KN")
     } finally graft.api.Pinned.release(spark)
   }
@@ -187,9 +188,8 @@ class MknLmSpec extends SparkSpec {
       (13L, "a b"))          // under order tokens -> (0, NULL)
     try {
       val ds = foldDiscounts(3, corpus)
-      val batch = TextOps.mknLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order = 3)
+      val batch = TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.ModifiedKn()), "doc_id", "text", Some(LmRef(ref, "text")))
       val b = rowsOf(batch.df)
       assert(b == referenceMkn(3, ds, corpus, docs),
         "against face equals the fold trained on ref, scored on docs")
@@ -197,15 +197,15 @@ class MknLmSpec extends SparkSpec {
       assert(b(12L)._2.get < b(10L)._2.get,
         "in-distribution text scores above gibberish")
 
-      val selfRef = rowsOf(TextOps.mknLmScore(ref, "doc_id", "text", 3))
-      val selfAgn = rowsOf(TextOps.mknLmScoreAgainst(
-        MStream(ref), ref, "doc_id", "text", "text", order = 3).df)
+      val selfRef = rowsOf(TextOps.lmScore(MStream(ref), LmSpec(3, LmSpec.ModifiedKn()),
+        "doc_id", "text").df)
+      val selfAgn = rowsOf(TextOps.lmScore(MStream(ref), LmSpec(3, LmSpec.ModifiedKn()),
+        "doc_id", "text", Some(LmRef(ref, "text"))).df)
       assert(selfAgn == selfRef, "self-referenced against face equals self face")
 
       val in = MemoryStream[(Long, String)]
-      val out = TextOps.mknLmScoreAgainst(
-        MStream(in.toDF().toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order = 3)
+      val out = TextOps.lmScore(MStream(in.toDF().toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.ModifiedKn()), "doc_id", "text", Some(LmRef(ref, "text")))
       assert(out.df.isStreaming)
       in.addData(docs.take(2): _*)
       in.addData(docs.drop(2): _*)
@@ -227,14 +227,14 @@ class MknLmSpec extends SparkSpec {
     val docs = Seq((20L, "a b a b c a"), (21L, "san francisco bay area"), (22L, "q r s"))
     try {
       val ds = foldDiscounts(3, corpus, minCount = 2L)
-      val pruned = rowsOf(TextOps.mknLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order = 3, minCount = 2L).df)
+      val pruned = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.ModifiedKn(), minCount = 2L), "doc_id", "text",
+        Some(LmRef(ref, "text"))).df)
       assert(pruned == referenceMkn(3, ds, corpus, docs, minCount = 2L),
         "pruned MKN equals the fold with raw counts >= 2 feeding everything")
-      val shuffled = rowsOf(TextOps.mknLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order = 3, minCount = 2L, broadcastModel = Some(false)).df)
+      val shuffled = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.ModifiedKn(), minCount = 2L, broadcastModel = Some(false)),
+        "doc_id", "text", Some(LmRef(ref, "text"))).df)
       assert(shuffled == pruned, "the beyond-broadcast face is score-identical")
     } finally graft.api.Pinned.release(spark)
   }
@@ -265,7 +265,7 @@ class MknLmSpec extends SparkSpec {
       val docsDf = corpus.toDF("doc_id", "text")
       val cap = Program.capture(
         Program.Rec.external("in", MStream(docsDf))
-          .mknLmScore("doc_id", "text", order = 3).as("s"))
+          .lmScore(LmSpec(3, LmSpec.ModifiedKn()), "doc_id", "text").as("s"))
       assert(Program.fromJson(Program.toJson(cap)) == cap)
       val config = new App.Config()
         .setSource("in", App.Source("list", rows = Some(docsDf)))
@@ -273,7 +273,8 @@ class MknLmSpec extends SparkSpec {
       Program.validate(cap, spark, config)
       val out = App.runProgram(spark, config, Program.toJson(cap))
         .collectFirst { case App.BatchOutput("s", o) => o }.get
-      assert(rowsOf(out) == rowsOf(TextOps.mknLmScore(docsDf, "doc_id", "text", 3)),
+      assert(rowsOf(out) == rowsOf(TextOps.lmScore(MStream(docsDf),
+        LmSpec(3, LmSpec.ModifiedKn()), "doc_id", "text").df),
         "document execution equals the direct API")
     } finally graft.api.Pinned.release(spark)
   }
@@ -302,18 +303,21 @@ class MknLmSpec extends SparkSpec {
   test("parameter contracts: order, discount ranges, level coverage") {
     val df = corpus.toDF("doc_id", "text")
     assert(intercept[IllegalArgumentException](
-      TextOps.mknLmScore(df, "doc_id", "text", 1)).getMessage.contains("[2, 8]"))
+      TextOps.lmScore(MStream(df), LmSpec(1, LmSpec.ModifiedKn()), "doc_id", "text").df)
+      .getMessage.contains("[2, 8]"))
     assert(intercept[IllegalArgumentException](
-      TextOps.mknLmScore(df, "doc_id", "text", 3,
-        Map(1 -> (0.5, 1.0, 1.5)))).getMessage.contains("every level"))
+      TextOps.lmScore(MStream(df),
+        LmSpec(3, LmSpec.ModifiedKn(discounts = Map(1 -> (0.5, 1.0, 1.5)))), "doc_id", "text").df)
+      .getMessage.contains("every level"))
     assert(intercept[IllegalArgumentException](
-      TextOps.mknLmScore(df, "doc_id", "text", 3,
-        (1 to 3).map(_ -> (1.5, 1.0, 1.5)).toMap)).getMessage.contains("D1"))
+      TextOps.lmScore(MStream(df),
+        LmSpec(3, LmSpec.ModifiedKn(discounts = (1 to 3).map(_ -> (1.5, 1.0, 1.5)).toMap)),
+        "doc_id", "text").df).getMessage.contains("D1"))
     assert(intercept[IllegalArgumentException](
-      TextOps.mknLmScore(df, "doc_id", "text", 3,
-        fallback = (0.5, 2.5, 1.5))).getMessage.contains("fallback"))
-    val e = intercept[IllegalArgumentException](TextOps.mknLmScoreAgainst(
-      MStream(df), df, "doc_id", "text", "text", 9))
+      TextOps.lmScore(MStream(df), LmSpec(3, LmSpec.ModifiedKn(fallback = (0.5, 2.5, 1.5))),
+        "doc_id", "text").df).getMessage.contains("fallback"))
+    val e = intercept[IllegalArgumentException](TextOps.lmScore(MStream(df),
+      LmSpec(9, LmSpec.ModifiedKn()), "doc_id", "text", Some(LmRef(df, "text"))))
     assert(e.getMessage.contains("[2, 8]"))
     graft.api.Pinned.release(spark)
   }

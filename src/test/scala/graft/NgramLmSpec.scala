@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import org.apache.spark.sql.functions._
 import graft.api.MStream
 import graft.pipeline.TextOps
@@ -71,8 +72,8 @@ class NgramLmSpec extends SparkSpec {
         (2, 0.5, Seq(0.7, 0.3)),
         (4, 0.5, Seq(0.4, 0.3, 0.2, 0.1)),
         (5, 1.0, Seq(0.4, 0.25, 0.15, 0.12, 0.08)))) {
-      val got = rowsOf(TextOps.ngramLmScore(
-        corpus.toDF("doc_id", "text"), "doc_id", "text", order, alpha, l))
+      val got = rowsOf(TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+        LmSpec(order, LmSpec.JelinekMercer(alpha = alpha, lambdas = l)), "doc_id", "text").df)
       assert(got == reference(order, alpha, l, corpus, corpus),
         s"order=$order alpha=$alpha")
       graft.api.Pinned.release(spark)
@@ -84,7 +85,8 @@ class NgramLmSpec extends SparkSpec {
       (0L, "a b a b c a b"), (1L, " \t\n "), (2L, "a\tb\na  b\r\nc a b"),
       (3L, null), (4L, "a b c a b c"), (4L, "c a b a"), (5L, "x y"))
     def rows(docs: Seq[(Long, String)], order: Int, l: Seq[Double]) =
-      try TextOps.ngramLmScore(docs.toDF("doc_id", "text"), "doc_id", "text", order, 0.5, l)
+      try TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(order, LmSpec.JelinekMercer(alpha = 0.5, lambdas = l)), "doc_id", "text").df
         .collect().map(r => r.getLong(0) -> (r.getLong(1),
           if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSeq.sortBy(_.toString)
       finally graft.api.Pinned.release(spark)
@@ -98,18 +100,19 @@ class NgramLmSpec extends SparkSpec {
 
   test("order 3 is the shipped trigram face (same scores, n column renamed)") {
     try {
-      val tri = rowsOf(TextOps.trigramLmScore(
-        corpus.toDF("doc_id", "text"), "doc_id", "text"))
-      val gen = TextOps.ngramLmScore(
-        corpus.toDF("doc_id", "text"), "doc_id", "text", 3, 0.5,
-        Seq(0.6, 0.3, 0.1))
+      val tri = rowsOf(TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.JelinekMercer(0.5, Seq(0.6, 0.3, 0.1)), countCol = Some("n_tris")),
+        "doc_id", "text").df)
+      val gen = TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.JelinekMercer(alpha = 0.5, lambdas = Seq(0.6, 0.3, 0.1))),
+        "doc_id", "text").df
       assert(gen.columns.toSeq == Seq("doc_id", "n_grams", "avg_logprob"))
       assert(rowsOf(gen) == tri)
       // self-referenced against face reproduces the self-scoring result
       // (every context seen -> the left-join backoff never fires)
-      val agn = TextOps.lm3ScoreAgainst(
-        MStream(corpus.toDF("doc_id", "text")), corpus.toDF("doc_id", "text"),
-        "doc_id", "text", "text")
+      val agn = TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.JelinekMercer(0.5, Seq(0.6, 0.3, 0.1)), countCol = Some("n_tris")),
+        "doc_id", "text", Some(LmRef(corpus.toDF("doc_id", "text"), "text")))
       assert(agn.df.columns.toSeq == Seq("doc_id", "n_tris", "avg_logprob"))
       assert(rowsOf(agn.df) == tri)
     } finally graft.api.Pinned.release(spark)
@@ -119,13 +122,13 @@ class NgramLmSpec extends SparkSpec {
     assert(TextOps.lambdasFor(3, Nil) == Seq(4.0 / 7, 2.0 / 7, 1.0 / 7))
     assert(math.abs(TextOps.lambdasFor(5, Nil).sum - 1.0) < 1e-12)
     val wrongLen = intercept[IllegalArgumentException](
-      TextOps.lambdasFor(4, Seq(0.5, 0.5)))
+      LmSpec(4, LmSpec.JelinekMercer(lambdas = Seq(0.5, 0.5))).check("lmScore", against = false, byLang = false))
     assert(wrongLen.getMessage.contains("4 lambdas"))
     val badSum = intercept[IllegalArgumentException](
-      TextOps.lambdasFor(2, Seq(0.9, 0.3)))
+      LmSpec(2, LmSpec.JelinekMercer(lambdas = Seq(0.9, 0.3))).check("lmScore", against = false, byLang = false))
     assert(badSum.getMessage.contains("sum to 1"))
-    val badOrder = intercept[IllegalArgumentException](TextOps.ngramLmScore(
-      corpus.toDF("doc_id", "text"), "doc_id", "text", 1))
+    val badOrder = intercept[IllegalArgumentException](TextOps.lmScore(
+      MStream(corpus.toDF("doc_id", "text")), LmSpec(1, LmSpec.JelinekMercer()), "doc_id", "text").df)
     assert(badOrder.getMessage.contains("[2, 8]"))
   }
 
@@ -141,9 +144,9 @@ class NgramLmSpec extends SparkSpec {
     val order = 3
     val l = Seq(0.6, 0.3, 0.1)
     try {
-      val batch = TextOps.ngramLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order, 0.5, l)
+      val batch = TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(order, LmSpec.JelinekMercer(alpha = 0.5, lambdas = l)), "doc_id", "text",
+        Some(LmRef(ref, "text")))
       assert(!batch.df.isStreaming)
       assert(batch.df.columns.toSeq == Seq("doc_id", "n_grams", "avg_logprob"))
       val b = rowsOf(batch.df)
@@ -154,9 +157,9 @@ class NgramLmSpec extends SparkSpec {
         "in-distribution text scores above gibberish")
 
       val in = MemoryStream[(Long, String)]
-      val out = TextOps.ngramLmScoreAgainst(
-        MStream(in.toDF().toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order, 0.5, l)
+      val out = TextOps.lmScore(MStream(in.toDF().toDF("doc_id", "text")),
+        LmSpec(order, LmSpec.JelinekMercer(alpha = 0.5, lambdas = l)), "doc_id", "text",
+        Some(LmRef(ref, "text")))
       assert(out.df.isStreaming)
       in.addData(docs.take(2): _*)
       in.addData(docs.drop(2): _*)
@@ -178,20 +181,19 @@ class NgramLmSpec extends SparkSpec {
     val ref = corpus.toDF("doc_id", "text")
     val docs = Seq((20L, "a b a b c a"), (21L, "c c c c d"), (22L, "x y z w"))
     try {
-      val pruned = rowsOf(TextOps.ngramLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order = 3, alpha = 0.5, lambdas = Seq(0.6, 0.3, 0.1),
-        minCount = 2L).df)
+      val pruned = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.JelinekMercer(alpha = 0.5, lambdas = Seq(0.6, 0.3, 0.1)), minCount = 2L),
+        "doc_id", "text", Some(LmRef(ref, "text"))).df)
       assert(pruned == reference(3, 0.5, Seq(0.6, 0.3, 0.1), corpus, docs,
         minCount = 2L), "pruned model equals the fold with counts >= 2")
-      val unpruned = rowsOf(TextOps.ngramLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order = 3, alpha = 0.5, lambdas = Seq(0.6, 0.3, 0.1)).df)
+      val unpruned = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.JelinekMercer(alpha = 0.5, lambdas = Seq(0.6, 0.3, 0.1))),
+        "doc_id", "text", Some(LmRef(ref, "text"))).df)
       assert(pruned != unpruned, "pruning must actually change rare-gram scores")
-      val shuffled = rowsOf(TextOps.ngramLmScoreAgainst(
-        MStream(docs.toDF("doc_id", "text")), ref, "doc_id", "text", "text",
-        order = 3, alpha = 0.5, lambdas = Seq(0.6, 0.3, 0.1),
-        minCount = 2L, broadcastModel = Some(false)).df)
+      val shuffled = rowsOf(TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+        LmSpec(3, LmSpec.JelinekMercer(alpha = 0.5, lambdas = Seq(0.6, 0.3, 0.1)), minCount = 2L,
+          broadcastModel = Some(false)),
+        "doc_id", "text", Some(LmRef(ref, "text"))).df)
       assert(shuffled == pruned, "the beyond-broadcast face is score-identical")
     } finally graft.api.Pinned.release(spark)
   }

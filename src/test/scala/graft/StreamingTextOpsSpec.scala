@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.TextOps.{LmRef, LmSpec}
 import org.apache.spark.sql.functions._
 import graft.api.MStream
 import graft.pipeline.TextOps
@@ -105,8 +106,8 @@ class StreamingTextOpsSpec extends SparkSpec {
     def key(r: org.apache.spark.sql.Row): (Long, Long, Option[Double]) =
       (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2)))
 
-    val batch = TextOps.lmScoreAgainst(
-      MStream(docs.toDF("doc_id", "text")), ref, "doc_id", "text", "text")
+    val batch = TextOps.lmScore(MStream(docs.toDF("doc_id", "text")),
+      LmSpec(2, LmSpec.AddAlpha()), "doc_id", "text", Some(LmRef(ref, "text")))
     assert(!batch.df.isStreaming)
     val b = batch.df.collect().map(key).toSet
     assert(b.exists(r => r._1 == 3L && r._2 == 0L && r._3.isEmpty),
@@ -118,8 +119,8 @@ class StreamingTextOpsSpec extends SparkSpec {
     assert(seen > unseen, "in-distribution text scores above gibberish")
 
     val in = MemoryStream[(Long, String)]
-    val out = TextOps.lmScoreAgainst(
-      MStream(in.toDF().toDF("doc_id", "text")), ref, "doc_id", "text", "text")
+    val out = TextOps.lmScore(MStream(in.toDF().toDF("doc_id", "text")),
+      LmSpec(2, LmSpec.AddAlpha()), "doc_id", "text", Some(LmRef(ref, "text")))
     in.addData(docs.take(2): _*)
     in.addData(docs.drop(2): _*)
     val s = streamed(out)(nm => spark.table(nm).collect().map(key).toSet)

@@ -8,7 +8,9 @@ import graft.pipeline.{TextOps, WordPiece}
   * corpus with `graft.bpe.rematEvery=2`, so the shared merge-round loop
   * re-materializes its working set twice, counted by a SparkListener
   * ([[graft.api.Metrics.cost]]). A trainer whose count rises above its
-  * bound fails; the bounds only ever tighten. */
+  * bound fails; the bounds only ever tighten. A trainer that fails after
+  * pinning its word count (a malformed loop conf, the language cap) must
+  * leave the persisted-RDD set as it found it. */
 class TrainerJobCountSpec extends SparkSpec {
   import spark.implicits._
 
@@ -44,4 +46,26 @@ class TrainerJobCountSpec extends SparkSpec {
       assert(rows.length == nRows, s"$trainer learned ${rows.length} rows, want $nRows")
       assert(cost.jobs <= bound, s"$trainer ran ${cost.jobs} jobs, bound $bound")
     }
+
+  /** Persisted RDDs a `train` call that must fail leaves behind (new ids,
+    * so an unrelated RDD the context cleaner drops meanwhile cannot mask
+    * one). */
+  private def leftBehind(train: => Any): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalArgumentException](train)
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+  }
+
+  for ((trainer, _, _, train) <- trainers)
+    test(s"$trainer releases its word-count pin when graft.bpe.rematEvery is malformed") {
+      val docs = corpus.toDF("doc_id", "lang", "text")
+      spark.conf.set("graft.bpe.rematEvery", "often")
+      try assert(leftBehind(train(docs).collect()).isEmpty)
+      finally spark.conf.unset("graft.bpe.rematEvery")
+    }
+
+  test("trainBpeMergesByLang releases its word-count pin over the 1024-language cap") {
+    val docs = (0 until 1025).map(i => (i.toLong, s"l$i", "a b")).toDF("doc_id", "lang", "text")
+    assert(leftBehind(TextOps.trainBpeMergesByLang(docs, "lang", "text", 6)).isEmpty)
+  }
 }

@@ -1,7 +1,8 @@
 package graft
 
+import graft.pipeline.TextOps.LmSpec
 import org.apache.spark.sql.functions._
-import graft.api.{App, Program}
+import graft.api.{App, MStream, Program}
 import graft.api.Program._
 
 /** Interpolated trigram LM (`TextOps.trigramLmScore` / the v7 `Lm3Score`
@@ -61,8 +62,9 @@ class TrigramLmSpec extends SparkSpec {
 
   private def scored(corpus: Seq[(Long, String)], alpha: Double,
                      l: (Double, Double, Double)): Seq[(Long, (Long, Option[Double]))] =
-    try graft.pipeline.TextOps.trigramLmScore(
-        corpus.toDF("doc_id", "text"), "doc_id", "text", alpha, l)
+    try graft.pipeline.TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+      LmSpec(3, LmSpec.JelinekMercer(alpha, Seq(l._1, l._2, l._3)), countCol = Some("n_tris")),
+      "doc_id", "text").df
       .collect().map { r =>
         r.getLong(0) -> (r.getLong(1),
           if (r.isNullAt(2)) None else Some(r.getDouble(2)))
@@ -102,13 +104,15 @@ class TrigramLmSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.keySet == before,
       "validation must not pin the count models")
     // capture == import execution == direct API
-    val direct = graft.pipeline.TextOps.trigramLmScore(
-        corpus.toDF("doc_id", "text"), "doc_id", "text")
+    val direct = graft.pipeline.TextOps.lmScore(MStream(corpus.toDF("doc_id", "text")),
+      LmSpec(3, LmSpec.JelinekMercer(0.5, Seq(0.6, 0.3, 0.1)), countCol = Some("n_tris")),
+      "doc_id", "text").df
       .collect().map(_.toSeq.toList).toSet
     try {
       val rec = Program.Rec.external("in",
           graft.api.MStream(corpus.toDF("doc_id", "text")))
-        .trigramLmScore("doc_id", "text").as("s")
+        .lmScore(LmSpec(3, LmSpec.JelinekMercer(0.5, Seq(0.6, 0.3, 0.1)),
+          countCol = Some("n_tris")), "doc_id", "text").as("s")
       val viaDoc = App.runProgram(spark, config,
           Program.toJson(Program.capture(rec)))
         .collectFirst { case App.BatchOutput("s", out) => out }.get
