@@ -479,7 +479,10 @@ object App {
     * (`spark.newSession()`). */
   private def withConfs[T](spark: SparkSession, confs: Map[String, String])(body: => T): T = {
     if (confs.isEmpty) return body
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    // getAll holds only the keys that are set: getOption would return a
+    // registered default, and restoring it would leave the key set
+    val set = spark.conf.getAll
+    val saved = confs.keys.map(k => k -> set.get(k)).toMap
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -489,14 +492,17 @@ object App {
 
   /** Every streaming query `run` starts goes through here: per-sink
     * queries, fan-out, cycle-feedback and lineage. For the duration of
-    * `start` the frame's session carries the sink's state store provider
-    * and graft's fork-free checkpoint file manager
-    * ([[graft.streaming.LocalCheckpointFileManager]]); both are restored
-    * afterwards. `StreamExecution` clones the session when the query is
-    * constructed, so the query keeps both for its lifetime, and the
-    * provider is pinned in the checkpoint from then on. A manager class
-    * the user already set (session or Hadoop conf) is left alone. */
-  private def startStreaming(df: DataFrame, stateStore: Option[String])(
+    * `start` the frame's session carries the sink's state store provider,
+    * graft's fork-free checkpoint file manager
+    * ([[graft.streaming.LocalCheckpointFileManager]]) and, where
+    * [[noDataBatchOnlyEvicts]] holds for the query, the confs that skip
+    * Spark's no-data micro-batches; all are restored afterwards.
+    * `StreamExecution` clones the session when the query is constructed,
+    * so the query keeps them for its lifetime, and the provider is pinned
+    * in the checkpoint from then on. A manager class the user already set
+    * (session or Hadoop conf) is left alone, and so are the no-data confs
+    * if the user set either (session or SparkConf). */
+  private def startStreaming(df: DataFrame, stateStore: Option[String], outputMode: String)(
       start: => StreamingQuery): StreamingQuery = {
     val session = df.sparkSession
     val managerKey = graft.streaming.LocalCheckpointFileManager.ConfKey
@@ -507,7 +513,72 @@ object App {
       else Map(managerKey -> classOf[graft.streaming.LocalCheckpointFileManager].getName)
     val provider = stateStore.map(s =>
       "spark.sql.streaming.stateStore.providerClass" -> stateStoreProviders.getOrElse(s, s))
-    withConfs(session, manager ++ provider)(start)
+    val noData = Map(
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+      "spark.sql.streaming.statefulOperator.allowMultiple" -> "false")
+    val userSet = session.conf.getAll.keySet
+    val skipNoData =
+      if (noData.keys.exists(userSet) || !noDataBatchOnlyEvicts(df, outputMode)) Map.empty
+      else noData
+    withConfs(session, manager ++ provider ++ skipNoData)(start)
+  }
+
+  /** Whether Spark's no-data micro-batch can only evict state in a
+    * streaming query over `df` written in `outputMode`; `startStreaming`
+    * then switches it off for that query. Milan's streams emit when data
+    * arrives, and nothing there matches a watermark-advance batch that
+    * emits no row; the next data batch evicts the same state.
+    *
+    * It holds when the output mode is update or complete (append mode is
+    * never touched: its no-data batch emits the rows the watermark
+    * finalizes) and the analyzed plan has exactly one stateful node, on
+    * this allow-list:
+    *  - `Aggregate`, windowed or not: update mode emits only the groups a
+    *    batch changed, and a closed window's state falls one data batch
+    *    later; complete mode never evicts;
+    *  - `Deduplicate` and `DeduplicateWithinWatermark`: they only evict;
+    *  - `FlatMapGroupsWithState` with `NoTimeout`: it never asks for a
+    *    no-data batch.
+    * Every other stateful node keeps Spark's default: an `EventTimeTimeout`
+    * fires in the no-data batch (`StreamingWindows.timeWindowApply`,
+    * `StreamingAsof`, `SpaceSaving`); a `ProcessingTimeTimeout` re-runs
+    * every batch (the `stateTtl` paths of `StreamingJoins` and
+    * `StreamingScans`); `transformWithState`, stream-stream joins,
+    * streaming limits and chains of stateful nodes are not on the list;
+    * and a node type the match below names neither as stateless nor as
+    * allowed counts as stateful, so the rule fails safe.
+    *
+    * What a data batch drops as late must not change. Spark 4's default
+    * watermark propagator filters late rows with the watermark of the
+    * batch BEFORE the current one, so without the no-data batch in
+    * between, a data batch would let through rows the watermark had
+    * already passed. The rule therefore also sets
+    * `statefulOperator.allowMultiple=false`, Spark's single-watermark
+    * propagator: with one stateful node it filters late rows and evicts
+    * under the same, current watermark, which is what the no-data batch
+    * achieved. A restarted query reads that watermark from its commit
+    * log. */
+  private def noDataBatchOnlyEvicts(df: DataFrame, outputMode: String): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    def stateless(p: LogicalPlan): Boolean = p match {
+      case j: Join => !(j.left.isStreaming && j.right.isStreaming) // stream-static
+      case _: LeafNode | _: Project | _: Filter | _: SubqueryAlias | _: EventTimeWatermark |
+           _: Union | _: Generate | _: Expand | _: SerializeFromObject |
+           _: DeserializeToObject | _: MapElements | _: MapPartitions | _: AppendColumns |
+           _: TypedFilter | _: Repartition | _: RepartitionByExpression | _: Sort => true
+      case _ => false
+    }
+    Set("update", "complete")(outputMode.toLowerCase(java.util.Locale.ROOT)) && {
+      // a batch subtree holds no state
+      val stateful = df.queryExecution.analyzed.collect {
+        case p if p.isStreaming && !stateless(p) => p
+      }
+      stateful match {
+        case Seq(_: Aggregate | _: Deduplicate | _: DeduplicateWithinWatermark) => true
+        case Seq(f: FlatMapGroupsWithState) => f.timeout == NoTimeout
+        case _ => false
+      }
+    }
   }
 
   /** Append `df` as `format` files into `dir` with atomic visibility:
@@ -627,7 +698,7 @@ object App {
     sinks.flatMap(_.checkpoint).headOption.foreach(cp =>
       w.option("checkpointLocation", cp))
     sinks.flatMap(_.queryName).headOption.foreach(n => w.queryName(s"${n}_fanout"))
-    StreamingOutput(stream, startStreaming(df, stores.headOption)(w.start()))
+    StreamingOutput(stream, startStreaming(df, stores.headOption, "append")(w.start()))
   }
 
   private def runWithLineage(spark: SparkSession, config: Config,
@@ -644,7 +715,7 @@ object App {
             .options(sink.options).outputMode("append")
           sink.queryName.foreach(w.queryName)
           sink.checkpoint.foreach(cp => w.option("checkpointLocation", cp))
-          Seq(StreamingOutput("__lineage", startStreaming(edges, sink.stateStore)(
+          Seq(StreamingOutput("__lineage", startStreaming(edges, sink.stateStore, "append")(
             sink.path.map(w.start).getOrElse(w.start()))))
         } else {
           sink.format match {
@@ -690,14 +761,14 @@ object App {
           }
           sink.queryName.foreach(w.queryName)
           sink.checkpoint.foreach(cp => w.option("checkpointLocation", cp))
-          StreamingOutput(stream, startStreaming(out.df, sink.stateStore)(w.start()))
+          StreamingOutput(stream, startStreaming(out.df, sink.stateStore, "append")(w.start()))
         } else if (out.df.isStreaming) {
           val w = out.df.writeStream.format(sink.format)
             .options(sink.options).outputMode(sink.outputMode)
           if (sink.partitionBy.nonEmpty) w.partitionBy(sink.partitionBy: _*)
           sink.queryName.foreach(w.queryName)
           sink.checkpoint.foreach(cp => w.option("checkpointLocation", cp))
-          StreamingOutput(stream, startStreaming(out.df, sink.stateStore)(
+          StreamingOutput(stream, startStreaming(out.df, sink.stateStore, sink.outputMode)(
             sink.path.map(w.start).getOrElse(w.start())))
         } else sink.format match {
           case "memory" => BatchOutput(stream, out.df) // caller collects

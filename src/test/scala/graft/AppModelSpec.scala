@@ -1,8 +1,12 @@
 package graft
 
+import java.sql.Timestamp
+
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.api.App
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.api.{App, MStream}
 
 /** Application-model semantics: program is pure dataflow over named
   * streams; sources/sinks bind by name in the config (Milan
@@ -1129,6 +1133,184 @@ class AppModelSpec extends SparkSpec {
       assert(stateFiles > 0, s"$store wrote state files")
       assert(hadoopLeftovers(cp).isEmpty, s"$store: ${hadoopLeftovers(cp).take(5)}")
     }
+  }
+  // ------------------------------------------------ no-data micro-batches
+
+  private val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** Commit-log entries under a checkpoint: one per micro-batch that ran. */
+  private def commits(cp: String): Int =
+    Option(new java.io.File(cp, "commits").listFiles).getOrElse(Array.empty[java.io.File])
+      .count(_.getName.forall(_.isDigit))
+
+  private def sec(s: Long) = new Timestamp(s * 1000L)
+
+  /** One program over a MemoryStream of [[TEv]], started through App.run
+    * into a memory sink with its own checkpoint. */
+  private final class Face(mode: String)(program: MStream => MStream) {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in: MemoryStream[TEv] = MemoryStream[TEv]
+    val cp: String = java.nio.file.Files.createTempDirectory("graft_nodata").toString
+    val name = s"nodata_${System.nanoTime()}"
+    val q: StreamingQuery = App.run(spark, new App.Config()
+        .setSource("ev", App.Source("list", rows = Some(in.toDF())))
+        .addSink("out", App.Sink("memory", outputMode = mode, queryName = Some(name),
+          checkpoint = Some(cp)))) { src => Map("out" -> program(src("ev"))) }
+      .collect { case App.StreamingOutput(_, q) => q }.head
+    def feed(evs: TEv*): Unit = { in.addData(evs); q.processAllAvailable() }
+    def rows: Set[(Long, String, Long)] = spark.table(name).collect()
+      .map(r => (r.getTimestamp(0).getTime / 1000, r.getString(1), r.getLong(2))).toSet
+    /** State rows of the last batch that read data (after its eviction). */
+    def stateRows: Long =
+      q.recentProgress.filter(_.numInputRows > 0).last.stateOperators.map(_.numRowsTotal).sum
+  }
+
+  /** 10 s tumbling count per key, watermark delay 0. */
+  private def windowCount(ev: MStream): MStream =
+    ev.withWatermark("ts", "0 seconds").groupBy("k").tumblingWindow(col("ts"), "10 seconds")
+      .select("w", count(lit(1)).as("cnt"))
+      .map(col("w.start").as("w_start"), col("k"), col("cnt"))
+
+  test("no-data rule: an update-mode window count runs one micro-batch per data batch, " +
+    "and a closed window's state falls at the next data batch") {
+    val f = new Face("update")(windowCount)
+    try {
+      val held = Seq(Seq(5L), Seq(25L), Seq(27L, 8L)).zipWithIndex.map { case (ss, i) =>
+        f.feed(ss.map(s => TEv("a", sec(s), 1.0)): _*)
+        assert(commits(f.cp) == i + 1, s"data batch $i ran no no-data batch after it")
+        f.stateRows
+      }
+      // batch 1 moves the watermark to 25 s, which closes [0, 10): its state
+      // is still held after batch 1 and goes at batch 2, not in between
+      assert(held == Seq(1L, 2L, 1L))
+      // batch 2's row at 8 s is behind that watermark: dropped as late, as a
+      // no-data batch in between would have had it dropped
+      assert(f.q.recentProgress.map(_.stateOperators.map(_.numRowsDroppedByWatermark).sum).sum == 1)
+      assert(f.rows == Set((0L, "a", 1L), (20L, "a", 1L), (20L, "a", 2L)))
+    } finally f.q.stop()
+  }
+
+  test("no-data rule: append-mode windows and event-time timeouts still emit a closed " +
+    "window with no new data") {
+    // the append-mode windowed count emits [0, 10) once the watermark passes 10 s
+    val win = new Face("append")(windowCount)
+    try {
+      win.feed(TEv("a", sec(5), 1.0))
+      win.feed(TEv("a", sec(25), 1.0))
+      assert(win.rows == Set((0L, "a", 1L)))
+      assert(commits(win.cp) > 2, "no-data batches ran")
+    } finally win.q.stop()
+    // timeWindowApply fires its event-time timeout in the no-data batch
+    val twa = new Face("append")(ev => MStream(graft.streaming.StreamingWindows
+      .timeWindowApply[TEv, String, Med](
+        ev.df.as[TEv].withWatermark("ts", "0 seconds"), _.k, _.ts, windowMs = 10000L) {
+        (ws, k, buf) => Med(k, ws.getTime / 1000, buf.map(_.v).sum) }.toDF()))
+    try {
+      twa.feed(TEv("a", sec(1), 1.0), TEv("a", sec(5), 2.0))
+      twa.feed(TEv("a", sec(25), 4.0))
+      assert(spark.table(twa.name).as[Med].collect().toSeq == Seq(Med("a", 0L, 3.0)))
+    } finally twa.q.stop()
+    // an event-time timeout in an update-mode query keeps its no-data batch too
+    val upd = new Face("update")(ev => MStream(ev.df.as[TEv].withWatermark("ts", "0 seconds")
+      .groupByKey(_.k).flatMapGroupsWithState[Long, (Timestamp, String, Long)](
+        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
+        (k: String, it: Iterator[TEv], state: GroupState[Long]) =>
+          if (state.hasTimedOut) {
+            val n = state.get
+            state.remove()
+            Iterator.single((new Timestamp(0L), k, n))
+          } else {
+            val evs = it.toSeq
+            state.update(state.getOption.getOrElse(0L) + evs.size)
+            state.setTimeoutTimestamp(evs.map(_.ts.getTime).max + 10000L)
+            Iterator.empty
+          }
+      }.toDF("w_start", "k", "cnt")))
+    try {
+      upd.feed(TEv("a", sec(5), 1.0), TEv("b", sec(6), 1.0))
+      upd.feed(TEv("b", sec(30), 1.0))
+      assert(upd.rows == Set((0L, "a", 1L)), "key a timed out without new data")
+    } finally upd.q.stop()
+  }
+
+  test("no-data rule: a second query over the same in-memory stream still reads the " +
+    "batch an update-mode window query has finished") {
+    // Spark's MemoryStream drops a batch from its buffer once any query
+    // reading it commits the batch, which a query does when it constructs
+    // its next micro-batch. A no-data batch was that next one, so a slower
+    // query over the same stream could read the batch as empty
+    val win = new Face("update")(windowCount)
+    try {
+      win.feed(TEv("a", sec(5), 1.0), TEv("a", sec(6), 1.0))
+      val name = s"nodata_reader_${System.nanoTime()}"
+      val q = App.run(spark, new App.Config()
+          .setSource("ev", App.Source("list", rows = Some(win.in.toDF())))
+          .addSink("out", App.Sink("memory", outputMode = "append", queryName = Some(name)))) {
+        src => Map("out" -> src("ev")) }.collect { case App.StreamingOutput(_, q) => q }.head
+      try {
+        q.processAllAvailable()
+        assert(spark.table(name).count() == 2)
+      } finally q.stop()
+    } finally win.q.stop()
+  }
+
+  test("no-data rule: a stateTtl join (processing-time timeout) keeps its no-data batches") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ls = MemoryStream[LRec]
+    val rs = MemoryStream[RRec]
+    val cp = java.nio.file.Files.createTempDirectory("graft_nodata_ttl").toString
+    val name = s"nodata_ttl_${System.nanoTime()}"
+    val q = App.run(spark, new App.Config()
+        .setSource("l", App.Source("list", rows = Some(ls.toDF())))
+        .setSource("r", App.Source("list", rows = Some(rs.toDF())))
+        .addSink("out", App.Sink("memory", outputMode = "append", queryName = Some(name),
+          checkpoint = Some(cp)))) { src =>
+      Map("out" -> MStream(graft.streaming.StreamingJoins.enrichmentJoin[LRec, RRec, String, Pair](
+        src("l").df.as[LRec], src("r").df.as[RRec], _.k, _.k, _.seq, _.seq,
+        graft.streaming.StreamingJoins.LeftEnrichment,
+        stateTtl = Some(java.time.Duration.ofMinutes(10)))(Pair(_, _)).toDF()))
+    }.collect { case App.StreamingOutput(_, q) => q }.head
+    try {
+      rs.addData(RRec("a", 1, 100))
+      ls.addData(LRec("a", 2, 10))
+      // Spark re-runs a processing-time timeout every trigger, so the query
+      // never idles and processAllAvailable would not return: poll instead
+      val deadline = System.nanoTime() + 60000000000L
+      def done = spark.table(name).count() == 1 &&
+        q.recentProgress.exists(p => p.numInputRows == 0 && p.batchId > 0)
+      while (!done && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(done, "the pair arrived and a no-data batch ran after it")
+      assert(spark.table(name).as[Pair].collect().toSeq ==
+        Seq(Pair(Some(LRec("a", 2, 10)), Some(RRec("a", 1, 100)))))
+    } finally q.stop()
+  }
+
+  test("no-data rule: a user-set value is honoured, and the session conf is restored") {
+    val keys = Seq(noDataKey, "spark.sql.streaming.statefulOperator.allowMultiple")
+    assert(!keys.exists(spark.conf.getAll.contains), "the shared session leaves both keys unset")
+    // unset: the rule applies to the query, and the keys are unset again after start
+    val off = new Face("update")(windowCount)
+    try {
+      assert(!keys.exists(spark.conf.getAll.contains), "both keys are unset after start")
+      off.feed(TEv("a", sec(5), 1.0))
+      off.feed(TEv("a", sec(25), 1.0))
+      assert(commits(off.cp) == 2)
+    } finally off.q.stop()
+    // set to true by the user: the update face keeps its no-data batches
+    spark.conf.set(noDataKey, "true")
+    try {
+      val on = new Face("update")(windowCount)
+      try {
+        assert(spark.conf.getAll.get(noDataKey).contains("true"), "still the user's value")
+        assert(!spark.conf.getAll.contains(keys(1)), "the rule set nothing")
+        on.feed(TEv("a", sec(5), 1.0))
+        on.feed(TEv("a", sec(25), 1.0))
+        assert(commits(on.cp) == 4, "a no-data batch ran after each data batch")
+        assert(on.q.lastProgress.numInputRows == 0 &&
+          on.q.lastProgress.stateOperators.map(_.numRowsTotal).sum == 1,
+          "the no-data batch evicted the closed window")
+      } finally on.q.stop()
+    } finally spark.conf.unset(noDataKey)
   }
 }
 

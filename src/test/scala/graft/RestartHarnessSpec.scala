@@ -30,7 +30,9 @@ final case class RestartEvent(event_id: Long, user_id: Long, event_type: String,
   * (Append), 1 h watermarked tumbling windows (Update) and clicks joined
   * to the user's latest purchase (Append). Late rows behind the watermark
   * follow each restart point, so a restart that lost the watermark would
-  * count them. */
+  * count them. The windows face runs without no-data micro-batches
+  * (`App.run` skips them for it), so these checks also hold the late-row
+  * and eviction semantics of that rule across restarts. */
 class RestartHarnessSpec extends SparkSpec {
   import spark.implicits._
 
@@ -128,25 +130,41 @@ class RestartHarnessSpec extends SparkSpec {
     finally s.close()
   }
 
+  /** Micro-batches a face's query ran over all its segments: the entries
+    * of its commit log. */
+  private def commits(cp: JPath, face: String): Int = {
+    val s = Files.list(cp.resolve(face).resolve("commits"))
+    try s.iterator.asScala.count(_.getFileName.toString.forall(_.isDigit)) finally s.close()
+  }
+
+  /** The windows face is Update mode over an aggregate only, so `App.run`
+    * turns Spark's no-data micro-batches off for it: one micro-batch per
+    * data batch, however the run was split. */
+  private def assertNoNoDataBatches(cp: JPath): Unit =
+    assert(commits(cp, "windows") == k, "the windows face ran a no-data batch")
+
   private lazy val straight = run("straight", Nil, Seq(None))
 
   test("the straight run is the reference: every face has output and late rows were dropped") {
-    val (out, _) = straight
+    val (out, cp) = straight
     faces.foreach(f => assert(out(f.name).nonEmpty, s"${f.name} produced rows"))
+    assertNoNoDataBatches(cp)
     assert(out("sums").size == k * perBatch + 3 * lateRows, "the running sum sees every row")
     val windowed = out("windows").map(_.getAs[Long]("cnt")).sum
     assert(windowed == k * perBatch, "the windows counted every row but the late ones")
   }
 
   test("stopping after batch 3 and restarting from the same checkpoints changes no sink") {
-    val (out, _) = run("restart", Seq(3), Seq(None, None))
+    val (out, cp) = run("restart", Seq(3), Seq(None, None))
     faces.foreach(f => assert(out(f.name) == straight._1(f.name), f.name))
+    assertNoNoDataBatches(cp)
   }
 
   test("Spark's default manager, then graft's, then the default again, on one checkpoint") {
     val dflt = Some(classOf[FileContextBasedCheckpointFileManager].getName)
     val (out, cp) = run("interop", Seq(2, 4), Seq(dflt, None, dflt))
     faces.foreach(f => assert(out(f.name) == straight._1(f.name), f.name))
+    assertNoNoDataBatches(cp)
     assert(files(cp).exists(n => n.startsWith(".") && n.endsWith(".crc")),
       "the default manager's segments left Hadoop sidecars (the interop is exercised)")
   }
@@ -161,7 +179,9 @@ class RestartHarnessSpec extends SparkSpec {
 
   test("RocksDB state: the restarted run equals the straight one, under graft's manager") {
     val (once, cp) = run("rocks_straight", Nil, Seq(None), stateStore = Some("rocksdb"))
-    val (twice, _) = run("rocks_restart", Seq(3), Seq(None, None), stateStore = Some("rocksdb"))
+    val (twice, twiceCp) = run("rocks_restart", Seq(3), Seq(None, None), stateStore = Some("rocksdb"))
+    assertNoNoDataBatches(cp)
+    assertNoNoDataBatches(twiceCp)
     faces.foreach { f =>
       assert(once(f.name) == straight._1(f.name), s"${f.name}: RocksDB equals the HDFS store")
       assert(twice(f.name) == once(f.name), f.name)
