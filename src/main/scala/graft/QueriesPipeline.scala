@@ -6,6 +6,19 @@ import graft.pipeline.{Arpa, Dedup, Multimodal, Similarity, TextOps}
 import graft.pipeline.TextOps.{LmRef, LmSpec}
 import graft.sources.Tables
 
+/** A temporary-directory root that a JVM shutdown hook deletes with
+  * everything under it; [[dir]] makes a fresh directory under it. */
+private[graft] final class ScratchRoot(prefix: String) {
+  lazy val root: java.nio.file.Path = {
+    val r = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook(delete())
+    r
+  }
+  def dir(name: String): java.nio.file.Path = java.nio.file.Files.createTempDirectory(root, name)
+  /** The shutdown hook's body: delete the root recursively. */
+  def delete(): Unit = graft.streaming.LocalCheckpointFileManager.deleteLocal(root)
+}
+
 /**
  * Training-data-pipeline operators (dedup, similarity search, text
  * analysis, multimodal) as driver-checkable queries over the `documents`
@@ -16,6 +29,13 @@ import graft.sources.Tables
  * recall on this corpus.
  */
 object QueriesPipeline {
+
+  /** Where the artifact queries write the files they read back (ARPA
+    * models, vocab and merge files, saved artifacts): a fresh directory
+    * per call under one root per JVM, deleted when the JVM exits. The
+    * frames they return read those files lazily, so no query can delete
+    * its own directory sooner. */
+  private[graft] val scratch = new ScratchRoot("graft_queries")
 
   private val PolyFold =
     "list_reduce([0] || [ord(c)::BIGINT for c in string_split(%s, '')], (a, c) -> (a * 31 + c) %% 1000000007)"
@@ -2446,7 +2466,7 @@ object QueriesPipeline {
   def qArpaScore(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).df
     val ref = docs.filter(col("source").isin("src0", "src1", "src2", "src3"))
-    val path = java.nio.file.Files.createTempDirectory("graft_arpa")
+    val path = scratch.dir("arpa")
       .resolve("kn3.arpa").toString
     Arpa.arpaExportKn(ref, "text", order = 3, path, minCount = 2L)
     val model = Arpa.arpaImport(spark, path)
@@ -2507,7 +2527,7 @@ object QueriesPipeline {
     val docs = Tables.documents(spark, dir).df
     val ref = docs.filter(col("source").isin("src0", "src1", "src2", "src3") &&
       col("lang") =!= "zh")
-    val out = java.nio.file.Files.createTempDirectory("graft_arpa_bylang").toString
+    val out = scratch.dir("arpa_bylang").toString
     Arpa.arpaExportKnByLang(ref, "text", "lang", order = 3, out)
     Arpa.arpaScoreAgainstByLang(graft.api.MStream(docs),
       Arpa.arpaImportDir(spark, out), "doc_id", "text", "lang").df
@@ -2528,7 +2548,7 @@ object QueriesPipeline {
   def qArpaSent(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).df
     val ref = docs.filter(col("source").isin("src0", "src1", "src2", "src3"))
-    val path = java.nio.file.Files.createTempDirectory("graft_arpa_sent")
+    val path = scratch.dir("arpa_sent")
       .resolve("kn3_sent.arpa").toString
     Arpa.arpaExportKn(ref, "text", order = 3, path, sentenceMode = true)
     val model = Arpa.arpaImport(spark, path)
@@ -2931,7 +2951,7 @@ object QueriesPipeline {
       .where(col("bucket").isNotNull && col("bucket") < 3)
       .groupBy(col("lang"), col("bucket"))
       .agg(min(col("avg_logprob")).as("cut"))
-    val artDir = java.nio.file.Files.createTempDirectory("graft_art")
+    val artDir = scratch.dir("art")
       .resolve("cuts").toString
     graft.api.Artifacts.save(artDir, "ppl-thresholds", Map("table" -> cuts))
     val loaded = graft.api.Artifacts
@@ -3813,7 +3833,7 @@ object QueriesPipeline {
     val docs = Tables.documents(spark, dir).df
     val vocab = graft.pipeline.Unigram.trainVocab(docs, "text",
       vocabSize = 40, maxPieceLen = 3, emRounds = 2, seedSize = 60)
-    val path = java.nio.file.Files.createTempDirectory("graft_sp")
+    val path = scratch.dir("sp")
       .resolve("sp.vocab").toString
     graft.pipeline.Unigram.exportVocab(vocab, path)
     val imported = graft.pipeline.Unigram.importVocab(spark, path)
@@ -3886,7 +3906,7 @@ object QueriesPipeline {
   def qByteBpeJson(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).df
     val merges = TextOps.trainByteBpeMerges(docs, "text", ByteBpeRounds)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bbj")
+    val tmp = scratch.dir("bbj")
     val mPath = tmp.resolve("merges.txt").toString
     val vPath = tmp.resolve("vocab.json").toString
     TextOps.bpeExportMerges(merges, mPath)
@@ -4346,7 +4366,7 @@ object QueriesPipeline {
     val docs = Tables.documents(spark, dir).df
     val vocab = graft.pipeline.WordPiece.trainVocab(
       docs.where(col("doc_id") % 3 =!= 0), "text", WpRounds)
-    val path = java.nio.file.Files.createTempDirectory("graft_wp")
+    val path = scratch.dir("wp")
       .resolve("vocab.txt").toString
     graft.pipeline.WordPiece.exportVocab(vocab, path)
     val imported = graft.pipeline.WordPiece.importVocab(spark, path)
@@ -4364,7 +4384,7 @@ object QueriesPipeline {
   def qBpeImport(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).df
     val merges = TextOps.trainBpeMerges(docs, "text", BpeRounds)
-    val path = java.nio.file.Files.createTempDirectory("graft_bpe")
+    val path = scratch.dir("bpe")
       .resolve("merges.txt").toString
     TextOps.bpeExportMerges(merges, path)
     val imported = TextOps.bpeImportMerges(spark, path)

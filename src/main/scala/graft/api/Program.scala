@@ -2241,6 +2241,70 @@ object Program {
     "lambdas" -> Seq("l3", "l2", "l1"),
     "fallback discounts" -> Seq("fb1", "fb2", "fb3"))
 
+  /** A bound one document field must meet at load: its wording, whether it
+    * reads a value of a type, and why a value breaks it (None when the
+    * value meets it, "" when the bound says it all). A scalar rule sees
+    * every scalar inside the field (an Option's value, each Seq element,
+    * each Map value); [[NonEmpty]] sees the collection itself. */
+  private[graft] final case class Rule(bound: String)(val reads: ru.Type => Boolean,
+                                                      val fault: Any => Option[String])
+  private def num(bound: String)(out: Double => Boolean): Rule = Rule(bound)(
+    t => Seq(ru.typeOf[Int], ru.typeOf[Long], ru.typeOf[Double]).exists(t =:= _),
+    x => Option.when(out(x.asInstanceOf[Number].doubleValue))(""))
+  private def text(bound: String)(why: String => Option[String]): Rule =
+    Rule(bound)(_ =:= ru.typeOf[String], x => why(x.asInstanceOf[String]))
+  private[graft] val Positive: Rule = num("> 0")(_ <= 0)
+  private[graft] def AtLeast(n: Int): Rule = num(s">= $n")(_ < n)
+  private[graft] def InRange(lo: Int, hi: Int): Rule = num(s"in [$lo,$hi]")(d => d < lo || d > hi)
+  private[graft] val UnitInterval: Rule = num("in (0,1]")(d => d <= 0 || d > 1)
+  private[graft] val Closed01: Rule = num("in [0,1]")(d => d < 0 || d > 1)
+  private[graft] val NonBlank: Rule = text("non-blank")(s => Option.when(s.trim.isEmpty)(""))
+  private[graft] def OneOf(xs: String*): Rule =
+    text(xs.mkString("one of ", "|", ""))(s => Option.when(!xs.contains(s))(""))
+  private[graft] val SqlExpr: Rule = text("a SQL expression")(s =>
+    try { CatalystSqlParser.parseExpression(s); None }
+    catch { case e: Exception => Some(s": ${e.getMessage}") })
+  private[graft] val NonEmpty: Rule = Rule("non-empty")(_ <:< ru.typeOf[Iterable[Any]],
+    x => Option.when(x.asInstanceOf[Iterable[_]].isEmpty)(""))
+
+  /** The field bounds, as data: each rule and the `op.field` references it
+    * applies to (`op.field.key` for one key of a tuple-valued field). The
+    * `expr` of every [[Field]]-typed value is parsed without a row. Bounds
+    * that span fields or nodes are code, in [[validate]]. */
+  private[graft] val FieldRules: Seq[(Rule, String)] = Seq(
+    Positive -> "beginCycle.maxIterations recordWindow.n bm25Retrieve.k hybridRrf.k hybridRrf.kRrf",
+    Positive -> "chunkSentences.maxTokens dsirScore.alpha dsirScore.buckets nbClassify.alpha",
+    Positive -> "ivfProbe.topK ivfProbe.nProbe capPerKey.n exactK.k exactKStrata.k",
+    Positive -> "capTokens.budget temperatureMix.budgetRows packChunks.budget topkPerKey.k",
+    Positive -> "chunkTokens.chunkSize chunkTokens.stride corpusDedup.bands dedupCorpus.bands",
+    Positive -> "dedupCorpusBest.bands",
+    AtLeast(0) -> "hybridRrf.legK hybridRrf.ivfCells hybridRrf.nProbe tokenFreq.rareMax",
+    AtLeast(0) -> "weightedMix.weights weightedMix.defaultWeight jlProject.seed",
+    AtLeast(1) -> "hybridRrf.ivfIters winnowPairs.n winnowPairs.w winnowPairs.minShared",
+    AtLeast(1) -> "exactSubstr.maxExtend tokenFreq.depth decontaminateIngest.n",
+    AtLeast(1) -> "decontaminateIngest.minOverlap gopherGate.minWords lineScrub.minWords",
+    AtLeast(1) -> "paraScrub.minWords winnow.n winnow.w zorder.numFiles wpTokenize.maxInputChars",
+    AtLeast(1) -> "wpEncode.maxInputChars wpIds.maxInputChars",
+    AtLeast(2) -> "winnowPairs.maxBucket exactSubstr.minLen exactSubstr.minDocs tokenFreq.width",
+    AtLeast(2) -> "pplThresholds.buckets rankBuckets.buckets spanScrub.k spanScrub.minDocs",
+    InRange(1, 16) -> "unigramEncode.maxPieceLen unigramIds.maxPieceLen",
+    InRange(1, 32) -> "exactDedup.numHashes",
+    InRange(1, 4096) -> "jlProject.outDim",
+    UnitInterval -> "corpusDedup.threshold dedupCorpus.threshold dedupCorpusBest.threshold",
+    UnitInterval -> "semanticDedup.threshold semanticDedupBest.threshold temperatureMix.alpha",
+    Closed01 -> "hashSample.rate stratifiedSample.rates stratifiedSample.defaultRate",
+    NonEmpty -> "map.cols orderBy.cols union.inputs groupSelect.aggs windowSelect.aggs",
+    NonEmpty -> "uniqueBy.valueCols uniqueBy.keepLatestBy sessionSelect.aggs recordWindow.aggs",
+    NonEmpty -> "assignSplit.splits safeSplit.splits topkPerKey.keys zorder.cols",
+    NonBlank -> "arpaScore.path arpaScoreLang.dir spTokenize.path spIds.path saveArtifact.dir",
+    NonBlank -> "saveArtifact.kind loadArtifact.dir loadArtifact.table",
+    OneOf("sumBy", "meanBy", "productBy", "countBy", "maxBy", "minBy", "last") -> "scan.kind",
+    OneOf("sumBy", "meanBy", "productBy", "countBy") -> "recordWindow.aggs.kind",
+    OneOf("backward", "forward") -> "asof.direction",
+    OneOf("map", "where", "addField") -> "applyFn.kind",
+    SqlExpr -> "where.predicate windowSelect.ts join.condition scan.arg sessionSelect.ts",
+    SqlExpr -> "applyFn.args dedupCorpusBest.score semanticDedupBest.score topkPerKey.score")
+
   /** Fields left out of a document while they hold their default, so a
     * document that does not use them keeps the bytes and the version
     * stamp of the grammar that predates them. */
@@ -2266,15 +2330,45 @@ object Program {
   private lazy val mirror = ru.runtimeMirror(getClass.getClassLoader)
 
   /** One document field: its key (the constructor parameter name), its
-    * decoder, and the value it takes when absent (the case-class default,
-    * else None for an Option and Nil for a Seq; a required field has none). */
-  private final case class CodecField(name: String, decode: JValue => Any,
+    * type and decoder, and the value it takes when absent (the case-class
+    * default, else None for an Option and Nil for a Seq; a required field
+    * has none). */
+  private final case class CodecField(name: String, tpe: ru.Type, decode: JValue => Any,
                                       absent: Option[Any])
 
+  /** A [[FieldRules]] reference bound to a node: the rule, the field's
+    * position, its label in the rejection, and the tuple key it reads. */
+  private final case class FieldCheck(rule: Rule, field: Int, label: String, key: Option[Int]) {
+    /** How node `n`'s field breaks the rule, if it does. */
+    def fault(n: Node): Option[String] = {
+      def scalars(v: Any): Seq[Any] = v match {
+        case o: Option[_] => o.toSeq.flatMap(scalars)
+        case m: Map[_, _] => m.values.toSeq.flatMap(scalars)
+        case s: Seq[_] => s.flatMap(scalars)
+        case x => Seq(key.fold(x)(x.asInstanceOf[Product].productElement(_)))
+      }
+      val v = n.productElement(field)
+      (if (rule == NonEmpty) Seq(v) else scalars(v)).iterator.flatMap(x => rule.fault(x).map(
+        why => s"needs $label ${rule.bound}, got ${show(x)}$why")).nextOption()
+    }
+    private def show(x: Any): String = x match {
+      case s: String => s"'$s'"
+      case xs: Iterable[_] => xs.mkString("[", ", ", "]")
+      case x => x.toString
+    }
+  }
+  /** The type of the scalars inside a field of type `t`. */
+  private def scalarType(t: ru.Type): ru.Type =
+    if (t <:< ru.typeOf[Option[Any]] || t <:< ru.typeOf[Seq[Any]])
+      scalarType(t.typeArgs.head.dealias)
+    else if (t <:< ru.typeOf[Map[String, Any]]) scalarType(t.typeArgs(1).dealias)
+    else t
+
   /** One row of the codec table: a node class, its document op, the format
-    * version that introduced the op, and its constructor fields, whose
-    * names are the document keys in document order. */
-  private final class NodeCodec(sym: ru.ClassSymbol) {
+    * version that introduced the op, its constructor fields, whose names
+    * are the document keys in document order, and its field bounds from
+    * `rules` ((op, rule, field reference) triples). */
+  private final class NodeCodec(sym: ru.ClassSymbol, rules: Seq[(String, Rule, String)]) {
     val cls: Class[_] = mirror.runtimeClass(sym)
     val op: String = OpAlias.getOrElse(sym.name.toString,
       sym.name.toString.head.toLower +: sym.name.toString.tail)
@@ -2292,8 +2386,27 @@ object Program {
           else if (t <:< ru.typeOf[Option[Any]]) Some(None)
           else if (t <:< ru.typeOf[Seq[Any]]) Some(Nil)
           else None
-        CodecField(p.name.toString, decoder(t, p.name.toString), default)
+        CodecField(p.name.toString, t, decoder(t, p.name.toString), default)
       }
+    }
+
+    /** This op's rule rows bound to its fields, then the SQL parse of every
+      * [[Field]]'s `expr`. A reference to a missing field or key, or to a
+      * type its rule cannot read, fails the codec table's build. */
+    val checks: Seq[FieldCheck] = rules.collect { case (`op`, rule, ref) =>
+      def bad(why: String) = throw new IllegalStateException(
+        s"Program.FieldRules: '${rule.bound}' on $op.$ref: $why")
+      val (name, key) = ref.span(_ != '.')
+      val i = fields.indexWhere(_.name == name)
+      if (i < 0) bad(s"$op has no field '$name'")
+      val t = if (rule == NonEmpty) fields(i).tpe else scalarType(fields(i).tpe)
+      val j = if (key.isEmpty) -1 else TupleKeys.getOrElse(name, Nil).indexOf(key.tail)
+      if (key.nonEmpty && j < 0) bad(s"'$name' has no tuple key '${key.tail}'")
+      val read = if (j < 0) t else t.typeArgs(j)
+      if (!rule.reads(read)) bad(s"the rule cannot read $read")
+      FieldCheck(rule, i, ref, Option.when(j >= 0)(j))
+    } ++ fields.zipWithIndex.collect { case (f, i) if scalarType(f.tpe) =:= ru.typeOf[Field] =>
+      FieldCheck(SqlExpr, i, s"${f.name}.expr", Some(0))
     }
 
     def build(args: Seq[Any]): Node =
@@ -2376,11 +2489,24 @@ object Program {
   }
 
   /** The codec table: one row per [[Node]] case class. */
-  private lazy val codecs: Seq[NodeCodec] = {
+  private lazy val codecs: Seq[NodeCodec] = codecTable(FieldRules)
+
+  /** Build a codec table under the field bounds `rules`, the check
+    * [[FieldRules]] passes when the table is first built. */
+  private[graft] def checkRules(rules: Seq[(Rule, String)]): Unit = { codecTable(rules); () }
+
+  /** The codec table with the field bounds `rules`; fails on a rule row
+    * that names an op with no node class. */
+  private def codecTable(rules: Seq[(Rule, String)]): Seq[NodeCodec] = {
+    val refs = for ((rule, ops) <- rules; r <- ops.split(' ').toSeq; (op, ref) = r.span(_ != '.'))
+      yield (op, rule, ref.drop(1))
     val rows = ru.typeOf[Node].typeSymbol.asClass.knownDirectSubclasses.toSeq
-      .map(s => new NodeCodec(s.asClass))
+      .map(s => new NodeCodec(s.asClass, refs))
     val unused = OpSince.keySet -- rows.map(_.op)
     require(unused.isEmpty, s"Program.OpSince names ops with no node class: $unused")
+    val unknown = refs.map(_._1).toSet -- rows.map(_.op)
+    if (unknown.nonEmpty) throw new IllegalStateException(
+      s"Program.FieldRules names ops with no node class: ${unknown.mkString(", ")}")
     rows
   }
   private lazy val codecByClass: Map[Class[_], NodeCodec] = codecs.map(c => c.cls -> c).toMap
@@ -2476,6 +2602,9 @@ object Program {
     def emptyOf(like: MStream, schema: org.apache.spark.sql.types.StructType): MStream =
       like.lift(spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
+    // the tokenizer faces: the input schema plus the `as` array column
+    def plusArray(like: MStream, as: String, elem: org.apache.spark.sql.types.DataType): MStream =
+      emptyOf(like, like.df.schema.add(as, org.apache.spark.sql.types.ArrayType(elem)))
     doc.nodes.foreach { node =>
       try {
         val out = node match {
@@ -2582,51 +2711,33 @@ object Program {
             val s = env(bi.input)
             s.df.select(col(bi.textCol)).schema
             env(bi.merges).df.select(col("merge_rank"), col("lhs"), col("rhs")).schema
-            emptyOf(s, org.apache.spark.sql.types.StructType(
-              s.df.schema.fields :+ org.apache.spark.sql.types.StructField(
-                bi.as, org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.LongType))))
+            plusArray(s, bi.as, org.apache.spark.sql.types.LongType)
           case st: SpTokenize =>
             // the vocab file is a runtime binding (never read here)
             val s = env(st.input)
             s.df.select(col(st.textCol)).schema
-            emptyOf(s, org.apache.spark.sql.types.StructType(
-              s.df.schema.fields :+ org.apache.spark.sql.types.StructField(
-                st.as, org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.StringType))))
+            plusArray(s, st.as, org.apache.spark.sql.types.StringType)
           case si: SpIds =>
             val s = env(si.input)
             s.df.select(col(si.textCol)).schema
-            emptyOf(s, org.apache.spark.sql.types.StructType(
-              s.df.schema.fields :+ org.apache.spark.sql.types.StructField(
-                si.as, org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.LongType))))
+            plusArray(s, si.as, org.apache.spark.sql.types.LongType)
           case ue: UnigramEncode =>
             // build-time eager (the vocabulary collects at lowering):
             // force the refs, emit input + the pieces column
             val s = env(ue.input)
             s.df.select(col(ue.textCol)).schema
             env(ue.vocab).df.select(col("piece"), col("cnt")).schema
-            emptyOf(s, org.apache.spark.sql.types.StructType(
-              s.df.schema.fields :+ org.apache.spark.sql.types.StructField(
-                ue.as, org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.StringType))))
+            plusArray(s, ue.as, org.apache.spark.sql.types.StringType)
           case ui: UnigramIds =>
             val s = env(ui.input)
             s.df.select(col(ui.textCol)).schema
             env(ui.vocab).df.select(col("piece"), col("cnt")).schema
-            emptyOf(s, org.apache.spark.sql.types.StructType(
-              s.df.schema.fields :+ org.apache.spark.sql.types.StructField(
-                ui.as, org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.LongType))))
+            plusArray(s, ui.as, org.apache.spark.sql.types.LongType)
           case wt: WpTokenize =>
             val s = env(wt.input)
             s.df.select(col(wt.textCol)).schema
             env(wt.vocab).df.select(col("wp_id"), col("piece")).schema
-            emptyOf(s, org.apache.spark.sql.types.StructType(
-              s.df.schema.fields :+ org.apache.spark.sql.types.StructField(
-                wt.as, org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.StringType))))
+            plusArray(s, wt.as, org.apache.spark.sql.types.StringType)
           case we: WpEncode =>
             val s = env(we.input)
             val idField = s.df.schema(we.idCol)
@@ -2641,10 +2752,7 @@ object Program {
             val s = env(wi.input)
             s.df.select(col(wi.textCol)).schema
             env(wi.vocab).df.select(col("wp_id"), col("piece")).schema
-            emptyOf(s, org.apache.spark.sql.types.StructType(
-              s.df.schema.fields :+ org.apache.spark.sql.types.StructField(
-                wi.as, org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.LongType))))
+            plusArray(s, wi.as, org.apache.spark.sql.types.LongType)
           case bb: ByteBpeEncode =>
             val s = env(bb.input)
             val idField = s.df.schema(bb.idCol)
@@ -2656,19 +2764,13 @@ object Program {
             val s = env(bj.input)
             s.df.select(col(bj.textCol)).schema
             env(bj.merges).df.select(col("merge_rank"), col("lhs"), col("rhs")).schema
-            emptyOf(s, org.apache.spark.sql.types.StructType(
-              s.df.schema.fields :+ org.apache.spark.sql.types.StructField(
-                bj.as, org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.LongType))))
+            plusArray(s, bj.as, org.apache.spark.sql.types.LongType)
           case bv: ByteBpeIdsVocab =>
             val s = env(bv.input)
             s.df.select(col(bv.textCol)).schema
             env(bv.merges).df.select(col("merge_rank"), col("lhs"), col("rhs")).schema
             env(bv.vocab).df.select(col("piece"), col("gpt_id")).schema
-            emptyOf(s, org.apache.spark.sql.types.StructType(
-              s.df.schema.fields :+ org.apache.spark.sql.types.StructField(
-                bv.as, org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.LongType))))
+            plusArray(s, bv.as, org.apache.spark.sql.types.LongType)
           case bl: BpeLangEncode =>
             val s = env(bl.input)
             val idField = s.df.schema(bl.idCol)
@@ -2842,346 +2944,103 @@ object Program {
     }
   }
 
-  /** Load-time validation: every SQL fragment must parse, every input
-    * reference must resolve to an earlier node. Catches a corrupt or
-    * hand-edited document before any Spark job is planned. */
+  /** Load-time validation: every field meets its [[FieldRules]] bound and
+    * every [[Field]] expression parses (the node's codec checks), then the
+    * rules that span fields or nodes hold, and every input reference
+    * resolves to an earlier node. Catches a corrupt or hand-edited
+    * document before any Spark job is planned. */
   private def validate(doc: Doc): Unit = {
-    def parse(sql: String, where: String): Unit =
-      try CatalystSqlParser.parseExpression(sql)
-      catch { case e: Exception => throw new IllegalArgumentException(
-        s"$where: unparseable SQL expression '$sql': ${e.getMessage}") }
-    def nonEmpty(fs: Seq[_], what: String, node: String): Unit =
-      if (fs.isEmpty) throw new IllegalArgumentException(
-        s"node '$node' needs at least one $what")
-    def checkSplits(node: String, splits: Seq[(String, Double)]): Unit = {
-      nonEmpty(splits, "split band", node)
-      if (splits.exists(_._2 < 0.0) || math.abs(splits.map(_._2).sum - 1.0) >= 1e-9)
-        throw new IllegalArgumentException(
-          s"node '$node': split fractions must be non-negative and sum to 1, " +
-            s"got ${splits.map(_._2).mkString(", ")}")
-    }
     var defined = Set.empty[String]
     var openCycle: Option[String] = None
     doc.nodes.foreach { n =>
+      val codec = codecOf(n)
+      val op = codec.op
+      def reject(why: String): Nothing =
+        throw new IllegalArgumentException(s"node '${n.name}': $why")
       if (n.name.startsWith("__cycle_")) throw new IllegalArgumentException(
         s"node name '${n.name}' uses the reserved cycle-channel prefix '__cycle_'")
+      codec.checks.foreach(_.fault(n).foreach(f => reject(s"$op $f")))
+      // the rows run first: bands > 0 here, and hybridRrf's ivfCells, nProbe >= 0
+      def multipleOfBands(k: Int, bands: Int): Unit = if (k < bands || k % bands != 0)
+        reject(s"$op needs k a positive multiple of bands, got k=$k bands=$bands")
+      def sumsToOne(splits: Seq[(String, Double)]): Unit =
+        if (splits.exists(_._2 < 0.0) || math.abs(splits.map(_._2).sum - 1.0) >= 1e-9)
+          reject(s"split fractions must be non-negative and sum to 1, got " +
+            splits.map(_._2).mkString(", "))
+      def distinctIds(qIdCol: String, idCol: String, rest: String): Unit =
+        if (qIdCol == idCol) reject(s"$op qIdCol and idCol are both '$idCol' — rename " +
+          s"one (output is (qIdCol, idCol, $rest))")
       n match {
         case b: BeginCycle =>
-          if (openCycle.isDefined) throw new IllegalArgumentException(
-            s"node '${b.name}': nested cycles are not supported " +
-              s"(cycle '${openCycle.get}' is still open)")
-          if (b.maxIterations <= 0) throw new IllegalArgumentException(
-            s"node '${b.name}': beginCycle needs maxIterations > 0, got ${b.maxIterations}")
+          openCycle.foreach(o =>
+            reject(s"nested cycles are not supported (cycle '$o' is still open)"))
           openCycle = Some(b.name)
         case c: CloseCycle =>
-          if (!openCycle.contains(c.cycle)) throw new IllegalArgumentException(
-            s"node '${c.name}': closeCycle targets '${c.cycle}' but " +
-              openCycle.fold("no cycle is open")(o => s"the open cycle is '$o'"))
+          if (!openCycle.contains(c.cycle)) reject(s"closeCycle targets '${c.cycle}' but " +
+            openCycle.fold("no cycle is open")(o => s"the open cycle is '$o'"))
           openCycle = None
-        case m: MapCols =>
-          nonEmpty(m.cols, "column", n.name)
-          m.cols.foreach(f => parse(f.expr, s"node ${n.name}"))
-        case w: Where => parse(w.predicate, s"node ${n.name}")
-        case a: AddTo => a.fields.foreach(f => parse(f.expr, s"node ${n.name}"))
-        case o: OrderBy => nonEmpty(o.cols, "order column", n.name)
-        case u: Union => nonEmpty(u.inputs, "input", n.name)
-        case g: GroupSelect =>
-          nonEmpty(g.aggs, "aggregate", n.name)
-          g.aggs.foreach(f => parse(f.expr, s"node ${n.name}"))
-        case w: WindowSelect =>
-          nonEmpty(w.aggs, "aggregate", n.name)
-          parse(w.ts, s"node ${n.name}"); w.aggs.foreach(f => parse(f.expr, s"node ${n.name}"))
-        case jn: Join =>
-          parse(jn.condition, s"node ${n.name}")
-          jn.select.foreach(f => parse(f.expr, s"node ${n.name}"))
-        case s: Scan =>
-          s.arg.foreach(parse(_, s"node ${n.name}"))
-          val kinds = Set("sumBy", "meanBy", "productBy", "countBy", "maxBy", "minBy", "last")
-          if (!kinds.contains(s.kind)) throw new IllegalArgumentException(
-            s"node ${n.name}: unknown scan kind '${s.kind}' (${kinds.mkString("|")})")
-        case a: Asof =>
-          if (a.direction != "backward" && a.direction != "forward")
-            throw new IllegalArgumentException(
-              s"node ${n.name}: unknown asof direction '${a.direction}' (backward|forward)")
-        case u: UniqueBy =>
-          nonEmpty(u.valueCols, "value column", n.name)
-          nonEmpty(u.keepLatestBy, "keep-latest ordering column", n.name)
-        case ss: SessionSelect =>
-          nonEmpty(ss.aggs, "aggregate", n.name)
-          parse(ss.ts, s"node ${n.name}")
-          ss.aggs.foreach(f => parse(f.expr, s"node ${n.name}"))
-        case rw: RecordWindow =>
-          nonEmpty(rw.aggs, "aggregate", n.name)
-          if (rw.n <= 0) throw new IllegalArgumentException(
-            s"node ${n.name}: recordWindow needs n > 0, got ${rw.n}")
-          val kinds = Set("sumBy", "meanBy", "productBy", "countBy")
-          rw.aggs.foreach { case (k, _, _) =>
-            if (!kinds.contains(k)) throw new IllegalArgumentException(
-              s"node ${n.name}: unknown recordWindow agg kind '$k' (${kinds.mkString("|")})")
-          }
         case af: ApplyFn =>
-          af.args.foreach(parse(_, s"node ${n.name}"))
-          if (!Set("map", "where", "addField").contains(af.kind))
-            throw new IllegalArgumentException(
-              s"node '${n.name}': unknown applyFn kind '${af.kind}' (map|where|addField)")
-          if (af.kind != "where" && af.as.isEmpty) throw new IllegalArgumentException(
-            s"node '${n.name}': applyFn kind '${af.kind}' needs an 'as' output name")
+          if (af.kind != "where" && af.as.isEmpty)
+            reject(s"applyFn kind '${af.kind}' needs an 'as' output name")
           Functions.registeredArity(af.function) match {
-            case None => throw new IllegalArgumentException(
-              s"node '${n.name}': function '${af.function}' is not registered " +
-                "(Program.Functions.register it before loading the document)")
-            case Some(a) if a != af.args.size => throw new IllegalArgumentException(
-              s"node '${n.name}': function '${af.function}' takes $a argument(s), " +
-                s"got ${af.args.size}")
+            case None => reject(s"function '${af.function}' is not registered " +
+              "(Program.Functions.register it before loading the document)")
+            case Some(a) if a != af.args.size => reject(
+              s"function '${af.function}' takes $a argument(s), got ${af.args.size}")
             case _ =>
           }
-        case cd: CorpusDedup =>
-          if (cd.bands <= 0 || cd.k < cd.bands || cd.k % cd.bands != 0)
-            throw new IllegalArgumentException(s"node '${n.name}': corpusDedup " +
-              s"needs k a positive multiple of bands, got k=${cd.k} bands=${cd.bands}")
-          if (cd.threshold <= 0.0 || cd.threshold > 1.0)
-            throw new IllegalArgumentException(s"node '${n.name}': corpusDedup " +
-              s"threshold must be in (0,1], got ${cd.threshold}")
+        case cd: CorpusDedup => multipleOfBands(cd.k, cd.bands)
+        case dc: DedupCorpus => multipleOfBands(dc.k, dc.bands)
+        case db: DedupCorpusBest => multipleOfBands(db.k, db.bands)
         case ed: EmbedDedup =>
           if (ed.centroids.isDefined && ed.nProbe <= 0)
-            throw new IllegalArgumentException(s"node '${n.name}': embedDedup " +
-              s"via IVF needs nProbe > 0, got ${ed.nProbe}")
+            reject(s"embedDedup via IVF needs nProbe > 0, got ${ed.nProbe}")
           // the exact face has no non-broadcast lowering (a cosine-predicate
           // join without a broadcast side is a cartesian product) — the flag
           // must not silently no-op at the very scale it exists for
-          if (ed.centroids.isEmpty && !ed.broadcastRef)
-            throw new IllegalArgumentException(s"node '${n.name}': embedDedup's " +
-              "exact face is broadcast-only; pass a centroids input for the " +
-              "beyond-broadcast IVF route (broadcastRef = false)")
+          if (ed.centroids.isEmpty && !ed.broadcastRef) reject("embedDedup's exact face " +
+            "is broadcast-only; pass a centroids input for the beyond-broadcast IVF " +
+            "route (broadcastRef = false)")
         case lm: LmNode =>
           val c = lmCall(lm)
-          c.spec.check(s"node '${n.name}': ${codecOf(n).op}", c.ref.isDefined,
-            c.byLang.isDefined)
-        case br: Bm25Retrieve =>
-          if (br.k <= 0) throw new IllegalArgumentException(
-            s"node '${n.name}': bm25Retrieve needs k > 0, got ${br.k}")
-          if (br.qIdCol == br.idCol) throw new IllegalArgumentException(
-            s"node '${n.name}': bm25Retrieve qIdCol and idCol are both " +
-              s"'${br.idCol}' — rename one (output is (qIdCol, idCol, bm25, rank))")
-        case hr: HybridRrf =>
-          if (hr.k <= 0 || hr.legK < 0 || hr.kRrf <= 0)
-            throw new IllegalArgumentException(
-              s"node '${n.name}': hybridRrf needs k > 0, legK >= 0 " +
-                s"(0 = use k) and kRrf > 0, got k=${hr.k} legK=${hr.legK} " +
-                s"kRrf=${hr.kRrf}")
-          if (hr.qIdCol == hr.idCol) throw new IllegalArgumentException(
-            s"node '${n.name}': hybridRrf qIdCol and idCol are both " +
-              s"'${hr.idCol}' — rename one (output is (qIdCol, idCol, rrf, rank))")
-          if (hr.ivfCells < 0 || hr.nProbe < 0 || hr.ivfIters < 1 ||
-            (hr.ivfCells == 0) != (hr.nProbe == 0))
-            throw new IllegalArgumentException(
-              s"node '${n.name}': hybridRrf IVF routing takes BOTH " +
-                s"ivfCells > 0 and nProbe > 0 (and ivfIters >= 1), got " +
-                s"ivfCells=${hr.ivfCells} nProbe=${hr.nProbe} ivfIters=${hr.ivfIters}")
-        case wp: WinnowPairs =>
-          if (wp.n < 1 || wp.w < 1 || wp.minShared < 1 || wp.maxBucket < 2)
-            throw new IllegalArgumentException(
-              s"node '${n.name}': winnowPairs needs n >= 1, w >= 1, " +
-                s"minShared >= 1 and maxBucket >= 2, got " +
-                s"(${wp.n}, ${wp.w}, ${wp.minShared}, ${wp.maxBucket})")
-        case sx: SentChunk =>
-          if (sx.maxTokens <= 0) throw new IllegalArgumentException(
-            s"node '${n.name}': chunkSentences needs maxTokens > 0, got ${sx.maxTokens}")
-        case as: ArpaScore =>
-          if (as.path.trim.isEmpty) throw new IllegalArgumentException(
-            s"node '${n.name}': arpaScore needs a non-empty artifact path")
-        case al: ArpaScoreLang =>
-          if (al.dir.trim.isEmpty) throw new IllegalArgumentException(
-            s"node '${n.name}': arpaScoreLang needs a non-empty artifact dir")
-        case st: SpTokenize =>
-          if (st.path.trim.isEmpty) throw new IllegalArgumentException(
-            s"node '${n.name}': spTokenize needs a non-empty vocab path")
-        case si: SpIds =>
-          if (si.path.trim.isEmpty) throw new IllegalArgumentException(
-            s"node '${n.name}': spIds needs a non-empty vocab path")
-        case sv: SaveArtifact =>
-          if (sv.dir.trim.isEmpty || sv.kind.trim.isEmpty)
-            throw new IllegalArgumentException(
-              s"node '${n.name}': saveArtifact needs a non-empty dir and kind")
-        case la: LoadArtifact =>
-          if (la.dir.trim.isEmpty || la.table.trim.isEmpty)
-            throw new IllegalArgumentException(
-              s"node '${n.name}': loadArtifact needs a non-empty dir and table")
-        case es: ExactSubstr =>
-          if (es.minLen < 2 || es.maxExtend < 1 || es.minDocs < 2)
-            throw new IllegalArgumentException(
-              s"node '${n.name}': exactSubstr needs minLen >= 2, " +
-                s"maxExtend >= 1 and minDocs >= 2, got " +
-                s"(${es.minLen}, ${es.maxExtend}, ${es.minDocs})")
+          c.spec.check(s"node '${n.name}': $op", c.ref.isDefined, c.byLang.isDefined)
         case pt: PplThresholds =>
           // the knAgainst model it scores under, by the same contract
           graft.pipeline.TextOps.LmSpec(pt.order,
             graft.pipeline.TextOps.LmSpec.KneserNey(pt.discount), pt.minCount,
-            pt.broadcastModel).check(s"node '${n.name}': pplThresholds",
-            against = true, byLang = false)
-          if (pt.buckets < 2) throw new IllegalArgumentException(
-            s"node '${n.name}': pplThresholds needs buckets >= 2, got ${pt.buckets}")
-        case rb: RankBuckets =>
-          if (rb.buckets < 2) throw new IllegalArgumentException(
-            s"node '${n.name}': rankBuckets needs buckets >= 2, got ${rb.buckets}")
-        case ds: DsirScore =>
-          if (ds.alpha <= 0.0 || ds.buckets <= 0) throw new IllegalArgumentException(
-            s"node '${n.name}': dsirScore needs alpha > 0 and buckets > 0, " +
-              s"got alpha=${ds.alpha} buckets=${ds.buckets}")
-        case tf: TokenFreq =>
-          if (tf.depth < 1 || tf.width < 2 || tf.rareMax < 0)
-            throw new IllegalArgumentException(
-              s"node '${n.name}': tokenFreq needs depth >= 1, width >= 2 and " +
-                s"rareMax >= 0, got depth=${tf.depth} width=${tf.width} rareMax=${tf.rareMax}")
-        case ue: UnigramEncode =>
-          if (ue.maxPieceLen < 1 || ue.maxPieceLen > 16)
-            throw new IllegalArgumentException(
-              s"node '${n.name}': unigramEncode needs maxPieceLen in 1..16, " +
-                s"got ${ue.maxPieceLen}")
-        case ui: UnigramIds =>
-          if (ui.maxPieceLen < 1 || ui.maxPieceLen > 16)
-            throw new IllegalArgumentException(
-              s"node '${n.name}': unigramIds needs maxPieceLen in 1..16, " +
-                s"got ${ui.maxPieceLen}")
-        case wt: WpTokenize =>
-          if (wt.maxInputChars < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': wpTokenize needs maxInputChars >= 1, " +
-              s"got ${wt.maxInputChars}")
-        case we: WpEncode =>
-          if (we.maxInputChars < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': wpEncode needs maxInputChars >= 1, " +
-              s"got ${we.maxInputChars}")
-        case wi: WpIds =>
-          if (wi.maxInputChars < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': wpIds needs maxInputChars >= 1, " +
-              s"got ${wi.maxInputChars}")
-        case di: DecontamIngest =>
-          if (di.n < 1 || di.minOverlap < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': decontaminateIngest needs n >= 1 and " +
-              s"minOverlap >= 1, got n=${di.n} minOverlap=${di.minOverlap}")
-        case ip: IvfProbe =>
-          if (ip.topK <= 0 || ip.nProbe <= 0) throw new IllegalArgumentException(
-            s"node '${n.name}': ivfProbe needs topK > 0 and nProbe > 0, " +
-              s"got topK=${ip.topK} nProbe=${ip.nProbe}")
-          if (ip.qIdCol == ip.idCol) throw new IllegalArgumentException(
-            s"node '${n.name}': ivfProbe query and corpus id columns must " +
-              s"differ (both are '${ip.idCol}')")
+            pt.broadcastModel).check(s"node '${n.name}': $op", against = true, byLang = false)
+        case br: Bm25Retrieve => distinctIds(br.qIdCol, br.idCol, "bm25, rank")
+        case hr: HybridRrf =>
+          distinctIds(hr.qIdCol, hr.idCol, "rrf, rank")
+          if ((hr.ivfCells == 0) != (hr.nProbe == 0)) reject("hybridRrf IVF routing takes " +
+            s"BOTH ivfCells > 0 and nProbe > 0 (and ivfIters >= 1), got " +
+            s"ivfCells=${hr.ivfCells} nProbe=${hr.nProbe} ivfIters=${hr.ivfIters}")
+        case ip: IvfProbe => distinctIds(ip.qIdCol, ip.idCol, "cos, rn")
         case xd: ExactDedup =>
           if (xd.numBits < 64 || xd.numBits % 64 != 0 || xd.numBits > (1 << 23))
-            throw new IllegalArgumentException(s"node '${n.name}': exactDedup " +
-              s"numBits must be a multiple of 64 in [64, 2^23], got ${xd.numBits}")
-          if (xd.numHashes < 1 || xd.numHashes > 32)
-            throw new IllegalArgumentException(s"node '${n.name}': exactDedup " +
-              s"numHashes must be in [1,32], got ${xd.numHashes}")
-        case gg: GopherGate =>
-          if (gg.minWords < 1 || gg.maxWords < gg.minWords)
-            throw new IllegalArgumentException(s"node '${n.name}': gopherGate " +
-              s"needs 1 <= minWords <= maxWords, got [${gg.minWords}, ${gg.maxWords}]")
-        case nb: NbClassify =>
-          if (nb.alpha <= 0.0) throw new IllegalArgumentException(
-            s"node '${n.name}': nbClassify needs alpha > 0, got ${nb.alpha}")
-        case hs: HashSample =>
-          if (hs.rate < 0.0 || hs.rate > 1.0) throw new IllegalArgumentException(
-            s"node '${n.name}': hashSample rate must be in [0,1], got ${hs.rate}")
-        case ss2: StratifiedSample =>
-          if ((ss2.defaultRate +: ss2.rates.values.toSeq).exists(r => r < 0.0 || r > 1.0))
-            throw new IllegalArgumentException(
-              s"node '${n.name}': stratifiedSample rates must be in [0,1]")
-        case as2: AssignSplit => checkSplits(n.name, as2.splits)
-        case wm: WeightedMix =>
-          if ((wm.defaultWeight +: wm.weights.values.toSeq).exists(_ < 0.0))
-            throw new IllegalArgumentException(
-              s"node '${n.name}': weightedMix weights must be non-negative")
-        case cp: CapPerKey =>
-          if (cp.n <= 0) throw new IllegalArgumentException(
-            s"node '${n.name}': capPerKey needs n > 0, got ${cp.n}")
-        case ek: ExactKSample =>
-          if (ek.k <= 0) throw new IllegalArgumentException(
-            s"node '${n.name}': exactK needs k > 0, got ${ek.k}")
-        case es: ExactKStrata =>
-          if (es.k <= 0) throw new IllegalArgumentException(
-            s"node '${n.name}': exactKStrata needs k > 0, got ${es.k}")
-        case ct: CapTokens =>
-          if (ct.budget <= 0) throw new IllegalArgumentException(
-            s"node '${n.name}': capTokens needs budget > 0, got ${ct.budget}")
-        case tm: TemperatureMix =>
-          if (tm.alpha <= 0.0 || tm.alpha > 1.0) throw new IllegalArgumentException(
-            s"node '${n.name}': temperatureMix alpha must be in (0,1], got ${tm.alpha}")
-          if (tm.budgetRows <= 0) throw new IllegalArgumentException(
-            s"node '${n.name}': temperatureMix needs budgetRows > 0, got ${tm.budgetRows}")
-        case sp: SafeSplit => checkSplits(n.name, sp.splits)
-        case dc: DedupCorpus =>
-          if (dc.bands <= 0 || dc.k < dc.bands || dc.k % dc.bands != 0)
-            throw new IllegalArgumentException(s"node '${n.name}': dedupCorpus " +
-              s"needs k a positive multiple of bands, got k=${dc.k} bands=${dc.bands}")
-          if (dc.threshold <= 0.0 || dc.threshold > 1.0)
-            throw new IllegalArgumentException(s"node '${n.name}': dedupCorpus " +
-              s"threshold must be in (0,1], got ${dc.threshold}")
-        case db: DedupCorpusBest =>
-          parse(db.score, s"node ${n.name}")
-          if (db.bands <= 0 || db.k < db.bands || db.k % db.bands != 0)
-            throw new IllegalArgumentException(s"node '${n.name}': dedupCorpusBest " +
-              s"needs k a positive multiple of bands, got k=${db.k} bands=${db.bands}")
-          if (db.threshold <= 0.0 || db.threshold > 1.0)
-            throw new IllegalArgumentException(s"node '${n.name}': dedupCorpusBest " +
-              s"threshold must be in (0,1], got ${db.threshold}")
-        case sd: SemanticDedup =>
-          if (sd.threshold <= 0.0 || sd.threshold > 1.0)
-            throw new IllegalArgumentException(s"node '${n.name}': semanticDedup " +
-              s"threshold must be in (0,1], got ${sd.threshold}")
-        case sb: SemanticDedupBest =>
-          parse(sb.score, s"node ${n.name}")
-          if (sb.threshold <= 0.0 || sb.threshold > 1.0)
-            throw new IllegalArgumentException(s"node '${n.name}': semanticDedupBest " +
-              s"threshold must be in (0,1], got ${sb.threshold}")
-        case ls: LineScrub =>
-          if (ls.minWords < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': lineScrub needs minWords >= 1, got ${ls.minWords}")
-        case pp: ParaScrub =>
-          if (pp.minWords < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': paraScrub needs minWords >= 1, got ${pp.minWords}")
-        case sc: SpanScrub =>
-          if (sc.k < 2 || sc.minDocs < 2) throw new IllegalArgumentException(
-            s"node '${n.name}': spanScrub needs k >= 2 and minDocs >= 2, " +
-              s"got k=${sc.k} minDocs=${sc.minDocs}")
-        case ct2: ChunkTokens =>
-          if (ct2.chunkSize <= 0 || ct2.stride <= 0 || ct2.stride > ct2.chunkSize)
-            throw new IllegalArgumentException(s"node '${n.name}': chunkTokens " +
-              s"needs 0 < stride <= chunkSize, got chunkSize=${ct2.chunkSize} " +
-              s"stride=${ct2.stride}")
-        case pc: PackChunks =>
-          if (pc.budget <= 0) throw new IllegalArgumentException(
-            s"node '${n.name}': packChunks needs budget > 0, got ${pc.budget}")
-        case wn: Winnow =>
-          if (wn.n < 1 || wn.w < 1) throw new IllegalArgumentException(
-            s"node '${n.name}': winnow needs n >= 1 and w >= 1, " +
-              s"got n=${wn.n} w=${wn.w}")
-        case jp: JlProjection =>
-          if (jp.outDim < 1 || jp.outDim > 4096 || jp.seed < 0)
-            throw new IllegalArgumentException(s"node '${n.name}': jlProject " +
-              s"needs outDim in [1,4096] and seed >= 0, got outDim=${jp.outDim} " +
-              s"seed=${jp.seed}")
-        case tk: TopKPerKey =>
-          parse(tk.score, s"node ${n.name}")
-          nonEmpty(tk.keys, "grouping key", n.name)
-          if (tk.k <= 0) throw new IllegalArgumentException(
-            s"node '${n.name}': topkPerKey needs k > 0, got ${tk.k}")
+            reject(s"exactDedup numBits must be a multiple of 64 in [64, 2^23], " +
+              s"got ${xd.numBits}")
+        case gg: GopherGate => if (gg.maxWords < gg.minWords) reject(
+          s"gopherGate needs 1 <= minWords <= maxWords, got [${gg.minWords}, ${gg.maxWords}]")
+        case ct: ChunkTokens => if (ct.stride > ct.chunkSize) reject("chunkTokens needs " +
+          s"0 < stride <= chunkSize, got chunkSize=${ct.chunkSize} stride=${ct.stride}")
+        // the hyperplane family index seed * outDim + b must fit an Int
+        // (`functions.JlProject`), or the lowering fails at run time
+        case jp: JlProjection => if (jp.seed.toLong * jp.outDim + jp.outDim - 1 > Int.MaxValue)
+          reject(s"jlProject needs seed * outDim + outDim - 1 <= ${Int.MaxValue}, " +
+            s"got seed=${jp.seed} outDim=${jp.outDim}")
         case zo: ZOrder =>
-          nonEmpty(zo.cols, "z-order column", n.name)
           try graft.operators.Layout.checkDims(zo.cols.size, zo.bits)
-          catch { case e: IllegalArgumentException =>
-            throw new IllegalArgumentException(s"node '${n.name}': ${e.getMessage}") }
-          if (zo.numFiles < 1)
-            throw new IllegalArgumentException(s"node '${n.name}': zorder " +
-              s"needs numFiles >= 1, got ${zo.numFiles}")
+          catch { case e: IllegalArgumentException => reject(e.getMessage) }
+        case as: AssignSplit => sumsToOne(as.splits)
+        case sp: SafeSplit => sumsToOne(sp.splits)
         case _ =>
       }
       nodeInputs(n).foreach(i => if (!defined.contains(i)) throw new IllegalArgumentException(
         s"node '${n.name}' references '$i' before it is defined"))
       defined += n.name
     }
-    openCycle.foreach(c => throw new IllegalArgumentException(
-      s"cycle '$c' is never closed"))
+    openCycle.foreach(c => throw new IllegalArgumentException(s"cycle '$c' is never closed"))
     doc.outputs.foreach(o => if (!defined.contains(o)) throw new IllegalArgumentException(
       s"output '$o' is not produced by any node"))
   }

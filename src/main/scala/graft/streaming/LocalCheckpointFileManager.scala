@@ -181,7 +181,7 @@ object LocalCheckpointFileManager {
 
   /** Recursive delete that ignores a missing path and removes a file's
     * `.crc` sidecar with it. Symbolic links are removed, not followed. */
-  private def deleteLocal(p: JPath): Unit = {
+  private[graft] def deleteLocal(p: JPath): Unit = {
     Files.walkFileTree(p, new SimpleFileVisitor[JPath] {
       override def visitFile(f: JPath, a: BasicFileAttributes): FileVisitResult = {
         Files.deleteIfExists(f); FileVisitResult.CONTINUE

@@ -408,7 +408,7 @@ class AppModelSpec extends SparkSpec {
       {"op": "where", "name": "w", "input": "a", "predicate": "v > (1"}],
       "outputs": ["w"]}"""
     assert(intercept[IllegalArgumentException](Program.fromJson(badSql))
-      .getMessage.contains("unparseable"))
+      .getMessage.contains("where needs predicate a SQL expression"))
     val badRef = """{"nodes": [{"op": "where", "name": "w", "input": "missing",
       "predicate": "v > 1"}], "outputs": ["w"]}"""
     assert(intercept[IllegalArgumentException](Program.fromJson(badRef))
@@ -423,12 +423,12 @@ class AppModelSpec extends SparkSpec {
       {"op": "groupSelect", "name": "g", "input": "a", "keys": ["k"], "aggs": []}],
       "outputs": ["g"]}"""
     assert(intercept[IllegalArgumentException](Program.fromJson(emptyAggs))
-      .getMessage.contains("at least one aggregate"))
+      .getMessage.contains("groupSelect needs aggs non-empty"))
     val badScan = """{"nodes": [{"op": "external", "name": "a"},
       {"op": "scan", "name": "s", "input": "a", "kind": "frob", "keys": []}],
       "outputs": ["s"]}"""
     assert(intercept[IllegalArgumentException](Program.fromJson(badScan))
-      .getMessage.contains("unknown scan kind"))
+      .getMessage.contains("scan needs kind one of"))
   }
 
   test("program document format version: default, round-trip, too-new rejection") {
@@ -565,7 +565,7 @@ class AppModelSpec extends SparkSpec {
     assert(bad(ApplyFn("x", "ev", "pf_scale", Seq("v"), "map", Some("o")))
       .getMessage.contains("takes 2 argument(s), got 1"))
     assert(bad(ApplyFn("x", "ev", "pf_scale", Seq("v", "2"), "frob", Some("o")))
-      .getMessage.contains("unknown applyFn kind"))
+      .getMessage.contains("applyFn needs kind one of"))
     assert(bad(ApplyFn("x", "ev", "pf_scale", Seq("v", "2"), "map", None))
       .getMessage.contains("needs an 'as' output name"))
   }

@@ -124,7 +124,7 @@ class ArtifactsSpec extends SparkSpec {
     assert(json.contains("\"version\":10") && Program.fromJson(json) == doc)
     assert(intercept[IllegalArgumentException](Program.fromJson(Program.toJson(
       Doc(Seq(External("in"), SaveArtifact("s", "in", " ", "k")), Seq("s")))))
-      .getMessage.contains("non-empty"), "empty dir rejected")
+      .getMessage.contains("saveArtifact needs dir non-blank"), "empty dir rejected")
     // capture: the save tee writes live, the load starts a new pipeline
     val cuts = Seq(("en", 1, -2.5), ("fr", 1, -3.0)).toDF("lang", "bucket", "cut")
     val saved = Program.capture(

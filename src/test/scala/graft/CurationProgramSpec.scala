@@ -61,9 +61,9 @@ class CurationProgramSpec extends SparkSpec {
     assert(bad(DedupCorpus("x", "in", "id", "text", 7, 4, 0.7))
       .contains("positive multiple of bands"))
     assert(bad(DedupCorpus("x", "in", "id", "text", 8, 4, 1.5))
-      .contains("threshold must be in (0,1]"))
+      .contains("dedupCorpus needs threshold in (0,1]"))
     assert(bad(SemanticDedup("x", "in", "cents", "id", "vec", 0.0),
-      extra = Seq(External("cents"))).contains("threshold must be in (0,1]"))
+      extra = Seq(External("cents"))).contains("semanticDedup needs threshold in (0,1]"))
     assert(bad(LineScrub("x", "in", "id", "text", 0)).contains("minWords >= 1"))
     assert(bad(SpanScrub("x", "in", "id", "text", 1, 2, false))
       .contains("k >= 2"))
@@ -74,8 +74,11 @@ class CurationProgramSpec extends SparkSpec {
     assert(bad(Winnow("x", "in", "id", "text", 0, 4)).contains("n >= 1"))
     assert(bad(JlProjection("x", "in", "vec", 0, 0, "p"))
       .contains("outDim in [1,4096]"))
+    // the hyperplane family index seed * outDim + outDim - 1 overflows an Int
+    assert(bad(JlProjection("x", "in", "vec", 4096, 600000, "p"))
+      .contains("jlProject needs seed * outDim + outDim - 1 <= 2147483647"))
     assert(bad(TopKPerKey("x", "in", Nil, "id", "v", 3, "score"))
-      .contains("at least one grouping key"))
+      .contains("topkPerKey needs keys non-empty"))
     assert(bad(TopKPerKey("x", "in", Seq("g"), "id", "v", 0, "score"))
       .contains("k > 0"))
     assert(bad(ZOrder("x", "in", Seq("a", "b", "c", "d", "e"), 8, 12))

@@ -179,7 +179,7 @@ class IngestProgramSpec extends SparkSpec {
       DecontamIngest("de", "a", "r", "id", "t", "rt", 0, 1)), Seq("de")), "n >= 1")
     loadFail(Doc(Seq(External("q"), External("p"), External("c"),
       IvfProbe("ip", "q", "p", "c", "vec_id", "v", "vec_id", 5, 1,
-        broadcastCorpus = true)), Seq("ip")), "must differ")
+        broadcastCorpus = true)), Seq("ip")), "qIdCol and idCol are both 'vec_id'")
   }
 
   test("exported output schemas match the real operators (validate cannot drift)") {

@@ -20,9 +20,11 @@ import graft.api.Program
  *
  * A new document joins by appending `{"input": "<json>"}` to the file and
  * running `sbt "Test/runMain graft.ProgramCorpus"`, which fills in the
- * facts of every line from the current codec and rewrites the file in
- * input order. Review the diff: no existing line may change unless the
- * change is a deliberate format change.
+ * facts of every line from the current codec, rewrites the file in input
+ * order, and prints how many rejections changed only their error text and
+ * each document whose outcome flipped. Review the diff: no existing line
+ * may change unless the change is a deliberate format change. Every
+ * `Program.FieldRules` reference needs a document its rule rejects.
  */
 object ProgramCorpus {
   implicit val formats: Formats = DefaultFormats
@@ -64,12 +66,24 @@ object ProgramCorpus {
     try body finally added.foreach { case (f, _) => Program.Functions.unregister(f) }
   }
 
-  /** Refill every line's facts from the current codec. */
+  /** Refill every line's facts from the current codec, and report how the
+    * outcomes moved: how many rejections changed only their error text,
+    * and each document that flipped between accepted and rejected. */
   def main(args: Array[String]): Unit = withFunctions {
-    val inputs = lines().map(l => (l \ "input").extract[String]).distinct.sorted
-    Files.write(path, inputs.map(i => JsonMethods.compact(JsonMethods.render(facts(i))))
+    val before = lines().map(l => (l \ "input").extract[String] -> l).toMap
+    val inputs = before.keys.toSeq.sorted
+    val after = inputs.map(facts)
+    Files.write(path, after.map(f => JsonMethods.compact(JsonMethods.render(f)))
       .mkString("", "\n", "\n").getBytes(UTF_8))
     println(s"wrote ${inputs.size} documents to $path")
+    def rejected(l: JValue): Boolean = (l \ "error") != JNothing
+    val changed = inputs.zip(after).filter { case (i, now) => before(i) != now }
+    val flipped = changed.filter { case (i, now) => rejected(before(i)) != rejected(now) }
+    println(s"${changed.count { case (i, now) => rejected(before(i)) && rejected(now) }} " +
+      "rejected documents changed only their error text")
+    println(s"${flipped.size} documents flipped outcome")
+    flipped.foreach { case (i, now) =>
+      println(s"${if (rejected(now)) "accepted -> rejected" else "rejected -> accepted"}: $i") }
   }
 }
 
@@ -88,6 +102,30 @@ class ProgramCodecGoldenSpec extends AnyFunSuite {
           s"recorded ${JsonMethods.compact(l)}\nnow      ${JsonMethods.compact(now)}"
         }.mkString("\n"))
     }
+  }
+
+  test("every field-rule reference rejects a corpus document under its rule") {
+    val errors = corpus.flatMap(l => (l \ "error").extractOpt[String])
+    val refs = Program.FieldRules.flatMap { case (rule, ops) => ops.split(' ').toSeq.map { r =>
+      val (op, field) = r.span(_ != '.')
+      s"$op needs ${field.drop(1)} ${rule.bound}, got"
+    } }
+    assert(refs.size > 90, refs.size.toString)
+    val unpinned = refs.filterNot(r => errors.exists(_.contains(r)))
+    assert(unpinned.isEmpty, s"rule references no corpus document rejects: " +
+      unpinned.mkString("; "))
+  }
+
+  test("a rule row naming an unknown op or field, or an unreadable type, fails the codec build") {
+    import Program.{NonEmpty, OneOf, Positive}
+    def bad(rule: Program.Rule, ref: String): String =
+      intercept[IllegalStateException](Program.checkRules(Seq(rule -> ref))).getMessage
+    assert(bad(Positive, "nope.k").contains("ops with no node class: nope"))
+    assert(bad(Positive, "corpusDedup.nope").contains("corpusDedup has no field 'nope'"))
+    assert(bad(OneOf("a"), "recordWindow.aggs.nope").contains("no tuple key 'nope'"))
+    assert(bad(Positive, "scan.kind").contains("cannot read String"))
+    assert(bad(NonEmpty, "corpusDedup.k").contains("cannot read Int"))
+    Program.checkRules(Program.FieldRules)
   }
 
   test("every node class appears in a decoded corpus document") {

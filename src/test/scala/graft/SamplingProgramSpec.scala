@@ -38,19 +38,19 @@ class SamplingProgramSpec extends SparkSpec {
     def bad(node: Node, extra: Seq[Node] = Nil): String =
       intercept[IllegalArgumentException](Program.fromJson(Program.toJson(
         Doc(Seq(External("in")) ++ extra :+ node, Seq(node.name))))).getMessage
-    assert(bad(HashSample("x", "in", "id", 1.5, "")).contains("rate must be in [0,1]"))
+    assert(bad(HashSample("x", "in", "id", 1.5, "")).contains("hashSample needs rate in [0,1]"))
     assert(bad(StratifiedSample("x", "in", "id", "src", Map("a" -> 2.0), 0.0, ""))
-      .contains("rates must be in [0,1]"))
+      .contains("stratifiedSample needs rates in [0,1]"))
     assert(bad(AssignSplit("x", "in", "id", Seq("a" -> 0.5, "b" -> 0.4), "split", ""))
       .contains("sum to 1"))
     assert(bad(WeightedMix("x", "in", "id", "src", Map("a" -> -1.0), 0.0, ""))
-      .contains("non-negative"))
+      .contains("weightedMix needs weights >= 0"))
     assert(bad(CapPerKey("x", "in", "src", "id", 0, "")).contains("n > 0"))
     assert(bad(CapTokens("x", "in", "src", "id", "toks", 0L, "")).contains("budget > 0"))
     assert(bad(TemperatureMix("x", "in", "id", "src", 1.5, 10L, ""))
-      .contains("alpha must be in (0,1]"))
+      .contains("temperatureMix needs alpha in (0,1]"))
     assert(bad(SafeSplit("x", "in", "pairs", "id", "a", "b", Nil, "split", ""),
-      extra = Seq(External("pairs"))).contains("at least one split band"))
+      extra = Seq(External("pairs"))).contains("safeSplit needs splits non-empty"))
   }
 
   test("exactK node: v6 round-trip, named validation, capture == direct API") {
